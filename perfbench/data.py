@@ -1,20 +1,17 @@
 """Seeded benchmark inputs, built once into a cache inside the checkout.
 
-Three kinds of input:
+Two kinds of input:
 
 - ``contract_tables``: the ten TPC-H-ish + LLM-pipeline tables the
-  contract queries read (region … embeddings), with the column
-  distributions of the synthetic correctness datasets: independent
-  uniform columns, exponential event values, unit-norm random
-  embeddings, and 5% near-duplicate documents (a copy of an earlier
-  document with `` dup`` appended). Built from a FIXED seed so the
-  expected digests stored beside the benchmark stay valid.
-- ``scaled_tables``: a 10x replica of the contract tables, made by the
-  repository's own ``tools/make_scale_data.py`` (key offsets, per-copy
-  document tokens and embedding noise).
-- ``taxi_trips``: green/yellow raw trips with the schema of
-  ``taxi_rides_ny_duckdb_spark/fixtures.py`` plus the 265-row zone
-  lookup, generated from the run's ``--seed``.
+  contract queries read (region … embeddings). ``write_contract_tables``
+  regenerates the repository's seed-42 reference tables (TESTDATA.md)
+  row for row and value for value, so the benchmark reads the reference
+  data without reading anything outside its checkout. Built from a FIXED
+  seed so the expected digests stored beside the benchmark stay valid.
+- ``taxi_trips``: green/yellow raw trips and the 265-row zone lookup from
+  the package's own fixture generator (``fixtures._trips`` and
+  ``fixtures.make_zone_lookup``), with the trips drawn from the run's
+  ``--seed``.
 
 Every cache directory carries a manifest of sha256 checksums; a
 directory whose files do not match is rebuilt.
@@ -23,7 +20,6 @@ directory whose files do not match is rebuilt.
 from __future__ import annotations
 
 import hashlib
-import importlib.util
 import json
 import os
 import shutil
@@ -99,20 +95,23 @@ def _labels(rng, values: list[str], n: int) -> list[str]:
 
 
 _WORDS = (
-    "spark window merge table column vector stream value data small join "
-    "filter big group hash customer sort order slow line part fast row the "
-    "agg key query a scan batch"
+    "the a spark query table join group filter window data order customer part "
+    "line fast slow big small hash sort merge scan agg stream batch vector key "
+    "value row column"
 ).split()
-_ADJ = "red new hot small cold large old blue".split()
-_NOUN = "bolt anvil ring rod plate gear widget gizmo".split()
+_ADJ = "red blue small large hot cold old new".split()
+_NOUN = "anvil widget gizmo bolt gear plate rod ring".split()
 
 
 def write_contract_tables(out_dir: str, sf: float) -> None:
-    """Write the ten contract tables at scale factor ``sf``."""
+    """Write the ten contract tables at scale factor ``sf``: the seed-42
+    reference tables of TESTDATA.md, value for value, at sf 0.001, 0.01
+    and 0.1. The draw order is part of the format: reordering any draw
+    changes every table after it."""
     rng = np.random.default_rng(CONTRACT_SEED)
     n_cust, n_supp, n_part = int(150_000 * sf), int(10_000 * sf), int(200_000 * sf)
     n_ord, n_li, n_ev = int(1_500_000 * sf), int(6_000_000 * sf), int(1_000_000 * sf)
-    n_doc, n_vec = int(50_000 * sf), max(500, int(20_000 * sf))
+    n_doc, n_vec = max(500, int(50_000 * sf)), max(500, int(20_000 * sf))
 
     _write(out_dir, "region", {
         "r_regionkey": pa.array(range(5), pa.int32()),
@@ -129,7 +128,7 @@ def write_contract_tables(out_dir: str, sf: float) -> None:
         "c_nationkey": pa.array(rng.integers(0, 25, n_cust), pa.int32()),
         "c_acctbal": _money(rng, -999.99, 9999.99, n_cust),
         "c_mktsegment": _labels(
-            rng, ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"], n_cust
+            rng, ["BUILDING", "AUTOMOBILE", "MACHINERY", "HOUSEHOLD", "FURNITURE"], n_cust
         ),
     })
     _write(out_dir, "supplier", {
@@ -145,14 +144,14 @@ def write_contract_tables(out_dir: str, sf: float) -> None:
             for a, b in zip(rng.integers(0, 8, n_part), rng.integers(0, 8, n_part))
         ],
         "p_brand": [f"Brand#{b}" for b in rng.integers(1, 26, n_part)],
-        "p_type": _labels(rng, ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"], n_part),
+        "p_type": _labels(rng, ["STANDARD", "SMALL", "MEDIUM", "LARGE", "ECONOMY", "PROMO"], n_part),
         "p_size": pa.array(rng.integers(1, 51, n_part), pa.int32()),
-        "p_retailprice": np.round(900.0 + rng.integers(0, 1000, n_part) / 10.0, 1),
+        "p_retailprice": np.round(900.0 + (np.arange(n_part) % 1000) / 10.0, 1),
     })
     _write(out_dir, "orders", {
         "o_orderkey": np.arange(n_ord, dtype=np.int64),
         "o_custkey": rng.integers(0, n_cust, n_ord),
-        "o_orderstatus": _labels(rng, ["F", "O", "P"], n_ord),
+        "o_orderstatus": _labels(rng, ["O", "F", "P"], n_ord),
         "o_totalprice": _money(rng, 1000.0, 500000.0, n_ord),
         "o_orderdate": _days(rng, "1995-01-01", 2404, n_ord),
         "o_orderpriority": _labels(
@@ -166,128 +165,59 @@ def write_contract_tables(out_dir: str, sf: float) -> None:
         "l_linenumber": pa.array(rng.integers(1, 8, n_li), pa.int32()),
         "l_quantity": rng.integers(1, 51, n_li).astype(np.float64),
         "l_extendedprice": _money(rng, 900.0, 105000.0, n_li),
-        "l_discount": rng.integers(0, 11, n_li) / 100.0,
-        "l_tax": rng.integers(0, 9, n_li) / 100.0,
-        "l_returnflag": _labels(rng, ["A", "N", "R"], n_li),
-        "l_linestatus": _labels(rng, ["F", "O"], n_li),
+        "l_discount": np.round(rng.uniform(0.0, 0.1, n_li), 2),
+        "l_tax": np.round(rng.uniform(0.0, 0.08, n_li), 2),
+        "l_returnflag": _labels(rng, ["R", "A", "N"], n_li),
+        "l_linestatus": _labels(rng, ["O", "F"], n_li),
         "l_shipdate": _days(rng, "1995-01-02", 2498, n_li),
     })
-    ts = np.datetime64("2024-01-01", "us") + rng.integers(
-        0, 30 * 86_400_000_000, n_ev
-    ).astype("timedelta64[us]")
+    ts = np.sort(np.datetime64("2024-01-01", "ns") + (
+        rng.uniform(0, 30 * 86_400, n_ev) * 1e9).astype(np.int64).astype("timedelta64[ns]"))
     _write(out_dir, "events", {
         "event_id": np.arange(n_ev, dtype=np.int64),
-        "ts": pa.array(ts, pa.timestamp("us")),
-        "user_id": rng.integers(0, 1500, n_ev),
-        "event_type": _labels(rng, ["click", "error", "purchase", "signup", "view"], n_ev),
+        "ts": pa.array(ts.astype("datetime64[us]"), pa.timestamp("us")),
+        "user_id": rng.integers(0, int(15_000 * sf), n_ev),
+        "event_type": _labels(rng, ["click", "view", "purchase", "signup", "error"], n_ev),
         "value": np.round(rng.exponential(50.0, n_ev), 2),
         "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)],
     })
     words = np.array(_WORDS, dtype=object)
-    texts = [
-        " ".join(words[rng.integers(0, len(_WORDS), k)]) for k in rng.integers(10, 101, n_doc)
-    ]
-    for i in np.flatnonzero(rng.random(n_doc) < 0.05):
-        if i:
-            texts[i] = texts[int(rng.integers(0, i))] + " dup"
+    texts = [" ".join(words[rng.integers(0, len(_WORDS), rng.integers(10, 100))])
+             for _ in range(n_doc)]
+    n_dup = n_doc // 20
+    for i, src in zip(rng.choice(n_doc, n_dup, replace=False), rng.integers(0, n_doc, n_dup)):
+        texts[i] = texts[src] + " dup"
     _write(out_dir, "documents", {
         "doc_id": np.arange(n_doc, dtype=np.int64),
         "text": texts,
-        "lang": list(np.array(["en", "de", "es", "fr", "zh"], dtype=object)[
-            rng.choice(5, n_doc, p=[0.4, 0.15, 0.15, 0.15, 0.15])
-        ]),
+        "lang": _labels(rng, ["en", "en", "en", "de", "fr", "es", "zh"], n_doc),
         "source": [f"src{i % 20}" for i in range(n_doc)],
         "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
     })
-    vecs = rng.standard_normal((n_vec, 64))
+    vecs = rng.standard_normal((n_vec, 64)).astype(np.float32)
     vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
     _write(out_dir, "embeddings", {
         "vec_id": np.arange(n_vec, dtype=np.int64),
         "embedding": pa.ListArray.from_arrays(
             pa.array(np.arange(0, 64 * n_vec + 1, 64), pa.int32()),
-            pa.array(vecs.astype(np.float32).ravel(), pa.float32()),
+            pa.array(vecs.ravel(), pa.float32()),
         ),
         "label": pa.array(rng.integers(0, 10, n_vec), pa.int32()),
     })
 
 
-def write_scaled_tables(out_dir: str, src_dir: str, root: str, copies: int) -> None:
-    """Replicate ``src_dir`` ``copies`` times with the repository's
-    ``tools/make_scale_data.py``."""
-    spec = importlib.util.spec_from_file_location(
-        "make_scale_data", os.path.join(root, "tools", "make_scale_data.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    mod.replicate(src_dir, out_dir, copies)
-
-
-_BOROUGHS = ["Manhattan", "Queens", "Brooklyn", "Bronx", "Staten Island", "EWR"]
-_SERVICE_ZONES = ["Boro Zone", "Yellow Zone", "EWR", "N/A"]
-
-
-def _trips(rng, n: int, pickup: str, dropoff: str, green: bool) -> pa.Table:
-    """Raw trips in the fixtures.py schema: NULL vendors, unknown and
-    out-of-seed zones, bad payment types, and 5% full-row duplicates so
-    the dedup survivor is value-stable across engines."""
-    def nullable(values, share):
-        return pa.array(values, mask=rng.random(n) < share)
-
-    t0 = np.datetime64("2019-01-01", "s")
-    pu = t0 + rng.integers(0, 730 * 86_400, n).astype("timedelta64[s]")
-    do = pu + rng.integers(60, 3 * 3600, n).astype("timedelta64[s]")
-    loc = lambda: np.where(rng.random(n) < 0.95, rng.integers(1, 264, n), rng.integers(264, 271, n))
-    fare, tip = _money(rng, 2.5, 300.0, n), _money(rng, 0.0, 60.0, n)
-    tolls = np.round(rng.uniform(0, 40.0, n) * (rng.random(n) < 0.2), 2)
-    extra = rng.choice([0.0, 0.5, 1.0], n)
-    mta, imp = rng.choice([0.0, 0.5], n), rng.choice([0.0, 0.3], n)
-    pay = rng.choice([1, 2, 3, 4, 5, 6, 7, 0], n, p=[0.4, 0.3, 0.1, 0.05, 0.05, 0.04, 0.03, 0.03])
-    cols = {
-        "vendorid": nullable(rng.choice([1, 2], n).astype(np.float64), 0.03),
-        pickup: pa.array(pu.astype("datetime64[us]"), pa.timestamp("us")),
-        dropoff: pa.array(do.astype("datetime64[us]"), pa.timestamp("us")),
-        "ratecodeid": nullable(rng.integers(1, 7, n).astype(np.float64), 0.05),
-        "pulocationid": loc(),
-        "dolocationid": loc(),
-        "store_and_fwd_flag": pa.array(
-            _labels(rng, ["Y", "N"], n), mask=rng.random(n) < 0.05
-        ),
-        "passenger_count": nullable(rng.integers(0, 7, n).astype(np.float64), 0.04),
-        "trip_distance": _money(rng, 0.0, 50.0, n),
-        "fare_amount": fare,
-        "extra": extra,
-        "mta_tax": mta,
-        "tip_amount": tip,
-        "tolls_amount": tolls,
-        "improvement_surcharge": imp,
-        "total_amount": np.round(fare + extra + mta + tip + tolls + imp, 2),
-        "payment_type": nullable(pay.astype(np.float64), 0.02),
-        "congestion_surcharge": nullable(rng.choice([0.0, 2.5, 2.75], n), 0.25),
-    }
-    if green:
-        cols["trip_type"] = rng.choice([1, 2], n).astype(np.float64)
-        cols["ehail_fee"] = nullable(np.zeros(n), 0.9)
-    table = pa.table(cols)
-    dups = np.sort(rng.choice(n, n // 20, replace=False))
-    return pa.concat_tables([table, table.take(dups)])
-
-
 def write_taxi_trips(out_dir: str, n_per_service: int, seed: int) -> None:
-    """Green/yellow raw trips (``n_per_service`` + 5% duplicates each)
-    and the zone-lookup seed CSV."""
+    """Green/yellow raw trips (``n_per_service`` + 5% full-row
+    duplicates each) and the zone-lookup seed CSV, written the way
+    ``fixtures.write_taxi_fixtures`` writes them."""
+    from taxi_rides_ny_duckdb_spark import fixtures
+
     rng = np.random.default_rng(seed)
-    pq.write_table(
-        _trips(rng, n_per_service, "lpep_pickup_datetime", "lpep_dropoff_datetime", True),
-        os.path.join(out_dir, "green_tripdata.parquet"),
-    )
-    pq.write_table(
-        _trips(rng, n_per_service, "tpep_pickup_datetime", "tpep_dropoff_datetime", False),
-        os.path.join(out_dir, "yellow_tripdata.parquet"),
-    )
-    with open(os.path.join(out_dir, "taxi_zone_lookup.csv"), "w") as fh:
-        fh.write("locationid,borough,zone,service_zone\n")
-        for i in range(1, 266):
-            unknown = i >= 264
-            borough = "Unknown" if unknown else _BOROUGHS[(i - 1) % len(_BOROUGHS)]
-            service = "N/A" if unknown else _SERVICE_ZONES[(i - 1) % len(_SERVICE_ZONES)]
-            fh.write(f"{i},{borough},Zone {i},{service}\n")
+    # µs timestamps: Spark's parquet reader rejects TIMESTAMP(NANOS).
+    kw = dict(index=False, coerce_timestamps="us", allow_truncated_timestamps=True)
+    for name, pickup, dropoff, green in (
+            ("green", "lpep_pickup_datetime", "lpep_dropoff_datetime", True),
+            ("yellow", "tpep_pickup_datetime", "tpep_dropoff_datetime", False)):
+        fixtures._trips(rng, n_per_service, pickup, dropoff, green).to_parquet(
+            os.path.join(out_dir, f"{name}_tripdata.parquet"), **kw)
+    fixtures.make_zone_lookup().to_csv(os.path.join(out_dir, "taxi_zone_lookup.csv"), index=False)

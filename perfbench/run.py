@@ -26,7 +26,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 CACHE = os.path.join(ROOT, ".perfbench_cache")
 PACKAGE = os.path.join(ROOT, "taxi_rides_ny_duckdb_spark", "__init__.py")
-WORKLOADS = ("contract_sf0.1", "llm_ops_sf1", "taxi_dbt_build")
+WORKLOADS = ("contract_sf0.1", "taxi_dbt_build")
 # The main process's own setup plus this many fresh child processes
 # that repeat it; setup_s is the median.
 SETUP_CHILDREN = 1
@@ -131,9 +131,6 @@ def prepare(workload: str, seed: int, small: bool) -> tuple[dict, float]:
     base = os.path.join(root, f"sf{sf}")
     prep = data.cached(base, lambda d: data.write_contract_tables(d, sf))
     dirs = {"contract": base}
-    if workload == "llm_ops_sf1":
-        dirs["contract"] = os.path.join(root, f"sf{sf * 10:g}")
-        prep += data.cached(dirs["contract"], lambda d: data.write_scaled_tables(d, base, ROOT, 10))
     if workload == "taxi_dbt_build":
         n = 2000 if small else TAXI_TRIPS_PER_SERVICE
         dirs["taxi"] = os.path.join(root, f"taxi_seed{seed}")
@@ -148,13 +145,13 @@ def expected_values(workload: str, data_dirs: dict, small: bool, path: str | Non
     derives its own from the seed's files."""
     import workloads
 
-    if workload not in workloads.PANELS:
+    if workload != "contract_sf0.1":
         return None
     if path:
         with open(path) as fh:
             return json.load(fh)[workload]
     if small:
-        return workloads.oracle_digests(data_dirs["contract"], workloads.PANELS[workload])
+        return workloads.oracle_digests(data_dirs["contract"], workloads.CONTRACT_PANEL)
     return workloads.load_expected()[workload]
 
 
@@ -182,8 +179,8 @@ class Context:
     """What a workload needs: the session, the recorder, its inputs, and
     hooks to close the timed window and to report a wrong output."""
 
-    def __init__(self, spark, rec, seed: int, seconds: float, data_dirs: dict, expected):
-        self.spark, self.rec, self.seed, self.seconds = spark, rec, seed, seconds
+    def __init__(self, spark, rec, seed: int, rounds: int, data_dirs: dict, expected):
+        self.spark, self.rec, self.seed, self.rounds = spark, rec, seed, rounds
         self.data, self.expected = data_dirs, expected
         self.cache = CACHE
         self.fixture_dir = FIXTURE_DIR
@@ -213,14 +210,12 @@ class Context:
 
 
 def end_to_end(rec, setup_samples: list[float]) -> dict:
-    cold = [o["s"] for o in rec.ops if o["kind"] == "cold"]
-    by_name: dict[str, list[float]] = {}
+    # Each operation's median latency per run kind: one sample per
+    # operation, robust to a single slow pass.
+    by_kind: dict[str, dict[str, list[float]]] = {"cold": {}, "warm": {}}
     for o in rec.ops:
-        if o["kind"] == "warm":
-            by_name.setdefault(o["name"], []).append(o["s"])
-    # Each operation's median warm latency: one sample per operation,
-    # robust to a single slow round.
-    warm = [statistics.median(v) for v in by_name.values()]
+        by_kind[o["kind"]].setdefault(o["name"], []).append(o["s"])
+    cold, warm = ([statistics.median(v) for v in by_kind[k].values()] for k in ("cold", "warm"))
     return {
         "setup_s": statistics.median(setup_samples),
         "cold_s": sum(cold),
@@ -253,7 +248,8 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", choices=WORKLOADS)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=20)
+    ap.add_argument("--seconds", type=float, default=15,
+                    help="sets the number of warm rounds (workloads.warm_rounds)")
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--setup-only", action="store_true", help=argparse.SUPPRESS)
     ap.add_argument("--small", action="store_true", help="self-test scale")
@@ -277,9 +273,10 @@ def main() -> int:
     setup_samples = [timings["setup_s"] - prep_s]
     expected = expected_values(args.workload, data_dirs, args.small, args.expected)
     rec = Recorder(spark, traced=bool(args.trace))
-    ctx = Context(spark, rec, args.seed, args.seconds, data_dirs, expected)
+    ctx = Context(spark, rec, args.seed, workloads.warm_rounds(args.workload, args.seconds),
+                  data_dirs, expected)
     ctx.rss = RssSampler([rec.jvm_pid, os.getpid()]).start()
-    run = {"contract_sf0.1": workloads.contract_sf01, "llm_ops_sf1": workloads.llm_ops_sf1,
+    run = {"contract_sf0.1": workloads.contract_sf01,
            "taxi_dbt_build": workloads.taxi_dbt_build}[args.workload]
     with rec.span(args.workload, "workload"):
         canaries = run(ctx)
@@ -301,7 +298,7 @@ def main() -> int:
         "canary_spark_s": [round(s, 4) for _, s in canaries],
         "steal_share": ctx.steal_share, "driver_rss_peak_mb": ctx.rss_peak_mb,
         "fail_ratio": failed / attempted if attempted else 1.0,
-        "setup_samples_s": setup_samples, "warm_rounds": rec.rounds("warm"),
+        "setup_samples_s": setup_samples, "warm_rounds": ctx.rounds,
         "cold_plus_warm_s": e2e["cold_s"] + e2e["warm_s"], "errors": ctx.errors[:20],
     }
     if args.trace:

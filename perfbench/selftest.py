@@ -46,10 +46,8 @@ def main() -> None:
     names = {0: {m["name"]: m["unit"] for m in bench["end_to_end"]},
              1: {m["name"]: m["unit"] for m in bench["per_layer"]}}
 
-    for wl in ("contract_sf0.1", "taxi_dbt_build", "llm_ops_sf1"):
+    for wl in run.WORKLOADS:
         for trace in (0, 1):
-            if wl == "llm_ops_sf1" and trace:
-                continue
             code, res = _run(["--workload", wl, "--seed", "3", "--seconds", "1",
                               "--trace", str(trace), "--small"])
             _check(code == 0 and res is not None, f"{wl} trace={trace} exits 0 with a result")

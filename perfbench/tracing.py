@@ -236,6 +236,7 @@ class Recorder:
         if self.traced:
             t0 = time.perf_counter()
             before = self._snapshot()
+            self._plans()  # mark earlier SQL executions (warm-up, canaries, digests) seen
             self.collect_s += time.perf_counter() - t0
         failed, df, result = False, None, None
         with self.span(name, "op", run=kind) as op_span:

@@ -1,6 +1,6 @@
-"""The three workloads. Each runs one closed-loop client with one
-operation in flight: a cold pass, then warm passes until the run's
-seconds are used and every operation has run warm at least twice.
+"""The two workloads. Each runs one closed-loop client with one
+operation in flight: every operation once cold, then a fixed number of
+warm rounds that ``--seconds`` sets and the box's speed does not.
 Outputs are checked after the timed window, against expected values
 derived from the DuckDB oracles."""
 
@@ -9,7 +9,6 @@ from __future__ import annotations
 import json
 import os
 import random
-import time
 
 from check import arrow_digest, digest, duckdb_digest, spark_digest
 
@@ -33,26 +32,20 @@ CONTRACT_PANEL = (
     "ext_semdedup",
     "ext_streaming_dedup",
 )
-# llm_ops_sf1: executor- and Python-worker-bound operator families and
-# one heavy TPC-H join over the 10x replica. Queries whose cold run
-# alone exceeds ~15 s on a 4-core box (minhash LSH, LM perplexity,
-# simhash) and ext_bpe_segment (its oracle runs out of memory at sf1)
-# are left out.
-LLM_PANEL = (
-    "ext_kmeans_train",
-    "ext_nb_classify",
-    "ext_embedding_near_dup",
-    "ext_hard_negative_topk",
-    "q3_shipping_priority",
-)
-
-TAXI_TRIPS_PER_SERVICE = 100_000
+TAXI_TRIPS_PER_SERVICE = 50_000
 TAXI_PROFILE_COLS = ["trip_distance", "fare_amount", "tip_amount", "total_amount",
                      "passenger_count"]
 GRAINS = ("month", "quarter", "year")
+# Nominal seconds of one warm round on a 4-core box. ``--seconds`` buys
+# ``seconds / ROUND_S`` warm rounds (at least MIN_ROUNDS): a count set by
+# the arguments alone, so that every run takes the same samples however
+# fast the box is. The cold pass comes on top.
+ROUND_S = {"contract_sf0.1": 7.5, "taxi_dbt_build": 15.0}
+MIN_ROUNDS = 1
 
 
-PANELS = {"contract_sf0.1": CONTRACT_PANEL, "llm_ops_sf1": LLM_PANEL}
+def warm_rounds(workload: str, seconds: float) -> int:
+    return max(MIN_ROUNDS, round(seconds / ROUND_S[workload]))
 
 
 def load_expected() -> dict:
@@ -74,61 +67,49 @@ def oracle_digests(sf_dir: str, names: tuple[str, ...]) -> dict:
     return {name: duckdb_digest(con, contract.ORACLES[name]) for name in names}
 
 
-def _passes(rec, seconds: float, one_pass, canary) -> list[tuple[float, float]]:
-    """Cold pass, then warm passes until ``seconds`` have elapsed and
-    every operation has run warm at least twice. The canary runs before
-    the first pass and after every pass."""
+def _passes(n: int, one_pass, canary) -> list[tuple[float, float]]:
+    """Run ``one_pass(i)`` for i in 0..n-1. The canary runs before the
+    first pass and after every pass."""
     canaries = [canary()]
-    deadline = time.perf_counter() + seconds
-    kind = "cold"
-    while True:
-        one_pass(kind)
+    for i in range(n):
+        one_pass(i)
         canaries.append(canary())
-        if kind == "warm" and rec.rounds("warm") >= 2 and time.perf_counter() >= deadline:
-            return canaries
-        kind = "warm"
-
-
-def query_panel(ctx, panel: tuple[str, ...], sf_dir: str, expected: dict):
-    """Run contract queries: each pass visits the panel in a seeded
-    order, each query inside its own ``cache_scope()``; the cold pass
-    runs every query twice in that scope (cold, then warm on the
-    memoized plan). Afterwards each query's full result is digested
-    once and compared with the oracle's."""
-    from taxi_rides_ny_duckdb_spark import contract
-    from taxi_rides_ny_duckdb_spark.cache import cache_scope
-
-    spark, rec = ctx.spark, ctx.rec
-    rnd = random.Random(ctx.seed)
-
-    def rows_ok(name):
-        return lambda df, n: n == expected[name]["rows"]
-
-    def one_pass(kind: str) -> None:
-        order = list(panel)
-        rnd.shuffle(order)
-        for name in order:
-            fn = contract.QUERIES[name]
-            with cache_scope():
-                for run_kind in (("cold", "warm") if kind == "cold" else ("warm",)):
-                    rec.op(name, run_kind, lambda: fn(spark, sf_dir), lambda df: df.count(),
-                           check=rows_ok(name))
-
-    canaries = _passes(rec, ctx.seconds, one_pass, ctx.canary)
-    ctx.end_window()
-    for name in panel:
-        got = spark_digest(contract.QUERIES[name](spark, sf_dir))
-        if got != expected[name]:
-            ctx.wrong(name, f"digest {got} != expected {expected[name]}")
     return canaries
 
 
 def contract_sf01(ctx):
-    return query_panel(ctx, CONTRACT_PANEL, ctx.data["contract"], ctx.expected)
+    """Contract queries, visited once in a seeded order, each inside its
+    own ``cache_scope()``: run 1 (cold) is the query's first call in the
+    process and builds its plan; then ``ctx.rounds`` warm runs reuse the
+    memoized plan and the scope's caches. The last warm run's frame is
+    then collected and digested, outside every operation's timing, and
+    the digests are compared with the oracle's after the window."""
+    from taxi_rides_ny_duckdb_spark import contract
+    from taxi_rides_ny_duckdb_spark.cache import cache_scope
 
+    spark, rec, sf_dir, expected = ctx.spark, ctx.rec, ctx.data["contract"], ctx.expected
+    order = list(CONTRACT_PANEL)
+    random.Random(ctx.seed).shuffle(order)
+    digests: dict = {}
 
-def llm_ops_sf1(ctx):
-    return query_panel(ctx, LLM_PANEL, ctx.data["contract"], ctx.expected)
+    def one_pass(_: int) -> None:
+        for name in order:
+            fn = contract.QUERIES[name]
+            with cache_scope():
+                for kind in ["cold"] + ["warm"] * ctx.rounds:
+                    df, _ = rec.op(name, kind, lambda: fn(spark, sf_dir), lambda df: df.count(),
+                                   check=lambda df, n: n == expected[name]["rows"])
+                # Untimed, while the scope's caches are still alive.
+                if df is not None:
+                    digests[name] = spark_digest(df)
+
+    canaries = _passes(1, one_pass, ctx.canary)
+    ctx.end_window()
+    for name in CONTRACT_PANEL:
+        got = digests.get(name)
+        if got != expected[name]:
+            ctx.wrong(name, f"digest {got} != expected {expected[name]}")
+    return canaries
 
 
 def _taxi_oracles(trips_dir: str, fixture_dir: str):
@@ -220,11 +201,10 @@ def taxi_dbt_build(ctx):
     expected = _expected_taxi(_taxi_oracles(trips, ctx.fixture_dir))
     checks: list = []  # (kind, what, value) verified after the window
     wh_root = os.path.join(ctx.cache, "taxi_warehouse")
-    n_pass = [0]
 
-    def one_pass(kind: str) -> None:
-        wh = os.path.join(wh_root, f"pass{n_pass[0]}")
-        n_pass[0] += 1
+    def one_pass(i: int) -> None:
+        kind = "cold" if i == 0 else "warm"
+        wh = os.path.join(wh_root, f"pass{i}")
         runner, _ = rec.op("build_taxi_pipeline", kind,
                            lambda: build_taxi_pipeline(spark, *paths, warehouse_dir=wh),
                            lambda r: None)
@@ -260,7 +240,7 @@ def taxi_dbt_build(ctx):
         rec.add(kind, "runner.bytes_written", n_bytes)
         rec.layers[kind]["runner.write_amp"] = n_bytes / input_bytes
 
-    canaries = _passes(rec, ctx.seconds, one_pass, ctx.canary)
+    canaries = _passes(1 + ctx.rounds, one_pass, ctx.canary)
     ctx.end_window()
     for what, name, value in checks:
         if what == "table":

@@ -31,18 +31,8 @@ from .functions.text import (
     quality_score,
     tokenize,
 )
+from .session import session_key
 from .sources.registry import load
-
-
-def _session_key(spark) -> tuple:
-    """Stable per-session cache key for the process-memoized index
-    frames (_ND_INDEX/_PQ_INDEX/_GT_INDEX/_NB_MARGIN_INDEX/...):
-    (applicationId, startTime) — the contract_taxi._spark_models
-    convention. ``id(spark)`` can be GC-recycled, so a NEW session
-    could alias a stopped one's key and hand out localCheckpointed
-    frames whose blocks died with the old executors (ADVICE r10)."""
-    sc = spark.sparkContext
-    return (sc.applicationId, sc.startTime)
 
 
 def _count_pin(df, *cols):
@@ -1298,7 +1288,7 @@ _STREAM_SRC: dict[tuple, str] = {}
 
 
 def _events_stream_dir(spark, sf_dir: str) -> str:
-    key = (*_session_key(spark), sf_dir)
+    key = (*session_key(spark), sf_dir)
     if key not in _STREAM_SRC:
         import tempfile
 
@@ -3700,7 +3690,7 @@ _DOCS_STREAM_SRC: dict = {}
 def _docs_stream_dir(spark, sf_dir: str) -> str:
     """Batch docs (doc_id ≥ 250) staged as TWO parquet files so
     maxFilesPerTrigger can exercise multiple micro-batches."""
-    key = (*_session_key(spark), sf_dir)
+    key = (*session_key(spark), sf_dir)
     if key not in _DOCS_STREAM_SRC:
         import tempfile
 
@@ -3744,7 +3734,7 @@ def ext_streaming_incremental_dedup(spark, sf_dir):
     # point (the index outlives every ingest); re-measuring the
     # signing inside each run would time the wrong thing. The STREAM
     # side below is re-run in full every call (memoize=False).
-    key = (*_session_key(spark), sf_dir, "hist_idx")
+    key = (*session_key(spark), sf_dir, "hist_idx")
     if key not in _DOCS_STREAM_SRC:
         minhash_signatures(
             d.filter(F.col("doc_id") < 250), "text", "doc_id", portable=True
@@ -6325,7 +6315,7 @@ def ext_streaming_topk_rollup(spark, sf_dir):
     # test setup (the "topic"), not part of the streaming operator a
     # re-run measures. The sink and checkpoint ARE cleared per run,
     # so the stream itself re-runs in full every call.
-    key = (*_session_key(spark), sf_dir, "topk_src")
+    key = (*session_key(spark), sf_dir, "topk_src")
     if key not in _STREAM_SRC:
         src = f"{base}/src"
         shutil.rmtree(src, ignore_errors=True)
@@ -6478,7 +6468,7 @@ def _embedding_near_dup_index(spark, sf_dir):
     has the ``connected_components`` output schema (id, component)."""
     from .operators.dedup import connected_components
 
-    key = (*_session_key(spark), sf_dir)
+    key = (*session_key(spark), sf_dir)
     if key not in _ND_INDEX:
         pairs, nodes = _embedding_near_dup_inputs(spark, sf_dir)
         pairs = pairs.localCheckpoint(eager=True)
@@ -7181,12 +7171,13 @@ def ext_kmeans_train(spark, sf_dir):
     deterministic init = the first k vectors): the quantizer-sizing
     answer to the SemDeDup finding — nlist must scale with the corpus,
     so the trainer has to run distributed rather than on a bounded
-    sample. Per iteration: pure-projection assignment (centroids as
-    literals; per-term round(t²·10¹²) LONG sums, argmin ties to the
-    lower cid — exact integers, no rounding step) + ONE map-side-combined
-    k·dim-bounded aggregate + a k·dim driver sync; the oracle replays
-    every iteration as unrolled CTEs. memoize=False: the trainer
-    collects per iteration. init='first_k' (r13 optimization round,
+    sample. Per iteration: assignment by per-term round(t²·10¹²) LONG
+    sums, argmin ties to the lower cid — exact integers, no rounding
+    step — then exact int64 coordinate sums per cluster; below the
+    ``_FUSED_LLOYD_*`` gate every iteration runs in one task, above
+    it one Arrow pass + a k·dim driver sync per iteration. The oracle
+    replays every iteration as unrolled CTEs. memoize=False: the
+    trainer collects. init='first_k' (r13 optimization round,
     continuation session — the VERDICT r12 init-collect residual): the
     first-4-by-id init is selected inside the operator's fused task,
     so the query-side 3-AQE-job init collect is gone; identical
@@ -7197,7 +7188,6 @@ def ext_kmeans_train(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     cents, sizes = kmeans_lloyd(
         emb, "first_k", k=4, id_col="vec_id", vec_col="embedding", iters=3,
-        assign="auto",
     )
     rows = []
     for cid, cv in enumerate(cents):
@@ -7394,7 +7384,7 @@ def _semdedup_hier_oracle(
     target: int = 10, iters: int = 2, dim: int = 64, threshold: float = 0.3
 ) -> str:
     """DuckDB replay of the TWO-LEVEL semdedup_auto path
-    (operators/similarity._semdedup_two_level) end-to-end: nlist =
+    (operators/similarity._semdedup_multilevel, levels=2) end-to-end: nlist =
     ceil(N/target) and n1 = ceil(sqrt(nlist)) as scalar subqueries,
     coarse init = first n1 vectors by id, the shared coarse Lloyd
     chain (``_kmeans_iter_ctes``), one branch-assignment E-step
@@ -7520,7 +7510,7 @@ FROM withsim w JOIN comp c ON c.id = w.vec_id
 @query("ext_semdedup_hier", oracle=_materialize_ctes(_semdedup_hier_oracle()), memoize=False)
 def ext_semdedup_hier(spark, sf_dir):
     """TWO-LEVEL (hierarchical) SemDeDup over the full embeddings
-    table (operators/similarity._semdedup_two_level via semdedup_auto
+    table (operators/similarity._semdedup_multilevel via semdedup_auto
     with max_flat_nlist=0, target_cluster_size=10, 2 Lloyd iterations
     per level, threshold=0.3): the r10 close of the LAST named
     super-linear envelope — flat quantizer assignment is O(N·nlist)
@@ -7550,8 +7540,8 @@ def ext_semdedup_hier(spark, sf_dir):
     L2-unrolled replay already costs ~10⁲ s and DNFs by sf10), the
     L=3 chain is fully verified by hier3's own oracle at every SF,
     and the depth-decision integers are already replayed engine-side
-    by the hier3 oracle's bk CASE chain (``_iceil_root_col``) plus
-    unit tests — so a dual-unrolled conditional oracle would add
+    by the hier3 oracle's bk CASE chain (the integers Spark computes
+    in-task with ``_int_ceil_root``) plus unit tests — so a dual-unrolled conditional oracle would add
     ~200 SQL lines that never execute differently. Cost of the
     fixed depth at scale is known and accepted: at sf10 this row
     executes the 142-branch L2 envelope (~68 s, r12) where auto's
@@ -7579,10 +7569,11 @@ def _semdedup_hier3_oracle(
     smallest integer with b³ ≥ nlist via an EXACT integer range probe
     (no float cube root at the decision point); coarse init = first b₁
     vectors by id; the shared coarse Lloyd chain; branch assignment;
-    the level-2 split sized c = min{c : c² ≥ ⌈cnt/T⌉} through the
-    same two-down/two-up integer CASE correction chain the Spark
-    ``_iceil_root_col`` runs (both engines pin the exact integer root
-    regardless of their pow/sqrt ulp); the FIRST grouped Lloyd chain;
+    the level-2 split sized c = min{c : c² ≥ ⌈cnt/T⌉} through a
+    two-down/two-up integer CASE correction chain that pins the exact
+    integer root regardless of DuckDB's pow/sqrt ulp (Spark computes
+    the same integers in-task with ``_int_ceil_root``'s exact Python
+    integer arithmetic); the FIRST grouped Lloyd chain;
     node densification via a row_number window over the level-2
     centroid table; the level-3 split (⌈cnt/T⌉ leaves, the final-level
     rule); the SECOND grouped Lloyd chain (name-prefixed h*); the
@@ -8314,7 +8305,7 @@ def _pq_chain(spark, sf_dir):
     later one reads the checkpointed frames."""
     from .operators.similarity import pq_assign, pq_train
 
-    key = (*_session_key(spark), sf_dir)
+    key = (*session_key(spark), sf_dir)
     if key not in _PQ_INDEX:
         emb = load(spark, sf_dir, "embeddings")
         cb = pq_train(
@@ -8352,7 +8343,7 @@ def _cosine_ground_truth_topk(spark, sf_dir, k=5):
     ``_INT_TOPK_ORACLE``."""
     from .operators.similarity import brute_force_topk_int64
 
-    key = (*_session_key(spark), sf_dir, "cos", k)
+    key = (*session_key(spark), sf_dir, "cos", k)
     if key not in _GT_INDEX:
         emb = load(spark, sf_dir, "embeddings")
         queries = emb.filter(F.col("vec_id") < 8).select(
@@ -8373,7 +8364,7 @@ def _scaled_l2_ground_truth_topk(spark, sf_dir):
     twice before this index). Shaped (query_id, rank, vec_id)."""
     from .operators.similarity import exact_l2_topk_scaled
 
-    key = (*_session_key(spark), sf_dir, "l2", _PQ_K)
+    key = (*session_key(spark), sf_dir, "l2", _PQ_K)
     if key not in _GT_INDEX:
         emb, _, _ = _pq_chain(spark, sf_dir)
         qid, qv = _pq_query_vec(spark, sf_dir)
@@ -8632,7 +8623,7 @@ def _ivfpq_chain(spark, sf_dir):
     from .contract_ivf_centroids import IVF_CENTROIDS
     from .operators.similarity import ivfpq_encode
 
-    key = (*_session_key(spark), sf_dir)
+    key = (*session_key(spark), sf_dir)
     if key not in _IVFPQ_INDEX:
         emb = load(spark, sf_dir, "embeddings")
         cb, codes = ivfpq_encode(
@@ -8983,7 +8974,7 @@ def _nb_margin_probabilities(spark, sf_dir):
     chain live."""
     from .operators.classify import _surrogate_p, nb_margin, nb_score, nb_train
 
-    key = (*_session_key(spark), sf_dir)
+    key = (*session_key(spark), sf_dir)
     if key not in _NB_MARGIN_INDEX:
         d = load(spark, sf_dir, "documents")
         train = d.filter(F.col("doc_id") % 5 != 0)

@@ -19,6 +19,7 @@ from __future__ import annotations
 from .contract import query
 from .fixtures import DEFAULT_FIXTURE_DIR, ensure_taxi_fixtures
 from .functions.parity import present_doubles
+from .session import session_key
 
 _PATHS = ensure_taxi_fixtures()
 
@@ -157,20 +158,19 @@ fact_trips AS (
 # parquet table survives, feeds other jobs, and gives downstream scans
 # column pruning + filter pushdown into the store. Plan construction
 # (CSV seed read + wide cast/md5 projections) is likewise paid once.
-_MODELS: dict[int, tuple] = {}
+_MODELS: dict[tuple, tuple] = {}
 
 
 def _spark_models(spark):
     """Build (and memoize per session) the Spark-side models from the
     shared fixtures."""
-    # Key the memo on the session's applicationId + startTime (stable,
-    # never GC-recycled the way id(spark) can be), and write the fact
-    # table under a per-application directory: two concurrent processes
-    # (pytest + bench) or two sessions in one process must not
-    # mode('overwrite') a shared path out from under each other's
-    # memoized DataFrames (FileNotFound / torn reads otherwise).
+    # Key the memo by session_key, and write the fact table under a
+    # per-application directory: two concurrent processes (pytest +
+    # bench) or two sessions in one process must not mode('overwrite')
+    # a shared path out from under each other's memoized DataFrames
+    # (FileNotFound / torn reads otherwise).
     sc = spark.sparkContext
-    key = (sc.applicationId, sc.startTime)
+    key = session_key(spark)
     if key in _MODELS:
         return _MODELS[key]
     import os

@@ -120,7 +120,7 @@ def vocab_coverage(
 
 
 def tfidf_topk_terms(
-    docs: DataFrame, text_col: str, id_col: str, k: int, df_mode: str = "window"
+    docs: DataFrame, text_col: str, id_col: str, k: int
 ) -> DataFrame:
     """Per-document top-``k`` TF-IDF terms → (id, rank, term, tfidf_r)
     — the classic relevance/keyword signal (smooth idf:
@@ -132,8 +132,7 @@ def tfidf_topk_terms(
     engines, rounded to 9dp BEFORE the rank window (round-before-rank)
     with ties broken by term ascending.
 
-    Plan at scale (``df_mode="window"``, the default — VERDICT r6 #3):
-    groupBy(id, term) → term counts (map-side combined — the raw token
+    Plan at scale (VERDICT r6 #3): groupBy(id, term) → term counts (map-side combined — the raw token
     stream collapses before shuffling), then the document frequency as
     ``count(*) over (partition by term)`` ON the tf rows, then the
     window shuffle on id for the top-k. Exactly TWO data-sized
@@ -142,16 +141,11 @@ def tfidf_topk_terms(
     (once per join branch, the exchange-reuse rule doesn't fire across
     differently-pruned subtrees), measured 4.5 s vs 2.0 s at sf1
     (DuckDB 1.96 s). The window's per-term partition holds one row per
-    document CONTAINING the term — fine up to ~10⁸ docs per stopword;
-    for a web-scale corpus where that breaks, ``df_mode="join"`` keeps
-    the aggregation-bounded dfreq join whose shuffle AQE can
-    skew-split (at the cost of the doubled tf subtree)."""
+    document CONTAINING the term — fine up to ~10⁸ docs per stopword."""
     from pyspark.sql.window import Window
 
     from ..session import ensure_min_partitions
 
-    if df_mode not in ("window", "join"):
-        raise ValueError(f"df_mode must be 'window' or 'join', got {df_mode!r}")
     # Small-file guard: one ~250 MB parquet file splits into only 2
     # scan partitions at the default maxPartitionBytes, serializing the
     # explode+aggregate onto 2 of 32 cores. No-op at real scale.
@@ -161,12 +155,7 @@ def tfidf_topk_terms(
     tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     n = docs.agg(F.count(F.lit(1)).alias("__n"))
     idf = F.log((F.col("__n") + F.lit(1.0)) / (F.col("df") + F.lit(1.0))) + F.lit(1.0)
-    if df_mode == "window":
-        wdf = Window.partitionBy("term")
-        with_df = tf.withColumn("df", F.count(F.lit(1)).over(wdf))
-    else:
-        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        with_df = tf.join(dfreq, "term")
+    with_df = tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
     scored = with_df.crossJoin(F.broadcast(n)).select(
         F.col(id_col),
         "term",

@@ -59,7 +59,6 @@ def bm25_topk(
     k: int = 5,
     k1: float = 1.2,
     b: float = 0.75,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Top-``k`` documents per query under Okapi BM25 (Lucene's
     non-negative idf: ``ln(1 + (N - df + 0.5)/(df + 0.5))``) →
@@ -71,29 +70,23 @@ def bm25_topk(
     tokenized with the same ``functions.text.tokenize`` as the corpus
     so both sides agree on the term space.
 
-    Determinism across engines AND between strategies: tf, df, N and
+    Determinism across engines AND between the two plans: tf, df, N and
     dl are integers; the score is one double expression evaluated
     identically everywhere, each per-term addend rounded to 12dp and
     summed as exact DECIMAL (order-independent), presented at 9dp
     BEFORE the rank window, ties broken by document id ascending.
 
-    ``strategy``: ``'pivot'`` (zero-shuffle codegen tf columns),
-    ``'explode'`` (token-stream form), or ``'auto'`` (pivot iff the
-    distinct-term count is ≤ 64). Both produce identical output —
-    property-tested in tests/test_operators.py.
+    The plan follows the data: the zero-shuffle pivot (codegen tf
+    columns) while the distinct query-term count is ≤
+    ``_PIVOT_MAX_TERMS``, the token-stream explode above it. Both
+    produce identical output — tested in tests/test_operators.py.
     """
     if not queries:
         raise ValueError("queries must be a non-empty list of (id, text)")
     if len({qid for qid, _ in queries}) != len(queries):
         raise ValueError("query ids must be unique")
-    if strategy not in ("auto", "pivot", "explode"):
-        raise ValueError(
-            f"strategy must be 'auto', 'pivot' or 'explode'; got {strategy!r}"
-        )
     qterms = _query_terms(queries)
     all_terms = sorted({t for ts in qterms.values() for t in ts})
-    if strategy == "auto":
-        strategy = "pivot" if len(all_terms) <= _PIVOT_MAX_TERMS else "explode"
 
     # Scalar corpus stats: N docs and average document length. Exact
     # integer sum / count — avg(double) would be partition-order-
@@ -136,7 +129,7 @@ def bm25_topk(
             * (F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("__dl") / avgdl_lit)
         )
 
-    if strategy == "pivot":
+    if len(all_terms) <= _PIVOT_MAX_TERMS:
         scored = _pivot_scores(docs, qterms, all_terms, text_col, id_col,
                                dl_expr, idf, tf_part)
     else:

@@ -62,6 +62,16 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def session_key(spark: SparkSession) -> tuple:
+    """Stable per-session key for every process-level memo (contract
+    plans, source scans and views, index frames, taxi models):
+    (applicationId, startTime). ``id(spark)`` can be GC-recycled, so a
+    NEW session could alias a stopped one's key and hand out frames
+    bound to a dead context (ADVICE r10)."""
+    sc = spark.sparkContext
+    return (sc.applicationId, sc.startTime)
+
+
 def ensure_min_partitions(
     df, n: int | None = None, eager: bool = False, strict: bool = False
 ):

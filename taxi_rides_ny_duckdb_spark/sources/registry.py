@@ -21,6 +21,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import session_key
+
 # Driver-generated tables (TESTDATA.md): TPC-H-ish star schema + events
 # stream + LLM-pipeline extension tables.
 TESTDATA_TABLES: tuple[str, ...] = (
@@ -41,12 +43,12 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# (session id, path) → scan DataFrame. A DataFrame is an immutable
+# (session_key, path) → scan DataFrame. A DataFrame is an immutable
 # logical plan, safe to reuse across queries; building one costs a
 # parquet-footer read + schema inference (~50-100 ms of py4j + IO) that
 # a session running dozens of contract queries should pay once per
 # table, not once per query.
-_SCANS: dict[tuple[int, str], DataFrame] = {}
+_SCANS: dict[tuple, DataFrame] = {}
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -65,7 +67,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown source table {name!r}; known: {TESTDATA_TABLES}")
-    key = (id(spark), table_path(sf_dir, name))
+    key = (*session_key(spark), table_path(sf_dir, name))
     if key in _SCANS:
         return _SCANS[key]
     if name == "events":
@@ -115,10 +117,10 @@ def read_source(
     return reader.load(path)
 
 
-# (session id, view name) → registered path. Registering a view costs a
+# (session_key, view name) → registered path. Registering a view costs a
 # parquet-footer read + py4j round trips (~0.1 s/table); a session that
 # runs many SQL queries over the same sf_dir should pay it once.
-_REGISTERED: dict[tuple[int, str], str] = {}
+_REGISTERED: dict[tuple, str] = {}
 
 
 def register_all(
@@ -128,11 +130,11 @@ def register_all(
     to register a subset — each registration reads a parquet footer, so
     a query touching 3 tables shouldn't pay for 10. Idempotent per
     (session, sf_dir): re-registers only when sf_dir changes."""
-    sid = id(spark)
+    sid = session_key(spark)
     for name in tables or TESTDATA_TABLES:
         path = table_path(sf_dir, name)
-        if _REGISTERED.get((sid, name)) == path:
+        if _REGISTERED.get((*sid, name)) == path:
             continue
         if os.path.exists(path):
             load(spark, sf_dir, name).createOrReplaceTempView(name)
-            _REGISTERED[(sid, name)] = path
+            _REGISTERED[(*sid, name)] = path

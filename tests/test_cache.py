@@ -98,3 +98,25 @@ def test_two_operator_pipeline_leaves_no_orphan_cache_entries(spark):
         assert n_pairs >= 0 and n_sel > 0
         assert _storage_count(spark) > base, "operators should have persisted"
     assert _storage_count(spark) == base, "scope exit must drop all registrations"
+
+
+def test_session_memos_ignore_recycled_id_keys(spark, sf_dir, monkeypatch):
+    """The process-level plan and scan memos key on ``session_key``
+    (applicationId, startTime), never on the GC-recyclable
+    ``id(spark)``: a sentinel planted under the old id-based key — what
+    a stopped session whose id the live one inherited would leave
+    behind — must never be handed out."""
+    from taxi_rides_ny_duckdb_spark import contract
+    from taxi_rides_ny_duckdb_spark.sources import registry
+
+    sentinel = spark.range(1)
+    path = registry.table_path(sf_dir, "region")
+    monkeypatch.setitem(registry._SCANS, (id(spark), path), sentinel)
+    scan = registry.load(spark, sf_dir, "region")
+    assert scan is not sentinel and "r_regionkey" in scan.columns
+
+    contract.load_all()
+    name = next(n for n in contract.QUERIES
+                if contract.QUERIES[n] is not contract.BUILDERS[n])
+    monkeypatch.setitem(contract._PLANS, (name, id(spark), sf_dir), sentinel)
+    assert contract.QUERIES[name](spark, sf_dir) is not sentinel

@@ -41,6 +41,21 @@ def test_pandas_hash_parity(name, spark, sf_dir, con):
     compare_pandas_hash(df, con, contract.ORACLES[name], name)
 
 
+@pytest.mark.parametrize(
+    "name", ["ext_kmeans_train", "ext_semdedup_auto", "ext_semdedup_hier"]
+)
+def test_oracle_parity_above_fused_gate(name, spark, sf_dir, con, monkeypatch):
+    """The distributed Arrow Lloyd loop that runs above the
+    ``_FUSED_LLOYD_*`` gate, checked against the same DuckDB oracles:
+    with the row gate at 0 every trainer in these queries takes it
+    (flat, first_k init, and the multilevel coarse pass). Built through
+    ``BUILDERS`` so no memoized below-gate plan can answer instead."""
+    from taxi_rides_ny_duckdb_spark.operators import similarity as S
+
+    monkeypatch.setattr(S, "_FUSED_LLOYD_MAX_ROWS", 0)
+    compare(contract.BUILDERS[name](spark, sf_dir), con, contract.ORACLES[name])
+
+
 @pytest.mark.parametrize("name", _ROWS_ONLY)
 def test_rows_only_runs(name, spark, sf_dir):
     df = contract.QUERIES[name](spark, sf_dir)

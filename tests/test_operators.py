@@ -745,20 +745,6 @@ def test_tfidf_topk_scores_and_tiebreak(spark):
     assert got[(2, 1)][0] == "banana" and got[(2, 2)][0] == "cherry"
     assert got[(3, 1)] == ("cherry", round(3 * idf_common, 9))
 
-    # the window-df default and the AQE-joinable fallback are one
-    # operator: identical output (r7 fused-plan rewrite)
-    join_mode = {
-        (r["doc_id"], r["rank"]): (r["term"], r["tfidf_r"])
-        for r in tfidf_topk_terms(
-            docs, "text", "doc_id", 2, df_mode="join"
-        ).collect()
-    }
-    assert join_mode == got
-    import pytest
-
-    with pytest.raises(ValueError, match="df_mode"):
-        tfidf_topk_terms(docs, "text", "doc_id", 2, df_mode="bogus")
-
 
 def test_chunk_token_windows_coverage_and_edges(spark):
     """Sliding-window chunking: n_chunks = 1 + ceil(max(n-W,0)/S),
@@ -2371,12 +2357,14 @@ def test_dsir_rejects_bad_buckets(spark):
         dsir_scores(None, None, "text", "doc_id", buckets=0)
 
 
-def test_bm25_pivot_and_explode_agree(spark):
+def test_bm25_pivot_and_explode_agree(spark, monkeypatch):
     """The zero-shuffle pivot path and the token-stream explode path
     must produce identical (query, rank, doc, score) rows — same
-    integer tf/df/dl/N, same rounded arithmetic."""
+    integer tf/df/dl/N, same rounded arithmetic. The explode path is
+    forced by dropping the ``_PIVOT_MAX_TERMS`` gate to 0."""
     import random
 
+    from taxi_rides_ny_duckdb_spark.operators import retrieval
     from taxi_rides_ny_duckdb_spark.operators.retrieval import bm25_topk
 
     rng = random.Random(11)
@@ -2389,18 +2377,10 @@ def test_bm25_pivot_and_explode_agree(spark):
         ["doc_id", "text"],
     )
     qs = [("q1", "alpha beta"), ("q2", "zeta"), ("q3", "missing gamma")]
-    a = bm25_topk(spark, docs, qs, "text", "doc_id", k=7, strategy="pivot")
-    b = bm25_topk(spark, docs, qs, "text", "doc_id", k=7, strategy="explode")
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
+    ra = sorted(map(tuple, bm25_topk(spark, docs, qs, "text", "doc_id", k=7).collect()))
+    monkeypatch.setattr(retrieval, "_PIVOT_MAX_TERMS", 0)
+    rb = sorted(map(tuple, bm25_topk(spark, docs, qs, "text", "doc_id", k=7).collect()))
     assert ra == rb and len(ra) > 0
-
-
-def test_bm25_rejects_bad_strategy(spark):
-    from taxi_rides_ny_duckdb_spark.operators.retrieval import bm25_topk
-
-    with pytest.raises(ValueError, match="strategy"):
-        bm25_topk(spark, None, [("q", "x")], "text", "doc_id", strategy="bogus")
 
 
 def test_funnel_strict_ordering_semantics(spark):
@@ -3569,78 +3549,77 @@ def test_kmeans_lloyd_validates(spark):
         kmeans_lloyd(df, [[0.0], [0.0, 1.0]], iters=1)
 
 
-def test_kmeans_lloyd_rejects_overflowing_coordinates(spark):
+def test_kmeans_lloyd_rejects_overflowing_coordinates(spark, monkeypatch):
     """The exact scaled-integer distance wraps int64 silently for
     unnormalized coordinates (the documented |x−c| ≲ 150-at-dim-64
     precondition) — the trainer must RAISE with pre-scaling guidance,
-    not mis-assign (VERDICT r9 task 5)."""
+    not mis-assign (VERDICT r9 task 5), on both sides of the fused
+    gate."""
     import pytest as _pytest
 
-    from taxi_rides_ny_duckdb_spark.operators.similarity import kmeans_lloyd
+    from taxi_rides_ny_duckdb_spark.operators import similarity as S
 
     dim = 64
     big = spark.createDataFrame(
         [(1, [1.0e5] * dim), (2, [-1.0e5] * dim)],
         "vec_id long, embedding array<double>",
     )
-    with _pytest.raises(ValueError, match="pre-scale"):
-        kmeans_lloyd(big, [[0.0] * dim, [1.0] * dim], iters=1)
-    # out-of-bound INIT centroids trip the same guard even on tame data
     tame = spark.createDataFrame(
         [(1, [0.0] * dim), (2, [1.0] * dim)],
         "vec_id long, embedding array<double>",
     )
-    with _pytest.raises(ValueError, match="pre-scale"):
-        kmeans_lloyd(tame, [[0.0] * dim, [5.0e5] * dim], iters=1)
-    # unit-scale embeddings pass with orders-of-magnitude margin
-    cents, sizes = kmeans_lloyd(tame, [[0.0] * dim, [1.0] * dim], iters=1)
-    assert sizes == {0: 1, 1: 1}
+    for gate in (S._FUSED_LLOYD_MAX_ROWS, 0):
+        monkeypatch.setattr(S, "_FUSED_LLOYD_MAX_ROWS", gate)
+        with _pytest.raises(ValueError, match="pre-scale"):
+            S.kmeans_lloyd(big, [[0.0] * dim, [1.0] * dim], iters=1)
+        # out-of-bound INIT centroids trip the same guard on tame data
+        with _pytest.raises(ValueError, match="pre-scale"):
+            S.kmeans_lloyd(tame, [[0.0] * dim, [5.0e5] * dim], iters=1)
+        # unit-scale embeddings pass with orders-of-magnitude margin
+        cents, sizes = S.kmeans_lloyd(tame, [[0.0] * dim, [1.0] * dim], iters=1)
+        assert sizes == {0: 1, 1: 1}
 
 
-def test_kmeans_assign_arrow_matches_expr(spark, sf_dir):
-    """The two E-step physical forms must be BIT-EQUAL on real fixture
-    embeddings — the property that licenses the large-k Arrow path:
-    distance terms are quantized to int64 before summing, so numpy's
-    pairwise order equals the expression fold exactly, and the whole
-    trainer (assign='arrow' vs 'expr') returns identical centroids
-    and sizes."""
-    from taxi_rides_ny_duckdb_spark.operators.similarity import (
-        _kmeans_assign_expr,
-        kmeans_assign_arrow,
-        kmeans_lloyd,
-    )
+def test_kmeans_assign_arrow_matches_reference(spark, sf_dir, monkeypatch):
+    """The Arrow E-step must equal an independent pure-Python replay
+    of the oracle arithmetic on real fixture embeddings (per-term
+    round(t²·10¹²) half-away as exact ints, argmin ties to the lower
+    cid) — quantizing before summing is what makes numpy's pairwise
+    order exact — and the trainer must return identical centroids and
+    sizes on both sides of the fused gate."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from taxi_rides_ny_duckdb_spark.operators import similarity as S
     from taxi_rides_ny_duckdb_spark.sources.registry import load
 
     emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300)
-    init = [
-        [float(x) for x in r["cv"]]
-        for r in emb.filter(F.col("vec_id") < 5)
-        .select(F.col("vec_id"), F.col("embedding").cast("array<double>").alias("cv"))
-        .orderBy("vec_id")
-        .collect()
-    ]
-    dims = (
-        emb.select(
-            F.col("vec_id"),
-            F.posexplode(F.col("embedding").cast("array<double>")).alias(
-                "pos", "x"
-            ),
-        )
-        .select(F.col("vec_id"), (F.col("pos") + 1).alias("j"), "x")
-    )
-    expr_asg = {
-        r["vec_id"]: r["cid"]
-        for r in _kmeans_assign_expr(dims, init, "vec_id").collect()
+    vecs = {
+        r["vec_id"]: [float(x) for x in r["cv"]]
+        for r in emb.select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("cv")
+        ).collect()
     }
-    arrow_asg = {
-        r["vec_id"]: r["cid"]
-        for r in kmeans_assign_arrow(emb, init, "vec_id").collect()
-    }
-    assert expr_asg == arrow_asg and len(expr_asg) == 300
+    init = [vecs[i] for i in range(5)]
 
-    ce, se = kmeans_lloyd(emb, init, iters=2, assign="expr")
-    ca, sa = kmeans_lloyd(emb, init, iters=2, assign="arrow")
-    assert ce == ca and se == sa
+    def term(t):
+        return int(Decimal(t * t * 1e12).quantize(Decimal(1), ROUND_HALF_UP))
+
+    want = {
+        vid: min(
+            range(len(init)),
+            key=lambda c: (sum(term(x - y) for x, y in zip(v, init[c])), c),
+        )
+        for vid, v in vecs.items()
+    }
+    got = {
+        r["vec_id"]: r["cid"]
+        for r in S.kmeans_assign_arrow(emb, init, "vec_id").collect()
+    }
+    assert got == want and len(got) == 300
+
+    fused = S.kmeans_lloyd(emb, init, iters=2)
+    monkeypatch.setattr(S, "_FUSED_LLOYD_MAX_ROWS", 0)
+    assert S.kmeans_lloyd(emb, init, iters=2) == fused
 
 
 def test_semdedup_auto_sizes_quantizer_and_keeps_one_per_component(spark):
@@ -3810,35 +3789,6 @@ def test_kmeans_assign_grouped_matches_flat_per_branch(spark):
             assert got[vid] == (b, cid), (vid, got[vid], (b, cid))
 
 
-def test_train_ivf_centroids_two_level_counts_and_plugs_in(spark):
-    """Two-level IVF training returns ~nlist branch-major centroids of
-    the right dimensionality, deterministically, and the flat list
-    plugs straight into ivf_topk(centroids=...)."""
-    import random
-
-    from taxi_rides_ny_duckdb_spark.operators.similarity import (
-        ivf_topk,
-        train_ivf_centroids_two_level,
-    )
-
-    random.seed(3)
-    rows = [
-        (i, [random.gauss(2.0 * (i % 4), 0.1) for _ in range(4)])
-        for i in range(120)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = train_ivf_centroids_two_level(df, nlist=9)
-    assert all(len(c) == 4 for c in cents)
-    assert 5 <= len(cents) <= 13  # ~nlist, branch-proportional rounding
-    again = train_ivf_centroids_two_level(df, nlist=9)
-    assert cents == again
-    q = spark.createDataFrame(
-        [(0, rows[0][1])], "query_id long, query_vec array<double>"
-    )
-    top = ivf_topk(df, q, k=3, centroids=cents, nprobe=2).collect()
-    assert len(top) == 3 and top[0]["vec_id"] == 0  # finds itself first
-
-
 def test_kmeans_lloyd_grouped_carries_empty_subcluster(spark):
     """A sub-centroid that attracts no member keeps its previous
     coordinates (the flat trainer's empty-cluster rule, grouped form);
@@ -3927,15 +3877,13 @@ def test_kmeans_train_assign_grouped_matches_unfused_pipeline(spark):
     assert (0, 1) not in assigned_scids, "test needs a truly empty leaf"
 
 
-def test_kmeans_lloyd_fused_gate_matches_arrow(spark):
-    """The r13 fused single-task gate (assign='auto' below
+def test_kmeans_lloyd_fused_gate_matches_arrow(spark, monkeypatch):
+    """The r13 fused single-task gate (below
     _FUSED_LLOYD_MAX_ROWS/_CELLS) must return bit-identical centroids
     AND sizes to the distributed arrow loop — including the
     kmeans_lloyd sizes contract (LAST iteration's M-step counts, empty
     clusters absent from the dict, carried centroids present)."""
-    from pyspark.sql import functions as F
-
-    from taxi_rides_ny_duckdb_spark.operators.similarity import kmeans_lloyd
+    from taxi_rides_ny_duckdb_spark.operators import similarity as S
 
     rows = [
         (i, [float(i % 7) * 0.25 + 0.01 * i, float(i % 3) - 1.0, 0.125 * i])
@@ -3943,8 +3891,9 @@ def test_kmeans_lloyd_fused_gate_matches_arrow(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     init = [rows[0][1], rows[1][1], [99.0, 99.0, 99.0]]  # third stays empty
-    cf, sf = kmeans_lloyd(df, init, iters=3, assign="auto")  # gate fires
-    ca, sa = kmeans_lloyd(df, init, iters=3, assign="arrow")
+    cf, sf = S.kmeans_lloyd(df, init, iters=3)  # gate fires
+    monkeypatch.setattr(S, "_FUSED_LLOYD_MAX_ROWS", 0)
+    ca, sa = S.kmeans_lloyd(df, init, iters=3)
     assert cf == ca
     assert sf == sa
     assert 2 not in sf and cf[2] == init[2], "empty cluster carries init"
@@ -3965,23 +3914,40 @@ def test_kmeans_lloyd_first_k_init_matches_explicit(spark, monkeypatch):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     init3 = [rows[0][1], rows[1][1], rows[2][1]]
 
-    exp = S.kmeans_lloyd(df, init3, iters=3, assign="auto")
-    got = S.kmeans_lloyd(df, "first_k", k=3, iters=3, assign="auto")
+    exp = S.kmeans_lloyd(df, init3, iters=3)
+    got = S.kmeans_lloyd(df, "first_k", k=3, iters=3)
     assert got == exp
     monkeypatch.setattr(S, "_FUSED_LLOYD_MAX_ROWS", 0)
-    got_dist = S.kmeans_lloyd(df, "first_k", k=3, iters=3, assign="auto")
+    got_dist = S.kmeans_lloyd(df, "first_k", k=3, iters=3)
     monkeypatch.undo()
     assert got_dist == exp
     # k > n: init = every row
     small = df.filter("vec_id < 2")
-    exp2 = S.kmeans_lloyd(small, [rows[0][1], rows[1][1]], iters=2,
-                          assign="auto")
-    got2 = S.kmeans_lloyd(small, "first_k", k=5, iters=2, assign="auto")
+    exp2 = S.kmeans_lloyd(small, [rows[0][1], rows[1][1]], iters=2)
+    got2 = S.kmeans_lloyd(small, "first_k", k=5, iters=2)
     assert got2 == exp2
 
     import pytest as _pytest
     with _pytest.raises(ValueError, match="first_k"):
-        S.kmeans_lloyd(df, "first_k", iters=1, assign="auto")  # no k
+        S.kmeans_lloyd(df, "first_k", iters=1)  # no k
+
+
+def test_kmeans_lloyd_empty_corpus_names_the_corpus(spark, monkeypatch):
+    """An empty corpus raises an empty-corpus error on BOTH sides of
+    the fused gate — for init='first_k' too, where the old 'init
+    centroids must be non-empty' message blamed an argument the caller
+    never passed."""
+    import pytest as _pytest
+
+    from taxi_rides_ny_duckdb_spark.operators import similarity as S
+
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    for gate in (S._FUSED_LLOYD_MAX_ROWS, 0):
+        monkeypatch.setattr(S, "_FUSED_LLOYD_MAX_ROWS", gate)
+        for init, k in (("first_k", 3), ([[0.0, 1.0]], None)):
+            with _pytest.raises(ValueError, match="empty corpus") as e:
+                S.kmeans_lloyd(empty, init, k=k, iters=1)
+            assert "init" not in str(e.value), (gate, init)
 
 
 def test_semdedup_auto_fused_gates_match_unfused(spark, monkeypatch):
@@ -4461,7 +4427,7 @@ def test_ivfpq_separable_masses_probe_and_recall(spark):
     list, adc_d2 = 0, ranks by id. The end-to-end invariant tying
     ivfpq_encode (assignment → residual → grouped-Lloyd codebooks →
     carry-col codes) to ivfpq_adc_topk (probe ranking → residual LUT
-    → CASE-chain ADC)."""
+    → Arrow-gather ADC)."""
     from taxi_rides_ny_duckdb_spark.operators.similarity import (
         ivfpq_adc_topk,
         ivfpq_encode,
@@ -4502,6 +4468,66 @@ def test_ivfpq_probe_count_bounds_candidates(spark):
     got = ivfpq_adc_topk(codes, cb, centers, q, k=16, m_sub=m, nprobe=2)
     lists = {r["list_id"] for r in got.collect()}
     assert lists == {1, 2}
+
+
+def _null_codes_error(run):
+    from pyspark.errors import PythonException
+
+    with pytest.raises(PythonException) as e:
+        run().collect()
+    return str(e.value)
+
+
+def test_pq_adc_topk_null_codes_raise_malformed(spark):
+    """A NULL codes row stops the ADC gather with the documented
+    'malformed codes' ValueError (not numpy's opaque TypeError from
+    np.asarray on a None row)."""
+    from taxi_rides_ny_duckdb_spark.operators.similarity import (
+        pq_adc_topk,
+        pq_train,
+    )
+
+    dim, m = 4, 2
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 2)] * dim) for i in range(8)],
+        "vec_id long, embedding array<double>",
+    )
+    cb = pq_train(vecs, dim=dim, m_sub=m, ksub=2, iters=1)
+    codes = spark.createDataFrame(
+        [(1, [0, 1]), (2, None), (3, [1, 1])], "vec_id long, codes array<int>"
+    )
+    msg = _null_codes_error(
+        lambda: pq_adc_topk(codes, cb, [0.0] * dim, k=2, m_sub=m)
+    )
+    assert "ValueError: pq_adc_topk: malformed codes" in msg
+    assert "TypeError" not in msg
+
+
+def test_ivfpq_adc_topk_null_codes_raise_malformed(spark):
+    """The probed IVF-PQ gather applies the same NULL-codes check."""
+    from taxi_rides_ny_duckdb_spark.operators.similarity import (
+        ivfpq_adc_topk,
+        ivfpq_encode,
+    )
+
+    dim, m = 4, 2
+    centers = [[float(10 * c)] * dim for c in range(2)]
+    vecs = spark.createDataFrame(
+        [(i, centers[i % 2]) for i in range(8)],
+        "vec_id long, embedding array<double>",
+    )
+    cb, _ = ivfpq_encode(vecs, centers, dim=dim, m_sub=m, ksub=2, iters=1)
+    codes = spark.createDataFrame(
+        [(1, [0, 1], 0), (2, None, 0), (3, [1, 1], 1)],
+        "vec_id long, codes array<int>, list_id int",
+    )
+    msg = _null_codes_error(
+        lambda: ivfpq_adc_topk(
+            codes, cb, centers, centers[0], k=2, m_sub=m, nprobe=2
+        )
+    )
+    assert "ValueError: ivfpq_adc_topk: malformed codes" in msg
+    assert "TypeError" not in msg
 
 
 def test_ranking_quality_perfect_and_disjoint(spark):
@@ -4653,25 +4679,6 @@ def test_binary_sign_words_packs_expected(spark):
     assert rows[0] == [1, 2]
     assert rows[1] == [0, 0]
     assert rows[2] == [2**31, 2**31]
-
-
-def test_estep_strategy_always_arrow():
-    """r13 warm-regime re-measurement: arrow won every cell of the
-    n×k grid (incl. the tiny contract sizes the old expr bound existed
-    for — the worker spin-up the bound guarded against is paid by the
-    collapse's applyInPandas regardless), so 'auto' always resolves to
-    arrow. The expr form stays explicitly selectable (assign='expr');
-    the bit-equality pins elsewhere in this file keep both forms
-    value-identical."""
-    from taxi_rides_ny_duckdb_spark.operators.similarity import (
-        _EXPR_ESTEP_MAX_K,
-        _estep_strategy,
-    )
-
-    for n, k in [(500, 2), (500, 8), (2_000, _EXPR_ESTEP_MAX_K),
-                 (2_001, 2), (20_000, 28), (500, 64)]:
-        assert _estep_strategy(n, k) == "arrow"
-    assert _estep_strategy(500, 64, max_expr_k=64) == "arrow"
 
 
 def test_round9_vectorized_matches_scalar(spark):
@@ -5224,11 +5231,11 @@ def test_cms_build_weighted_matches_per_occurrence(spark):
         assert per_occ == weighted, (depth, width)
 
 
-def test_hamming_topk_expr_arrow_bit_equal(spark, sf_dir):
-    """The expr (codegen cross join + WindowGroupLimit) and arrow
-    (two-phase numpy popcount) strategies are bit-identical — exact
-    integer math, so strategy choice is pure physics (the
-    kmeans_assign precedent)."""
+def test_hamming_topk_matches_python_reference(spark, sf_dir):
+    """The Arrow two-phase top-k (per-batch local top-k, then a
+    window) must equal a brute-force pure-Python replay — xor +
+    popcount over every (query, vector) pair, (distance, id) order —
+    on real fixture codes, in ranks AND distances."""
     from taxi_rides_ny_duckdb_spark.operators.similarity import (
         binary_quantize,
         hamming_topk,
@@ -5240,10 +5247,18 @@ def test_hamming_topk_expr_arrow_bit_equal(spark, sf_dir):
     qb = binary_quantize(emb.filter("vec_id < 8"), 64).selectExpr(
         "vec_id AS query_id", "bits"
     )
+    codes = {r["vec_id"]: list(r["bits"]) for r in cb.collect()}
+    want = []
+    for r in qb.collect():
+        d = sorted(
+            (sum(bin(a ^ b).count("1") for a, b in zip(r["bits"], w)), vid)
+            for vid, w in codes.items()
+        )
+        want += [(r["query_id"], i + 1, vid, dist)
+                 for i, (dist, vid) in enumerate(d[:5])]
     key = lambda r: (r["query_id"], r["rank"], r["vec_id"], r["hamming_d"])
-    a = sorted(map(key, hamming_topk(cb, qb, k=5, strategy="arrow").collect()))
-    e = sorted(map(key, hamming_topk(cb, qb, k=5, strategy="expr").collect()))
-    assert a == e and len(a) == 40
+    got = sorted(map(key, hamming_topk(cb, qb, k=5).collect()))
+    assert got == sorted(want) and len(got) == 40
 
 
 def test_brier_decomposition_hand_computed(spark):

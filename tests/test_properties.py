@@ -355,10 +355,15 @@ def test_corpus_shuffle_is_permutation_and_partition_invariant(spark, ids):
         st.text(alphabet="ab ", min_size=0, max_size=20), max_size=10
     )
 )
-def test_tfidf_window_and_join_modes_agree(spark, docs):
-    """The fused (window-df) and AQE-joinable tfidf forms are one
-    operator: identical (id, rank, term, score) on arbitrary small
-    corpora, including empty/whitespace-only documents."""
+def test_tfidf_matches_python_reference(spark, docs):
+    """tfidf_topk_terms equals a pure-Python replay — smooth idf
+    ln((N+1)/(df+1)) + 1, 9dp round-before-rank, ties by term — on
+    arbitrary small corpora, including empty/whitespace-only
+    documents (they count in N and emit no rows)."""
+    import math
+    from collections import Counter
+
+    from taxi_rides_ny_duckdb_spark.operators.classify import _round9_half_up
     from taxi_rides_ny_duckdb_spark.operators.cleaning import tfidf_topk_terms
 
     df = spark.createDataFrame(
@@ -367,11 +372,21 @@ def test_tfidf_window_and_join_modes_agree(spark, docs):
     )
     if not docs:
         df = df.filter("doc_id < 0")
-    w = {(r["doc_id"], r["rank"], r["term"], r["tfidf_r"])
-         for r in tfidf_topk_terms(df, "text", "doc_id", 2).collect()}
-    j = {(r["doc_id"], r["rank"], r["term"], r["tfidf_r"])
-         for r in tfidf_topk_terms(df, "text", "doc_id", 2, df_mode="join").collect()}
-    assert w == j
+    got = {(r["doc_id"], r["rank"], r["term"], r["tfidf_r"])
+           for r in tfidf_topk_terms(df, "text", "doc_id", 2).collect()}
+    tfs = [Counter(t.lower().split()) for t in docs]
+    dfreq = Counter(term for c in tfs for term in c)
+    want = set()
+    for i, c in enumerate(tfs):
+        scored = sorted(
+            (-_round9_half_up(
+                n * (math.log((len(docs) + 1.0) / (dfreq[t] + 1.0)) + 1.0)
+            ), t)
+            for t, n in c.items()
+        )
+        want |= {(i, rank, t, -neg)
+                 for rank, (neg, t) in enumerate(scored[:2], start=1)}
+    assert got == want
 
 
 # The exact path's documented domain is decimal-valued (price-scale)

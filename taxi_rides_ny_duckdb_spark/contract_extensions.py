@@ -3168,8 +3168,8 @@ def ext_hard_negative_topk(spark, sf_dir):
     decisions it supersedes), and the unfused composition paid 9
     scheduled jobs + ~0.6 s of per-run driver planning for 500
     cosines. The distributed operators (hard_negative_topk + the pair
-    self-join + connected_components) remain the scale path; the fused
-    twin is pinned row-identical to them by
+    self-join + connected_components) are its fallback above the
+    work-size gate, pinned row-identical across the gate by
     test_hard_negative_mine_fused_matches_unfused."""
     from .operators.similarity import hard_negative_mine_fused
 
@@ -3284,8 +3284,8 @@ def ext_hard_negative_topk_ann(spark, sf_dir):
     for the two nlist × dim frozen-centroid literal trees of
     _centroid_ranking (measured job-timeline gap with zero running
     jobs); fused, the literals ride in the task closure. The
-    distributed hard_negative_topk_ann remains the scale path, pinned
-    row-identical by test_hard_negative_mine_fused_matches_unfused."""
+    distributed hard_negative_topk_ann is its above-gate fallback,
+    pinned row-identical by test_hard_negative_mine_fused_matches_unfused."""
     from .contract_ivf_centroids import IVF_CENTROIDS
     from .operators.similarity import hard_negative_mine_fused
 

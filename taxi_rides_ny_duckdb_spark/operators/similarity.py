@@ -201,6 +201,29 @@ def _round9_half_up_np(v):
     return out
 
 
+def _round_dp_np(vals, dp: int):
+    """The ``F.round(·, dp)`` twin on a float64 array of any shape:
+    ``_round9_half_up_np`` at dp=9, else HALF_UP on the scalar
+    ``Decimal(repr(x))`` per value (both engines round the shortest
+    repr at fractional scales). Property-tested against ``F.round`` at
+    dp 3, 6 and 9 (test_round9_vectorized_matches_scalar)."""
+    import numpy as np
+
+    v = np.asarray(vals, dtype=np.float64)
+    if dp == 9:
+        return _round9_half_up_np(v.ravel()).reshape(v.shape)
+    from decimal import ROUND_HALF_UP, Decimal
+
+    q = Decimal(1).scaleb(-dp)
+    return np.array(
+        [
+            float(Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP))
+            for x in v.ravel()
+        ],
+        dtype=np.float64,
+    ).reshape(v.shape)
+
+
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product (deterministic order).
 
@@ -679,7 +702,7 @@ def embedding_near_dup_pairs(
     (~3M pairs × 64 dims at sf0.1 — the query's dominant job); now
     the corpus shuffles ONCE on the signature and each bucket's
     pairing is a vectorized dim-SEQUENTIAL blocked dot (== the engine
-    fold order, bit-equal — the _semdedup_collapse parity argument),
+    fold order, bit-equal — the _semdedup_tail_np parity argument),
     in-task norms (== ``l2_norm``'s fold + sqrt), zero-norm → 0.0,
     the ``F.round`` twin applied before the threshold. Per-task
     memory is one bucket's vectors — bounded by the LSH design
@@ -697,22 +720,6 @@ def embedding_near_dup_pairs(
     dp = None if score_round_dp is None else int(score_round_dp)
     idt = dict(df.dtypes)[id_col]
     schema = f"id_a {idt}, id_b {idt}, cosine_sim double"
-
-    def round_np(vals):
-        if dp == 9:
-            return _round9_half_up_np(vals)
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q = Decimal(1).scaleb(-dp)
-        return np.array(
-            [
-                float(
-                    Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP)
-                )
-                for x in vals
-            ],
-            dtype=np.float64,
-        )
 
     chunk = 512
 
@@ -756,7 +763,7 @@ def embedding_near_dup_pairs(
                 ii, jj = np.nonzero(iu[:, None] < ju[None, :])
                 s = sim[ii, jj]
                 if dp is not None:
-                    s = round_np(s)
+                    s = _round_dp_np(s, dp)
                 keep = s >= thr
                 out_a.extend(ids[iu[ii[keep]]])
                 out_b.extend(ids[ju[jj[keep]]])
@@ -1133,80 +1140,100 @@ def hard_negative_mine_fused(
     """The WHOLE hard-negative mining pipeline — near-dup pair graph,
     transitive closure, (optional IVF) candidate generation, exact
     re-score, component exclusion and per-query top-k rank — as ONE
-    applyInPandas task (r13 optimization round, guide §1.2/§2.4/§4.2):
-    the BOUNDED-corpus sibling of ``hard_negative_topk`` /
-    ``hard_negative_topk_ann``, for callers whose corpus is bounded BY
-    CONSTRUCTION (the contract pair states ``vec_id < 100`` in the
-    query text — the same justification as their ``min_partitions=1``).
-    The unfused composition cost 9 scheduled jobs per query (3 CC edge
-    collects + broadcast builds that each re-ran the pair-cosine
-    lineage) plus ~0.6–1.9 s of DRIVER PLANNING per run: the
-    nlist × dim frozen-centroid literals of ``_centroid_ranking``
-    (twice) and the pair self-join's fold trees re-analyze on every
-    run (memoize=False). Here every literal lives in the task closure
-    and the driver never sees an edge list.
+    applyInPandas task (r13 optimization round, guide §1.2/§2.4/§4.2)
+    while the corpus fits the shared work-size gate: n ≤
+    ``_FUSED_LLOYD_MAX_ROWS`` and n² ≤ ``_FUSED_LLOYD_MAX_CELLS`` (the
+    pair graph is n² work in one task). The distributed composition
+    cost 9 scheduled jobs per query (3 CC edge collects + broadcast
+    builds that each re-ran the pair-cosine lineage) plus ~0.6–1.9 s
+    of DRIVER PLANNING per run: the nlist × dim frozen-centroid
+    literals of ``_centroid_ranking`` (twice) and the pair self-join's
+    fold trees re-analyze on every run. Here every literal lives in
+    the task closure and the driver never sees an edge list.
+
+    Above the gate it runs that composition: the rounded-cosine pair
+    self-join → ``connected_components`` (mapping) →
+    ``hard_negative_topk``, or ``hard_negative_topk_ann`` when
+    ``centroids`` is given. Without centroids the score is rounded at
+    9 dp (``hard_negative_topk``'s contract), so ``score_round_dp``
+    must be 9 there.
 
     ``df`` holds the corpus with a boolean ``is_query_col`` marking the
     query subset (queries ⊆ corpus). Returns (query_id, rank, vec_id,
-    cosine_sim_r) — the exact schema of the unfused operators.
+    cosine_sim_r) on both sides of the gate.
 
-    Bit-parity with the unfused chain, term by term (pinned by
-    test_hard_negative_mine_fused_matches_unfused):
+    Bit-parity with the distributed composition, term by term (pinned
+    across the gate by test_hard_negative_mine_fused_matches_unfused):
     - pair graph: ``_collapse_cluster_np`` over the id-sorted corpus —
       dim-sequential blocked dot (== the engine fold), in-task norms
       (== ``l2_norm``'s fold + sqrt), margin prefilter + exact
       ``F.round`` twin at ``pair_round_dp``, min-member-id union-find
       (== ``connected_components``); every id gets a component, absent
       edges leave it a self-singleton (== left join + coalesce);
-    - IVF candidates (``centroids`` given): per-centroid squared-L2
-      accumulated dim-sequentially, rounded through the ``F.round``
-      twin at ``round_dp``, corpus list = first minimum (== the
-      ``array_sort``/struct ties-to-lower-cid), query probe set = the
-      first ``nprobe`` of the (d, i)-lexicographic ranking (== sliced
-      ``_centroid_ranking``); a corpus row is a candidate iff its own
-      list is in the query's probe set (== the ``__list`` equi-join);
+    - IVF candidates (``centroids`` given): ``_nearest_centroid_np`` at
+      ``round_dp`` gives the corpus list (== the ``array_sort``/struct
+      ties-to-lower-cid) and the distance rows; the query probe set is
+      the first ``nprobe`` of the (d, i)-lexicographic ranking (==
+      sliced ``_centroid_ranking``); a corpus row is a candidate iff
+      its own list is in the query's probe set (== the ``__list``
+      equi-join);
     - score: sequential-fold dot / (norm·norm), zero-norm → 0.0
       (== ``cosine()``), rounded through the twin at
       ``score_round_dp``; rank = first k under (score desc, id asc)
       via stable lexsort (== ``row_number``), query's own component
-      (hence itself) excluded exactly as the unfused filter."""
+      (hence itself) excluded exactly as the distributed filter."""
     import numpy as np
     import pandas as pd
 
     thr = float(pair_threshold)
     pdp = int(pair_round_dp)
     sdp = int(score_round_dp)
-    margin = thr - 10.0 ** (-pdp)
+    if centroids is None and sdp != 9:
+        raise ValueError(
+            "hard_negative_mine_fused: without centroids the score is "
+            f"rounded at 9 dp (hard_negative_topk), got score_round_dp={sdp}"
+        )
+    n = df.count()
+    if n > _FUSED_LLOYD_MAX_ROWS or n * n > _FUSED_LLOYD_MAX_CELLS:
+        from .dedup import connected_components
+
+        v = df.select(
+            F.col(id_col),
+            _as_double_array(F.col(vec_col)).alias("__v"),
+            F.col(is_query_col),
+        ).withColumn("__n", l2_norm(F.col("__v")))
+        a = v.select(F.col(id_col).alias("id_a"), F.col("__v").alias("__va"),
+                     F.col("__n").alias("__na"))
+        b = v.select(F.col(id_col).alias("id_b"), F.col("__v").alias("__vb"),
+                     F.col("__n").alias("__nb"))
+        sim = cosine_given_norms(
+            F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")
+        )
+        pairs = (
+            a.join(b, F.col("id_a") < F.col("id_b"))
+            .filter(F.round(sim, pdp) >= thr)
+            .select("id_a", "id_b")
+        )
+        comp = connected_components(pairs, "id_a", "id_b", emit="mapping")
+        corpus = v.select(id_col, "__v")
+        queries = v.filter(F.col(is_query_col)).select(
+            F.col(id_col).alias("query_id"), F.col("__v").alias("query_vec")
+        )
+        if centroids is None:
+            return hard_negative_topk(
+                corpus, queries, comp, k, corpus_id=id_col, corpus_vec="__v"
+            )
+        return hard_negative_topk_ann(
+            corpus, queries, comp, k, centroids, nprobe, corpus_id=id_col,
+            corpus_vec="__v", round_dp=round_dp, score_round_dp=sdp,
+        )
+
     C = (
         np.asarray([[float(x) for x in c] for c in centroids], dtype=np.float64)
         if centroids is not None
         else None
     )
-
-    def _round_np(dp: int):
-        def f(vals):
-            if dp == 9:
-                return _round9_half_up_np(vals)
-            from decimal import ROUND_HALF_UP, Decimal
-
-            q = Decimal(1).scaleb(-dp)
-            return np.array(
-                [
-                    float(
-                        Decimal(repr(float(x))).quantize(
-                            q, rounding=ROUND_HALF_UP
-                        )
-                    )
-                    for x in vals
-                ],
-                dtype=np.float64,
-            )
-
-        return f
-
-    round_pair = _round_np(pdp)
-    round_score = _round_np(sdp)
-    round_quant = _round_np(int(round_dp)) if round_dp is not None else None
+    quant_dp = int(round_dp) if round_dp is not None else None
 
     dtypes = dict(df.dtypes)
     idt = dtypes[id_col]
@@ -1227,20 +1254,10 @@ def hard_negative_mine_fused(
         for d in range(dim):  # sequential over dims == fold order
             nv += X[:, d] * X[:, d]
         nv = np.sqrt(nv)
-        root, _keep = _collapse_cluster_np(
-            ids, X if n >= 2 else None, nv, nv, thr, margin, round_pair
-        )
+        root, _keep = _collapse_cluster_np(ids, X, nv, nv, thr, pdp)
         comp = ids[root]
         if C is not None:
-            kc = len(C)
-            D = np.zeros((n, kc), dtype=np.float64)
-            for d in range(dim):
-                t = X[:, d : d + 1] - C[:, d][None, :]
-                D += t * t
-            if round_quant is not None:
-                for i in range(kc):
-                    D[:, i] = round_quant(D[:, i])
-            clist = np.where(np.isnan(D), np.inf, D).argmin(axis=1)
+            clist, D = _nearest_centroid_np(X, C, quant_dp)
         out_q, out_r, out_i, out_s = [], [], [], []
         for qi in np.nonzero(isq)[0]:
             if C is not None:
@@ -1261,7 +1278,7 @@ def hard_negative_mine_fused(
             for d in range(dim):
                 dot += X[qi, d] * B[:, d]
             ok = (nv[qi] > 0) & (nv[cand] > 0)
-            sc = round_score(
+            sc = _round_dp_np(
                 np.where(
                     ok,
                     np.divide(
@@ -1271,7 +1288,8 @@ def hard_negative_mine_fused(
                         where=ok,
                     ),
                     0.0,
-                )
+                ),
+                sdp,
             )
             order = np.lexsort((ids[cand], -sc))[: int(k)]
             out_q.extend([ids[qi]] * len(order))
@@ -1465,132 +1483,83 @@ def semdedup(
     centroid (the paper's "keep the most atypical" rule; ties to the
     lower id). Returns (id, centroid_id, component, cent_sim_r, keep).
 
-    100 TB shape: the assignment is a pure projection (centroids ride
-    as literals — no join, no shuffle); pairing is O(Σ|c|²) WITHIN
+    100 TB shape: the assignment is a per-partition numpy map
+    (``_nearest_centroid_np`` in ``mapInPandas``; centroids ride in the
+    closure — no join, no shuffle); pairing is O(Σ|c|²) WITHIN
     clusters instead of O(N²) — the paper's entire scaling argument,
     WHICH ONLY HOLDS IF len(centroids) SCALES WITH THE CORPUS: size
     nlist ≈ N / target_cluster_size (the paper uses ~sqrt(N)-scale
     cluster counts) so mean |c| stays constant; a frozen small
     quantizer re-quadratizes as the table grows (measured: 4.6 s →
-    329 s across a 10× scale-up against 8 fixed centroids);
-    pairing, transitive closure and the keep rule all run inside ONE
-    fused per-cluster Arrow pass (``_semdedup_collapse`` — r13; the
-    r10 blocked-numpy pairing kernel is unchanged, the exact rounded
-    filter now applies in-task via the property-tested ``F.round``
-    twin, and the union-find replays ``connected_components``'
-    min-member-id contract cluster-locally). Every cosine is rounded
-    BEFORE the threshold / argmin so the decision set is
-    engine-reproducible.
-    Below the shared ``_FUSED_LLOYD_*`` work-size gate the WHOLE
-    pipeline — assignment, own-centroid scoring AND the per-cluster
-    collapse — runs inside ONE applyInPandas task
-    (``_semdedup_frozen_fused``, r13 optimization round): the
-    k × dim-literal assignment/score expressions are interpreted HOF
-    folds (they cannot whole-stage-codegen, and the ~k·dim-node
-    literal trees re-plan on every run), so at the bounded corpus the
-    gate admits, the numpy twins are both faster AND variance-free.
-    Above the gate the distributed per-cluster path below is
-    unchanged — one gate count is the only added job.
+    329 s across a 10× scale-up against 8 fixed centroids). Scoring,
+    pairing, transitive closure and the keep rule run in
+    ``_semdedup_tail_np``, once per cluster (``_semdedup_collapse``).
+    Every cosine and distance is rounded BEFORE the threshold / argmin
+    so the decision set is engine-reproducible.
+
+    Below the shared ``_FUSED_LLOYD_*`` work-size gate the same two
+    kernels run over the whole corpus in ONE applyInPandas task
+    (``_semdedup_frozen_fused``); the gate count is the only added job.
     """
+    import numpy as np
+
+    C = np.asarray([[float(x) for x in c] for c in centroids], dtype=np.float64)
+    dp = int(round_dp)
     n = df.count()
     if n <= _FUSED_LLOYD_MAX_ROWS and n * len(centroids) <= _FUSED_LLOYD_MAX_CELLS:
-        return _semdedup_frozen_fused(
-            df, centroids, threshold, id_col, vec_col, round_dp
-        )
-    assigned = assign_nearest_centroid(
-        ensure_min_partitions(df), centroids, vec_col=vec_col,
-        out_col="centroid_id", round_dp=round_dp,
-    ).select(
-        F.col(id_col),
-        "centroid_id",
-        _as_double_array(F.col(vec_col)).alias("__v"),
-    ).withColumn("__n", l2_norm(F.col("__v")))
+        return _semdedup_frozen_fused(df, C, threshold, id_col, vec_col, dp)
+    idt = dict(df.dtypes)[id_col]
 
-    # similarity of each vector to ITS OWN centroid — the keep-rule
-    # score. One codegen expression per centroid, selected by id.
-    cent_sim = F.round(
-        _pick_centroid_cosine(F.col("__v"), F.col("__n"), centroids, "centroid_id"),
-        round_dp,
+    def assign(batches):
+        for pdf in batches:
+            a, _D = _nearest_centroid_np(_vec_matrix(pdf["__v"], C.shape[1]), C, dp)
+            yield pdf.assign(centroid_id=a.astype(np.int32))
+
+    members = (
+        ensure_min_partitions(df)
+        .select(F.col(id_col), _as_double_array(F.col(vec_col)).alias("__v"))
+        .mapInPandas(assign, f"{id_col} {idt}, __v array<double>, centroid_id int")
     )
-    assigned = assigned.withColumn("cent_sim_r", cent_sim)
+    return _semdedup_collapse(
+        members, _centroid_frame(df.sparkSession, centroids), threshold,
+        id_col, round_dp,
+    )
 
-    return _semdedup_collapse(assigned, threshold, id_col, round_dp)
+
+def _nearest_centroid_np(X, C, dp: int | None):
+    """Frozen-centroid assignment in numpy: returns ``(a, D)`` — D the
+    (n, k) squared-L2 matrix, each entry accumulated dim-SEQUENTIALLY
+    (``D[:, i] += (x_d − c_d)²`` for d ascending, the identical IEEE
+    order as ``assign_nearest_centroid``'s ``aggregate(zip_with(...))``
+    left fold) and rounded through ``_round_dp_np`` at ``dp`` (None:
+    unrounded); a the argmin with NaN ranked greatest (``array_min``'s
+    double ordering, via +inf) and the first minimum on ties (the
+    struct ordering's ties-to-lower-cid)."""
+    import numpy as np
+
+    D = np.zeros((len(X), len(C)), dtype=np.float64)
+    for d in range(C.shape[1]):  # sequential over dims == fold order
+        t = X[:, d : d + 1] - C[:, d][None, :]
+        D += t * t
+    if dp is not None:
+        D = _round_dp_np(D, dp)
+    return np.where(np.isnan(D), np.inf, D).argmin(axis=1), D
 
 
 def _semdedup_frozen_fused(
-    df: DataFrame,
-    centroids: list[list[float]],
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    round_dp: int,
+    df: DataFrame, C, threshold: float, id_col: str, vec_col: str, dp: int
 ) -> DataFrame:
-    """``semdedup`` against FROZEN centroids as ONE task (r13
-    optimization round, guide §1.2/§2.4/§4.2; the frozen-path sibling
-    of ``_semdedup_tower_fused``): below the ``_FUSED_LLOYD_*`` gate
-    the distributed chain cost one round-robin exchange + an
-    interpreted k·dim HOF-fold projection pass + the groupBy(centroid)
-    exchange + the collapse Arrow pass — ~0.8 s noop at sf0.1 for
-    milliseconds of numpy, and the interpreted folds made the row the
-    suite's most noise-sensitive (measured 1.6–12 s under CPU steal).
-
-    Bit-parity with the unfused chain, term by term (pinned by
-    test_semdedup_frozen_fused_matches_unfused):
-    - assignment: per centroid i the squared-L2 accumulates
-      dim-SEQUENTIALLY (``D[:, i] += (x_d − c_d)²`` for d ascending) —
-      the identical IEEE order as ``assign_nearest_centroid``'s
-      ``aggregate(zip_with(...))`` left fold; each distance is rounded
-      through the ``F.round`` twin BEFORE the argmin, NaN distances
-      rank greatest (``array_min``'s double ordering) via a +inf
-      substitution, and ``np.argmin``'s first-minimum tie rule is
-      exactly the struct ordering's ties-to-lower-cid;
-    - cent_sim_r: sequential-fold dot and data-side norm (== the
-      engine ``l2_norm``/``_pick_centroid_cosine`` fold order), the
-      centroid norm from the SAME ``math.sqrt(sum(...))`` Python fold
-      ``_pick_centroid_cosine`` embeds as a literal, zero-norm → 0.0,
-      rounded through the ``F.round`` twin;
-    - collapse per cluster: ``_collapse_cluster_np`` — the SAME kernel
-      ``_semdedup_collapse`` runs.
-    Vectors must be exactly dim-long (``_vec_matrix`` fails fast on
-    NULL/ragged rows — the ADVICE r12 fail-fast contract — where the
-    HOF folds would have degraded them to NULL/NaN scores).
-
-    Above the gate callers keep the distributed per-cluster passes —
-    this path serializes the whole corpus through one worker, which is
-    exactly what the WORK-sized gate bounds."""
+    """``semdedup`` against FROZEN centroids as ONE task below the
+    ``_FUSED_LLOYD_*`` gate: ``_nearest_centroid_np`` then
+    ``_semdedup_tail_np`` over the whole corpus — the same two kernels
+    the above-gate path runs per partition and per cluster (bit-parity
+    argument in their docstrings). Vectors must be exactly dim-long
+    (``_vec_matrix`` fails fast on NULL/ragged rows). ``C`` is the
+    (k, dim) float64 centroid matrix."""
     import numpy as np
     import pandas as pd
 
-    thr = float(threshold)
-    dp = int(round_dp)
-    margin = thr - 10.0 ** (-dp)
-    C = np.asarray([[float(x) for x in c] for c in centroids], dtype=np.float64)
-    # the exact literal _pick_centroid_cosine bakes in: a Python
-    # left-fold sum of squares, then math.sqrt
-    cn = np.asarray(
-        [math.sqrt(sum(float(x) * float(x) for x in c)) for c in centroids],
-        dtype=np.float64,
-    )
-    k, dim = C.shape
-
-    def round_dp_np(vals):
-        if dp == 9:
-            return _round9_half_up_np(vals)
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q = Decimal(1).scaleb(-dp)
-        return np.array(
-            [
-                float(
-                    Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP)
-                )
-                for x in vals
-            ],
-            dtype=np.float64,
-        )
-
-    dtypes = dict(df.dtypes)
-    idt = dtypes[id_col]
+    idt = dict(df.dtypes)[id_col]
     schema = (
         f"{id_col} {idt}, centroid_id int, component {idt}, "
         f"cent_sim_r double, keep boolean"
@@ -1599,44 +1568,9 @@ def _semdedup_frozen_fused(
     def fn(pdf):
         pdf = pdf.sort_values(id_col)
         ids = pdf[id_col].to_numpy()
-        n = len(pdf)
-        X = _vec_matrix(pdf["__v"], dim)
-        D = np.zeros((n, k), dtype=np.float64)
-        for d in range(dim):  # sequential over dims == fold order
-            t = X[:, d : d + 1] - C[:, d][None, :]
-            D += t * t
-        for i in range(k):  # round_dp_np kernels are 1-D
-            D[:, i] = round_dp_np(D[:, i])
-        a = np.where(np.isnan(D), np.inf, D).argmin(axis=1)
-        CA = C[a]
-        nv = np.zeros(n)
-        dot_vc = np.zeros(n)
-        for d in range(dim):
-            nv += X[:, d] * X[:, d]
-            dot_vc += X[:, d] * CA[:, d]
-        nv = np.sqrt(nv)
-        cna = cn[a]
-        ok = (nv > 0) & (cna > 0)
-        sims = round_dp_np(
-            np.where(
-                ok, np.divide(dot_vc, nv * cna, out=np.zeros(n), where=ok), 0.0
-            )
-        )
-        component = np.empty(n, dtype=ids.dtype)
-        keep = np.zeros(n, dtype=bool)
-        for ci in np.unique(a):
-            idx = np.nonzero(a == ci)[0]  # id-ascending within cluster
-            root, kp = _collapse_cluster_np(
-                ids[idx],
-                X[idx] if len(idx) >= 2 else None,
-                nv[idx],
-                sims[idx],
-                thr,
-                margin,
-                round_dp_np,
-            )
-            component[idx] = ids[idx][root]
-            keep[idx] = kp
+        X = _vec_matrix(pdf["__v"], C.shape[1])
+        a, _D = _nearest_centroid_np(X, C, dp)
+        component, sims, keep = _semdedup_tail_np(ids, X, a, C, threshold, dp)
         return pd.DataFrame(
             {
                 id_col: ids,
@@ -1655,19 +1589,16 @@ def _semdedup_frozen_fused(
     return v0.groupBy("__g").applyInPandas(fn, schema)
 
 
-def _collapse_cluster_np(
-    ids, X, nrm, sims, thr: float, margin: float, round_dp_np, chunk: int = 512
-):
-    """One cluster's pairing + transitive closure + keep rule — the
-    in-task kernel shared by ``_semdedup_collapse`` and
-    ``_semdedup_tower_fused`` (r13; extracted verbatim so the two
-    fused paths cannot drift). ``ids`` MUST be sorted ascending (index
-    order == id order, so the index mask replays ``id_a < id_b``);
-    ``X`` may be None for singleton clusters. Returns ``(root, keep)``
-    — root[i] is the component representative's LOCAL INDEX (min index
-    == min id), keep is the first row per component under
-    (cent_sim_r asc, id asc). See ``_semdedup_collapse`` for the full
-    bit-parity argument."""
+def _collapse_cluster_np(ids, X, nrm, sims, thr: float, dp: int):
+    """One cluster's pairing + transitive closure + keep rule, the
+    per-cluster loop of ``_semdedup_tail_np`` (and the pair graph of
+    ``hard_negative_mine_fused``). ``ids`` MUST be sorted ascending
+    (index order == id order, so the index mask replays
+    ``id_a < id_b``); ``nrm`` are the rows' norms, ``sims`` their keep
+    scores. Returns ``(root, keep)`` — root[i] is the component
+    representative's LOCAL INDEX (min index == min id), keep is the
+    first row per component under (sims asc, id asc). See
+    ``_semdedup_tail_np`` for the bit-parity argument."""
     import numpy as np
 
     n = len(ids)
@@ -1681,8 +1612,10 @@ def _collapse_cluster_np(
             parent[i], i = r, parent[i]
         return r
 
-    if n >= 2 and X is not None:
+    if n >= 2:
+        margin = thr - 10.0 ** (-dp)  # sound prefilter: rounding moves < 10^-dp
         dim = X.shape[1]
+        chunk = 512
         for i0 in range(0, n, chunk):
             A, na = X[i0 : i0 + chunk], nrm[i0 : i0 + chunk]
             iu = np.arange(i0, i0 + len(A))
@@ -1705,7 +1638,7 @@ def _collapse_cluster_np(
                 ii, jj = np.nonzero(mask)
                 if not len(ii):
                     continue
-                hit = round_dp_np(sim[ii, jj]) >= thr
+                hit = _round_dp_np(sim[ii, jj], dp) >= thr
                 for a, b in zip(iu[ii[hit]], ju[jj[hit]]):
                     ra, rb = find(int(a)), find(int(b))
                     if ra == rb:
@@ -1726,107 +1659,137 @@ def _collapse_cluster_np(
     return root, keep
 
 
-def _semdedup_collapse(
-    assigned: DataFrame, threshold: float, id_col: str, round_dp: int
-) -> DataFrame:
-    """Shared SemDeDup tail, ONE fused Arrow pass per cluster (r13
-    optimization round, guide §1.2/§2.4/§4.2): every decision after
-    assignment is CLUSTER-LOCAL — candidate pairs are generated within
-    clusters only, so components never span clusters and the keep
-    window's component partitions nest inside cluster partitions —
-    which means pairing, transitive closure and the keep rule all run
-    inside the SAME per-centroid task that already holds the cluster's
-    vectors. One groupBy(centroid_id) exchange replaces the unfused
-    chain's persist + edge-count job + edge-collect job + mapping
-    broadcast join + keep-window exchange, and the driver never sees
-    an edge list at ANY scale (the old driver union-find shipped the
-    collected pairs up and the mapping back down).
+def _semdedup_tail_np(ids, X, centroid_id, C, threshold: float, round_dp: int):
+    """The SemDeDup tail every path ends in: own-centroid keep score,
+    then pairing + transitive closure + keep rule per cluster. ``ids``
+    sorted ascending, ``X`` the (n, dim) float64 vectors,
+    ``centroid_id`` each row's index into the (k, dim) centroid matrix
+    ``C``. Returns ``(component, cent_sim_r, keep)`` aligned with
+    ``ids``. Below the ``_FUSED_LLOYD_*`` gate the fused bodies run it
+    over the whole corpus in one task; above it ``_semdedup_collapse``
+    runs it once per ``centroid_id`` group. Every decision is
+    CLUSTER-LOCAL (pairs only within a cluster, so components never
+    span clusters and the keep partitions nest inside them), which is
+    why both granularities give the same rows.
 
-    Bit-parity with the unfused chain, term by term (pinned by
-    test_semdedup_collapse_matches_scalar_replica against an
-    independent scalar reimplementation):
-    - the candidate dot accumulates dim-SEQUENTIALLY over vectorized
-      pair blocks (``acc += A[:,d]·B[:,d]`` for d ascending) — the
-      identical IEEE operation order as the engine's left-to-right
-      ``aggregate`` fold and the oracle's ``list_sum(list_transform)``,
-      so the double is bit-equal; norms are NOT recomputed — the
-      ENGINE-computed ``__n`` rides in; zero-norm rows score 0.0 (the
-      ``cosine()`` convention);
-    - the margin prefilter at ``threshold − 10^−round_dp`` is a sound
+    Bit-parity with the SQL oracles (and the former Spark-expression
+    chain), term by term:
+    - norms and the own-centroid dot accumulate dim-SEQUENTIALLY
+      (``acc += a[:, d]·b[:, d]`` for d ascending) — the identical IEEE
+      operation order as the engine's left-to-right ``aggregate`` fold
+      and the oracle's ``list_sum(list_transform)``; sqrt after;
+    - cent_sim_r = dot / (‖x‖·‖c‖), zero-norm → 0.0 (the ``cosine()``
+      convention), rounded through ``_round_dp_np`` (the ``F.round``
+      twin);
+    - pair candidates: the same sequential-fold dot over vectorized
+      pair blocks within a cluster, index order == id order (``ids``
+      sorted) so the upper-triangle mask is ``id_a < id_b``; the
+      margin prefilter at ``threshold − 10^−round_dp`` is a sound
       superset (dp-rounding moves a value < 10^−dp) and the EXACT
-      filter ``round(dot/(na·nb), dp) ≥ threshold`` is applied via the
-      property-tested ``_round9_half_up_np`` twin of ``F.round``
-      (scalar ``Decimal(repr(x))`` quantize for dp ≠ 9);
+      filter ``round(cos, dp) ≥ threshold`` applies the same twin;
     - components: union-find attaching the larger root under the
       smaller, so the representative is the min member id —
-      ``connected_components``' documented contract; edge-untouched
-      rows stay their own singletons (the old left-join + coalesce);
+      ``connected_components``' contract; pair-free rows stay their
+      own singletons;
     - keep: first row per component under (cent_sim_r asc, id asc) via
-      a stable lexsort — ``row_number() == 1`` under the same
-      ordering; NaN sorts last on both sides (Spark ASC places NaN
-      greatest; numpy sorts NaN to the end).
+      a stable lexsort — ``row_number() == 1`` under the same ordering;
+      NaN sorts last on both sides (Spark ASC places NaN greatest;
+      numpy sorts NaN to the end).
+    Pinned against an independent scalar replica by
+    test_semdedup_collapse_matches_scalar_replica and across the gate
+    by the frozen and auto parity tests."""
+    import numpy as np
 
-    100 TB shape: clusters are ~target-sized by the auto-sizing
-    contract, so each group is a bounded sub-problem — the in-task
-    union-find is O(E·α) over the same pair set the task already
-    materialized, and the per-task memory bound is unchanged
-    (applyInPandas already holds the whole group). ``assigned``
-    carries (id_col, centroid_id, cent_sim_r, __v, __n)."""
+    n, dim = X.shape
+    nv = np.zeros(n)
+    dot_vc = np.zeros(n)
+    cn = np.zeros(len(C))
+    CA = C[centroid_id]
+    for d in range(dim):  # sequential over dims == fold order
+        nv += X[:, d] * X[:, d]
+        dot_vc += X[:, d] * CA[:, d]
+        cn += C[:, d] * C[:, d]
+    nv, cna = np.sqrt(nv), np.sqrt(cn)[centroid_id]
+    ok = (nv > 0) & (cna > 0)
+    sims = _round_dp_np(
+        np.where(ok, np.divide(dot_vc, nv * cna, out=np.zeros(n), where=ok), 0.0),
+        round_dp,
+    )
+    thr = float(threshold)
+    component = np.empty(n, dtype=ids.dtype)
+    keep = np.zeros(n, dtype=bool)
+    for ci in np.unique(centroid_id):
+        idx = np.nonzero(centroid_id == ci)[0]  # id-ascending within cluster
+        root, kp = _collapse_cluster_np(
+            ids[idx], X[idx], nv[idx], sims[idx], thr, round_dp
+        )
+        component[idx] = ids[idx][root]
+        keep[idx] = kp
+    return component, sims, keep
+
+
+def _centroid_frame(spark, cents) -> DataFrame:
+    """(centroid_id int, cv array<double>) — centroids as data for
+    ``_semdedup_collapse``'s cogroup."""
+    return spark.createDataFrame(
+        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
+        "centroid_id int, cv array<double>",
+    )
+
+
+def _semdedup_collapse(
+    members: DataFrame,
+    cents: DataFrame,
+    threshold: float,
+    id_col: str,
+    round_dp: int,
+) -> DataFrame:
+    """The above-gate SemDeDup tail: ``_semdedup_tail_np`` once per
+    cluster. ``members`` carries (id_col, centroid_id, __v); ``cents``
+    carries (centroid_id, cv). One cogroup on centroid_id ships each
+    cluster's vectors and its one centroid row to the same task, so the
+    centroids travel as data (k rows beside the corpus exchange, never a
+    per-row column) and the driver never sees an edge list at any scale.
+    Clusters are ~target-sized by the auto-sizing contract, so each
+    group is a bounded sub-problem. Returns (id, centroid_id,
+    component, cent_sim_r, keep)."""
     import numpy as np
     import pandas as pd
 
-    dtypes = dict(assigned.dtypes)
+    idt = dict(members.dtypes)[id_col]
     schema = (
-        f"{id_col} {dtypes[id_col]}, centroid_id {dtypes['centroid_id']}, "
-        f"component {dtypes[id_col]}, cent_sim_r double, keep boolean"
+        f"{id_col} {idt}, centroid_id int, component {idt}, "
+        f"cent_sim_r double, keep boolean"
     )
-    thr = float(threshold)
-    dp = int(round_dp)
-    margin = thr - 10.0 ** (-dp)
-    chunk = 512
 
-    def round_dp_np(vals):
-        if dp == 9:
-            return _round9_half_up_np(vals)
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q = Decimal(1).scaleb(-dp)
-        return np.array(
-            [
-                float(
-                    Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP)
-                )
-                for x in vals
-            ],
-            dtype=np.float64,
-        )
-
-    def fn(pdf):
-        pdf = pdf.sort_values(id_col)
-        ids = pdf[id_col].to_numpy()
-        sims = pdf["cent_sim_r"].to_numpy(dtype=np.float64)
-        X = (
-            np.asarray(list(pdf["__v"]), dtype=np.float64)
-            if len(pdf) >= 2
-            else None
-        )
-        nrm = pdf["__n"].to_numpy(dtype=np.float64)
-        root, keep = _collapse_cluster_np(
-            ids, X, nrm, sims, thr, margin, round_dp_np, chunk
+    def fn(key, mem, cent):
+        mem = mem.sort_values(id_col)
+        ids = mem[id_col].to_numpy()
+        n = len(ids)  # 0 for a centroid no member was assigned to
+        C = np.asarray(list(cent["cv"]), dtype=np.float64)
+        X = _vec_matrix(mem["__v"], C.shape[1])
+        component, sims, keep = _semdedup_tail_np(
+            ids, X, np.zeros(n, dtype=np.int64), C, threshold, round_dp
         )
         return pd.DataFrame(
             {
                 id_col: ids,
-                "centroid_id": pdf["centroid_id"].to_numpy(),
-                "component": ids[root],
+                "centroid_id": np.full(n, key[0], dtype=np.int32),
+                "component": component,
                 "cent_sim_r": sims,
                 "keep": keep,
             }
         )
 
+    m = members.select(
+        F.col(id_col), F.col("centroid_id").cast("int"), F.col("__v")
+    )
+    c = cents.select(
+        F.col("centroid_id").cast("int"), _as_double_array(F.col("cv")).alias("cv")
+    )
     return (
-        assigned.select(id_col, "centroid_id", "cent_sim_r", "__v", "__n")
-        .groupBy("centroid_id")
+        m.groupBy("centroid_id")
+        .cogroup(c.groupBy("centroid_id"))
         .applyInPandas(fn, schema)
     )
 
@@ -1860,11 +1823,11 @@ def semdedup_auto(
     with training and, unlike a float-sum argmin, bit-reproducible in
     ANY summation order, which is what lets the in-task numpy kernel
     (below the ``_FUSED_LLOYD_*`` gate) and the blocked-numpy Arrow
-    loop (above it) share one oracle. The keep-rule score (own-centroid cosine,
-    ``round_dp``-rounded) comes from ONE broadcast join against the
-    k-row centroid frame — no k-branch CASE chain. The collapse tail
-    (fused per-cluster pairing + closure + keep-the-most-atypical,
-    round-before-threshold — r13) is shared with ``semdedup``.
+    loop (above it) share one oracle. The keep-rule score (own-centroid
+    cosine, ``round_dp``-rounded) and the per-cluster pairing + closure
+    + keep-the-most-atypical run in ``_semdedup_tail_np``, shared with
+    ``semdedup``; above the gate the k-row centroid frame travels to
+    it as data, cogrouped with each cluster's members.
 
     Driver syncs are all bounded: one count, one nlist·dim init
     collect, k·dim doubles per training iteration. Output schema ==
@@ -1950,32 +1913,14 @@ def semdedup_auto(
     # carry_vec (r13 optimization round): the Arrow E-step already
     # holds every vector — carrying it through the batch deletes the
     # corpus-sized join back to ``v`` on id (a full exchange+sort of
-    # both sides at scale). __n computed after: the deterministic
-    # l2_norm expression on the same doubles.
-    base = kmeans_assign_arrow(
+    # both sides at scale).
+    members = kmeans_assign_arrow(
         v, cents, id_col, vec_col="__v", carry_vec=True
-    ).withColumn("__n", l2_norm(F.col("__v")))
-    spark = df.sparkSession
-    cents_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cid int, cv array<double>",
-    ).withColumn("__cn", l2_norm(F.col("cv")))
-    assigned = (
-        base.join(F.broadcast(cents_df), "cid")
-        .select(
-            F.col(id_col),
-            F.col("cid").alias("centroid_id"),
-            F.col("__v"),
-            F.col("__n"),
-            F.round(
-                cosine_given_norms(
-                    F.col("__v"), F.col("cv"), F.col("__n"), F.col("__cn")
-                ),
-                round_dp,
-            ).alias("cent_sim_r"),
-        )
+    ).withColumnRenamed("cid", "centroid_id")
+    return _semdedup_collapse(
+        members, _centroid_frame(df.sparkSession, cents), threshold,
+        id_col, round_dp,
     )
-    return _semdedup_collapse(assigned, threshold, id_col, round_dp)
 
 
 def _int_ceil_root(x: int, r: int) -> int:
@@ -2027,11 +1972,9 @@ def _semdedup_tower_fused(
       ``row_number() over (ORDER BY bid, scid)`` window on the cents
       frame (empty sub-clusters consume a number, carry no members,
       and contribute nothing to the next level);
-    - cent_sim_r: sequential-fold dot and norms (== the engine's
-      ``l2_norm``/``cosine_given_norms`` fold order), zero-norm → 0.0,
-      rounded through the ``F.round`` twin;
-    - collapse per leaf: ``_collapse_cluster_np`` — the SAME kernel
-      ``_semdedup_collapse`` runs.
+    - scoring and collapse per leaf: ``_semdedup_tail_np`` — the SAME
+      kernel ``_semdedup_collapse`` runs per cluster (bit-parity
+      argument there).
 
     Above the gate callers keep the distributed per-level passes —
     this path serializes the split levels' numpy through one worker,
@@ -2041,25 +1984,6 @@ def _semdedup_tower_fused(
 
     T = int(t_target)
     L = int(levels)
-    thr = float(threshold)
-    dp = int(round_dp)
-    margin = thr - 10.0 ** (-dp)
-
-    def round_dp_np(vals):
-        if dp == 9:
-            return _round9_half_up_np(vals)
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q = Decimal(1).scaleb(-dp)
-        return np.array(
-            [
-                float(
-                    Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP)
-                )
-                for x in vals
-            ],
-            dtype=np.float64,
-        )
 
     def fn(pdf):
         n = len(pdf)
@@ -2097,37 +2021,10 @@ def _semdedup_tower_fused(
                     count=n,
                 )
                 leaf_cv = [cents[p] for p in sorted(node_list)]
-        # own-centroid cosine: sequential-fold dot/norms == the engine
-        # l2_norm / cosine_given_norms fold order, zero-norm -> 0.0
-        dim = X.shape[1]
-        CV = np.asarray(leaf_cv, dtype=np.float64)[leaf]
-        nv = np.zeros(n)
-        ncv = np.zeros(n)
-        dot_vc = np.zeros(n)
-        for d in range(dim):
-            nv += X[:, d] * X[:, d]
-            ncv += CV[:, d] * CV[:, d]
-            dot_vc += X[:, d] * CV[:, d]
-        nv, ncv = np.sqrt(nv), np.sqrt(ncv)
-        ok = (nv > 0) & (ncv > 0)
-        sims = round_dp_np(
-            np.where(
-                ok,
-                np.divide(dot_vc, nv * ncv, out=np.zeros(n), where=ok),
-                0.0,
-            )
+        component, sims, keep = _semdedup_tail_np(
+            ids, X, leaf, np.asarray(leaf_cv, dtype=np.float64),
+            threshold, int(round_dp),
         )
-        # collapse per leaf cluster — the _semdedup_collapse kernel
-        component = np.empty(n, dtype=np.int64)
-        keep = np.zeros(n, dtype=bool)
-        for lf in np.unique(leaf):
-            idx = np.nonzero(leaf == lf)[0]
-            root, kp = _collapse_cluster_np(
-                ids[idx], X[idx] if len(idx) >= 2 else None,
-                nv[idx], sims[idx], thr, margin, round_dp_np,
-            )
-            component[idx] = ids[idx][root]
-            keep[idx] = kp
         return pd.DataFrame(
             {
                 id_col: ids,
@@ -2273,55 +2170,16 @@ def _semdedup_multilevel(
     # (quantizer-sized, never corpus-sized).
     cw = Window.orderBy(F.col("bid").asc(), F.col("scid").asc())
     cents_idx = cents.select(
-        "bid", "scid",
-        F.col("cv"),
-        l2_norm(F.col("cv")).alias("__cn"),
+        "bid", "scid", "cv",
         (F.row_number().over(cw) - 1).cast("int").alias("centroid_id"),
     )
-    assigned = (
-        members.join(cents_idx, ["bid", "scid"])
-        .withColumn("__n", l2_norm(F.col("__v")))
-        .select(
-            F.col(id_col),
-            F.col("centroid_id"),
-            F.col("__v"),
-            F.col("__n"),
-            F.round(
-                cosine_given_norms(
-                    F.col("__v"), F.col("cv"), F.col("__n"), F.col("__cn")
-                ),
-                round_dp,
-            ).alias("cent_sim_r"),
-        )
+    members = members.join(
+        cents_idx.select("bid", "scid", "centroid_id"), ["bid", "scid"]
+    ).select(id_col, "centroid_id", "__v")
+    return _semdedup_collapse(
+        members, cents_idx.select("centroid_id", "cv"), threshold, id_col,
+        round_dp,
     )
-    return _semdedup_collapse(assigned, threshold, id_col, round_dp)
-
-
-def _pick_centroid_cosine(
-    vec: Column, norm: Column, centroids: list[list[float]], id_col_name: str
-) -> Column:
-    """cosine(vec, centroids[assigned_id]) as one CASE chain of codegen
-    folds — nlist branches, zero joins; the per-row cost is one dot
-    product (only the matching branch evaluates its fold lazily per
-    row in codegen)."""
-    branches = []
-    for i, c in enumerate(centroids):
-        cn = math.sqrt(sum(float(x) * float(x) for x in c))
-        dot_i = F.aggregate(
-            F.zip_with(vec, F.lit([float(x) for x in c]), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        branches.append(
-            F.when(
-                (F.col(id_col_name) == i) & (norm > 0) & (F.lit(cn) > 0),
-                dot_i / (norm * F.lit(cn)),
-            )
-        )
-    # exactly one branch is non-NULL per row unless norm==0 or cn==0 —
-    # define those as 0.0 (a zero vector has no direction; it can never
-    # exceed a positive threshold anyway).
-    return F.coalesce(*branches, F.lit(0.0))
 
 
 def semantic_decontaminate(

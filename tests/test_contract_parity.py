@@ -42,13 +42,24 @@ def test_pandas_hash_parity(name, spark, sf_dir, con):
 
 
 @pytest.mark.parametrize(
-    "name", ["ext_kmeans_train", "ext_semdedup_auto", "ext_semdedup_hier"]
+    "name",
+    [
+        "ext_kmeans_train",
+        "ext_semdedup",
+        "ext_semdedup_auto",
+        "ext_semdedup_hier",
+        "ext_semdedup_hier3",
+        "ext_hard_negative_topk",
+        "ext_hard_negative_topk_ann",
+    ],
 )
 def test_oracle_parity_above_fused_gate(name, spark, sf_dir, con, monkeypatch):
-    """The distributed Arrow Lloyd loop that runs above the
-    ``_FUSED_LLOYD_*`` gate, checked against the same DuckDB oracles:
-    with the row gate at 0 every trainer in these queries takes it
-    (flat, first_k init, and the multilevel coarse pass). Built through
+    """The distributed paths that run above the ``_FUSED_LLOYD_*``
+    gate, checked against the same DuckDB oracles: with the row gate
+    at 0 every trainer in these queries takes the Arrow Lloyd loop
+    (flat, first_k init, and the multilevel coarse pass), SemDeDup
+    collapses per cluster, and hard-negative mining runs its pair
+    self-join + connected_components fallback. Built through
     ``BUILDERS`` so no memoized below-gate plan can answer instead."""
     from taxi_rides_ny_duckdb_spark.operators import similarity as S
 

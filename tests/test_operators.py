@@ -4041,25 +4041,18 @@ def test_embedding_near_dup_pairs_matches_join_form(spark):
         assert len(fused) > 0, (threshold, dp)
 
 
-def test_hard_negative_mine_fused_matches_unfused(spark):
-    """The r13 single-task hard-negative miner must reproduce the
-    distributed pair-graph + connected_components + hard_negative_topk
-    (and the _ann twin) composition row-for-row — components (incl.
-    transitive chains and self-singletons), candidate sets, rounded
-    scores, rank ties to the lower id — for the exact AND the
-    IVF-probed variant."""
+def test_hard_negative_mine_fused_matches_unfused(spark, monkeypatch):
+    """The single-task hard-negative miner must reproduce, row for
+    row, its above-gate fallback — the pair self-join +
+    connected_components + hard_negative_topk (and the _ann twin)
+    composition — components (incl. transitive chains and
+    self-singletons), candidate sets, rounded scores, rank ties to the
+    lower id — for the exact AND the IVF-probed variant."""
+    import pytest as _pytest
+
     from pyspark.sql import functions as F
 
-    from taxi_rides_ny_duckdb_spark.operators.dedup import (
-        connected_components,
-    )
-    from taxi_rides_ny_duckdb_spark.operators.similarity import (
-        cosine_given_norms,
-        hard_negative_mine_fused,
-        hard_negative_topk,
-        hard_negative_topk_ann,
-        l2_norm,
-    )
+    from taxi_rides_ny_duckdb_spark.operators import similarity as S
 
     rows = [
         (i, [float((i * 7) % 13) / 13.0, float((i * 5) % 11) / 11.0,
@@ -4070,58 +4063,38 @@ def test_hard_negative_mine_fused_matches_unfused(spark):
         (32, [0.0, 0.0, 0.0]),                          # zero-norm
     ]
     cents = [[1.0, 0.0, 0.2], [0.0, 1.0, 0.2], [0.5, 0.5, 0.5]]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    v = df.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("ev")
-    ).withColumn("nrm", l2_norm(F.col("ev")))
-    a = v.select(F.col("vec_id").alias("id_a"), F.col("ev").alias("av"),
-                 F.col("nrm").alias("na"))
-    b = v.select(F.col("vec_id").alias("id_b"), F.col("ev").alias("bv"),
-                 F.col("nrm").alias("nb"))
-    pairs = (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b",
-            F.round(cosine_given_norms(F.col("av"), F.col("bv"),
-                                       F.col("na"), F.col("nb")), 9).alias("sim"),
-        )
-        .filter(F.col("sim") >= 0.9)
-    )
-    comp = F.broadcast(connected_components(
-        pairs, "id_a", "id_b", algorithm="driver", emit="mapping"))
-    queries = v.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("ev").alias("query_vec"))
-    corpus = v.select("vec_id", F.col("ev").alias("embedding"))
-    vq = v.select("vec_id", "ev").withColumn(
-        "is_query", F.col("vec_id") < 4)
+    vq = spark.createDataFrame(
+        rows, "vec_id long, ev array<double>"
+    ).withColumn("is_query", F.col("vec_id") < 4)
 
     def rowset(frame):
         return sorted(tuple(r) for r in frame.collect())
 
-    exact_unfused = rowset(
-        hard_negative_topk(corpus, queries, comp, k=3, min_partitions=1))
-    exact_fused = rowset(
-        hard_negative_mine_fused(vq, pair_threshold=0.9, k=3))
-    assert exact_fused == exact_unfused
-    assert len(exact_fused) > 0
-
-    ann_unfused = rowset(hard_negative_topk_ann(
-        corpus, queries, comp, k=3, centroids=cents, nprobe=2,
-        round_dp=9, score_round_dp=9, min_partitions=1))
-    ann_fused = rowset(hard_negative_mine_fused(
-        vq, pair_threshold=0.9, k=3, centroids=cents, nprobe=2,
-        round_dp=9, score_round_dp=9))
-    assert ann_fused == ann_unfused
-    assert len(ann_fused) > 0
+    for kwargs in (
+        dict(),
+        dict(centroids=cents, nprobe=2, round_dp=9, score_round_dp=9),
+    ):
+        fused = rowset(S.hard_negative_mine_fused(
+            vq, pair_threshold=0.9, k=3, **kwargs))
+        monkeypatch.setattr(S, "_FUSED_LLOYD_MAX_ROWS", 0)
+        unfused = rowset(S.hard_negative_mine_fused(
+            vq, pair_threshold=0.9, k=3, **kwargs))
+        monkeypatch.undo()
+        assert fused == unfused, kwargs
+        assert len(fused) > 0, kwargs
+    with _pytest.raises(ValueError, match="score_round_dp"):
+        S.hard_negative_mine_fused(vq, 0.9, 3, score_round_dp=6)
 
 
 def test_semdedup_frozen_fused_matches_unfused(spark, monkeypatch):
-    """The r13 fused frozen-centroid gate (semdedup below
+    """The fused frozen-centroid gate (semdedup below
     _FUSED_LLOYD_MAX_ROWS/_CELLS) must reproduce the distributed
-    assign-projection + per-cluster-collapse pipeline row-for-row —
-    assignment (incl. rounded-distance ties to the lower cid),
-    components, cent_sim_r and keep flags — at dp=9 AND at a dp that
-    exercises the scalar Decimal rounding fallback."""
+    per-partition assignment + per-cluster-collapse pipeline
+    row-for-row — assignment (incl. rounded-distance ties to the lower
+    cid), components, cent_sim_r and keep flags — at dp=9 AND at a dp
+    that exercises the scalar Decimal rounding fallback. Both sides
+    share one numpy assignment kernel, so centroid_id is also checked
+    against the Spark-expression assign_nearest_centroid."""
     from taxi_rides_ny_duckdb_spark.operators import similarity as S
 
     cents = [[1.0, 0.0], [0.0, 1.0], [0.6, 0.8]]
@@ -4150,6 +4123,10 @@ def test_semdedup_frozen_fused_matches_unfused(spark, monkeypatch):
         unfused = rowset(S.semdedup(df, cents, **kwargs))
         monkeypatch.undo()
         assert fused == unfused, kwargs
+        expr = rowset(S.assign_nearest_centroid(
+            df, cents, round_dp=kwargs.get("round_dp", 9)
+        ).select("vec_id", "centroid_id"))
+        assert [(r[0], r[1]) for r in fused] == expr, kwargs
 
 
 def test_semdedup_auto_validates(spark):
@@ -4686,7 +4663,9 @@ def test_round9_vectorized_matches_scalar(spark):
     scalar Decimal(repr(x)) form — which is the engine-faithful one
     (both engines round the SHORTEST repr at fractional scales, r13)
     — on half-boundary witnesses, the ambiguity band, signs, and a
-    random grid; plus a Spark F.round spot-check on the witnesses."""
+    random grid; plus a Spark F.round spot-check on the witnesses.
+    The hoisted any-dp twin (_round_dp_np) is spot-checked the same
+    way at dp 3 and 6 (its scalar branch) and at dp 9."""
     import numpy as np
 
     from pyspark.sql import functions as F
@@ -4694,6 +4673,7 @@ def test_round9_vectorized_matches_scalar(spark):
     from taxi_rides_ny_duckdb_spark.operators.classify import _round9_half_up
     from taxi_rides_ny_duckdb_spark.operators.similarity import (
         _round9_half_up_np,
+        _round_dp_np,
     )
 
     witnesses = [
@@ -4724,6 +4704,23 @@ def test_round9_vectorized_matches_scalar(spark):
     eng = [r["r"] for r in df.select(F.round(F.col("v"), 9).alias("r")).collect()]
     vec = _round9_half_up_np(np.asarray(witnesses, dtype=np.float64))
     assert [float(x) for x in vec] == eng
+    assert (_round_dp_np(grid, 9) == got).all()
+    # half-boundary witnesses at 3 and 6 dp for the scalar branch
+    dp_witnesses = witnesses + [
+        0.0005, -0.0005, 1.0005, 0.1235, 2.675, 0.0000005, 0.1234565,
+        0.00025, 1.0000005, -2.5e-4, 123.4565, 0.4999995,
+    ]
+    dp_df = spark.createDataFrame([(float(w),) for w in dp_witnesses], "v double")
+    for dp in (3, 6):
+        eng = [
+            r["r"]
+            for r in dp_df.select(F.round(F.col("v"), dp).alias("r")).collect()
+        ]
+        vec = _round_dp_np(np.asarray(dp_witnesses, dtype=np.float64), dp)
+        assert [float(x) for x in vec] == eng, dp
+        # n-D input rounds elementwise (the distance-matrix caller)
+        mat = np.asarray(dp_witnesses[:24], dtype=np.float64).reshape(4, 6)
+        assert (_round_dp_np(mat, dp) == np.asarray(eng[:24]).reshape(4, 6)).all()
 
 
 def test_round_half_away_kernels_match_both_engines(spark):
@@ -5287,15 +5284,16 @@ def test_brier_decomposition_hand_computed(spark):
 
 
 def test_semdedup_collapse_matches_scalar_replica(spark):
-    """The r13 fused per-cluster collapse (pairing + union-find + keep
-    inside ONE Arrow task) must reproduce, value-for-value, an
-    INDEPENDENT scalar replica of the unfused chain: sequential-fold
-    cosine on the carried engine norms, repr-HALF_UP rounding before
-    the threshold, min-member-id components, keep = first row under
-    (cent_sim_r asc, id asc). Fixture: a transitive chain (a~b, b~c,
-    a!~c), an exact-dup pair with a cent_sim_r TIE, a zero-norm
-    vector, singletons, plus a seeded random cluster; run at dp=9
-    (the vectorized twin) AND dp=3 (the scalar Decimal fallback)."""
+    """The above-gate SemDeDup tail (members + centroid frame cogrouped
+    per cluster, scoring + pairing + union-find + keep in ONE Arrow
+    task each) must reproduce, value-for-value, an INDEPENDENT scalar
+    replica: sequential-fold cosine for both the own-centroid score
+    and the pairs, repr-HALF_UP rounding, min-member-id components,
+    keep = first row under (cent_sim_r asc, id asc). Fixture: a
+    transitive chain (a~b, b~c, a!~c) with a cent_sim_r TIE, a
+    zero-norm vector, singletons, a centroid with no members, plus a
+    seeded random cluster; run at dp=9 (the vectorized twin) AND dp=3
+    (the scalar Decimal fallback)."""
     import math
     import random
     from decimal import ROUND_HALF_UP, Decimal
@@ -5309,14 +5307,25 @@ def test_semdedup_collapse_matches_scalar_replica(spark):
             Decimal(repr(x)).quantize(Decimal(1).scaleb(-dp), ROUND_HALF_UP)
         )
 
-    def replica(rows, threshold, dp):
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    def cos(a, b):
+        na, nb = math.sqrt(fold(a, a)), math.sqrt(fold(b, b))
+        return fold(a, b) / (na * nb) if na > 0 and nb > 0 else 0.0
+
+    def replica(rows, cents, threshold, dp):
         by_c = {}
         for r in rows:
             by_c.setdefault(r[1], []).append(r)
         out = {}
-        for mem in by_c.values():
+        for cid, mem in by_c.items():
             mem = sorted(mem, key=lambda r: r[0])
             parent = {r[0]: r[0] for r in mem}
+            cs = {r[0]: rnd(cos(r[2], cents[cid]), dp) for r in mem}
 
             def find(x):
                 while parent[x] != x:
@@ -5325,71 +5334,75 @@ def test_semdedup_collapse_matches_scalar_replica(spark):
 
             for i in range(len(mem)):
                 for j in range(i + 1, len(mem)):
-                    ida, _, va, na, _ = mem[i]
-                    idb, _, vb, nb, _ = mem[j]
-                    if na > 0 and nb > 0:
-                        dot = 0.0
-                        for d in range(len(va)):
-                            dot += va[d] * vb[d]
-                        sim = dot / (na * nb)
-                    else:
-                        sim = 0.0
-                    if rnd(sim, dp) >= threshold:
+                    ida, _, va = mem[i]
+                    idb, _, vb = mem[j]
+                    if rnd(cos(va, vb), dp) >= threshold:
                         ra, rb = find(ida), find(idb)
                         if ra != rb:
                             parent[max(ra, rb)] = min(ra, rb)
             comp = {r[0]: find(r[0]) for r in mem}
             seen = set()
-            for r in sorted(mem, key=lambda r: (r[4], r[0])):
+            for r in sorted(mem, key=lambda r: (cs[r[0]], r[0])):
                 c = comp[r[0]]
-                out[r[0]] = (r[1], c, r[4], c not in seen)
+                out[r[0]] = (cid, c, cs[r[0]], c not in seen)
                 seen.add(c)
         return out
 
     theta = math.radians(20.0)  # cos 20 ~ 0.94, cos 40 ~ 0.77
+    rng = random.Random(13)
+    cents = {
+        # opposite the 1/2 bisector: 1 and 2 tie, 3 is more similar
+        0: [-math.cos(theta / 2), -math.sin(theta / 2), 0.0],
+        1: [-1.0, 0.0, 0.0],
+        2: [rng.uniform(-1, 1) for _ in range(3)],
+        3: [0.0, 0.0, 1.0],  # no members
+    }
     rows = [
         # cluster 0: transitive chain at threshold 0.9 — (1,2) and
-        # (2,3) pair, (1,3) does not; 4 is a zero-norm singleton;
-        # cent_sim TIE between 1 and 2 (same component) -> lower id
-        (1, 0, [1.0, 0.0, 0.0], 1.0, 0.5),
-        (2, 0, [math.cos(theta), math.sin(theta), 0.0], 1.0, 0.5),
-        (3, 0, [math.cos(2 * theta), math.sin(2 * theta), 0.0], 1.0, 0.7),
-        (4, 0, [0.0, 0.0, 0.0], 0.0, 0.2),
-        # cluster 1: one pair + one far singleton
-        (10, 1, [0.0, 1.0, 0.0], 1.0, 0.9),
-        (11, 1, [0.0, 1.0, 0.0], 1.0, 0.4),
-        (12, 1, [1.0, 0.0, 0.0], 1.0, 0.3),
+        # (2,3) pair, (1,3) does not; 4 is a zero-norm singleton
+        (1, 0, [1.0, 0.0, 0.0]),
+        (2, 0, [math.cos(theta), math.sin(theta), 0.0]),
+        (3, 0, [math.cos(2 * theta), math.sin(2 * theta), 0.0]),
+        (4, 0, [0.0, 0.0, 0.0]),
+        # cluster 1: one pair (11 less centroid-similar) + a singleton
+        (10, 1, [0.0, 1.0, 0.0]),
+        (11, 1, [0.1, 1.0, 0.0]),
+        (12, 1, [1.0, 0.0, 0.0]),
     ]
-    rng = random.Random(13)
     for i in range(60):  # cluster 2: seeded random mix of edges
-        v = [rng.uniform(-1, 1) for _ in range(3)]
-        n = math.sqrt(v[0] * v[0] + v[1] * v[1] + v[2] * v[2])
-        rows.append((100 + i, 2, v, n, rnd(rng.uniform(0, 1), 9)))
-    df = spark.createDataFrame(
-        [(i, c, v, n, cs) for i, c, v, n, cs in rows],
-        "vec_id long, centroid_id int, __v array<double>, "
-        "__n double, cent_sim_r double",
+        rows.append((100 + i, 2, [rng.uniform(-1, 1) for _ in range(3)]))
+    members = spark.createDataFrame(
+        rows, "vec_id long, centroid_id int, __v array<double>"
+    )
+    cents_df = spark.createDataFrame(
+        sorted(cents.items()), "centroid_id int, cv array<double>"
     )
     for threshold, dp in ((0.9, 9), (0.9, 3), (0.35, 9)):
         got = {
             r["vec_id"]: (
                 r["centroid_id"], r["component"], r["cent_sim_r"], r["keep"]
             )
-            for r in _semdedup_collapse(df, threshold, "vec_id", dp).collect()
+            for r in _semdedup_collapse(
+                members, cents_df, threshold, "vec_id", dp
+            ).collect()
         }
-        assert got == replica(rows, threshold, dp), (threshold, dp)
+        assert got == replica(rows, cents, threshold, dp), (threshold, dp)
     # pin the fixture's named behaviors at (0.9, 9): the chain closes
     # 1-2-3 into one min-id component, the tie keeps the lower id,
     # zero-norm 4 is a singleton
     got = {
         r["vec_id"]: r
-        for r in _semdedup_collapse(df, 0.9, "vec_id", 9).collect()
+        for r in _semdedup_collapse(
+            members, cents_df, 0.9, "vec_id", 9
+        ).collect()
     }
+    assert got[1]["cent_sim_r"] == got[2]["cent_sim_r"] < got[3]["cent_sim_r"]
     assert got[1]["component"] == got[2]["component"] == got[3]["component"] == 1
     assert (got[1]["keep"], got[2]["keep"], got[3]["keep"]) == (
         True, False, False,
     )
     assert got[4]["component"] == 4 and got[4]["keep"]
+    assert got[4]["cent_sim_r"] == 0.0
     assert got[10]["component"] == got[11]["component"] == 10
     assert (got[10]["keep"], got[11]["keep"]) == (False, True)
 

@@ -47,9 +47,9 @@ from ..cache import scoped_persist
 # corpus through one worker, so the distributed path keeps the win and
 # the gate stays off. BOX ASSUMPTION: single-core numpy throughput
 # ~1 GFLOP/s on the blocked E-step; re-measure if the kernel or the
-# worker-reuse regime changes. The arithmetic is the verbatim
-# ``kmeans_lloyd_grouped`` kernel — bit-equal to the distributed
-# Arrow loop (pinned by tests), so the gate changes cost only.
+# worker-reuse regime changes. Both sides run the one Lloyd kernel
+# (``_lloyd_assign_np`` and friends) — bit-equal (pinned by tests), so
+# the gate changes cost only.
 _FUSED_LLOYD_MAX_ROWS = 50_000
 _FUSED_LLOYD_MAX_CELLS = 2_000_000
 
@@ -94,18 +94,32 @@ def _vec_matrix(col, dim: int):
         # (ADVICE r12): the old per-coordinate F.get projection
         # silently degraded null/short rows to NaN — corpus
         # corruption should stop the scan, not skew the result.
-        for pos, v in enumerate(col):
-            if v is None:
-                raise ValueError(
-                    f"_vec_matrix: NULL vector at batch row {pos} "
-                    f"(expected array of {dim} doubles)"
-                ) from None
-            if len(v) < dim:
-                raise ValueError(
-                    f"_vec_matrix: vector of length {len(v)} at batch "
-                    f"row {pos} (expected >= {dim})"
-                ) from None
+        err = _malformed_vector_error(col, dim, "_vec_matrix", exact=False)
+        if err is not None:
+            raise err from None
         raise
+
+
+def _malformed_vector_error(
+    col, dim: int, op: str, exact: bool
+) -> ValueError | None:
+    """The fail-fast error naming ``op`` and the first malformed row
+    of a pandas vector column: a NULL vector, or one shorter than
+    ``dim`` (``exact``: any length other than ``dim``). None when every
+    row is well-formed."""
+    for pos, v in enumerate(col):
+        if v is None:
+            return ValueError(
+                f"{op}: NULL vector at batch row {pos} "
+                f"(expected array of {dim} doubles)"
+            )
+        if len(v) < dim or (exact and len(v) != dim):
+            want = dim if exact else f">= {dim}"
+            return ValueError(
+                f"{op}: vector of length {len(v)} at batch row {pos} "
+                f"(expected {want})"
+            )
+    return None
 
 
 def _round_half_away_nonneg_np(v):
@@ -222,6 +236,134 @@ def _round_dp_np(vals, dp: int):
         ],
         dtype=np.float64,
     ).reshape(v.shape)
+
+
+# ── the one scaled-int64 Lloyd kernel ──
+# Every k-means E-step, M-step and iteration loop in this module
+# (``kmeans_lloyd`` on both sides of the ``_FUSED_LLOYD_*`` gate,
+# ``kmeans_assign_arrow``, the grouped trainers, the fused SemDeDup
+# tower and ``pq_assign``) runs through these functions; the SQL
+# oracles replay exactly this arithmetic.
+
+
+def _lloyd_matrix_np(col, dim: int | None, op: str):
+    """(n, dim) float64 matrix from a pandas vector column for a Lloyd
+    entry — bit-preserving like ``_vec_matrix``, but STRICT: a NULL
+    vector or one of any length other than ``dim`` (the centroid
+    dimension; None: the first row's length, for first-k inits) raises
+    a ValueError naming ``op`` and the row, where numpy would fail
+    opaquely (NULL, short) or a slice would silently truncate
+    (long)."""
+    import numpy as np
+
+    if dim is None:
+        v0 = col.iloc[0] if len(col) else None
+        dim = 0 if v0 is None else len(v0)
+    if len(col) == 0:
+        return np.zeros((0, dim), dtype=np.float64)
+    try:
+        X = np.asarray(list(col), dtype=np.float64)
+        if X.shape == (len(col), dim):
+            return X
+    except (ValueError, TypeError):
+        pass
+    raise _malformed_vector_error(col, dim, op, exact=True)
+
+
+def _lloyd_assign_np(X, C):
+    """The one Lloyd E-step: position of the nearest row of ``C`` for
+    every row of ``X`` (int32[n]) under the scaled-integer distance
+    Σ_d round(t_d²·10¹²), t = x − c.
+
+    Bit-parity argument (every caller relies on it, none restates it):
+    each term is rounded EXACTLY half-away (``_round_half_away_nonneg_
+    i64`` == Spark ``F.round`` == DuckDB ``round`` on every double,
+    incl. the 0.5−2⁻⁵⁴ class), so every term is an exact int64 and the
+    sum is associative — numpy's pairwise order equals any SQL fold
+    bit-for-bit. That is why the kernel quantizes before summing
+    rather than summing doubles. Ties go to the LOWER position: argmin
+    takes the first occurrence inside a centroid chunk, and a strict
+    ``<`` keeps the earlier chunk across chunks. Callers whose
+    centroid ids are not 0..k−1 sort ``C`` by id and map positions
+    back. The caller guarantees the terms fit int64
+    (``_scaled_range_error``).
+
+    Memory: rows × centroids are double-blocked (1024 × 64), so the
+    (rows, centroids, dim) temporary stays ~30 MB at dim 64 whatever
+    n or k is."""
+    import numpy as np
+
+    best = np.empty(len(X), dtype=np.int32)
+    for r0 in range(0, len(X), 1024):
+        xb = X[r0 : r0 + 1024]
+        rows = np.arange(len(xb))
+        bd = bi = None
+        for c0 in range(0, len(C), 64):
+            t = xb[:, None, :] - C[None, c0 : c0 + 64, :]
+            d = _round_half_away_nonneg_i64(t * t * 1e12).sum(axis=2)
+            ci = d.argmin(axis=1)  # first occurrence = lower position
+            cd = d[rows, ci]
+            if bd is None:
+                bd, bi = cd, ci + c0
+            else:
+                upd = cd < bd  # strict: the earlier chunk keeps ties
+                bd = np.where(upd, cd, bd)
+                bi = np.where(upd, ci + c0, bi)
+        best[r0 : r0 + len(xb)] = bi
+    return best
+
+
+def _lloyd_partials_np(best, Xi):
+    """The one M-step partial: per assigned position ``uc`` (sorted),
+    the member count and the per-coordinate int64 sum of the addends
+    ``Xi`` = round(x·10¹²) (exact signed half-away,
+    ``_round_half_away_signed_np`` — identical to SQL ``round`` on
+    every double). Integer sums are exact and order-free, so partials
+    from any split of the rows merge to the same integers the oracle's
+    ``SUM(CAST(round(x·1e12) AS BIGINT))`` produces. Returns
+    ``(uc, counts, S)``."""
+    import numpy as np
+
+    uc, inv = np.unique(best, return_inverse=True)
+    S = np.zeros((len(uc), Xi.shape[1]), dtype=np.int64)
+    np.add.at(S, inv, Xi)
+    return uc, np.bincount(inv), S
+
+
+def _lloyd_means_np(S, counts):
+    """The one Lloyd mean: round9(S/10¹²/count) per row — the
+    identical doubles ``F.round(s/1e12/n, 9)`` rounds (int→double is
+    exact under the overflow guard, then two IEEE divisions in the
+    engine's order), finished by the repr-based 9dp HALF_UP twin.
+    ``S`` may hold Python ints (the driver merge keeps exact sums
+    wider than int64); numpy converts them correctly rounded, as
+    ``float()`` does."""
+    import numpy as np
+
+    v = np.asarray(S, dtype=np.float64) / 1e12
+    return _round_dp_np(v / np.asarray(counts, dtype=np.float64)[:, None], 9)
+
+
+def _lloyd_rounds_np(X, C0, iters: int):
+    """The one Lloyd iteration loop: ``iters`` rounds of
+    ``_lloyd_assign_np`` + ``_lloyd_partials_np`` + ``_lloyd_means_np``
+    from the initial centroids ``C0`` (copied), with the addends
+    quantized once (iteration-invariant). Empty clusters keep their
+    previous centroid. Returns ``(C, counts)`` — counts the LAST
+    round's members per centroid position (0 for empty clusters).
+    Callers that need the final assignment call ``_lloyd_assign_np``
+    once more with the returned ``C``."""
+    import numpy as np
+
+    C = np.array(C0, dtype=np.float64)
+    Xi = _round_half_away_signed_np(X * 1e12).astype(np.int64)
+    counts = np.zeros(len(C), dtype=np.int64)
+    for _ in range(iters):
+        uc, cnt, S = _lloyd_partials_np(_lloyd_assign_np(X, C), Xi)
+        C[uc] = _lloyd_means_np(S, cnt)
+        counts[:] = 0
+        counts[uc] = cnt
+    return C, counts
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -583,8 +725,8 @@ def assign_nearest_centroid(
         # consumers) it beats a k·dim-term expanded expression tree,
         # which overflows whole-stage codegen's method limits and
         # regresses 4× (r8 measurement: semdedup 4.6 → 17.3 s). The
-        # corpus-scale iterative trainer (kmeans_lloyd) uses the
-        # exploded-row distance instead — codegen-small per-row terms.
+        # corpus-scale iterative trainer (kmeans_lloyd) runs the numpy
+        # Lloyd kernel (_lloyd_assign_np) in Arrow batches instead.
         d = F.aggregate(
             F.zip_with(vec, F.lit([float(x) for x in c]), lambda a, b: (a - b) * (a - b)),
             F.lit(0.0),
@@ -1818,14 +1960,12 @@ def semdedup_auto(
     pairing is O(N · target) — the paper's linear envelope, now held
     by construction rather than by caller discipline.
 
-    Assignment here is one more Lloyd E-step with the final centroids
-    (scaled-integer LONG argmin, ties to the lower cid) — consistent
-    with training and, unlike a float-sum argmin, bit-reproducible in
-    ANY summation order, which is what lets the in-task numpy kernel
-    (below the ``_FUSED_LLOYD_*`` gate) and the blocked-numpy Arrow
-    loop (above it) share one oracle. The keep-rule score (own-centroid
-    cosine, ``round_dp``-rounded) and the per-cluster pairing + closure
-    + keep-the-most-atypical run in ``_semdedup_tail_np``, shared with
+    Assignment here is one more ``_lloyd_assign_np`` with the final
+    centroids — the kernel training runs on both sides of the
+    ``_FUSED_LLOYD_*`` gate, so both share one oracle. The keep-rule
+    score (own-centroid cosine, ``round_dp``-rounded) and the
+    per-cluster pairing + closure + keep-the-most-atypical run in
+    ``_semdedup_tail_np``, shared with
     ``semdedup``; above the gate the k-row centroid frame travels to
     it as data, cogrouped with each cluster's members.
 
@@ -1964,8 +2104,9 @@ def _semdedup_tower_fused(
     pipeline):
     - sizing: ``k = _int_ceil_root(⌈cnt/T⌉, s)`` per node in exact
       Python bigints — the same function the driver used;
-    - init/train/assign per node: ``_lloyd_rounds_np`` — the SAME
-      kernel object ``kmeans_train_assign_grouped`` runs;
+    - init/train/assign per node: first k members by id, then
+      ``_lloyd_rounds_np`` + one ``_lloyd_assign_np`` — the shared
+      Lloyd kernel (bit-parity argument in its docstrings);
     - densify between levels and the final leaf numbering: the
       lexicographic rank of (node, scid) over the COMPLETE per-node
       scid range of member-bearing nodes — exactly the
@@ -1989,8 +2130,7 @@ def _semdedup_tower_fused(
         n = len(pdf)
         pdf = pdf.sort_values(id_col)
         ids = pdf[id_col].to_numpy()
-        X = np.asarray(list(pdf["__v"]), dtype=np.float64)
-        Xi = _round_half_away_signed_np(X * 1e12).astype(np.int64)
+        X = _lloyd_matrix_np(pdf["__v"], None, "semdedup_auto")
         node = np.zeros(n, dtype=np.int64)  # current node key per member
         leaf_cv: list = []
         for ell in range(1, L + 1):
@@ -2002,8 +2142,9 @@ def _semdedup_tower_fused(
                 idx = np.nonzero(node == g)[0]  # id-ascending within node
                 cnt = len(idx)
                 k = _int_ceil_root((cnt + T - 1) // T, s)
-                best, C = _lloyd_rounds_np(X[idx], Xi[idx], k, iters)
-                assign[idx] = best
+                Xg = X[idx]
+                C, _ = _lloyd_rounds_np(Xg, Xg[:k], iters)
+                assign[idx] = _lloyd_assign_np(Xg, C)
                 for sc in range(k):
                     node_list.append((g, sc))
                     cents[(g, sc)] = C[sc]
@@ -2065,9 +2206,8 @@ def _semdedup_multilevel(
     coarse b₁-way quantizer over the full corpus with
     b₁ = min{b : b^L ≥ nlist}, then L−1 GROUPED splits, each training
     every node's sub-quantizer simultaneously with centroids as data
-    (``kmeans_lloyd_grouped``). Every arithmetic step is the house
-    engine-exact discipline (scaled-int64 E-steps AND M-step addends
-    — round(x·10¹²) LONG, r11 — with 9dp-half-away means, round-before-threshold cosines), so the
+    (``kmeans_lloyd_grouped``). Every Lloyd step runs the shared
+    scaled-int64 kernel and cosines round before the threshold, so the
     whole pipeline replays in an unrolled SQL oracle — levels=2 is
     bit-identical to the r10 two-level path (``ext_semdedup_hier``'s
     oracle), levels=3 has its own full oracle (``ext_semdedup_hier3``).
@@ -2271,11 +2411,8 @@ def _kmeans_lloyd_fused(
 ) -> tuple[list[list[float]], dict[int, int]]:
     """Single-task Lloyd trainer — ``kmeans_lloyd`` below
     ``_FUSED_LLOYD_MAX_ROWS`` / ``_FUSED_LLOYD_MAX_CELLS`` (constants
-    documented at definition): ONE applyInPandas job runs every
-    iteration in-task with the verbatim ``kmeans_lloyd_grouped``
-    kernels (scaled-int64 E-step, argmin ties to the lower cid,
-    round(x·10¹²) LONG M-step addends, ``_round9_half_up_np`` means,
-    empty clusters carrying their previous centroid) and emits
+    documented at definition): ONE applyInPandas job runs
+    ``_lloyd_rounds_np`` over the whole corpus and emits
     (cid, cv, n_assigned) — bit-identical centroids AND sizes to
     ``_kmeans_lloyd_distributed`` (sizes = the LAST iteration's M-step
     assignment counts). ``init=None`` selects the first min(k, n)
@@ -2289,51 +2426,31 @@ def _kmeans_lloyd_fused(
     explicit = init is not None
     if explicit:
         init = [[float(x) for x in c] for c in init]
-    row_chunk = 1024
     out_schema = "cid int, cv array<double>, n_assigned long"
 
     def fn(pdf):
-        n = len(pdf)
         if explicit:
-            X = np.asarray(list(pdf["__fv"]), dtype=np.float64)
-            C = np.asarray(init, dtype=np.float64)
+            C0 = np.asarray(init, dtype=np.float64)
+            X = _lloyd_matrix_np(pdf["__fv"], C0.shape[1], "kmeans_lloyd")
         else:
             # first min(k, n) vectors by id, selected in-task (== the
             # TakeOrdered collect the above-gate path runs — same rows,
             # same order)
             pdf = pdf.sort_values("__fid")
-            X = np.asarray(list(pdf["__fv"]), dtype=np.float64)
-            C = X[: min(k, n)].copy()
-        dim = C.shape[1]
+            X = _lloyd_matrix_np(pdf["__fv"], None, "kmeans_lloyd")
+            C0 = X[:k]
+        dim = C0.shape[1]
         max_x = float(np.max(np.abs(X))) if X.size else 0.0
-        max_c0 = float(np.max(np.abs(C))) if C.size else 0.0
+        max_c0 = float(np.max(np.abs(C0))) if C0.size else 0.0
         if _scaled_range_error(max_x, max_c0, dim) is not None:
             return pd.DataFrame(
                 {"cid": [-1], "cv": [[max_x, max_c0]], "n_assigned": [dim]}
             )
-        Xi = _round_half_away_signed_np(X * 1e12).astype(np.int64)
-        best = np.empty(n, dtype=np.int32)
-        counts_last: dict[int, int] = {}
-        for _ in range(iters):
-            for r0 in range(0, n, row_chunk):
-                xb = X[r0 : r0 + row_chunk]
-                t = xb[:, None, :] - C[None, :, :]
-                d = _round_half_away_nonneg_i64(t * t * 1e12).sum(axis=2)
-                best[r0 : r0 + len(xb)] = d.argmin(axis=1)
-            uc, inv = np.unique(best, return_inverse=True)
-            npart = np.bincount(inv)
-            counts_last = {int(c): int(m) for c, m in zip(uc, npart)}
-            S = np.zeros((len(uc), dim), dtype=np.int64)
-            np.add.at(S, inv, Xi)
-            for row, (cid, cnt) in enumerate(zip(uc, npart)):
-                C[int(cid)] = _round9_half_up_np(
-                    S[row].astype(np.float64) / 1e12 / float(cnt)
-                )
-        k_eff = len(C)
+        C, counts = _lloyd_rounds_np(X, C0, iters)
         return pd.DataFrame(
-            {"cid": np.arange(k_eff, dtype=np.int32),
+            {"cid": np.arange(len(C), dtype=np.int32),
              "cv": list(C),
-             "n_assigned": [counts_last.get(i, 0) for i in range(k_eff)]}
+             "n_assigned": counts}
         )
 
     cols = [
@@ -2383,12 +2500,11 @@ def kmeans_lloyd(
     (``_kmeans_lloyd_distributed``). Both run the same numpy kernel
     and return bit-identical centroids and sizes.
 
-    The engine-exact discipline (per-term round(t²·10¹²) LONG distance
-    sums, argmin ties to the lower centroid id; round(x·10¹²) LONG
-    M-step addends → exact int64 sums → pinned-order division → 9dp
-    half-up means; empty clusters keep their previous centroid) is the
-    LR/GD precedent: the whole training replays bit-for-bit in an
-    unrolled-CTE SQL oracle. PRECONDITION (ENFORCED, r10): coordinates
+    The arithmetic is the scaled-int64 Lloyd kernel
+    (``_lloyd_assign_np`` / ``_lloyd_partials_np`` /
+    ``_lloyd_means_np``; empty clusters keep their previous centroid)
+    — the LR/GD precedent: the whole training replays bit-for-bit in
+    an unrolled-CTE SQL oracle. PRECONDITION (ENFORCED, r10): coordinates
     must be bounded so per-term |t²|·10¹² stays well under 2⁶³/dim
     (|x − c| ≲ 150 at dim 64) — see ``_scaled_range_error``.
 
@@ -2440,23 +2556,29 @@ def _kmeans_lloyd_distributed(
     batches emit their ≤k M-step partials (cid, n, Σ round(x·10¹²))
     — the dim×-corpus-row explode never materializes — merged on the
     driver in exact Python ints, then k·dim doubles go back as the
-    next round's closure. The first pass is preceded by one bounded
+    next round's closure; the means go through the shared
+    ``_lloyd_means_np``. The first pass is preceded by one bounded
     max|coord| aggregate on the cache for the overflow guard."""
-    from ..operators.classify import _round9_half_up
+    import numpy as np
+    import pandas as pd
 
     if init is None:
-        init = [
-            r["__v"]
-            for r in df.select(
+        first = (
+            df.select(
                 F.col(id_col), _as_double_array(F.col(vec_col)).alias("__v")
             )
             .orderBy(id_col)
             .limit(k)
             .collect()
-        ]
-    cents = [[float(x) for x in c] for c in init]
-    k = len(cents)
-    dim = len(cents[0])
+        )
+        C = _lloyd_matrix_np(
+            pd.Series([r["__v"] for r in first], dtype=object),
+            None,
+            "kmeans_lloyd",
+        )
+    else:
+        C = np.array(init, dtype=np.float64)
+    dim = C.shape[1]
     vecs = ensure_min_partitions(
         df.select(F.col(id_col), _as_double_array(F.col(vec_col)).alias("__v"))
     ).persist()
@@ -2466,7 +2588,7 @@ def _kmeans_lloyd_distributed(
         ).collect()[0][0]
         or 0.0
     )
-    max_c0 = max((abs(x) for c in cents for x in c), default=0.0)
+    max_c0 = float(np.max(np.abs(C)))
     err = _scaled_range_error(max_x, max_c0, dim)
     if err is not None:
         vecs.unpersist()
@@ -2474,31 +2596,23 @@ def _kmeans_lloyd_distributed(
     sizes: dict[int, int] = {}
     for _ in range(iters):
         parts = kmeans_assign_arrow(
-            vecs, cents, id_col, vec_col="__v", emit="mstep"
+            vecs, C, id_col, vec_col="__v", emit="mstep"
         ).collect()
         sums: dict[int, list[int]] = {}
-        counts: dict[int, int] = {}
+        sizes = {}
         for r in parts:
             cid = r["cid"]
-            counts[cid] = counts.get(cid, 0) + r["n_part"]
+            sizes[cid] = sizes.get(cid, 0) + r["n_part"]
             if cid in sums:
                 acc = sums[cid]
                 for j, v in enumerate(r["s_part"]):
                     acc[j] += v
             else:
                 sums[cid] = list(r["s_part"])
-        sizes = dict(counts)
-        cents = [
-            [
-                _round9_half_up(float(sums[ci][j]) / 1e12 / counts[ci])
-                if ci in counts
-                else cents[ci][j]
-                for j in range(dim)
-            ]
-            for ci in range(k)
-        ]
+        uc = sorted(sizes)
+        C[uc] = _lloyd_means_np([sums[c] for c in uc], [sizes[c] for c in uc])
     vecs.unpersist()
-    return cents, sizes
+    return C.tolist(), sizes
 
 
 def kmeans_assign_arrow(
@@ -2509,23 +2623,16 @@ def kmeans_assign_arrow(
     carry_vec: bool = False,
     emit: str = "assign",
 ) -> DataFrame:
-    """Lloyd E-step: nearest centroid per vector by the
-    scaled-integer distance the SQL oracles replay —
-    per-term round(t²·10¹²) (exact half-away via
-    ``_round_half_away_nonneg_np``, == Spark F.round == DuckDB round
-    on EVERY double incl. the 0.5−2⁻⁵⁴ boundary class the old
-    floor(+0.5) form double-rounded — ADVICE r12 fix) summed as
-    int64, argmin ties to the lower centroid id — computed in
-    blocked numpy inside one ``mapInPandas``. Integer sums are
-    associative, so numpy's pairwise order equals the SQL fold
-    EXACTLY (the reason the Arrow path quantizes before summing
-    rather than summing doubles). Returns (id_col, cid int).
+    """Lloyd E-step: nearest centroid per vector (ties to the lower
+    centroid id) by ``_lloyd_assign_np`` — the scaled-integer distance
+    the SQL oracles replay (bit-parity argument there) — inside one
+    ``mapInPandas``. Returns (id_col, cid int).
 
     100 TB shape: centroids ship once per task in the closure as a
     k×dim float64 ndarray (8·k·dim bytes — 800×64 is 400 KB); the
     corpus streams through in Arrow batches, never shuffles; the
-    b×kc×dim temporary is double-blocked (row chunks × centroid
-    chunks) to stay ~30 MB regardless of batch size or k.
+    kernel's blocking keeps the distance temporary ~30 MB regardless
+    of batch size or k.
 
     ``carry_vec=True`` additionally passes the (float64, bit-
     preserved through Arrow) vector through to the output, so a
@@ -2535,68 +2642,40 @@ def kmeans_assign_arrow(
 
     ``emit="mstep"`` (r11) fuses the M-step PARTIALS into this same
     pass: each batch reduces its assignments to ≤k rows
-    (cid, n_part, s_part) where s_part is the per-coordinate sum of
-    round(x·10¹²) int64 addends (``_round_half_away_signed_np`` —
-    exact half-away, identical to SQL round / Spark F.round on every
-    double; the former copysign(floor(|x·10¹²|+0.5), x) form
-    double-rounded at the 0.5−2⁻⁵⁴ fraction boundary). The trainer then merges k·partitions partial rows
-    driver-side in exact Python ints — the dim×-corpus-row explode
-    that fed the old aggregate M-step never materializes, and the
-    resulting sums are the SAME integers, so no oracle changes."""
+    (cid, n_part, s_part) through ``_lloyd_partials_np``. The trainer
+    then merges k·partitions partial rows driver-side in exact Python
+    ints — the dim×-corpus-row explode that fed the old aggregate
+    M-step never materializes, and the resulting sums are the SAME
+    integers, so no oracle changes."""
     import numpy as np
     import pandas as pd
 
     if emit not in ("assign", "mstep"):
         raise ValueError(f"emit must be 'assign' or 'mstep', got {emit!r}")
-    C = np.asarray(cents, dtype=np.float64)
+    C = np.array(cents, dtype=np.float64)
     if emit == "mstep":
         out_schema = "cid int, n_part long, s_part array<long>"
     else:
         out_schema = f"{id_col} long, cid int"
         if carry_vec:
             out_schema += f", {vec_col} array<double>"
-    row_chunk, cent_chunk = 1024, 64
 
     def fn(batches):
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy()
-            X = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            best_d = np.empty(n, dtype=np.int64)
-            best_i = np.empty(n, dtype=np.int32)
-            for r0 in range(0, n, row_chunk):
-                xb = X[r0 : r0 + row_chunk]
-                bd = None
-                bi = None
-                for c0 in range(0, len(C), cent_chunk):
-                    cb = C[c0 : c0 + cent_chunk]
-                    t = xb[:, None, :] - cb[None, :, :]
-                    d = _round_half_away_nonneg_i64(t * t * 1e12).sum(
-                        axis=2
-                    )
-                    ci = d.argmin(axis=1)  # first occurrence = lower cid
-                    cd = d[np.arange(len(xb)), ci]
-                    if bd is None:
-                        bd, bi = cd, (ci + c0).astype(np.int32)
-                    else:
-                        upd = cd < bd  # strict: earlier chunk keeps ties
-                        bd = np.where(upd, cd, bd)
-                        bi = np.where(upd, (ci + c0).astype(np.int32), bi)
-                best_d[r0 : r0 + len(xb)] = bd
-                best_i[r0 : r0 + len(xb)] = bi
+            X = _lloyd_matrix_np(
+                pdf[vec_col], C.shape[1], "kmeans_assign_arrow"
+            )
+            best = _lloyd_assign_np(X, C)
             if emit == "mstep":
                 Xi = _round_half_away_signed_np(X * 1e12).astype(np.int64)
-                uc, inv = np.unique(best_i, return_inverse=True)
-                npart = np.bincount(inv)
-                S = np.zeros((len(uc), X.shape[1]), dtype=np.int64)
-                np.add.at(S, inv, Xi)
+                uc, counts, S = _lloyd_partials_np(best, Xi)
                 yield pd.DataFrame(
-                    {"cid": uc, "n_part": npart, "s_part": list(S)}
+                    {"cid": uc, "n_part": counts, "s_part": list(S)}
                 )
                 continue
-            out = {id_col: ids, "cid": best_i}
+            out = {id_col: pdf[id_col].to_numpy(), "cid": best}
             if carry_vec:
                 out[vec_col] = pdf[vec_col].to_numpy()
             yield pd.DataFrame(out)
@@ -2605,125 +2684,6 @@ def kmeans_assign_arrow(
         F.col(id_col).cast("long").alias(id_col),
         _as_double_array(F.col(vec_col)).alias(vec_col),
     ).mapInPandas(fn, schema=out_schema)
-
-
-def kmeans_assign_grouped(
-    vecs: DataFrame,
-    cents: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "__v",
-    group_col: str = "bid",
-    carry_vec: bool = False,
-    emit: str = "assign",
-) -> DataFrame:
-    """Lloyd E-step, GROUPED form: every vector is assigned to the
-    nearest sub-centroid WITHIN ITS OWN GROUP — the within-branch half
-    of the two-level quantizer. ``vecs`` carries (id, group, vector);
-    ``cents`` carries (group, scid, cv) with centroids AS DATA, not
-    literals — the property that lets the total centroid count scale
-    with the corpus while no driver sync, broadcast, or plan literal
-    ever holds all of them.
-
-    Arithmetic is the house E-step exactly (``kmeans_assign_arrow``):
-    per-term round(t²·10¹²) (exact half-away,
-    ``_round_half_away_nonneg_np``) summed as int64 — associative, so
-    numpy's order equals a SQL fold bit-for-bit — argmin ties to the
-    LOWER scid (centroids sorted by scid; argmin takes the first).
-
-    Physical shape: one cogroup on the group key — vectors exchange
-    once on ``group_col`` (exchange-free when the caller pre-
-    partitioned them on it), centroids (|leaf| rows total) exchange
-    beside them, and each group's assignment is blocked numpy over a
-    branch-sized sub-problem. Per-group memory is O(|branch|·dim +
-    chunk·|branch cents|·dim); the row-chunk bound keeps the distance
-    temporary ~tens of MB however large the branch. Returns
-    (id, group, scid int), plus the bit-preserved vector when
-    ``carry_vec`` (the grouped M-step consumes it directly — the
-    ``kmeans_assign_arrow`` carry_vec rationale).
-
-    ``emit="mstep"`` (r11): because a cogroup task holds its ENTIRE
-    group, the per-(group, scid) M-step statistics are COMPLETE inside
-    the task — the pass returns (group, scid, n, s array<long>) with
-    s the per-coordinate sum of round(x·10¹²) int64 addends (numpy
-    half-away; exact under the trainer's overflow envelope). The
-    grouped M-step then needs ZERO further aggregation or exchange —
-    the dim×-corpus-row explode is gone — and the sums are the same
-    integers the aggregate form produced, so the SQL oracle chains
-    replay unchanged."""
-    import numpy as np
-    import pandas as pd
-
-    if emit not in ("assign", "mstep"):
-        raise ValueError(f"emit must be 'assign' or 'mstep', got {emit!r}")
-    if emit == "mstep":
-        out_schema = f"{group_col} int, scid int, n long, s array<long>"
-    else:
-        out_schema = f"{id_col} long, {group_col} int, scid int"
-        if carry_vec:
-            out_schema += f", {vec_col} array<double>"
-    row_chunk = 1024
-
-    def fn(key, left, right):
-        if len(left) == 0 or len(right) == 0:
-            if emit == "mstep":
-                return pd.DataFrame(
-                    {group_col: pd.Series([], dtype="int32"),
-                     "scid": pd.Series([], dtype="int32"),
-                     "n": pd.Series([], dtype="int64"),
-                     "s": pd.Series([], dtype="object")}
-                )
-            empty = {id_col: pd.Series([], dtype="int64"),
-                     group_col: pd.Series([], dtype="int32"),
-                     "scid": pd.Series([], dtype="int32")}
-            if carry_vec:
-                empty[vec_col] = pd.Series([], dtype="object")
-            return pd.DataFrame(empty)
-        right = right.sort_values("scid")
-        C = np.asarray(list(right["cv"]), dtype=np.float64)
-        scids = right["scid"].to_numpy(dtype=np.int32)
-        ids = left[id_col].to_numpy()
-        X = np.asarray(list(left[vec_col]), dtype=np.float64)
-        n = len(X)
-        best = np.empty(n, dtype=np.int32)
-        for r0 in range(0, n, row_chunk):
-            xb = X[r0 : r0 + row_chunk]
-            t = xb[:, None, :] - C[None, :, :]
-            d = _round_half_away_nonneg_i64(t * t * 1e12).sum(axis=2)
-            # first occurrence over the scid-sorted axis = lowest scid
-            best[r0 : r0 + len(xb)] = scids[d.argmin(axis=1)]
-        if emit == "mstep":
-            Xi = _round_half_away_signed_np(X * 1e12).astype(np.int64)
-            uc, inv = np.unique(best, return_inverse=True)
-            npart = np.bincount(inv)
-            S = np.zeros((len(uc), X.shape[1]), dtype=np.int64)
-            np.add.at(S, inv, Xi)
-            return pd.DataFrame(
-                {group_col: np.full(len(uc), key[0], dtype=np.int32),
-                 "scid": uc,
-                 "n": npart,
-                 "s": list(S)}
-            )
-        out = {id_col: ids, group_col: np.full(n, key[0], dtype=np.int32),
-               "scid": best}
-        if carry_vec:
-            out[vec_col] = left[vec_col].to_numpy()
-        return pd.DataFrame(out)
-
-    lv = vecs.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(group_col).cast("int").alias(group_col),
-        _as_double_array(F.col(vec_col)).alias(vec_col),
-    )
-    rv = cents.select(
-        F.col(group_col).cast("int").alias(group_col),
-        F.col("scid").cast("int").alias("scid"),
-        _as_double_array(F.col("cv")).alias("cv"),
-    )
-    return (
-        lv.groupBy(group_col)
-        .cogroup(rv.groupBy(group_col))
-        .applyInPandas(fn, schema=out_schema)
-    )
 
 
 def kmeans_lloyd_grouped(
@@ -2745,20 +2705,16 @@ def kmeans_lloyd_grouped(
     ONE-PASS TRAIN (r13 — the tower job-count floor, VERDICT r12
     task 1): a cogroup task holds its ENTIRE group — every member
     vector and every sub-centroid — so ALL Lloyd iterations run
-    INSIDE the task: E-step (per-term round(t²·10¹²) exact half-away
-    int64 sums, argmin ties to the lower scid), M-step (per-(scid, j)
-    round(x·10¹²) LONG sums + counts; means = exact 9dp HALF_UP on
-    the identical double ``float(s)/1e12/n`` the engine's
-    ``F.round(s/1e12/n, 9)`` rounds — ``_round9_half_up``, the same
-    driver twin ``kmeans_lloyd``'s arrow path already oracles), empty
-    sub-clusters carrying their previous centroid whole. The old form
-    ran E and M as one cogroup PER ITERATION stitched by
-    quantizer-sized joins and per-round localCheckpoints — at sf0.1
-    that was ~14 scheduled AQE stage-jobs and iters× corpus Arrow
-    round trips per train; the fused form is ONE cogroup (vectors
-    ship once) plus one |leaf|-row eager checkpoint. Every integer
-    and every mean is bit-identical — the per-round ``gst{t}``/
-    ``sc{t+1}`` oracle CTEs replay unchanged.
+    INSIDE the task as ``_lloyd_rounds_np`` over the scid-sorted
+    centroids (positions map back to scids; ties go to the lower
+    scid; empty sub-clusters, and groups with no members at all, keep
+    their previous centroid). The old form ran E and M as one cogroup
+    PER ITERATION stitched by quantizer-sized joins and per-round
+    localCheckpoints — at sf0.1 that was ~14 scheduled AQE stage-jobs
+    and iters× corpus Arrow round trips per train; the fused form is
+    ONE cogroup (vectors ship once) plus one |leaf|-row eager
+    checkpoint. Every integer and every mean is bit-identical — the
+    per-round ``gst{t}``/``sc{t+1}`` oracle CTEs replay unchanged.
 
     Returns the final (group, scid, cv) frame, localCheckpointed
     (eager — downstream consumers branch on it)."""
@@ -2767,7 +2723,6 @@ def kmeans_lloyd_grouped(
 
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    row_chunk = 1024
     out_schema = f"{group_col} int, scid int, cv array<double>"
 
     def fn(key, left, right):
@@ -2779,41 +2734,11 @@ def kmeans_lloyd_grouped(
             )
         right = right.sort_values("scid")
         scids = right["scid"].to_numpy(dtype=np.int32)
-        C = np.asarray(list(right["cv"]), dtype=np.float64)
-        if len(left) == 0:
-            # a group with centroids but no members keeps its init
-            # (the old left-join coalesce semantics)
-            return pd.DataFrame(
-                {group_col: np.full(len(scids), key[0], dtype=np.int32),
-                 "scid": scids,
-                 "cv": list(C)}
-            )
-        X = np.asarray(list(left[vec_col]), dtype=np.float64)
-        n = len(X)
-        # addends quantized ONCE (iteration-invariant): round(x·10¹²)
-        # signed exact half-away int64 — the r11 M-step convention
-        Xi = _round_half_away_signed_np(X * 1e12).astype(np.int64)
-        scid_pos = {int(s): i for i, s in enumerate(scids)}
-        best = np.empty(n, dtype=np.int32)
-        for _ in range(iters):
-            for r0 in range(0, n, row_chunk):
-                xb = X[r0 : r0 + row_chunk]
-                t = xb[:, None, :] - C[None, :, :]
-                d = _round_half_away_nonneg_i64(t * t * 1e12).sum(axis=2)
-                # first occurrence over the scid-sorted axis = lowest scid
-                best[r0 : r0 + len(xb)] = scids[d.argmin(axis=1)]
-            uc, inv = np.unique(best, return_inverse=True)
-            npart = np.bincount(inv)
-            S = np.zeros((len(uc), X.shape[1]), dtype=np.int64)
-            np.add.at(S, inv, Xi)
-            for row, (sc, cnt) in enumerate(zip(uc, npart)):
-                ci = scid_pos[int(sc)]
-                # int64→double exact under the 2⁵³ envelope; /1e12
-                # then /n are the engine's own double divisions; the
-                # vectorized repr-based round9 twin finishes the mean
-                C[ci] = _round9_half_up_np(
-                    S[row].astype(np.float64) / 1e12 / float(cnt)
-                )
+        C0 = np.asarray(list(right["cv"]), dtype=np.float64)
+        X = _lloyd_matrix_np(
+            left[vec_col], C0.shape[1], "kmeans_lloyd_grouped"
+        )
+        C, _ = _lloyd_rounds_np(X, C0, iters)
         return pd.DataFrame(
             {group_col: np.full(len(scids), key[0], dtype=np.int32),
              "scid": scids,
@@ -2836,44 +2761,6 @@ def kmeans_lloyd_grouped(
         .applyInPandas(fn, schema=out_schema)
         .localCheckpoint(eager=True)
     )
-
-
-def _lloyd_rounds_np(X, Xi, k: int, iters: int, row_chunk: int = 1024):
-    """The in-task Lloyd kernel shared by ``kmeans_train_assign_grouped``
-    and ``_semdedup_tower_fused`` (r13 — extracted verbatim so the two
-    fused paths cannot drift): init = the first ``k`` rows (callers
-    pass id-sorted arrays, so this is first-k-by-id), ``iters`` rounds
-    of scaled-int64 E-step (per-term round(t²·10¹²) exact half-away,
-    argmin first-occurrence = lowest scid) + M-step (pre-quantized
-    round(x·10¹²) LONG addends ``Xi``, means through the vectorized
-    repr-based 9dp HALF_UP twin, empty sub-clusters carrying their
-    previous centroid), then ONE final E-step with the trained
-    centroids. Returns ``(best int32[n], C float64[k, dim])``."""
-    import numpy as np
-
-    n = len(X)
-    C = X[:k].copy()
-    best = np.empty(n, dtype=np.int32)
-
-    def estep():
-        for r0 in range(0, n, row_chunk):
-            xb = X[r0 : r0 + row_chunk]
-            t = xb[:, None, :] - C[None, :, :]
-            d = _round_half_away_nonneg_i64(t * t * 1e12).sum(axis=2)
-            best[r0 : r0 + len(xb)] = d.argmin(axis=1)
-
-    for _ in range(iters):
-        estep()
-        uc, inv = np.unique(best, return_inverse=True)
-        npart = np.bincount(inv)
-        S = np.zeros((len(uc), X.shape[1]), dtype=np.int64)
-        np.add.at(S, inv, Xi)
-        for row, (sc, cnt) in enumerate(zip(uc, npart)):
-            C[int(sc)] = _round9_half_up_np(
-                S[row].astype(np.float64) / 1e12 / float(cnt)
-            )
-    estep()  # final assignment with the trained centroids
-    return best, C
 
 
 def kmeans_train_assign_grouped(
@@ -2902,12 +2789,9 @@ def kmeans_train_assign_grouped(
     integer twin the oracle's CASE chain replays — same function the
     driver already uses for the coarse sizing); init = first k members
     by id (== the window form's orderBy(id) rn ≤ k); all Lloyd
-    iterations verbatim ``kmeans_lloyd_grouped`` arithmetic
-    (scaled-int64 E-step with argmin ties to the lower scid,
-    round(x·10¹²) LONG M-step addends, ``_round9_half_up_np`` means,
-    empty sub-clusters carrying their previous centroid); then ONE
-    final E-step with the trained centroids (== what
-    ``kmeans_assign_grouped`` recomputed from the checkpoint).
+    iterations through ``_lloyd_rounds_np`` (the shared kernel
+    ``kmeans_lloyd_grouped`` runs); then ONE final
+    ``_lloyd_assign_np`` with the trained centroids.
 
     Output: one row per member (group, scid, id, vector, cv NULL)
     UNION one row per centroid (group, scid, id NULL, vector NULL,
@@ -2923,7 +2807,6 @@ def kmeans_train_assign_grouped(
         raise ValueError(f"iters must be >= 1, got {iters}")
     T = int(t_target)
     s = int(splits_remaining)
-    row_chunk = 1024
     out_schema = (
         f"{group_col} int, scid int, {id_col} long, "
         f"{vec_col} array<double>, cv array<double>"
@@ -2942,16 +2825,15 @@ def kmeans_train_assign_grouped(
         g = int(key[0])
         order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
         ids = pdf[id_col].to_numpy()[order]
-        X = np.asarray(list(pdf[vec_col]), dtype=np.float64)[order]
+        X = _lloyd_matrix_np(
+            pdf[vec_col], None, "kmeans_train_assign_grouped"
+        )[order]
         m = (n + T - 1) // T
         k = _int_ceil_root(m, s)  # k ≤ m ≤ n — init rows always exist
-        # addends quantized ONCE (iteration-invariant) — the r11
-        # M-step convention, verbatim kmeans_lloyd_grouped
-        Xi = _round_half_away_signed_np(X * 1e12).astype(np.int64)
-        best, C = _lloyd_rounds_np(X, Xi, k, iters, row_chunk)
+        C, _ = _lloyd_rounds_np(X, X[:k], iters)
         mrows = pd.DataFrame(
             {group_col: np.full(n, g, dtype=np.int32),
-             "scid": best.astype(np.int32),
+             "scid": _lloyd_assign_np(X, C),
              id_col: ids,
              vec_col: list(X),
              "cv": [None] * n}
@@ -3111,11 +2993,10 @@ def pq_assign(
     """Encode every vector as its m_sub nearest-sub-centroid codes in
     ONE Arrow scan — no explode, no cogroup exchange: the full
     codebook (m_sub·ksub·dsub doubles) rides in the closure and each
-    batch computes all m_sub argmins over numpy blocks. Arithmetic is
-    the house E-step exactly (per-term round(t²·10¹²) exact half-away
-    summed as int64, argmin ties to the LOWER scid) — bit-identical to routing
-    the exploded subvectors through ``kmeans_assign_grouped``
-    (property-tested), which is what the SQL oracle replays.
+    batch runs the shared E-step ``_lloyd_assign_np`` once per
+    subspace (ties to the LOWER scid) — the arithmetic the SQL oracle
+    replays over the exploded subvectors (bit-parity argument in the
+    kernel docstring).
 
     Returns (id, codes array<int>) ordered by subspace — the
     compressed corpus. ``carry_cols`` pass through the scan untouched
@@ -3132,7 +3013,6 @@ def pq_assign(
         raise ValueError(
             f"codebooks cover subspaces {sub_ids}, expected 0..{m_sub - 1}"
         )
-    row_chunk = 1024
 
     src = ensure_min_partitions(vecs).select(
         F.col(id_col).cast("long").alias(id_col),
@@ -3149,21 +3029,13 @@ def pq_assign(
 
     def fn(batches):
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            X = np.asarray(list(pdf["__e"]), dtype=np.float64)
-            n = len(X)
-            codes = np.empty((n, m_sub), dtype=np.int32)
+            X = _lloyd_matrix_np(pdf["__e"], dim, "pq_assign")
+            codes = np.empty((len(X), m_sub), dtype=np.int32)
             for s in range(m_sub):
                 scids, C = cb[s]
                 xs = X[:, s * dsub : (s + 1) * dsub]
-                for r0 in range(0, n, row_chunk):
-                    xb = xs[r0 : r0 + row_chunk]
-                    t = xb[:, None, :] - C[None, :, :]
-                    d = _round_half_away_nonneg_i64(t * t * 1e12).sum(
-                        axis=2
-                    )
-                    codes[r0 : r0 + len(xb), s] = scids[d.argmin(axis=1)]
-            out = {id_col: ids, "codes": list(codes)}
+                codes[:, s] = scids[_lloyd_assign_np(xs, C)]
+            out = {id_col: pdf[id_col].to_numpy(), "codes": list(codes)}
             for c in carry_cols:
                 out[c] = pdf[c]
             yield pd.DataFrame(out)
@@ -3219,8 +3091,6 @@ def pq_adc_topk(
     note) feeding orderBy(adc_d2, id).limit(k), which Spark plans as
     TakeOrderedAndProject: per-partition heaps, no global sort, no
     shuffle of anything but k rows. Returns (id, adc_d2, rank)."""
-    import math as _math
-
     sub_ids, cb = _collect_codebooks(codebooks)
     if sub_ids != list(range(m_sub)):
         raise ValueError(
@@ -3234,14 +3104,7 @@ def pq_adc_topk(
         if list(scids) != list(range(len(scids))):
             raise ValueError(f"subspace {s} scids not dense: {list(scids)}")
         qs = q[s * dsub : (s + 1) * dsub]
-        row = []
-        for c in C:
-            d2 = 0
-            for j in range(dsub):
-                t = qs[j] - c[j]
-                d2 += _round_half_away_int(t * t * 1e12)
-            row.append(d2)
-        lut_rows.append(row)
+        lut_rows.append([_d2_scaled_int(qs, c) for c in C.tolist()])
     # ADC scoring as ONE Arrow gather (r13 optimization round,
     # continuation session; guide §4.2): the LUT rides in the task
     # closure as a (m_sub, ksub) int64 ndarray instead of an

@@ -3580,15 +3580,62 @@ def test_kmeans_lloyd_rejects_overflowing_coordinates(spark, monkeypatch):
         assert sizes == {0: 1, 1: 1}
 
 
+def _ref_d2(v, c):
+    """Pure-Python scaled-integer squared L2, independent of the numpy
+    kernel: per-term round(t²·10¹²) HALF_UP on the exact binary value
+    (Decimal), summed as Python ints."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    one = Decimal(1)
+    return sum(
+        int(Decimal((x - y) * (x - y) * 1e12).quantize(one, ROUND_HALF_UP))
+        for x, y in zip(v, c)
+    )
+
+
+def _ref_argmin(v, cents):
+    """Nearest centroid index under ``_ref_d2``, ties to the lower
+    index."""
+    return min(range(len(cents)), key=lambda c: (_ref_d2(v, cents[c]), c))
+
+
+def _ref_lloyd(vecs, init, iters):
+    """Pure-Python Lloyd replay of the oracle arithmetic: the
+    ``_ref_argmin`` E-step, M-step sums of round(x·10¹²) (Decimal
+    half-away) as Python ints, means through the scalar
+    ``classify._round9_half_up`` of float(s)/1e12/n, empty clusters
+    keeping their previous centroid. Returns the trained centroids."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from taxi_rides_ny_duckdb_spark.operators.classify import _round9_half_up
+
+    cents = [list(c) for c in init]
+    for _ in range(iters):
+        sums: dict = {}
+        counts: dict = {}
+        for v in vecs:
+            c = _ref_argmin(v, cents)
+            counts[c] = counts.get(c, 0) + 1
+            acc = sums.setdefault(c, [0] * len(v))
+            for j, x in enumerate(v):
+                acc[j] += int(
+                    Decimal(x * 1e12).quantize(Decimal(1), ROUND_HALF_UP)
+                )
+        for c, cnt in counts.items():
+            cents[c] = [
+                _round9_half_up(float(t) / 1e12 / cnt) for t in sums[c]
+            ]
+    return cents
+
+
 def test_kmeans_assign_arrow_matches_reference(spark, sf_dir, monkeypatch):
     """The Arrow E-step must equal an independent pure-Python replay
     of the oracle arithmetic on real fixture embeddings (per-term
     round(t²·10¹²) half-away as exact ints, argmin ties to the lower
     cid) — quantizing before summing is what makes numpy's pairwise
-    order exact — and the trainer must return identical centroids and
-    sizes on both sides of the fused gate."""
-    from decimal import ROUND_HALF_UP, Decimal
-
+    order exact — also past k = 64, where exact ties straddle the
+    kernel's centroid-chunk boundaries; and the trainer must return
+    identical centroids and sizes on both sides of the fused gate."""
     from taxi_rides_ny_duckdb_spark.operators import similarity as S
     from taxi_rides_ny_duckdb_spark.sources.registry import load
 
@@ -3600,26 +3647,75 @@ def test_kmeans_assign_arrow_matches_reference(spark, sf_dir, monkeypatch):
         ).collect()
     }
     init = [vecs[i] for i in range(5)]
-
-    def term(t):
-        return int(Decimal(t * t * 1e12).quantize(Decimal(1), ROUND_HALF_UP))
-
-    want = {
-        vid: min(
-            range(len(init)),
-            key=lambda c: (sum(term(x - y) for x, y in zip(v, init[c])), c),
-        )
-        for vid, v in vecs.items()
-    }
+    want = {vid: _ref_argmin(v, init) for vid, v in vecs.items()}
     got = {
         r["vec_id"]: r["cid"]
         for r in S.kmeans_assign_arrow(emb, init, "vec_id").collect()
     }
     assert got == want and len(got) == 300
 
+    # k = 130: centroid 64 duplicates 63 (an exact tie across the
+    # 63/64 chunk boundary) and 127.5 sits midway between 127 and 128
+    # (the 127/128 boundary); both must resolve to the lower id
+    cents = [[float(i), 0.0] for i in range(130)]
+    cents[64] = list(cents[63])
+    pts = [[63.0, 0.0], [63.5, 0.0], [127.5, 0.0], [100.0, 0.0], [129.2, 0.0]]
+    df = spark.createDataFrame(
+        list(enumerate(pts)), "vec_id long, embedding array<double>"
+    )
+    got = {
+        r["vec_id"]: r["cid"]
+        for r in S.kmeans_assign_arrow(df, cents, "vec_id").collect()
+    }
+    assert got == {i: _ref_argmin(v, cents) for i, v in enumerate(pts)}
+    assert got == {0: 63, 1: 63, 2: 127, 3: 100, 4: 129}
+
     fused = S.kmeans_lloyd(emb, init, iters=2)
     monkeypatch.setattr(S, "_FUSED_LLOYD_MAX_ROWS", 0)
     assert S.kmeans_lloyd(emb, init, iters=2) == fused
+
+
+def test_lloyd_entries_reject_malformed_vectors(spark, monkeypatch):
+    """A NULL vector, or one shorter or longer than the centroids,
+    stops every Lloyd entry with a ValueError naming the operator and
+    the row — not numpy's opaque broadcast/sequence error, and never
+    a silent truncation of the longer vector."""
+    from pyspark.errors import PythonException
+
+    from taxi_rides_ny_duckdb_spark.operators import similarity as S
+
+    init = [[0.0, 0.0, 0.0], [1.0, 1.0, 1.0]]
+    good = [(i, [0.1 * i, 0.2, 0.3]) for i in range(5)]
+    cases = [
+        (None, r"NULL vector at batch row \d+ \(expected array of 3 doubles"),
+        ([0.5, 0.5], r"vector of length 2 at batch row \d+ \(expected 3\)"),
+        ([0.5] * 4, r"vector of length 4 at batch row \d+ \(expected 3\)"),
+    ]
+    for bad, text in cases:
+        df = spark.createDataFrame(
+            good + [(5, bad)], "vec_id long, embedding array<double>"
+        )
+        for gate, op in (
+            (S._FUSED_LLOYD_MAX_ROWS, "kmeans_lloyd"),
+            (0, "kmeans_assign_arrow"),
+        ):
+            monkeypatch.setattr(S, "_FUSED_LLOYD_MAX_ROWS", gate)
+            with pytest.raises(
+                PythonException, match=f"ValueError: {op}: {text}"
+            ):
+                S.kmeans_lloyd(df, init, iters=1)
+            monkeypatch.undo()
+        grouped = df.select(
+            "vec_id", F.lit(0).alias("bid"), F.col("embedding").alias("__v")
+        )
+        cents = spark.createDataFrame(
+            [(0, s, c) for s, c in enumerate(init)],
+            "bid int, scid int, cv array<double>",
+        )
+        with pytest.raises(
+            PythonException, match=f"ValueError: kmeans_lloyd_grouped: {text}"
+        ):
+            S.kmeans_lloyd_grouped(grouped, cents, iters=1)
 
 
 def test_semdedup_auto_sizes_quantizer_and_keeps_one_per_component(spark):
@@ -3741,54 +3837,6 @@ def test_semdedup_auto_three_level_collapses_exact_dups_like_flat(spark):
     assert _int_ceil_root(125, 3) == 5 and _int_ceil_root(1, 5) == 1
 
 
-def test_kmeans_assign_grouped_matches_flat_per_branch(spark):
-    """The grouped cogroup E-step must reproduce kmeans_assign_arrow
-    branch-by-branch (same scaled-int64 distance, ties to the lower
-    sub-id) — the bit-equality that lets the two-level oracle replay
-    the whole pipeline."""
-    import random
-
-    from taxi_rides_ny_duckdb_spark.operators.similarity import (
-        kmeans_assign_arrow,
-        kmeans_assign_grouped,
-    )
-
-    random.seed(11)
-    vec_rows = [
-        (i, i % 3, [random.uniform(-1, 1) for _ in range(6)]) for i in range(60)
-    ]
-    cents_by_branch = {
-        b: [[random.uniform(-1, 1) for _ in range(6)] for _ in range(4)]
-        for b in range(3)
-    }
-    vecs = spark.createDataFrame(
-        vec_rows, "vec_id long, bid int, __v array<double>"
-    )
-    cents = spark.createDataFrame(
-        [
-            (b, s, cv)
-            for b, cvs in cents_by_branch.items()
-            for s, cv in enumerate(cvs)
-        ],
-        "bid int, scid int, cv array<double>",
-    )
-    got = {
-        r["vec_id"]: (r["bid"], r["scid"])
-        for r in kmeans_assign_grouped(vecs, cents).collect()
-    }
-    assert len(got) == 60
-    for b in range(3):
-        sub = vecs.filter(F.col("bid") == b).select("vec_id", "__v")
-        want = {
-            r["vec_id"]: r["cid"]
-            for r in kmeans_assign_arrow(
-                sub, cents_by_branch[b], "vec_id", "__v"
-            ).collect()
-        }
-        for vid, cid in want.items():
-            assert got[vid] == (b, cid), (vid, got[vid], (b, cid))
-
-
 def test_kmeans_lloyd_grouped_carries_empty_subcluster(spark):
     """A sub-centroid that attracts no member keeps its previous
     coordinates (the flat trainer's empty-cluster rule, grouped form);
@@ -3814,31 +3862,30 @@ def test_kmeans_lloyd_grouped_carries_empty_subcluster(spark):
 
 
 def test_kmeans_train_assign_grouped_matches_unfused_pipeline(spark):
-    """The r13 fused per-level pass (in-task init + train + assign)
-    must reproduce the unfused chain bit-for-bit: init = first-k-by-id
-    with k = _int_ceil_root(ceil(cnt/T), s), trained centroids ==
-    kmeans_lloyd_grouped on that init, assignments ==
-    kmeans_assign_grouped on the trained centroids — and the centroid
+    """The fused per-level pass (in-task init + train + assign) must
+    equal the unfused chain replayed in pure Python per group:
+    k = _int_ceil_root(ceil(cnt/T), s), init = first k by id, trained
+    centroids == ``_ref_lloyd`` from that init, assignments ==
+    ``_ref_argmin`` against the trained centroids — and the centroid
     rows must be the COMPLETE k-per-group set (including sub-clusters
     that end up empty), because the downstream dense numbering the
     oracle replays counts empty leaves."""
-    from pyspark.sql import functions as F
-
     from taxi_rides_ny_duckdb_spark.operators.similarity import (
         _int_ceil_root,
-        kmeans_assign_grouped,
-        kmeans_lloyd_grouped,
         kmeans_train_assign_grouped,
     )
 
     # group 0: 5 members (T=2, s=2 ⇒ m=3, k=2); group 1: 1 member
-    # (k=1). Group 0's members are IDENTICAL, so both init centroids
+    # (k=1); group 2: 12 spread members (m=6, k=3) whose centroids
+    # move. Group 0's members are IDENTICAL, so both init centroids
     # coincide and every member ties to the LOWER scid — scid 1 is a
     # truly EMPTY trained sub-cluster (carries its init).
     rows = [
         (10, 0, [0.0, 0.0]), (11, 0, [0.0, 0.0]), (12, 0, [0.0, 0.0]),
         (13, 0, [0.0, 0.0]), (14, 0, [0.0, 0.0]),
         (20, 1, [5.0, 5.0]),
+    ] + [
+        (30 + i, 2, [0.3 * (i % 4) - 0.45, 0.1 * i - 0.55]) for i in range(12)
     ]
     vecs = spark.createDataFrame(rows, "vec_id long, bid int, __v array<double>")
     T, s, iters = 2, 2, 2
@@ -3852,25 +3899,23 @@ def test_kmeans_train_assign_grouped_matches_unfused_pipeline(spark):
     }
     assert len(f_asg) == len(rows)
 
-    # unfused replica
-    init_rows = []
+    want_cents: dict = {}
+    want_asg: dict = {}
     by_bid: dict = {}
     for vid, bid, v in rows:
         by_bid.setdefault(bid, []).append((vid, v))
     for bid, members in by_bid.items():
         members.sort()
         k = _int_ceil_root((len(members) + T - 1) // T, s)
-        for scid, (_vid, v) in enumerate(members[:k]):
-            init_rows.append((bid, scid, v))
-    init = spark.createDataFrame(init_rows, "bid int, scid int, cv array<double>")
-    cents = kmeans_lloyd_grouped(vecs, init, iters=iters)
-    u_cents = {(r["bid"], r["scid"]): r["cv"] for r in cents.collect()}
-    u_asg = {
-        r["vec_id"]: (r["bid"], r["scid"], r["__v"])
-        for r in kmeans_assign_grouped(vecs, cents, carry_vec=True).collect()
-    }
-    assert f_cents == u_cents, "trained centroids must match unfused form"
-    assert f_asg == u_asg, "assignments must match unfused form"
+        vs = [v for _vid, v in members]
+        C = _ref_lloyd(vs, vs[:k], iters)
+        for scid, c in enumerate(C):
+            want_cents[(bid, scid)] = c
+        for vid, v in members:
+            want_asg[vid] = (bid, _ref_argmin(v, C), v)
+    assert f_cents == want_cents, "trained centroids must match the replay"
+    assert f_asg == want_asg, "assignments must match the replay"
+    assert f_cents[(2, 0)] != by_bid[2][0][1], "group 2 must train"
     # the empty sub-cluster is present in the centroid rows
     assert (0, 1) in f_cents
     assigned_scids = {(b, sc) for b, sc, _ in f_asg.values()}
@@ -4255,38 +4300,38 @@ def test_source_ngram_overlap_toy(spark):
 
 
 def test_pq_assign_matches_grouped_cogroup_path(spark):
-    """pq_assign's single Arrow scan must reproduce the cogroup path
-    the SQL oracle replays (pq_subvectors → kmeans_assign_grouped):
-    same scaled-int64 distances, same ties-to-lower-scid argmin —
-    the bit-equality that makes ext_pq_topk oracle-able."""
-    import random
-
+    """pq_train's codebooks and pq_assign's codes must equal the
+    pure-Python Lloyd replay per subspace — the arithmetic the SQL
+    oracle replays over the exploded subvectors: init = the first ksub
+    subvectors by id, ``_ref_lloyd`` training, ``_ref_argmin`` codes
+    (ties to the lower scid) — the bit-equality that makes ext_pq_topk
+    oracle-able."""
     from taxi_rides_ny_duckdb_spark.operators.similarity import (
-        kmeans_assign_grouped,
         pq_assign,
-        pq_subvectors,
         pq_train,
     )
 
     random.seed(23)
-    dim, m = 12, 3
+    dim, m, ksub, iters = 12, 3, 4, 2
     rows = [(i, [random.uniform(-1, 1) for _ in range(dim)]) for i in range(80)]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cb = pq_train(vecs, dim=dim, m_sub=m, ksub=4, iters=2)
+    cb = pq_train(vecs, dim=dim, m_sub=m, ksub=ksub, iters=iters)
+    got_cb = {(r["sub_id"], r["scid"]): r["cv"] for r in cb.collect()}
     got = {
         r["vec_id"]: list(r["codes"])
         for r in pq_assign(vecs, cb, dim=dim, m_sub=m).collect()
     }
-    sv = pq_subvectors(vecs, dim=dim, m_sub=m).select(
-        (F.col("vec_id") * m + F.col("sub_id")).alias("pvid"),
-        F.col("sub_id").alias("bid"),
-        F.col("sv").alias("__v"),
-    )
-    want: dict[int, list[int]] = {i: [None] * m for i, _ in rows}
-    for r in kmeans_assign_grouped(
-        sv, cb.select(F.col("sub_id").alias("bid"), "scid", "cv"), id_col="pvid"
-    ).collect():
-        want[r["pvid"] // m][r["bid"]] = r["scid"]
+    dsub = dim // m
+    want_cb: dict = {}
+    want: dict[int, list[int]] = {i: [] for i, _ in rows}
+    for s in range(m):
+        subs = [v[s * dsub : (s + 1) * dsub] for _i, v in rows]
+        C = _ref_lloyd(subs, subs[:ksub], iters)
+        for scid, c in enumerate(C):
+            want_cb[(s, scid)] = c
+        for (i, _v), sv in zip(rows, subs):
+            want[i].append(_ref_argmin(sv, C))
+    assert got_cb == want_cb
     assert got == want
 
 

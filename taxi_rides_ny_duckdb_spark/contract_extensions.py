@@ -5741,14 +5741,14 @@ def ext_bpe_learn_merges(spark, sf_dir):
     bpe_learn_merges): 6 rounds of pair recount → deterministic argmax
     → left-to-right merge apply over the frequency-weighted
     distinct-word vocabulary. Corpus read+shuffled ONCE (word counts);
-    each round is a vocab-sized job with a 1-ROW driver collect, and
-    ``localCheckpoint`` per round caps plan depth (the star-CC
-    pattern). memoize=False: training runs eagerly in the builder, so
-    a cached frame would skip the work a re-run must measure.
+    below the vocabulary gate every round runs in one task, above it
+    each round is one vocab-sized pass with a 1-ROW driver collect.
+    memoize=False: training runs eagerly in the builder, so a cached
+    frame would skip the work a re-run must measure.
 
-    Oracle independence: Spark applies merges with a Catalyst
-    ``aggregate`` left-fold; the oracle unrolls the same fixpoint to
-    chained CTEs with a gaps-and-islands window-parity greedy — two
+    Oracle independence: Spark applies merges with a Python greedy
+    scan (``_merge``); the oracle unrolls the same fixpoint to chained
+    CTEs with a gaps-and-islands window-parity greedy — two
     derivations of the merge semantics that share no mechanism."""
     from .operators.tokenizer import bpe_learn_merges_df
 
@@ -5825,16 +5825,16 @@ FROM documents d LEFT JOIN (
 def ext_bpe_segment(spark, sf_dir):
     """Apply the frozen 8-rule BPE merge table to every document
     (operators/tokenizer.bpe_segment): rebuild the corpus as subword
-    sequences ``(doc_id, bpe_text, n_bpe_tokens)``. The merge chain
-    runs once over the DISTINCT-WORD vocabulary (map-only Catalyst
-    folds), the word→symbols map BROADCASTS onto the corpus, and the
-    only corpus-sized exchange is the per-document rebuild groupBy —
-    segmentation itself never shuffles the corpus.
+    sequences ``(doc_id, bpe_text, n_bpe_tokens)``. The merge table
+    runs once over the DISTINCT-WORD vocabulary (one map-only
+    ``mapInPandas``), the word→symbols map BROADCASTS onto the
+    corpus, and the only corpus-sized exchange is the per-document
+    rebuild groupBy — segmentation itself never shuffles the corpus.
 
     Oracle independence: the oracle re-derives segmentation per
     (doc, word-position) from the inlined literal pairs via the
     window-parity greedy — it never sees the vocabulary factoring or
-    the fold."""
+    the greedy scan."""
     from .operators.tokenizer import bpe_segment
 
     d = load(spark, sf_dir, "documents")
@@ -6901,12 +6901,12 @@ def ext_lr_train(spark, sf_dir):
     (operators/classify.lr_train_surrogate): 3 full-batch iterations
     over hashed-tf features, is-English target, surrogate sigmoid
     (pure rational — no cross-libm exp hazard), 12dp-quantized decimal
-    gradient sums, bias trained as the constant feature idx=32. Per
-    iteration: ONE exchange (the 33-row gradient groupBy — the z-agg
-    and err-join are exchange-free on the doc-partitioned cache) and
-    ONE action; the oracle replays the whole descent as unrolled
-    CTEs. memoize=False: the trainer collects gradients eagerly per
-    iteration. Output: 32 weights + bias (idx −1), 9dp."""
+    gradient sums, bias trained as the constant feature idx=32. Every
+    iteration runs the one gradient kernel (``_lr_grad_np``) — all in
+    one task below the row gate, one map-only pass over the
+    doc-partitioned cache per iteration above it; the oracle replays
+    the whole descent as unrolled CTEs. memoize=False: the trainer
+    collects eagerly. Output: 32 weights + bias (idx −1), 9dp."""
     from .operators.classify import _round9_half_up, lr_train_surrogate
 
     d = load(spark, sf_dir, "documents")
@@ -7085,50 +7085,64 @@ def ext_filter_funnel(spark, sf_dir):
     )
 
 
-def _kmeans_iter_ctes(iters: int, dim: int) -> str:
-    """The per-iteration Lloyd CTE chain shared by every trained-
-    quantizer oracle (``_kmeans_oracle``, ``_semdedup_auto_oracle``):
-    for t in 0..iters-1 emit dd{t} (exploded-coordinate scaled-integer
-    LONG distance sums against c{t}), asg{t} (ties-to-lower-cid
-    argmin), st{t} (per-(cid, dim) 12dp DECIMAL coordinate sums +
-    counts) and c{t+1} (9dp half-away means; empty clusters carry the
-    previous centroid). Requires CTEs ``dims`` (vec_id, j, x) and
-    ``c0`` (cid, cv) upstream; k is whatever c0 holds — the chain
-    itself never names it, which is what lets the auto-sized oracle
-    compute nlist from the data."""
+def _grouped_lloyd_ctes(
+    iters: int,
+    dim: int,
+    dd: str = "gdd",
+    asg: str = "gasg",
+    st: str = "gst",
+    sc: str = "sc",
+    asg_in: str = "asgB",
+) -> str:
+    """The per-iteration GROUPED Lloyd CTE chain of every trained-
+    quantizer oracle — the flat chain is this one with a single group
+    (``asg_in`` mapping every vector to bid 0, ``{sc}0`` all bid 0).
+    Requires CTEs ``dims`` (vec_id, j, x), ``asg_in`` (vec_id, bid —
+    the node assignment of the level above) and ``{sc}0`` (bid, scid,
+    cv — per-node init sub-centroids) upstream. For t in 0..iters-1
+    emits {dd}{t} (scaled-integer LONG distance sums of each vector
+    against ITS OWN NODE's sub-centroids — the join on bid is the
+    hierarchy), {asg}{t} (ties-to-lower-scid
+    argmin), {st}{t} (per-(bid, scid, dim) 12dp DECIMAL coordinate
+    sums + counts) and {sc}{t+1} (9dp half-away means, empty
+    sub-clusters carrying the previous centroid) — exactly
+    operators/similarity.kmeans_lloyd_grouped's arithmetic. The name
+    parameters (r11) let one oracle instantiate the chain once per
+    hierarchy level (``ext_semdedup_hier3`` runs it twice)."""
     out = ""
     for t in range(iters):
         out += f""",
-dd{t} AS (
-  SELECT d.vec_id, c.cid,
+{dd}{t} AS (
+  SELECT d.vec_id, c.bid, c.scid,
          CAST(SUM(CAST(round((d.x - c.cv[d.j]) * (d.x - c.cv[d.j]) * 1000000000000.0)
                        AS BIGINT)) AS BIGINT) AS d2
-  FROM dims d CROSS JOIN c{t} c
-  GROUP BY d.vec_id, c.cid
+  FROM dims d JOIN {asg_in} ab ON ab.vec_id = d.vec_id
+  JOIN {sc}{t} c ON c.bid = ab.bid
+  GROUP BY d.vec_id, c.bid, c.scid
 ),
-asg{t} AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS rn
-    FROM dd{t}
+{asg}{t} AS (
+  SELECT vec_id, bid, scid FROM (
+    SELECT vec_id, bid, scid,
+           row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, scid ASC) AS rn
+    FROM {dd}{t}
   ) WHERE rn = 1
 ),
-st{t} AS (
-  SELECT a.cid, d.j,
+{st}{t} AS (
+  SELECT a.bid, a.scid, d.j,
          CAST(CAST(SUM(CAST(round(d.x * 1000000000000.0) AS BIGINT)) AS BIGINT)
               AS DOUBLE) AS s,
          COUNT(*) AS n
-  FROM dims d JOIN asg{t} a USING (vec_id)
-  GROUP BY a.cid, d.j
+  FROM dims d JOIN {asg}{t} a USING (vec_id)
+  GROUP BY a.bid, a.scid, d.j
 ),
-c{t + 1} AS (
-  SELECT c.cid,
+{sc}{t + 1} AS (
+  SELECT c.bid, c.scid,
          list(COALESCE(round(st.s / 1000000000000.0 / st.n, 9), c.cv[g.j])
               ORDER BY g.j) AS cv
-  FROM c{t} c
+  FROM {sc}{t} c
   CROSS JOIN generate_series(1, {dim}) g(j)
-  LEFT JOIN st{t} st ON st.cid = c.cid AND st.j = g.j
-  GROUP BY c.cid
+  LEFT JOIN {st}{t} st ON st.bid = c.bid AND st.scid = c.scid AND st.j = g.j
+  GROUP BY c.bid, c.scid
 )"""
     return out
 
@@ -7149,17 +7163,21 @@ dims AS (
   FROM v CROSS JOIN generate_series(1, {dim}) g(j)
 ),
 c0 AS (
-  SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
+  SELECT 0 AS bid, CAST(vec_id AS INT) AS scid,
+         CAST(embedding AS DOUBLE[]) AS cv
   FROM embeddings WHERE vec_id < {k}
-)"""
-    base += _kmeans_iter_ctes(iters, dim)
+),
+grp0 AS (SELECT vec_id, 0 AS bid FROM v)"""
+    base += _grouped_lloyd_ctes(
+        iters, dim, dd="dd", asg="asg", st="st", sc="c", asg_in="grp0"
+    )
     base += f"""
-SELECT c.cid, CAST(g.j AS BIGINT) AS dim_idx, c.cv[g.j] AS coord_r,
+SELECT c.scid AS cid, CAST(g.j AS BIGINT) AS dim_idx, c.cv[g.j] AS coord_r,
        CAST(COALESCE(sz.n, 0) AS BIGINT) AS n_assigned
 FROM c{iters} c
 CROSS JOIN generate_series(1, {dim}) g(j)
-LEFT JOIN (SELECT cid, COUNT(*) AS n FROM asg{iters - 1} GROUP BY cid) sz
-  USING (cid)
+LEFT JOIN (SELECT scid, COUNT(*) AS n FROM asg{iters - 1} GROUP BY scid) sz
+  USING (scid)
 """
     return base
 
@@ -7204,9 +7222,9 @@ def _semdedup_auto_oracle(
     """DuckDB replay of operators/similarity.semdedup_auto — the whole
     pipeline with a DATA-SIZED quantizer: nlist = ceil(N/target) as a
     scalar subquery, init = first nlist vectors by id, the unrolled
-    Lloyd chain (shared ``_kmeans_iter_ctes`` — its CTEs never name k,
-    so a data-dependent centroid count just works), one final
-    scaled-integer argmin assignment against c{iters}, own-centroid
+    Lloyd chain (``_grouped_lloyd_ctes`` with one group — its CTEs
+    never name k, so a data-dependent centroid count just works), one
+    final scaled-integer argmin assignment against c{iters}, own-centroid
     cosine (round 9), within-cluster pairs (round-before-threshold),
     recursive-CTE transitive closure, keep = argmin(cent_sim_r, id)
     per component."""
@@ -7222,18 +7240,21 @@ nl AS (
   SELECT CAST(ceil(COUNT(*) / {target}.0) AS BIGINT) AS nlist FROM v
 ),
 c0 AS (
-  SELECT CAST(rn - 1 AS INT) AS cid, ev AS cv FROM (
+  SELECT 0 AS bid, CAST(rn - 1 AS INT) AS scid, ev AS cv FROM (
     SELECT vec_id, ev, row_number() OVER (ORDER BY vec_id) AS rn FROM v
   ) WHERE rn <= (SELECT nlist FROM nl)
-)"""
-    base += _kmeans_iter_ctes(iters, dim)
+),
+grp0 AS (SELECT vec_id, 0 AS bid FROM v)"""
+    base += _grouped_lloyd_ctes(
+        iters, dim, dd="dd", asg="asg", st="st", sc="c", asg_in="grp0"
+    )
     base += f""",
 ddF AS (
-  SELECT d.vec_id, c.cid,
+  SELECT d.vec_id, c.scid AS cid,
          CAST(SUM(CAST(round((d.x - c.cv[d.j]) * (d.x - c.cv[d.j]) * 1000000000000.0)
                        AS BIGINT)) AS BIGINT) AS d2
   FROM dims d CROSS JOIN c{iters} c
-  GROUP BY d.vec_id, c.cid
+  GROUP BY d.vec_id, c.scid
 ),
 asgF AS (
   SELECT vec_id, cid FROM (
@@ -7250,7 +7271,7 @@ withsim AS (
          / (sqrt(list_sum(list_transform(generate_series(1, {dim}), i -> v.ev[i] * v.ev[i])))
             * sqrt(list_sum(list_transform(generate_series(1, {dim}), i -> c.cv[i] * c.cv[i]))))
     ELSE 0.0 END, 9) AS cent_sim_r
-  FROM asgF a JOIN v ON v.vec_id = a.vec_id JOIN c{iters} c ON c.cid = a.cid
+  FROM asgF a JOIN v ON v.vec_id = a.vec_id JOIN c{iters} c ON c.scid = a.cid
 ),
 pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
@@ -7320,66 +7341,6 @@ def ext_semdedup_auto(spark, sf_dir):
     )
 
 
-def _grouped_lloyd_ctes(
-    iters: int,
-    dim: int,
-    dd: str = "gdd",
-    asg: str = "gasg",
-    st: str = "gst",
-    sc: str = "sc",
-    asg_in: str = "asgB",
-) -> str:
-    """The per-iteration GROUPED Lloyd CTE chain for the hierarchical
-    quantizer oracles: requires CTEs ``dims`` (vec_id, j, x),
-    ``asg_in`` (vec_id, bid — the node assignment of the level above)
-    and ``{sc}0`` (bid, scid, cv — per-node init sub-centroids)
-    upstream. For t in 0..iters-1 emits {dd}{t} (scaled-integer LONG
-    distance sums of each vector against ITS OWN NODE's sub-centroids
-    — the join on bid is the hierarchy), {asg}{t} (ties-to-lower-scid
-    argmin), {st}{t} (per-(bid, scid, dim) 12dp DECIMAL coordinate
-    sums + counts) and {sc}{t+1} (9dp half-away means, empty
-    sub-clusters carrying the previous centroid) — exactly
-    operators/similarity.kmeans_lloyd_grouped's arithmetic. The name
-    parameters (r11) let one oracle instantiate the chain once per
-    hierarchy level (``ext_semdedup_hier3`` runs it twice)."""
-    out = ""
-    for t in range(iters):
-        out += f""",
-{dd}{t} AS (
-  SELECT d.vec_id, c.bid, c.scid,
-         CAST(SUM(CAST(round((d.x - c.cv[d.j]) * (d.x - c.cv[d.j]) * 1000000000000.0)
-                       AS BIGINT)) AS BIGINT) AS d2
-  FROM dims d JOIN {asg_in} ab ON ab.vec_id = d.vec_id
-  JOIN {sc}{t} c ON c.bid = ab.bid
-  GROUP BY d.vec_id, c.bid, c.scid
-),
-{asg}{t} AS (
-  SELECT vec_id, bid, scid FROM (
-    SELECT vec_id, bid, scid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, scid ASC) AS rn
-    FROM {dd}{t}
-  ) WHERE rn = 1
-),
-{st}{t} AS (
-  SELECT a.bid, a.scid, d.j,
-         CAST(CAST(SUM(CAST(round(d.x * 1000000000000.0) AS BIGINT)) AS BIGINT)
-              AS DOUBLE) AS s,
-         COUNT(*) AS n
-  FROM dims d JOIN {asg}{t} a USING (vec_id)
-  GROUP BY a.bid, a.scid, d.j
-),
-{sc}{t + 1} AS (
-  SELECT c.bid, c.scid,
-         list(COALESCE(round(st.s / 1000000000000.0 / st.n, 9), c.cv[g.j])
-              ORDER BY g.j) AS cv
-  FROM {sc}{t} c
-  CROSS JOIN generate_series(1, {dim}) g(j)
-  LEFT JOIN {st}{t} st ON st.bid = c.bid AND st.scid = c.scid AND st.j = g.j
-  GROUP BY c.bid, c.scid
-)"""
-    return out
-
-
 def _semdedup_hier_oracle(
     target: int = 10, iters: int = 2, dim: int = 64, threshold: float = 0.3
 ) -> str:
@@ -7387,7 +7348,8 @@ def _semdedup_hier_oracle(
     (operators/similarity._semdedup_multilevel, levels=2) end-to-end: nlist =
     ceil(N/target) and n1 = ceil(sqrt(nlist)) as scalar subqueries,
     coarse init = first n1 vectors by id, the shared coarse Lloyd
-    chain (``_kmeans_iter_ctes``), one branch-assignment E-step
+    chain (``_grouped_lloyd_ctes`` with one group), one
+    branch-assignment E-step
     against the trained coarse centroids (ties to the lower bid),
     per-branch sub-quantizer sizing (ceil(branch/target) by integer
     arithmetic) with first-k-by-id init, the grouped Lloyd chain
@@ -7408,18 +7370,21 @@ nl AS (
   SELECT CAST(ceil(COUNT(*) / {target}.0) AS BIGINT) AS nlist FROM v
 ),
 c0 AS (
-  SELECT CAST(rn - 1 AS INT) AS cid, ev AS cv FROM (
+  SELECT 0 AS bid, CAST(rn - 1 AS INT) AS scid, ev AS cv FROM (
     SELECT vec_id, ev, row_number() OVER (ORDER BY vec_id) AS rn FROM v
   ) WHERE rn <= (SELECT CAST(ceil(sqrt(CAST(nlist AS DOUBLE))) AS BIGINT) FROM nl)
-)"""
-    base += _kmeans_iter_ctes(iters, dim)
+),
+grp0 AS (SELECT vec_id, 0 AS bid FROM v)"""
+    base += _grouped_lloyd_ctes(
+        iters, dim, dd="dd", asg="asg", st="st", sc="c", asg_in="grp0"
+    )
     base += f""",
 ddB AS (
-  SELECT d.vec_id, c.cid,
+  SELECT d.vec_id, c.scid AS cid,
          CAST(SUM(CAST(round((d.x - c.cv[d.j]) * (d.x - c.cv[d.j]) * 1000000000000.0)
                        AS BIGINT)) AS BIGINT) AS d2
   FROM dims d CROSS JOIN c{iters} c
-  GROUP BY d.vec_id, c.cid
+  GROUP BY d.vec_id, c.scid
 ),
 asgB AS (
   SELECT vec_id, cid AS bid FROM (
@@ -7594,19 +7559,22 @@ nl AS (
   SELECT CAST(ceil(COUNT(*) / {target}.0) AS BIGINT) AS nlist FROM v
 ),
 c0 AS (
-  SELECT CAST(rn - 1 AS INT) AS cid, ev AS cv FROM (
+  SELECT 0 AS bid, CAST(rn - 1 AS INT) AS scid, ev AS cv FROM (
     SELECT vec_id, ev, row_number() OVER (ORDER BY vec_id) AS rn FROM v
   ) WHERE rn <= (SELECT min(t.b) FROM range(1, 100001) t(b)
                  WHERE t.b * t.b * t.b >= (SELECT nlist FROM nl))
-)"""
-    base += _kmeans_iter_ctes(iters, dim)
+),
+grp0 AS (SELECT vec_id, 0 AS bid FROM v)"""
+    base += _grouped_lloyd_ctes(
+        iters, dim, dd="dd", asg="asg", st="st", sc="c", asg_in="grp0"
+    )
     base += f""",
 ddB AS (
-  SELECT d.vec_id, c.cid,
+  SELECT d.vec_id, c.scid AS cid,
          CAST(SUM(CAST(round((d.x - c.cv[d.j]) * (d.x - c.cv[d.j]) * 1000000000000.0)
                        AS BIGINT)) AS BIGINT) AS d2
   FROM dims d CROSS JOIN c{iters} c
-  GROUP BY d.vec_id, c.cid
+  GROUP BY d.vec_id, c.scid
 ),
 asgB AS (
   SELECT vec_id, cid AS bid FROM (

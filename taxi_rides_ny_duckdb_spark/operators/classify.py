@@ -389,32 +389,25 @@ def _round12_half_up_np(v):
     return out
 
 
-# Below this many cached feature rows, GD iterations 2..iters run
-# INSIDE one applyInPandas task (``_lr_descent_fused``) instead of the
-# per-iteration driver-sync'd window+collect loop: each distributed
-# iteration costs one scheduled job (~0.2-0.4 s fixed overhead at the
-# correctness SFs) plus a full cache scan for milliseconds of actual
-# arithmetic. The gate is WORK-sized — rows bound the single task's
-# Arrow payload (rows × 4 scalars; 2M rows ≈ 64 MB) — and the row
-# count comes FREE from iteration 1's gradient collect (the sum of
-# per-idx counts), so the gate costs zero extra jobs; above it the
-# distributed loop is unchanged. BOX ASSUMPTION: same single-core
-# numpy throughput note as similarity._FUSED_LLOYD_MAX_ROWS.
+# Below this many cached feature rows every GD iteration runs inside ONE
+# applyInPandas task (``_lr_descent_fused``); above it each iteration is
+# one ``mapInPandas`` pass over the doc-id-partitioned cache emitting
+# gradient partials the driver sums. Both sides run the same kernel
+# (``_lr_grad_np``) and update (``_lr_step``). The gate is WORK-sized:
+# rows bound the single task's Arrow payload (rows × 4 scalars; 2M rows
+# ≈ 64 MB), and the same bound caps every int64 gradient sum (2M
+# addends × ≤10¹² < 2⁶³). BOX ASSUMPTION: same single-core numpy
+# throughput note as similarity._FUSED_LLOYD_MAX_ROWS.
 _FUSED_LR_MAX_ROWS = 2_000_000
 
 
-def _lr_descent_fused(
-    feats: DataFrame,
-    id_col: str,
-    w: list[float],
-    n: int,
-    lr: float,
-    dim: int,
-    rounds: int,
-) -> list[float]:
-    """Run GD iterations 2..iters inside ONE task over the cached
-    feature frame — bit-equal to the distributed window+collect loop
-    (pinned by test_lr_train_fused_gate_matches_distributed):
+def _lr_grad_np(idx, x, y, codes, w: list[float]) -> list:
+    """One GD iteration over WHOLE docs (every row of a doc present;
+    ``codes`` = the doc id factorized 0..n_docs-1), returning the
+    per-idx gradient as exact scaled-int64 partials — one length-
+    ``len(w)`` array per ≤ ``_FUSED_LR_MAX_ROWS``-row chunk, so no
+    int64 sum spans more addends than the gate allows. Bit-equal to
+    the oracle's SQL iteration:
 
     - per-row product ``round(x·w[idx], 12)`` via the repr-HALF_UP
       twin ``_round12_half_up_np`` of ``F.round``;
@@ -424,66 +417,104 @@ def _lr_descent_fused(
       and the sum divided k/10¹² (correctly-rounded IEEE division of
       a < 2⁵³ integer ≡ the engine's exact-decimal→double cast);
     - σ̃ and err: the identical IEEE double ops, then the round12 twin;
-    - per-idx gradient: the same int64-scaled decimal sum, converted
-      through Python ``int / 10**12`` (correctly rounded even past
-      2⁵³ — CPython int/int true division);
-    - the update w − lr·(g/n): the identical pinned double ops the
-      driver loop applies, in plain Python floats.
+      at w = 0 this is z = 0, σ̃ = 0.5 exactly, the oracle's it-1;
+    - per-idx gradient addends: round12(err·x) as scaled int64.
 
-    Emits (idx, wt) rows for idx 0..dim; the caller collects dim+1
-    doubles — one job replaces ``rounds`` window-scan collect jobs.
+    The partials' Python-int total is the DECIMAL gradient sum exactly;
+    ``_lr_step`` turns it into the update."""
+    import numpy as np
 
-    ``n=None`` (r13 continuation): derive n IN-TASK as the bias-row
-    count (idx == dim) — the distributed iteration 1's exact
-    definition — for callers that fuse ALL iterations and so never ran
-    the gradient collect that used to supply it."""
+    warr = np.asarray(w, dtype=np.float64)
+    prod = _round12_half_up_np(x * warr[idx])
+    zk = np.zeros(len(codes), dtype=np.int64)
+    np.add.at(zk, codes, np.rint(prod * 1e12).astype(np.int64))
+    z = zk[codes] / 1e12
+    p = _round12_half_up_np(0.5 + (0.5 * z) / (1.0 + np.abs(z)))
+    gi = np.rint(_round12_half_up_np((p - y) * x) * 1e12).astype(np.int64)
+    out = []
+    for s in range(0, len(gi), _FUSED_LR_MAX_ROWS):
+        e = s + _FUSED_LR_MAX_ROWS
+        gk = np.zeros(len(w), dtype=np.int64)
+        np.add.at(gk, idx[s:e], gi[s:e])
+        out.append(gk)
+    return out
+
+
+def _lr_step(w: list[float], partials, n: int, lr: float) -> list[float]:
+    """Sum ``_lr_grad_np`` partials as exact Python ints and apply
+    w − lr·(g/n) with g = Σ/10¹² (CPython int/int true division is
+    correctly rounded even past 2⁵³ ≡ the DECIMAL→double cast) — the
+    identical pinned double ops the oracle SQL spells."""
+    g = [0] * len(w)
+    for gk in partials:
+        for i, m in enumerate(gk):
+            g[i] += int(m)
+    return [wi - lr * ((gi / 10**12) / n) for wi, gi in zip(w, g)]
+
+
+def _lr_arrays(pdf, id_col: str):
+    """(idx, x, y, doc codes) numpy views of a feature frame."""
     import numpy as np
     import pandas as pd
 
-    w0 = [float(x) for x in w]
-    lrf, d1 = float(lr), dim + 1
-    nf0 = float(n) if n is not None else None
+    return (
+        pdf["idx"].to_numpy(np.int64),
+        pdf["x"].to_numpy(np.float64),
+        pdf["y"].to_numpy(np.float64),
+        pd.factorize(pdf[id_col])[0],
+    )
+
+
+def _lr_descent_fused(
+    feats: DataFrame, id_col: str, n: int, lr: float, dim: int, rounds: int
+) -> list[float]:
+    """Below-gate body of ``lr_train_surrogate``: all ``rounds`` GD
+    iterations from w = 0 inside ONE task over the cached feature
+    frame; one job returns the dim+1 weights."""
+    import pandas as pd
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        idx = pdf["idx"].to_numpy(np.int64)
-        x = pdf["x"].to_numpy(np.float64)
-        y = pdf["y"].to_numpy(np.float64)
-        codes = pd.factorize(pdf[id_col])[0]
-        n_docs = int(codes.max()) + 1 if len(codes) else 0
-        # n = the bias-row group count, the distributed it-1's exact
-        # definition (every doc carries one idx==dim row)
-        nf = nf0 if nf0 is not None else float(int((idx == dim).sum()))
-        wl = list(w0)
+        arrays = _lr_arrays(pdf, id_col)
+        w = [0.0] * (dim + 1)
         for _ in range(rounds):
-            warr = np.asarray(wl, dtype=np.float64)
-            prod = _round12_half_up_np(x * warr[idx])
-            zk = np.zeros(n_docs, dtype=np.int64)
-            np.add.at(zk, codes, np.rint(prod * 1e12).astype(np.int64))
-            z = zk[codes] / 1e12
-            p = _round12_half_up_np(0.5 + (0.5 * z) / (1.0 + np.abs(z)))
-            err = p - y
-            gk = np.zeros(d1, dtype=np.int64)
-            np.add.at(
-                gk,
-                idx,
-                np.rint(_round12_half_up_np(err * x) * 1e12).astype(np.int64),
-            )
-            g = [int(m) / 10**12 for m in gk]
-            wl = [wl[i] - lrf * (g[i] / nf) for i in range(d1)]
-        return pd.DataFrame(
-            {"idx": np.arange(d1, dtype=np.int64), "wt": wl}
-        )
+            w = _lr_step(w, _lr_grad_np(*arrays, w), n, lr)
+        return pd.DataFrame({"w": [w]})
 
-    rows = (
+    return list(
         feats.withColumn("__g", F.lit(0))
         .groupBy("__g")
-        .applyInPandas(fn, "idx long, wt double")
-        .collect()
+        .applyInPandas(fn, "w array<double>")
+        .collect()[0]["w"]
     )
-    out = [0.0] * d1
-    for r in rows:
-        out[r["idx"]] = r["wt"]
-    return out
+
+
+def _lr_descent_distributed(
+    feats: DataFrame, id_col: str, n: int, lr: float, dim: int, rounds: int
+) -> list[float]:
+    """Above-gate body of ``lr_train_surrogate``: each GD iteration is
+    ONE ``mapInPandas`` pass over the cache. The cache is
+    hash-partitioned on the doc id, so a doc never straddles a
+    partition — but its rows can straddle Arrow batches, so each
+    partition's batches are concatenated before the kernel runs. The
+    dim+1 weights ride in the closure; partials come back as
+    ``gk array<long>`` rows and ``_lr_step`` merges them."""
+    import pandas as pd
+
+    def partials(w: list[float]):
+        def fn(batches):
+            pdfs = [b for b in batches if len(b)]
+            if pdfs:
+                pdf = pd.concat(pdfs, ignore_index=True)
+                for gk in _lr_grad_np(*_lr_arrays(pdf, id_col), w):
+                    yield pd.DataFrame({"gk": [gk]})
+
+        return fn
+
+    w = [0.0] * (dim + 1)
+    for _ in range(rounds):
+        rows = feats.mapInPandas(partials(w), "gk array<long>").collect()
+        w = _lr_step(w, [r["gk"] for r in rows], n, lr)
+    return w
 
 
 def lr_hashed_features(
@@ -572,34 +603,35 @@ def lr_train_surrogate(
     x_{d,idx} / n. w₀ = 0, b₀ = 0 (so iteration 1's predictions are
     exactly 0.5 — a pinned, engine-identical starting point).
 
-    Engine-exact discipline (the BPE-trainer precedent, applied to
-    GD): every per-row product is 12dp-rounded THEN summed as exact
-    DECIMAL(38,12) (order-independent across any partitioning); the
-    driver applies updates with the same pinned double ops the oracle
-    SQL spells (w − lr·(g/n)). The returned model replays bit-for-bit
-    in DuckDB's unrolled-CTE rendering of the same iterations.
+    Engine-exact discipline: every per-row product is 12dp-rounded
+    THEN summed exactly (order-independent across any partitioning),
+    and updates use the same pinned double ops the oracle SQL spells
+    (w − lr·(g/n)). The returned model replays bit-for-bit in
+    DuckDB's unrolled-CTE rendering of the same iterations.
 
     The intercept trains as feature ``idx = dim`` with constant
-    x = 1 (the classic bias-as-feature fold): one gradient aggregation
-    covers weights AND bias, halving the actions per iteration, and
-    the oracle needs no special-case bias CTEs. Documents with zero
+    x = 1 (the classic bias-as-feature fold): one gradient pass
+    covers weights AND bias, and the oracle needs no special-case
+    bias CTEs. Documents with zero
     tokens still carry the bias row, so they train/score on the
     intercept instead of silently dropping out.
 
+    Every iteration runs the one kernel ``_lr_grad_np`` (exactness
+    argument there) and the one update ``_lr_step``: below
+    ``_FUSED_LR_MAX_ROWS`` all iterations share one task; above it
+    each iteration is one map-only pass over the cache plus a
+    dim+1-partial driver merge.
+
     100 TB shape: the feature frame carries the label column and is
-    cached HASH-PARTITIONED ON THE DOC ID, so each iteration's per-doc
-    z aggregation and the error-join back to the features are
-    exchange-free on the cache — per iteration exactly ONE exchange
-    (the dim+1-row gradient groupBy, map-side combined) + ONE action
-    + a dim+1-double driver sync. The model is dim+1 values: broadcast
-    by construction, like NB's V×C table but smaller."""
+    cached HASH-PARTITIONED ON THE DOC ID, so every doc's rows share a
+    partition and an iteration needs no exchange at all — ONE action
+    returning ≤ dim+1 longs per partition. The model is dim+1 values:
+    broadcast by construction, like NB's V×C table but smaller."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    # label CARRIED through the feature collapse (r13 optimization
-    # round, guide §2.3/§2.4 — it is doc-constant, so the groups are
-    # unchanged) instead of joined back on id: the label-join's
-    # two-sided exchange+sort is gone, and the cache is populated by
-    # iteration 1's own action rather than a separate count job.
+    # label CARRIED through the feature collapse (it is doc-constant,
+    # so the groups are unchanged) instead of joined back on id: no
+    # label-join exchange+sort.
     base = lr_hashed_features(
         docs, text_col, id_col, dim, carry_cols=(label_col,)
     ).unionByName(
@@ -620,71 +652,19 @@ def lr_train_surrogate(
         .repartition(F.col(id_col))
         .transform(scoped_persist)
     )
-    w = [0.0] * (dim + 1)  # w[dim] is the intercept
-    n = 0
-    win = Window.partitionBy(id_col)
-    # Gate BEFORE iteration 1 (r13 optimization round, continuation
-    # session): one bare count() materializes the cache AND supplies
-    # the gate signal — strictly cheaper than the iteration-1 gradient
-    # collect that used to double as it (no aggregation exchange).
-    # Below the gate ALL iterations run inside the one fused task:
-    # iteration 1's w=0 shortcut is the kernel's own arithmetic
-    # (round12(x·0) = 0 ⇒ z = 0 ⇒ σ̃ = 0.5 exactly — the identical
-    # pinned values), so the whole distributed iteration-1 pass
-    # (groupBy(idx) exchange + collect) disappears. Above the gate the
-    # count costs one cache-scan job and the loop is unchanged.
-    n_rows = feats.count()
+    # one aggregate over the cache materializes it AND yields the gate
+    # signal (rows) and n (every doc carries exactly one bias row)
+    n_rows, n = feats.agg(
+        F.count(F.lit(1)), F.count(F.when(F.col("idx") == dim, 1))
+    ).first()
     if n_rows == 0:
         raise ValueError("empty training set")
-    if n_rows <= _FUSED_LR_MAX_ROWS:
-        w = _lr_descent_fused(feats, id_col, w, None, lr, dim, iters)
-        feats.unpersist()
-        return w[:dim], w[dim]
-    for it in range(iters):
-        if it == 0:
-            # w₀ = 0 ⇒ every per-doc z is EXACTLY 0 (x ≥ 0 here, so
-            # round(x·0, 12) = 0.0 and the decimal sum is 0) and
-            # σ̃(0) = round(0.5, 12) = 0.5 exactly — the whole z
-            # window pass is a constant. err = 0.5 − y, bit-identical
-            # to evaluating the surrogate (r13 optimization round);
-            # the oracle's unrolled it-1 CTEs compute the same 0.5.
-            err = F.lit(0.5) - F.col("y")
-        else:
-            # per-doc z as a WINDOW over the id-partitioned cache
-            # (exchange-free — same partitioning; r13: replaces the
-            # groupBy(id) + join-back-on-id pair, one cache scan per
-            # iteration instead of two): the decimal sum is
-            # order-independent, so the window total is the identical
-            # double the old aggregate produced.
-            warr = F.array(*[F.lit(v) for v in w])
-            wt = F.element_at(warr, (F.col("idx") + 1).cast("int"))
-            prod = F.round(F.col("x") * wt, _LOGP_DP)
-            z = F.sum(prod.cast("decimal(38,12)")).over(win).cast("double")
-            err = _surrogate_p(z, _LOGP_DP) - F.col("y")
-        grads = (
-            feats.withColumn("err", err)
-            .groupBy("idx")
-            .agg(
-                F.sum(
-                    F.round(F.col("err") * F.col("x"), _LOGP_DP).cast(
-                        "decimal(38,12)"
-                    )
-                )
-                .cast("double")
-                .alias("g"),
-                F.count(F.lit(1)).alias("c"),
-            )
-            .collect()
-        )
-        if it == 0:
-            # every doc carries exactly one bias row (idx = dim), so
-            # its group count IS the corpus size — the separate
-            # docs.count() job is gone (r13)
-            n = next((r["c"] for r in grads if r["idx"] == dim), 0)
-            if n == 0:
-                raise ValueError("empty training set")
-        gmap = {r["idx"]: r["g"] for r in grads}
-        w = [w[i] - lr * (gmap.get(i, 0.0) / n) for i in range(dim + 1)]
+    descent = (
+        _lr_descent_fused
+        if n_rows <= _FUSED_LR_MAX_ROWS
+        else _lr_descent_distributed
+    )
+    w = descent(feats, id_col, n, lr, dim, iters)  # w[dim] is the intercept
     feats.unpersist()
     return w[:dim], w[dim]
 

@@ -11,8 +11,7 @@ weighted by word frequency, never over raw corpus tokens):
 - :func:`bpe_pair_counts` — one merge-step's pair statistics
   (the oracled arithmetic core);
 - :func:`bpe_learn_merges` — the iterative trainer: N rounds of
-  (recount pairs → argmax → apply merge), each round a
-  vocabulary-sized distributed job;
+  (recount pairs → argmax → apply merge) over the vocabulary;
 - :func:`bpe_segment` — apply a learned merge table to every
   document, rebuilding the corpus as subword sequences.
 
@@ -20,18 +19,19 @@ Scale shape at 100 TB: the corpus is read and shuffled ONCE (the
 initial word-frequency aggregation, map-side combined). Everything
 after runs on the distinct-word vocabulary — Heaps' law puts that at
 ~sqrt(corpus tokens), i.e. gigabytes where the corpus is terabytes.
-Each training round is one vocab-sized shuffle (pair aggregation,
-collapsing to ≤|symbols|² groups) plus a map-only merge application;
-the per-round driver transfer is exactly ONE row (the argmax pair).
-Merge application is a pure Catalyst left-fold (``F.aggregate`` with
-struct state) — no UDF anywhere in train or apply. Segmentation
-broadcasts the vocab→symbols map and never shuffles the corpus for
-it; the rebuild is the one corpus-sized groupBy(doc).
+Training runs one pair-count kernel (``_pair_counts``), one argmax
+(``_best_pair``) and one greedy merge (``_merge``, which segmentation
+reuses) — over the whole vocabulary in one task below
+``_FUSED_BPE_MAX_VOCAB``, per Arrow batch above it, where a round is
+one map-only pass plus one pair aggregation whose driver transfer is
+exactly ONE row (the argmax pair). Segmentation broadcasts the
+vocab→symbols map and never shuffles the corpus for it; the rebuild
+is the one corpus-sized groupBy(doc).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -54,16 +54,6 @@ def word_counts(docs: DataFrame, text_col: str) -> DataFrame:
         .groupBy("wd")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-
-
-def _initial_symbols(wd: Column) -> Column:
-    """Characters of the word plus the end-of-word marker — the round-0
-    symbol sequence (the marker is what lets merge statistics
-    distinguish suffixes from infixes)."""
-    chars = F.transform(
-        F.sequence(F.lit(1), F.length(wd)), lambda i: wd.substr(i, F.lit(1))
-    )
-    return F.array_append(chars, F.lit(EOW))
 
 
 def bpe_pair_counts(docs: DataFrame, text_col: str, k: int = 30) -> DataFrame:
@@ -105,134 +95,94 @@ def bpe_pair_counts(docs: DataFrame, text_col: str, k: int = 30) -> DataFrame:
     )
 
 
-def _apply_merge(syms: Column, a: str, b: str) -> Column:
+def _pair_counts(
+    counts: list[int], seqs: list[list[str]]
+) -> dict[tuple[str, str], int]:
+    """Adjacent-pair statistics of symbol sequences weighted by their
+    word counts — exact Python-int sums, so partials from any split of
+    the vocabulary add up to the same totals."""
+    pc: dict[tuple[str, str], int] = {}
+    for cnt, seq in zip(counts, seqs):
+        for p in zip(seq, seq[1:]):
+            pc[p] = pc.get(p, 0) + cnt
+    return pc
+
+
+def _best_pair(
+    pc: dict[tuple[str, str], int],
+) -> tuple[tuple[str, str], int] | None:
+    """The round's merge: max count, ties to ``(sym_a, sym_b)``
+    ascending — Python str order is code-point order, which is
+    Spark's (and DuckDB's) UTF-8 binary string order, so the
+    above-gate ``orderBy(desc n, a, b)`` picks the same pair.
+    ``None`` when no adjacent pair remains."""
+    return min(pc.items(), key=lambda kv: (-kv[1], kv[0]), default=None)
+
+
+def _merge(seq: list[str], a: str, b: str) -> list[str]:
     """Left-to-right non-overlapping merge of adjacent pair (a, b) →
-    ``a||b`` in a symbol array — a pure Catalyst left-fold
-    (``F.aggregate`` with struct state ``(acc, carry)``): each element
-    either completes a merge with the carried symbol, or flushes the
-    carry and becomes the new carry. ``'aaa'`` under merge (a, a)
-    yields ``['aa', 'a']`` — the same greedy scan every BPE
-    implementation does."""
-    merged = a + b
-    init = F.struct(
-        F.array().cast("array<string>").alias("acc"),
-        F.lit(None).cast("string").alias("carry"),
-    )
-
-    def step(s: Column, x: Column) -> Column:
-        hit = s["carry"].eqNullSafe(F.lit(a)) & (x == F.lit(b))
-        flushed = F.when(s["carry"].isNull(), s["acc"]).otherwise(
-            F.array_append(s["acc"], s["carry"])
-        )
-        return F.when(
-            hit,
-            F.struct(
-                F.array_append(s["acc"], F.lit(merged)).alias("acc"),
-                F.lit(None).cast("string").alias("carry"),
-            ),
-        ).otherwise(F.struct(flushed.alias("acc"), x.alias("carry")))
-
-    def fin(s: Column) -> Column:
-        return F.when(s["carry"].isNull(), s["acc"]).otherwise(
-            F.array_append(s["acc"], s["carry"])
-        )
-
-    return F.aggregate(syms, init, step, fin)
+    ``a+b``: ``'aaa'`` under merge (a, a) yields ``['aa', 'a']`` —
+    the same greedy scan every BPE implementation does."""
+    out, i = [], 0
+    while i < len(seq):
+        if i + 1 < len(seq) and seq[i] == a and seq[i + 1] == b:
+            out.append(a + b)
+            i += 2
+        else:
+            out.append(seq[i])
+            i += 1
+    return out
 
 
-def _adjacent_pair_counts(syms_df: DataFrame) -> DataFrame:
-    """Pair statistics over a ``(c, syms)`` symbol frame — one
-    vocab-sized shuffle collapsing to ≤|symbols|² groups."""
-    return (
-        syms_df.filter(F.size("syms") >= 2)
-        .select(
-            F.col("c"),
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(syms) - 1), i -> struct("
-                    " element_at(syms, i) AS a,"
-                    " element_at(syms, i + 1) AS b))"
-                )
-            ).alias("p"),
-        )
-        .groupBy("p.a", "p.b")
-        .agg(F.sum("c").alias("pc"))
-    )
+def _symbols(wd: str, merges) -> list[str]:
+    """A word's symbols after an ordered merge table: the round-0
+    sequence (code points — Spark's ``substr`` split — plus the
+    end-of-word marker, which lets merge statistics tell suffixes from
+    infixes) folded through ``_merge``."""
+    seq = list(wd) + [EOW]
+    for a, b in merges:
+        seq = _merge(seq, a, b)
+    return seq
 
 
 # Below this many distinct-word vocabulary rows the WHOLE training
-# loop (all n_merges rounds of recount → argmax → merge apply) runs
-# inside one applyInPandas task instead of one distributed pair
-# aggregation + 1-row collect per round: each distributed round costs
-# a scheduled job (~0.2-0.4 s fixed overhead at the correctness SFs)
-# for integer dict arithmetic that takes milliseconds in-task. The
-# vocabulary row count comes from one cheap count over the
-# already-checkpointed symbol frame (cached-block scan), so the gate
-# costs a fast job and removes n_merges-1 or more. EXACTNESS IS
-# TRIVIAL here — counts are exact integers, the argmax tie-break is
-# lexicographic (UTF-8 byte order == code-point order == Python str
-# order), the greedy merge scan is pure string ops — pinned by
-# test_bpe_learn_merges_fused_gate_matches_distributed. The gate is
-# WORK-sized: rows bound the task's Arrow payload (Heaps' law keeps
-# the vocab ~sqrt(corpus tokens), but a 100 TB corpus still exceeds
-# any single task — above the gate the distributed loop is unchanged).
+# loop runs inside one applyInPandas task (``_bpe_rounds_fused``);
+# above it each round is one distributed pass (see
+# ``bpe_learn_merges``). Both sides run ``_pair_counts``, ``_merge``
+# and the same argmax order over exact integers, so they agree by
+# construction. A distributed round costs a scheduled job (~0.2-0.4 s
+# fixed overhead at the correctness SFs) for integer dict arithmetic
+# that takes milliseconds in-task. The gate is WORK-sized: rows bound
+# the task's Arrow payload (Heaps' law keeps the vocab ~sqrt(corpus
+# tokens), but a 100 TB corpus still exceeds any single task).
 _FUSED_BPE_MAX_VOCAB = 500_000
 
 
 def _bpe_rounds_fused(
-    syms: DataFrame, n_merges: int
+    wc: DataFrame, n_merges: int
 ) -> list[tuple[int, str, str, int]]:
-    """All BPE training rounds inside ONE task over the (c, syms)
-    vocabulary frame — the in-task twin of the distributed loop:
-    - pair recount: exact integer dict sums over adjacent symbols;
-    - argmax: max pair_count, ties to (sym_a, sym_b) ascending —
-      Python str order == Spark's binary UTF-8 string order;
-    - merge apply: the same left-to-right non-overlapping greedy scan
-      as ``_apply_merge``'s Catalyst fold ('aaa' under (a,a) →
-      ['aa', 'a']);
-    - early stop when no adjacent pair remains."""
+    """All BPE training rounds inside ONE task over the (wd, c)
+    vocabulary frame: recount, argmax, apply the merge to every
+    sequence; stop early when no adjacent pair remains."""
     import pandas as pd
 
     def fn(pdf):
         cnts = pdf["c"].tolist()
-        seqs = [list(s) for s in pdf["syms"]]
+        seqs = [_symbols(wd, ()) for wd in pdf["wd"]]
         merges: list[tuple[int, str, str, int]] = []
         for r in range(n_merges):
-            pc: dict[tuple[str, str], int] = {}
-            for cnt, ss in zip(cnts, seqs):
-                for i in range(len(ss) - 1):
-                    p = (ss[i], ss[i + 1])
-                    pc[p] = pc.get(p, 0) + cnt
-            if not pc:
+            best = _best_pair(_pair_counts(cnts, seqs))
+            if best is None:
                 break
-            (a, b), n = min(
-                pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-            )
-            merges.append((r + 1, a, b, int(n)))
-            merged = a + b
-            for k, ss in enumerate(seqs):
-                if len(ss) < 2:
-                    continue
-                out, i = [], 0
-                while i < len(ss):
-                    if i + 1 < len(ss) and ss[i] == a and ss[i + 1] == b:
-                        out.append(merged)
-                        i += 2
-                    else:
-                        out.append(ss[i])
-                        i += 1
-                seqs[k] = out
+            (a, b), n = best
+            merges.append((r + 1, a, b, n))
+            seqs = [_merge(seq, a, b) for seq in seqs]
         return pd.DataFrame(
-            {
-                "rank": [m[0] for m in merges],
-                "sym_a": [m[1] for m in merges],
-                "sym_b": [m[2] for m in merges],
-                "pair_count": [m[3] for m in merges],
-            }
+            merges, columns=["rank", "sym_a", "sym_b", "pair_count"]
         )
 
     rows = (
-        syms.withColumn("__g", F.lit(0))
+        wc.withColumn("__g", F.lit(0))
         .groupBy("__g")
         .applyInPandas(
             fn, "rank long, sym_a string, sym_b string, pair_count long"
@@ -259,49 +209,55 @@ def bpe_learn_merges(
     round. Ties at equal count break by ``(sym_a, sym_b)`` ascending;
     training stops early when no adjacent pair remains.
 
-    Scale: corpus → word counts is the single corpus shuffle; each
-    round then costs one VOCAB-sized pair aggregation (+1-row
-    collect) and a map-only fold. ``localCheckpoint`` per round
-    truncates lineage exactly as the large-star/small-star CC loop
-    does (operators/dedup.py) — plan depth stays O(1) per round
-    instead of O(rounds).
+    Scale: corpus → word counts is the single corpus shuffle, and the
+    (wd, c) frame is checkpointed once. Above ``_FUSED_BPE_MAX_VOCAB``
+    each round is one ``mapInPandas`` pass that replays the merges
+    learned so far (``_symbols``) and emits ``_pair_counts`` partials
+    per Arrow batch, then one vocab-sized pair aggregation and a 1-row
+    argmax collect. The replay costs O(vocab × round), cheap for the
+    ≤10-merge tables callers train, and keeps every round's plan the
+    same depth with no further checkpoints.
     """
+    import pandas as pd
+
     if n_merges <= 0:
         raise ValueError("n_merges must be positive")
-    syms = (
-        word_counts(docs, text_col)
-        .select("c", _initial_symbols(F.col("wd")).alias("syms"))
-        .localCheckpoint()
-    )
-    # one cached-block count gates the fused path (r13 optimization
-    # round, guide §1.2/§2.4): below _FUSED_BPE_MAX_VOCAB all rounds
-    # run in one task — n_merges jobs collapse to one.
-    if syms.count() <= _FUSED_BPE_MAX_VOCAB:
-        return _bpe_rounds_fused(syms, n_merges)
+    wc = word_counts(docs, text_col).localCheckpoint()
+    # one cached-block count gates the single-task path
+    if wc.count() <= _FUSED_BPE_MAX_VOCAB:
+        return _bpe_rounds_fused(wc, n_merges)
+
+    def partials(learned):
+        def fn(batches):
+            for pdf in batches:
+                pc = _pair_counts(
+                    pdf["c"].tolist(),
+                    [_symbols(wd, learned) for wd in pdf["wd"]],
+                )
+                if pc:
+                    yield pd.DataFrame(
+                        [(a, b, n) for (a, b), n in pc.items()],
+                        columns=["a", "b", "n"],
+                    )
+
+        return fn
+
     merges: list[tuple[int, str, str, int]] = []
     for r in range(n_merges):
         best = (
-            _adjacent_pair_counts(syms)
-            .orderBy(F.desc("pc"), F.asc("a"), F.asc("b"))
+            wc.mapInPandas(
+                partials([(a, b) for _, a, b, _ in merges]),
+                "a string, b string, n long",
+            )
+            .groupBy("a", "b")
+            .agg(F.sum("n").alias("n"))
+            .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
             .limit(1)
             .collect()
         )
         if not best:
             break
-        a, b, pc = best[0]["a"], best[0]["b"], int(best[0]["pc"])
-        merges.append((r + 1, a, b, pc))
-        syms = syms.select(
-            "c", _apply_merge(F.col("syms"), a, b).alias("syms")
-        )
-        # checkpoint every OTHER round, never the last (r13
-        # optimization round — the VERDICT r12 fewer-passes rule):
-        # plan depth stays bounded at a few merge folds while the
-        # eager materialization jobs halve; an unchecked round's pair
-        # count re-runs one vocab-sized map fold instead, which is
-        # cheaper than a full checkpoint job. The final round's syms
-        # frame is never consumed, so checkpointing it was pure waste.
-        if r % 2 == 1 and r < n_merges - 1:
-            syms = syms.localCheckpoint()
+        merges.append((r + 1, best[0]["a"], best[0]["b"], int(best[0]["n"])))
     return merges
 
 
@@ -322,7 +278,6 @@ def bpe_segment(
     text_col: str,
     id_col: str,
     merges: list[tuple[str, str]],
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """Apply an ordered BPE merge table to every document, rebuilding
     the corpus as subword sequences: output ``(id, bpe_text,
@@ -330,26 +285,31 @@ def bpe_segment(
     document order (symbols are whitespace-free, so the join is
     injective) and token-less documents kept with ``('', 0)``.
 
-    Plan: the merge chain runs ONCE over the distinct-word vocabulary
-    (each merge a map-only fold; ``localCheckpoint`` every
-    ``checkpoint_every`` merges caps codegen/expression depth), the
+    Plan: the merge table runs ONCE over the distinct-word vocabulary
+    (one ``mapInPandas`` through the trainer's ``_symbols``), the
     word→symbols map then BROADCASTS back onto the corpus — the
     corpus itself is never shuffled for segmentation; the only
     corpus-sized exchange is the per-document rebuild groupBy.
     """
-    if checkpoint_every <= 0:
-        raise ValueError("checkpoint_every must be positive")
+    import pandas as pd
+
+    def fn(batches):
+        for pdf in batches:
+            syms = [_symbols(wd, merges) for wd in pdf["wd"]]
+            yield pd.DataFrame({"wd": pdf["wd"], "syms": syms})
+
     words = ensure_min_partitions(docs.select(id_col, text_col)).select(
         F.col(id_col), F.posexplode(tokenize(F.col(text_col))).alias("pos", "wd")
     )
-    vocab = words.select("wd").distinct()
-    mapping = vocab.select("wd", _initial_symbols(F.col("wd")).alias("syms"))
-    for i, (a, b) in enumerate(merges):
-        mapping = mapping.select(
-            "wd", _apply_merge(F.col("syms"), a, b).alias("syms")
-        )
-        if (i + 1) % checkpoint_every == 0:
-            mapping = mapping.localCheckpoint()
+    # lazy checkpoint: the first action materializes the map, every
+    # later action over this frame reuses it instead of re-running the
+    # distinct shuffle and the Python pass
+    mapping = (
+        words.select("wd")
+        .distinct()
+        .mapInPandas(fn, "wd string, syms array<string>")
+        .localCheckpoint(eager=False)
+    )
     rebuilt = (
         words.join(F.broadcast(mapping), "wd")
         .groupBy(id_col)

@@ -51,19 +51,28 @@ def test_pandas_hash_parity(name, spark, sf_dir, con):
         "ext_semdedup_hier3",
         "ext_hard_negative_topk",
         "ext_hard_negative_topk_ann",
+        "ext_lr_train",
+        "ext_lr_score",
+        "ext_bpe_learn_merges",
     ],
 )
 def test_oracle_parity_above_fused_gate(name, spark, sf_dir, con, monkeypatch):
-    """The distributed paths that run above the ``_FUSED_LLOYD_*``
-    gate, checked against the same DuckDB oracles: with the row gate
-    at 0 every trainer in these queries takes the Arrow Lloyd loop
-    (flat, first_k init, and the multilevel coarse pass), SemDeDup
-    collapses per cluster, and hard-negative mining runs its pair
-    self-join + connected_components fallback. Built through
-    ``BUILDERS`` so no memoized below-gate plan can answer instead."""
+    """The distributed paths that run above the ``_FUSED_*`` gates,
+    checked against the same DuckDB oracles: with the gates at 0
+    every trainer in these queries takes the Arrow Lloyd loop (flat,
+    first_k init, and the multilevel coarse pass), SemDeDup collapses
+    per cluster, hard-negative mining runs its pair self-join +
+    connected_components fallback, the LR descent runs one
+    mapInPandas pass per iteration and BPE one pass per round. Built
+    through ``BUILDERS`` so no memoized below-gate plan can answer
+    instead."""
+    from taxi_rides_ny_duckdb_spark.operators import classify as C
     from taxi_rides_ny_duckdb_spark.operators import similarity as S
+    from taxi_rides_ny_duckdb_spark.operators import tokenizer as T
 
     monkeypatch.setattr(S, "_FUSED_LLOYD_MAX_ROWS", 0)
+    monkeypatch.setattr(C, "_FUSED_LR_MAX_ROWS", 0)
+    monkeypatch.setattr(T, "_FUSED_BPE_MAX_VOCAB", 0)
     compare(contract.BUILDERS[name](spark, sf_dir), con, contract.ORACLES[name])
 
 

@@ -2808,9 +2808,7 @@ def test_bpe_segment_matches_reference_and_keeps_empty_docs(spark):
     merges = [(a, b) for _, a, b, _ in bpe_learn_merges(df, "text", 6)]
     got = {
         r["doc_id"]: (r["bpe_text"], r["n_bpe_tokens"])
-        for r in bpe_segment(
-            df, "text", "doc_id", merges, checkpoint_every=2
-        ).collect()
+        for r in bpe_segment(df, "text", "doc_id", merges).collect()
     }
     for doc_id, text in _BPE_DOCS:
         assert got[doc_id] == _ref_segment(text, merges), doc_id
@@ -2837,7 +2835,6 @@ def test_bpe_validates_inputs(spark):
     from taxi_rides_ny_duckdb_spark.operators.tokenizer import (
         bpe_learn_merges,
         bpe_pair_counts,
-        bpe_segment,
     )
 
     df = _bpe_frame(spark)
@@ -2845,8 +2842,6 @@ def test_bpe_validates_inputs(spark):
         bpe_pair_counts(df, "text", 0)
     with _pt.raises(ValueError):
         bpe_learn_merges(df, "text", 0)
-    with _pt.raises(ValueError):
-        bpe_segment(df, "text", "doc_id", [], checkpoint_every=0)
 
 
 # ---------------------------------------------------------------------------
@@ -5496,14 +5491,44 @@ def test_round12_vectorized_matches_scalar(spark):
     assert [float(x) for x in vec] == eng
 
 
+def _ref_lr(rows, dim, iters, lr):
+    """Independent pure-Python surrogate-LR descent over
+    ``(doc, idx, x, y)`` feature rows, bias rows (idx = dim, x = 1)
+    included: per-doc z and per-idx gradients are Python-int sums of
+    12dp-rounded addends at scale 10^12 (the exact DECIMAL(38,12)
+    sums), σ̃(z) = 0.5 + 0.5·z/(1+|z|), then w - lr·(g/n) with n the
+    doc count. Shares only the scalar ``_round12_half_up`` with the
+    package."""
+    from taxi_rides_ny_duckdb_spark.operators.classify import (
+        _round12_half_up as r12,
+    )
+
+    scale = 10**12
+    n = sum(1 for _, idx, _, _ in rows if idx == dim)
+    w = [0.0] * (dim + 1)
+    for _ in range(iters):
+        zk = {}
+        for doc, idx, x, _ in rows:
+            zk[doc] = zk.get(doc, 0) + round(r12(x * w[idx]) * scale)
+        gk = [0] * (dim + 1)
+        for doc, idx, x, y in rows:
+            z = zk[doc] / scale
+            p = r12(0.5 + (0.5 * z) / (1.0 + abs(z)))
+            gk[idx] += round(r12((p - y) * x) * scale)
+        w = [w[i] - lr * ((gk[i] / scale) / n) for i in range(dim + 1)]
+    return w
+
+
 def test_lr_train_fused_gate_matches_distributed(spark, monkeypatch):
-    """The size-gated fused GD descent (iterations 2..iters inside one
-    task) must return the IDENTICAL model - every weight and the bias
-    bit-for-bit - as the distributed window+collect loop it replaces,
-    including zero-token docs (bias-only rows) and an idx with no
-    rows. iters=4 exercises three fused rounds."""
+    """Both sides of the ``_FUSED_LR_MAX_ROWS`` gate - the one-task
+    descent and the per-iteration mapInPandas partials - must return
+    ``_ref_lr``'s model bit-for-bit, including zero-token docs
+    (bias-only rows) and an idx with no rows. Above the gate the cache
+    spans several partitions and Arrow batches of 3 rows, so a doc's
+    rows straddle batches. iters=4 moves the weights off w = 0."""
     from taxi_rides_ny_duckdb_spark.operators import classify as C
 
+    dim = 8
     rows = []
     words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
     for i in range(40):
@@ -5512,43 +5537,105 @@ def test_lr_train_fused_gate_matches_distributed(spark, monkeypatch):
             text = "   "  # zero-token doc: trains on the bias only
         rows.append((i, text, 1 if i % 3 == 0 else 0))
     docs = spark.createDataFrame(rows, "doc_id long, text string, y int")
+    y = {i: float(lab) for i, _, lab in rows}
+    feats = [
+        (r["doc_id"], r["idx"], r["x"], y[r["doc_id"]])
+        for r in C.lr_hashed_features(docs, "text", "doc_id", dim).collect()
+    ] + [(i, dim, 1.0, y[i]) for i in y]
+    assert len({idx for _, idx, _, _ in feats}) < dim + 1  # an empty idx
+    ref = _ref_lr(feats, dim, 4, 0.5)
 
-    w_fused, b_fused = C.lr_train_surrogate(
-        docs, "text", "doc_id", "y", dim=8, iters=4, lr=0.5
-    )
+    w, b = C.lr_train_surrogate(docs, "text", "doc_id", "y", dim, 4, 0.5)
+    assert [*w, b] == ref
+
+    n_partials = []
+    step = C._lr_step
+
+    def spy(w, partials, n, lr):
+        n_partials.append(len(partials))
+        return step(w, partials, n, lr)
+
     monkeypatch.setattr(C, "_FUSED_LR_MAX_ROWS", 0)
-    w_dist, b_dist = C.lr_train_surrogate(
-        docs, "text", "doc_id", "y", dim=8, iters=4, lr=0.5
-    )
-    assert w_fused == w_dist and b_fused == b_dist
+    monkeypatch.setattr(C, "_lr_step", spy)
+    conf = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "3",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    old = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        w, b = C.lr_train_surrogate(docs, "text", "doc_id", "y", dim, 4, 0.5)
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert [*w, b] == ref
+    assert len(n_partials) == 4 and min(n_partials) >= 2
 
 
 def test_bpe_learn_merges_fused_gate_matches_distributed(spark, monkeypatch):
-    """The size-gated fused BPE trainer (all rounds inside one task)
-    must return the IDENTICAL merge table as the distributed
-    round-per-job loop - same pairs, same order, same counts -
-    including a count tie broken lexicographically and the early-stop
-    case where every word collapses to one symbol."""
+    """Both sides of the ``_FUSED_BPE_MAX_VOCAB`` gate - all rounds in
+    one task, and one mapInPandas replay + pair aggregation per round -
+    must return ``_ref_bpe``'s merge table: same pairs, same order,
+    same counts. Cases: ASCII count ties broken lexicographically; a
+    three-way tie between non-ASCII symbols (é < ｚ < 𝔸 in code-point
+    order - the UTF-8 binary order - while UTF-16 order would put 𝔸
+    before ｚ); and the early stop where every word collapses to one
+    symbol."""
+    from collections import Counter
+
     from taxi_rides_ny_duckdb_spark.operators import tokenizer as T
 
-    docs = spark.createDataFrame(
-        [
-            (1, "low low low lower lowest"),
-            (2, "new newer newest low"),
-            (3, "ab ab ba ba"),   # (a,b) vs (b,a) count ties
-            (4, ""),
-        ],
-        "doc_id long, text string",
-    )
-    fused = T.bpe_learn_merges(docs, "text", n_merges=6)
-    monkeypatch.setattr(T, "_FUSED_BPE_MAX_VOCAB", 0)
-    dist = T.bpe_learn_merges(docs, "text", n_merges=6)
-    assert fused == dist
+    corpora = [
+        (
+            [
+                "low low low lower lowest",
+                "new newer newest low",
+                "ab ab ba ba",  # (a,b) vs (b,a) count ties
+                "",
+            ],
+            6,
+        ),
+        (["ｚéｚéｚé 𝔸é𝔸é𝔸é é€é€é€"], 6),
+        (["x y x"], 8),  # one-char words exhaust after one merge each
+    ]
+    for texts, n_merges in corpora:
+        docs = spark.createDataFrame(
+            list(enumerate(texts)), "doc_id long, text string"
+        )
+        wc = Counter(w for t in texts for w in t.lower().split())
+        ref = _ref_bpe(dict(wc), n_merges)
+        assert len(ref) <= n_merges
+        for gate in (500_000, 0):
+            monkeypatch.setattr(T, "_FUSED_BPE_MAX_VOCAB", gate)
+            got = T.bpe_learn_merges(docs, "text", n_merges=n_merges)
+            assert [(a, b, n) for _, a, b, n in got] == ref, (texts, gate)
+            assert [r for r, *_ in got] == list(range(1, len(ref) + 1))
+    assert ref == [("x", "</w>", 2), ("y", "</w>", 1)]  # stopped early
 
-    # early stop: two one-char words exhaust after one merge each
-    tiny = spark.createDataFrame([(1, "x y x")], "doc_id long, text string")
-    monkeypatch.setattr(T, "_FUSED_BPE_MAX_VOCAB", 500_000)
-    fused_t = T.bpe_learn_merges(tiny, "text", n_merges=8)
-    monkeypatch.setattr(T, "_FUSED_BPE_MAX_VOCAB", 0)
-    dist_t = T.bpe_learn_merges(tiny, "text", n_merges=8)
-    assert fused_t == dist_t and len(fused_t) < 8
+
+def test_bpe_lr_degenerate_inputs_on_both_gate_sides(spark, monkeypatch):
+    """Defined results on both sides of each gate: an empty corpus
+    learns no merges and segments to no rows; empty-text docs segment
+    to ('', 0) each; an empty LR training set fails fast."""
+    from taxi_rides_ny_duckdb_spark.operators import classify as C
+    from taxi_rides_ny_duckdb_spark.operators import tokenizer as T
+
+    empty = spark.createDataFrame([], "doc_id long, text string, y int")
+    blank = spark.createDataFrame(
+        [(1, "", 0), (2, "   ", 1)], "doc_id long, text string, y int"
+    )
+    for bpe_gate, lr_gate in ((500_000, 2_000_000), (0, 0)):
+        monkeypatch.setattr(T, "_FUSED_BPE_MAX_VOCAB", bpe_gate)
+        monkeypatch.setattr(C, "_FUSED_LR_MAX_ROWS", lr_gate)
+        assert T.bpe_learn_merges(empty, "text") == []
+        assert T.bpe_learn_merges(blank, "text") == []
+        seg = T.bpe_segment(empty, "text", "doc_id", [("a", "b")])
+        assert seg.collect() == []
+        seg = T.bpe_segment(blank, "text", "doc_id", [("a", "b")])
+        assert sorted(tuple(r) for r in seg.collect()) == [
+            (1, "", 0),
+            (2, "", 0),
+        ]
+        with pytest.raises(ValueError, match="empty training set"):
+            C.lr_train_surrogate(empty, "text", "doc_id", "y", dim=4)

@@ -731,13 +731,15 @@ _BPE_WORD = st.text(alphabet="ab", min_size=1, max_size=5)
     n_merges=st.integers(min_value=1, max_value=4),
 )
 def test_bpe_learn_and_segment_match_reference(spark, docs, n_merges):
-    """Distributed BPE (Catalyst left-fold merge apply, vocab-factored
-    segmentation) must equal the single-machine Sennrich reference on
-    arbitrary corpora — a 2-letter alphabet maximizes overlapping-run
-    cases ('aaa' under merge (a,a)) where greedy scan order is the
-    easiest thing to get wrong."""
+    """BPE training on both sides of the ``_FUSED_BPE_MAX_VOCAB`` gate
+    and vocab-factored segmentation must equal the single-machine
+    Sennrich reference on arbitrary corpora — a 2-letter alphabet
+    maximizes overlapping-run cases ('aaa' under merge (a,a)) where
+    greedy scan order is the easiest thing to get wrong."""
     from collections import Counter
+    from unittest import mock
 
+    from taxi_rides_ny_duckdb_spark.operators import tokenizer
     from taxi_rides_ny_duckdb_spark.operators.tokenizer import (
         bpe_learn_merges,
         bpe_segment,
@@ -750,6 +752,9 @@ def test_bpe_learn_and_segment_match_reference(spark, docs, n_merges):
     wc = Counter(w for t in docs for w in t.lower().split())
     ref = _ref_bpe(dict(wc), n_merges)
     got = bpe_learn_merges(frame, "text", n_merges)
+    assert [(a, b, pc) for _, a, b, pc in got] == ref
+    with mock.patch.object(tokenizer, "_FUSED_BPE_MAX_VOCAB", 0):
+        got = bpe_learn_merges(frame, "text", n_merges)
     assert [(a, b, pc) for _, a, b, pc in got] == ref
 
     pairs = [(a, b) for a, b, _ in ref]

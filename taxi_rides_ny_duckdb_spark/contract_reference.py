@@ -229,9 +229,10 @@ def w1_dedup_row_number(spark, sf_dir):
     """row_number() dedup keeping one row per key (W1+F2; reference
     stg_green_tripdata.sql:5-9,41). The reference's window has no ORDER
     BY (arbitrary survivor); for cross-engine hashing we pin a total
-    order over the projected columns so the survivor is deterministic —
-    the production staging path uses dropDuplicates instead (see
-    plans/staging.py scale rationale).
+    order over the projected columns so the survivor is deterministic.
+    The production staging path keeps the reference's arbitrary-survivor
+    window as is (plans/staging.py), planned as a partial/final
+    WindowGroupLimit around its exchange.
 
     Spark-first lowering: ``row_number() ... WHERE rn = 1`` under a
     total order ≡ the lexicographically-min struct per key, so the
@@ -345,7 +346,8 @@ def j2_dim_joined_twice(spark, sf_dir):
 def j3_left_anti(spark, sf_dir):
     """Left-anti join — the relationships data-quality test shape (J3;
     reference models/staging/schema.yml:55-65): orders with no
-    lineitems. Same plan as plans/dq.relationships_violations."""
+    lineitems. plans/dq evaluates the same test as a broadcast left
+    join with a miss flag, so it shares its model's single pass."""
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
     return o.join(

@@ -4,77 +4,65 @@ Reference analog: the four generic dbt tests wired in YAML
 (``models/staging/schema.yml:33-65,86-93,124-157,178-185`` and
 ``models/core/schema.yml:19-24``) compile to "count the violating rows"
 queries; nonzero counts fail (severity ``error``) or log (``warn``)
-(SURVEY §3.2, §5.1). Here each test is a function DataFrame → violating
-rows; the runner counts and applies severity.
+(SURVEY §3.2, §5.1). Here a test is a declarative record (kind, column,
+accepted values or parent key set) and the runner evaluates every test
+of one model together.
 
-All four tests are single-pass distributed plans: anti-join for
-relationships, hash-aggregate for unique, filters for the rest — no
-collect loops, no windows. At 100 TB each test is one scan (plus one
-broadcast of the parent's key column for relationships).
+One evaluation per model: the model's frame gains one boolean flag per
+row-level test — ``not_null``, ``accepted_values``, and
+``relationships`` as a left join against the broadcast distinct parent
+key set with a miss flag — then one ``groupBy`` over the ``unique``
+column carries the row count and the flag sums, and one global row
+holds every count. The models' one-row aggregates are unioned and
+collected by a single action, so their independent stages run side by
+side and a parent key set shared across models is broadcast once
+(exchange reuse). A lazy view (the staging models) is evaluated once
+per model rather than once per test, so all of a model's tests
+describe one snapshot even where the view's dedup keeps an arbitrary
+survivor. At 100 TB each model is scanned once; besides the view's own
+dedup exchange, its pass adds one exchange on the unique key and one
+broadcast per parent key set.
 """
 
 from __future__ import annotations
 
 import logging
-from dataclasses import dataclass
-from typing import Callable, Sequence
+import os
+from dataclasses import dataclass, field, replace
+from functools import reduce
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import cache_scope, scoped_persist
+
 log = logging.getLogger(__name__)
-
-
-def not_null_violations(df: DataFrame, column: str) -> DataFrame:
-    """dbt ``not_null`` (e.g. reference ``models/staging/schema.yml:38-39``)."""
-    return df.filter(F.col(column).isNull())
-
-
-def unique_violations(df: DataFrame, column: str) -> DataFrame:
-    """dbt ``unique`` (reference ``schema.yml:35-37``): keys seen >1×."""
-    return (
-        df.groupBy(column)
-        .agg(F.count(F.lit(1)).alias("n_records"))
-        .filter(F.col("n_records") > 1)
-    )
-
-
-def accepted_values_violations(
-    df: DataFrame, column: str, values: Sequence
-) -> DataFrame:
-    """dbt ``accepted_values`` (reference ``schema.yml:86-93``; value list
-    from var ``payment_type_values``, ``dbt_project.yml:42-43``).
-
-    dbt's generated SQL groups by the column and keeps groups outside the
-    list; NULL is not reported as a violation — match that by requiring
-    the column non-null."""
-    return df.filter(F.col(column).isNotNull() & ~F.col(column).isin(list(values)))
-
-
-def relationships_violations(
-    child: DataFrame, child_key: str, parent: DataFrame, parent_key: str
-) -> DataFrame:
-    """dbt ``relationships`` (reference ``schema.yml:55-65``): child keys
-    absent from the parent. Left-anti join; the parent side is a single
-    projected key column — broadcast it (at 100 TB the child is the big
-    side and never shuffles)."""
-    parent_keys = F.broadcast(parent.select(F.col(parent_key).alias("__pk")).distinct())
-    return (
-        child.filter(F.col(child_key).isNotNull())
-        .join(parent_keys, child[child_key] == parent_keys["__pk"], "left_anti")
-    )
 
 
 @dataclass
 class DQTest:
     """One wired test instance (model + test + severity), mirroring a
-    YAML entry. ``severity``: 'error' raises, 'warn' logs — dbt defaults
-    to error when unspecified (SURVEY §5.1)."""
+    YAML entry. ``kind`` is one of dbt's four generic tests (``unique``,
+    ``not_null``, ``accepted_values``, ``relationships``); ``values`` is
+    the ``accepted_values`` list; ``parent``/``parent_key`` are the
+    ``relationships`` target (``to: ref(...)``, ``field: ...``).
+    ``severity``: 'error' raises, 'warn' logs — dbt defaults to error
+    when unspecified (SURVEY §5.1)."""
 
     name: str
     model: str
-    build: Callable[[DataFrame], DataFrame]  # df -> violating rows
+    kind: str
+    column: str
     severity: str = "error"
+    values: tuple = ()
+    parent: DataFrame | None = field(default=None, repr=False, compare=False)
+    parent_key: str | None = None
+
+    def __post_init__(self) -> None:
+        kinds = ("unique", "not_null", "accepted_values", "relationships")
+        if self.kind not in kinds:
+            raise ValueError(f"dq test {self.name}: unknown kind {self.kind!r}, expected one of {kinds}")
 
 
 @dataclass
@@ -92,34 +80,137 @@ class DQError(AssertionError):
     pass
 
 
+def _flag(i: int) -> str:
+    return f"__dq{i}"
+
+
+def flag_rows(df: DataFrame, tests: Sequence[DQTest]) -> DataFrame:
+    """``df``'s rows with one boolean column ``__dq{i}`` per row-level
+    test ``tests[i]`` (every kind but ``unique``), true on a violating
+    row.
+
+    - ``not_null`` (``schema.yml:38-39``): the column is NULL.
+    - ``accepted_values`` (``schema.yml:86-93``): non-NULL and outside
+      the list — dbt's generated SQL does not report NULL.
+    - ``relationships`` (``schema.yml:55-65``): a non-NULL key with no
+      match in a left join against the parent's distinct key set. The
+      key set is broadcast (the child is the big side and never
+      shuffles), so it is small by contract and deduplicated in one
+      task, without an exchange. It is built once per ``(parent,
+      parent_key)``; tests that share it join it under one alias each.
+    """
+    key_sets: dict[tuple[int, str], DataFrame] = {}
+    flags = {}
+    for i, t in enumerate(tests):
+        c = F.col(t.column)
+        if t.kind == "not_null":
+            flag = c.isNull()
+        elif t.kind == "accepted_values":
+            flag = c.isNotNull() & ~c.isin(list(t.values))
+        elif t.kind == "relationships":
+            if t.parent is None:
+                raise ValueError(
+                    f"dq test {t.name}: relationships test has no parent "
+                    "(bind it with bind_relationship_tests)"
+                )
+            ident = (id(t.parent), t.parent_key)
+            if ident not in key_sets:
+                key_sets[ident] = F.broadcast(
+                    t.parent.select(F.col(t.parent_key).alias("__pk")).coalesce(1).distinct()
+                )
+            pk = F.col(f"__parent{i}.__pk")
+            df = df.join(key_sets[ident].alias(f"__parent{i}"), c == pk, "left")
+            flag = c.isNotNull() & pk.isNull()
+        else:
+            continue
+        flags[_flag(i)] = flag
+    return df.withColumns(flags)
+
+
+def _violation_counts(flagged: DataFrame, tests: Sequence[DQTest], model_index: int) -> DataFrame:
+    """One row, ``(model_index, counts)``: every test's violation count from
+    one aggregate over ``flag_rows(df, tests)``. A ``groupBy`` on the
+    ``unique`` column carries its row count and the flag sums, then one
+    global row sums them. A key group with more than one row is one
+    ``unique`` violation — the NULL group included, as dbt's ``GROUP BY
+    ... HAVING count(*) > 1`` counts it. An empty model counts 0."""
+    keys = {t.column for t in tests if t.kind == "unique"}
+    if len(keys) > 1:
+        raise ValueError(
+            f"dq tests on model {tests[0].model}: unique tests on several columns "
+            f"{sorted(keys)}; one evaluation per model groups by one unique column"
+        )
+    flags = [_flag(i) for i, t in enumerate(tests) if t.kind != "unique"]
+    if not keys:
+        sums = {f: F.count_if(F.col(f)) for f in flags}
+    else:
+        flagged = flagged.groupBy(*keys).agg(
+            F.count(F.lit(1)).alias("__n"), *[F.count_if(F.col(f)).alias(f) for f in flags]
+        )
+        sums = {f: F.coalesce(F.sum(f), F.lit(0)) for f in flags}
+        sums["__dup"] = F.count_if(F.col("__n") > 1)
+    return flagged.agg(
+        F.lit(model_index).alias("model"),
+        F.array(*[sums["__dup" if t.kind == "unique" else _flag(i)]
+                  for i, t in enumerate(tests)]).alias("counts"),
+    )
+
+
+def _failing_rows(flagged: DataFrame, columns: list[str], i: int, t: DQTest) -> DataFrame:
+    """The rows ``--store-failures`` keeps for ``tests[i]``: the
+    ``unique`` test's duplicated keys with their ``n_records`` (dbt's
+    audit table shape), every other test's violating model rows."""
+    if t.kind == "unique":
+        return (
+            flagged.groupBy(t.column)
+            .agg(F.count(F.lit(1)).alias("n_records"))
+            .filter(F.col("n_records") > 1)
+        )
+    return flagged.filter(F.col(_flag(i))).select(*columns)
+
+
 def run_tests(
     models: dict[str, DataFrame],
     tests: Sequence[DQTest],
     raise_on_error: bool = True,
     store_failures_dir: str | None = None,
 ) -> list[DQResult]:
-    """Execute tests, enforcing severities like ``dbt build`` (§3.2).
+    """Execute tests, enforcing severities like ``dbt build`` (§3.2):
+    one ``flag_rows`` + ``_violation_counts`` evaluation per model, all
+    models' counts collected together.
 
     ``store_failures_dir``: dbt's ``--store-failures`` — each test's
     violating ROWS (not just the count) are written to
     ``{dir}/{test.name}`` so failures can be inspected/joined later.
-    The violations plan runs once: write, then count the written
-    parquet (dbt likewise counts from the audit table)."""
-    import os
-
-    results: list[DQResult] = []
+    Each model's flagged frame is then persisted once (released when
+    the run ends), every test's rows are written from it and the counts
+    are read from it, so stored rows and reported counts describe one
+    snapshot."""
+    by_model: dict[str, list[int]] = {}
+    for pos, t in enumerate(tests):
+        by_model.setdefault(t.model, []).append(pos)
+    groups = list(by_model.values())
+    paths: list[str | None] = [None] * len(tests)
+    counts = [0] * len(tests)
+    with cache_scope():
+        per_model = []
+        for k, positions in enumerate(groups):
+            group = [tests[p] for p in positions]
+            df = models[group[0].model]
+            flagged = flag_rows(df, group)
+            if store_failures_dir is not None:
+                flagged = scoped_persist(flagged)
+                for i, (p, t) in enumerate(zip(positions, group)):
+                    paths[p] = os.path.join(store_failures_dir, t.name)
+                    _failing_rows(flagged, df.columns, i, t).write.mode("overwrite").parquet(paths[p])
+            per_model.append(_violation_counts(flagged, group, k))
+        for row in reduce(DataFrame.union, per_model).collect() if per_model else []:
+            for p, n in zip(groups[row["model"]], row["counts"]):
+                counts[p] = int(n)
+    results = [DQResult(t, counts[p], failures_path=paths[p]) for p, t in enumerate(tests)]
     errors: list[str] = []
-    for t in tests:
-        viol = t.build(models[t.model])
-        if store_failures_dir is not None:
-            path = os.path.join(store_failures_dir, t.name)
-            viol.write.mode("overwrite").parquet(path)
-            stored = viol.sparkSession.read.parquet(path)
-            n = stored.count()
-            results.append(DQResult(t, n, failures_path=path))
-        else:
-            n = viol.count()
-            results.append(DQResult(t, n))
+    for r in results:
+        t, n = r.test, r.violations
         if n > 0:
             msg = f"dq test {t.name} on {t.model}: {n} violating rows (severity={t.severity})"
             if t.severity == "error":
@@ -144,7 +235,8 @@ def reference_test_suite(payment_type_values: Sequence[int] = (1, 2, 3, 4, 5, 6)
       (``models/core/schema.yml:19-24``).
 
     Models dict keys expected: stg_green_tripdata, stg_yellow_tripdata,
-    taxi_zone_lookup, dm_monthly_zone_revenue.
+    dm_monthly_zone_revenue. The relationships tests' parent (the zone
+    seed) is bound by ``bind_relationship_tests``.
     """
     tests: list[DQTest] = []
     for stg, (pu_sev, do_sev) in {
@@ -152,28 +244,20 @@ def reference_test_suite(payment_type_values: Sequence[int] = (1, 2, 3, 4, 5, 6)
         "stg_yellow_tripdata": ("warn", "warn"),
     }.items():
         tests += [
-            DQTest(f"unique__{stg}__tripid", stg,
-                   lambda df: unique_violations(df, "tripid"), "warn"),
-            DQTest(f"not_null__{stg}__tripid", stg,
-                   lambda df: not_null_violations(df, "tripid"), "warn"),
-            DQTest(
-                f"accepted_values__{stg}__payment_type", stg,
-                lambda df, v=tuple(payment_type_values): accepted_values_violations(
-                    df, "payment_type", v),
-                "warn",
-            ),
+            DQTest(f"unique__{stg}__tripid", stg, "unique", "tripid", "warn"),
+            DQTest(f"not_null__{stg}__tripid", stg, "not_null", "tripid", "warn"),
+            DQTest(f"accepted_values__{stg}__payment_type", stg, "accepted_values",
+                   "payment_type", "warn", values=tuple(payment_type_values)),
         ]
-        tests.append(
-            DQTest(f"relationships__{stg}__pickup_locationid", stg, None, pu_sev)
-        )
-        tests.append(
-            DQTest(f"relationships__{stg}__dropoff_locationid", stg, None, do_sev)
-        )
+        for key, sev in (("pickup_locationid", pu_sev), ("dropoff_locationid", do_sev)):
+            tests.append(DQTest(f"relationships__{stg}__{key}", stg, "relationships", key, sev,
+                                parent_key="locationid"))
     tests.append(
         DQTest(
             "not_null__dm_monthly_zone_revenue__revenue_monthly_total_amount",
             "dm_monthly_zone_revenue",
-            lambda df: not_null_violations(df, "revenue_monthly_total_amount"),
+            "not_null",
+            "revenue_monthly_total_amount",
             "error",
         )
     )
@@ -181,23 +265,11 @@ def reference_test_suite(payment_type_values: Sequence[int] = (1, 2, 3, 4, 5, 6)
 
 
 def bind_relationship_tests(tests: list[DQTest], zone_lookup: DataFrame) -> list[DQTest]:
-    """Fill in the relationship tests' build functions, which need the
-    parent table (the zone seed) captured."""
-    bound = []
-    for t in tests:
-        if t.build is None and t.name.startswith("relationships__"):
-            key = "pickup_locationid" if "pickup" in t.name else "dropoff_locationid"
-            bound.append(
-                DQTest(
-                    t.name,
-                    t.model,
-                    lambda df, k=key: relationships_violations(df, k, zone_lookup, "locationid"),
-                    t.severity,
-                )
-            )
-        else:
-            bound.append(t)
-    return bound
+    """Bind the unbound relationship tests' parent to the zone seed."""
+    return [
+        replace(t, parent=zone_lookup) if t.kind == "relationships" and t.parent is None else t
+        for t in tests
+    ]
 
 
 def source_freshness(

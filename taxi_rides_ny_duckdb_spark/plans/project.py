@@ -79,7 +79,7 @@ def run_taxi_pipeline(runner: PipelineRunner, raise_on_error: bool = False):
     """``dbt build``: run models then the reference's test matrix.
     ``raise_on_error=False`` by default because the reference's own
     fixtures DO contain referential violations (severity semantics are
-    exercised in tests/test_dq.py)."""
+    exercised in tests/test_taxi_pipeline.py)."""
     tests = bind_relationship_tests(
         reference_test_suite(), runner.sources["taxi_zone_lookup"]
     )

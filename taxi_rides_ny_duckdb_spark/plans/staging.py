@@ -9,13 +9,17 @@ decode.
 
 Spark-first choices (documented deviations, same contract):
 
-- **Dedup** (reference ``stg_green_tripdata.sql:5-9,41``): the reference
-  uses ``row_number() OVER (PARTITION BY vendorid, pickup_datetime)``
-  with *no ORDER BY* + ``rn = 1`` — an arbitrary-survivor dedup. We use
-  ``dropDuplicates([...])``: identical contract (keep exactly one
-  arbitrary row per key), but it compiles to a hash aggregate with
-  map-side partial dedup instead of a full window sort — at 100 TB that
-  is one shuffle of pre-deduped partitions vs. a global sort per key.
+- **Dedup** (reference ``stg_green_tripdata.sql:5-9,41``): the
+  reference's own construct, ``row_number() OVER (PARTITION BY
+  vendorid, pickup_datetime)`` + ``rn = 1`` — an arbitrary-survivor
+  dedup (the window orders by a constant, as the reference has no
+  ORDER BY). Spark plans it as a partial ``WindowGroupLimit`` that
+  keeps one row per key within each input partition before the
+  exchange and a final one after it, so only per-partition survivors
+  shuffle. ``dropDuplicates`` would keep the same contract but
+  compiles to a SortAggregate on both sides of the exchange:
+  ``first()`` over the string ``store_and_fwd_flag`` has no fixed-width
+  buffer, which rules out the hash aggregate.
 - **Views**: staging stays lazy (temp view), matching dbt's ``view``
   materialization (``dbt_project.yml:38-39``) — Catalyst inlines the
   view into downstream plans, so filter/column pruning from fact_trips
@@ -24,7 +28,7 @@ Spark-first choices (documented deviations, same contract):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.macros import payment_type_description, surrogate_key, ts_key
@@ -74,9 +78,11 @@ def _stage(
     timestamp column names and the synthesized trip_type / ehail_fee
     (``stg_yellow_tripdata.sql:26-27,35``).
     """
+    first_per_key = Window.partitionBy("vendorid", pickup_col).orderBy(F.lit(1))
     deduped = (
         raw.filter(F.col("vendorid").isNotNull())  # stg_*.sql:8
-        .dropDuplicates(["vendorid", pickup_col])  # stg_*.sql:5-9,41 (see module doc)
+        .withColumn("__rn", F.row_number().over(first_per_key))  # stg_*.sql:5-9
+        .filter(F.col("__rn") == 1)  # stg_*.sql:41 (see module doc)
     )
     out = deduped.select(
         # identifiers (stg_green_tripdata.sql:11-16)

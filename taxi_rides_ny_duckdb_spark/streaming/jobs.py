@@ -12,7 +12,7 @@ State & scale notes:
   grow forever. Every stateful job here takes an explicit watermark.
 - ``dropDuplicatesWithinWatermark`` keeps keys only inside the
   watermark horizon — the streaming analog of staging's
-  dropDuplicates (plans/staging.py).
+  row_number dedup (plans/staging.py).
 - Output modes: windowed aggs use append (emit once the watermark
   passes window end) so downstream parquet sinks get immutable files.
 """

@@ -80,12 +80,18 @@ def test_fact_trips_is_shuffle_free(spark, tmp_path):
     plan = plan_of(fact)
     assert plan.count("BroadcastHashJoin") == 2
     assert "SortMergeJoin" not in plan
-    # staging dedup is a hash aggregate (dropDuplicates), not a window sort
-    assert "Window" not in plan
+    # staging dedup is the reference's row_number window, planned as a
+    # partial WindowGroupLimit (one survivor per key per input
+    # partition) directly below each service's dedup exchange — not a
+    # SortAggregate on both sides of it
+    assert "SortAggregate" not in plan
+    lines = plan.splitlines()
+    partial = [i for i, l in enumerate(lines)
+               if "WindowGroupLimit" in l and l.rstrip().endswith("Partial")]
+    assert len(partial) == 2, plan
+    assert all("Exchange hashpartitioning" in lines[i - 1] for i in partial), plan
     # the only exchanges allowed are broadcast exchanges (dims) and the
-    # dedup hash aggregation exchange; no sort-merge-join exchanges
-    import re
-
+    # dedup exchanges; no sort-merge-join exchanges
     non_broadcast_exchanges = [
         l for l in plan.splitlines()
         if "Exchange" in l and "BroadcastExchange" not in l and "Reused" not in l
@@ -112,17 +118,23 @@ def test_topn_avoids_global_sort(spark, sf_dir):
     assert "rangepartitioning" not in plan.lower()
 
 
-def test_anti_join_broadcasts_key_side(spark, sf_dir):
-    """The relationships test (J3) must broadcast the parent key set,
-    keeping the big child shuffle-free."""
-    from taxi_rides_ny_duckdb_spark.plans.dq import relationships_violations
+def test_relationships_flag_broadcasts_key_side(spark, sf_dir):
+    """The relationships test (J3 shape) must broadcast the parent key
+    set into a left join, keeping the big child shuffle-free; two tests
+    against one parent key set build one broadcast and reuse it."""
+    from taxi_rides_ny_duckdb_spark.plans.dq import DQTest, flag_rows
 
     li = load(spark, sf_dir, "lineitem")
     nat = load(spark, sf_dir, "nation")
-    df = relationships_violations(li, "l_suppkey", nat, "n_nationkey")
-    plan = plan_of(df)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    tests = [DQTest(f"rel_{c}", "lineitem", "relationships", c,
+                    parent=nat, parent_key="n_nationkey")
+             for c in ("l_suppkey", "l_partkey")]
+    df = flag_rows(li, tests).agg(F.count_if("__dq0"), F.count_if("__dq1"))
+    df.collect()  # finalizes the adaptive plan, where exchange reuse shows
+    plan = plan_of(df).split("== Initial Plan ==")[0]
+    assert plan.count("BroadcastHashJoin") == 2 and "LeftOuter" in plan
     assert "SortMergeJoin" not in plan
+    assert plan.count("ReusedExchange") == 1
 
 
 def test_whole_stage_codegen_on_hot_path(spark, sf_dir):

@@ -192,20 +192,177 @@ def test_unknown_zones_dropped(taxi):
     assert fact.filter("pickup_locationid > 265").count() == 0
 
 
-def test_dq_results(taxi):
-    results = {r.test.name: r for r in taxi["results"]}
-    # fixtures include out-of-seed locationids → relationships violations
-    rel = [r for n, r in results.items() if n.startswith("relationships__")]
-    assert rel and all(r.violations > 0 for r in rel)
-    # tripid is unique + non-null after dedup
-    assert results["unique__stg_green_tripdata__tripid"].violations == 0
-    assert results["not_null__stg_green_tripdata__tripid"].violations == 0
-    # payment_type 0 and 7 exist in fixtures → accepted_values violations
-    assert results["accepted_values__stg_green_tripdata__payment_type"].violations > 0
-    # revenue mart total_amount never null (error severity passes)
-    assert (
-        results["not_null__dm_monthly_zone_revenue__revenue_monthly_total_amount"].violations == 0
-    )
+def _dq_oracle_counts(con) -> dict[str, int]:
+    """The DuckDB side of every reference dq test, over the reference
+    staging/core SQL above: the queries perfbench checks the taxi
+    build's counts against (``perfbench/workloads.py``
+    ``_expected_taxi``)."""
+    queries = {
+        "not_null__dm_monthly_zone_revenue__revenue_monthly_total_amount": (
+            "SELECT count(*) FROM dm_monthly_zone_revenue "
+            "WHERE revenue_monthly_total_amount IS NULL"),
+    }
+    for stg in ("stg_green_tripdata", "stg_yellow_tripdata"):
+        queries[f"unique__{stg}__tripid"] = (
+            f"SELECT count(*) FROM (SELECT tripid FROM {stg} GROUP BY 1 HAVING count(*) > 1)")
+        queries[f"not_null__{stg}__tripid"] = f"SELECT count(*) FROM {stg} WHERE tripid IS NULL"
+        queries[f"accepted_values__{stg}__payment_type"] = (
+            f"SELECT count(*) FROM {stg} WHERE payment_type NOT IN (1, 2, 3, 4, 5, 6)")
+        for key in ("pickup_locationid", "dropoff_locationid"):
+            queries[f"relationships__{stg}__{key}"] = (
+                f"SELECT count(*) FROM {stg} WHERE {key} IS NOT NULL AND {key} NOT IN "
+                "(SELECT CAST(locationid AS INTEGER) FROM taxi_zone_lookup)")
+    return {name: con.sql(q).fetchone()[0] for name, q in queries.items()}
+
+
+def _reference_tests(runner, model=None):
+    from taxi_rides_ny_duckdb_spark.plans.dq import bind_relationship_tests, reference_test_suite
+
+    tests = bind_relationship_tests(reference_test_suite(), runner.sources["taxi_zone_lookup"])
+    return [t for t in tests if model is None or t.model == model]
+
+
+def test_dq_results(taxi, taxi_oracle):
+    """Every reference test's count equals its DuckDB oracle count; the
+    fixtures carry out-of-seed locationids and payment types 0/7, so
+    the relationships and accepted_values counts are nonzero."""
+    got = {r.test.name: r.violations for r in taxi["results"]}
+    assert got == _dq_oracle_counts(taxi_oracle)
+    assert all(type(n) is int for n in got.values())
+    assert got["relationships__stg_green_tripdata__dropoff_locationid"] > 0
+    assert got["accepted_values__stg_green_tripdata__payment_type"] > 0
+
+
+def test_dq_empty_model_counts_zero(taxi):
+    """An empty staging model reports 0 for every test, as an int —
+    never the NULL an empty SUM returns."""
+    from taxi_rides_ny_duckdb_spark.plans.dq import run_tests
+    from taxi_rides_ny_duckdb_spark.plans.staging import stg_green_tripdata
+
+    runner = taxi["runner"]
+    empty = stg_green_tripdata(runner.sources["green_tripdata"].limit(0))
+    results = run_tests({"stg_green_tripdata": empty},
+                        _reference_tests(runner, "stg_green_tripdata"))
+    assert len(results) == 5
+    assert [r.violations for r in results] == [0] * 5
+    assert all(type(r.violations) is int for r in results)
+
+
+def test_dq_unique_counts_repeated_nulls_once(spark):
+    """Repeated NULL keys form one group with more than one row: one
+    ``unique`` violation, as dbt's GROUP BY ... HAVING count(*) > 1."""
+    from taxi_rides_ny_duckdb_spark.plans.dq import DQTest, run_tests
+
+    df = spark.createDataFrame([(None,), (None,), ("a",), ("b",)], "tripid string")
+    tests = [DQTest("u", "m", "unique", "tripid", "warn"),
+             DQTest("nn", "m", "not_null", "tripid", "warn")]
+    assert [r.violations for r in run_tests({"m": df}, tests)] == [1, 2]
+
+
+def test_dq_rejects_unusable_tests(spark):
+    """An unknown kind, an unbound relationships test, and unique tests
+    on two columns of one model (one evaluation groups by one key) fail
+    fast with a ValueError."""
+    from taxi_rides_ny_duckdb_spark.plans.dq import DQTest, run_tests
+
+    df = spark.createDataFrame([("a", "b")], "x string, y string")
+    with pytest.raises(ValueError, match="unknown kind"):
+        DQTest("t", "m", "unique_key", "x")
+    with pytest.raises(ValueError, match="no parent"):
+        run_tests({"m": df}, [DQTest("r", "m", "relationships", "x", parent_key="k")])
+    with pytest.raises(ValueError, match="several columns"):
+        run_tests({"m": df}, [DQTest("u1", "m", "unique", "x"), DQTest("u2", "m", "unique", "y")])
+
+
+@pytest.mark.parametrize("partitions", [1, 4])
+def test_dq_one_snapshot_per_model(spark, taxi, partitions):
+    """Two raw rows share (vendorid, pickup) with conflicting payloads:
+    A has payment_type 1 and pickup zone 999 (not in the seed), B has
+    payment_type 99 and pickup zone 1. Staging keeps one of them, so in
+    one snapshot exactly one of accepted_values and
+    relationships(pickup) flags a row; evaluating the tests separately
+    could see A in one and B in the other (0) or the reverse (2)."""
+    from pyspark.sql import functions as F
+
+    from taxi_rides_ny_duckdb_spark.plans.dq import run_tests
+    from taxi_rides_ny_duckdb_spark.plans.staging import stg_green_tripdata
+
+    runner = taxi["runner"]
+    raw = runner.sources["green_tripdata"]
+    base = raw.filter(F.col("vendorid").isNotNull()).limit(1)
+
+    def variant(payment_type, pulocationid):
+        return (base.withColumn("payment_type", F.lit(payment_type).cast(raw.schema["payment_type"].dataType))
+                .withColumn("pulocationid", F.lit(pulocationid).cast(raw.schema["pulocationid"].dataType)))
+
+    rows = variant(1, 999).unionByName(variant(99, 1)).collect()
+    # With 4 slices the two rows land in different input partitions.
+    pair = spark.createDataFrame(spark.sparkContext.parallelize(rows, partitions), raw.schema)
+    assert pair.rdd.getNumPartitions() == partitions
+    tests = _reference_tests(runner, "stg_green_tripdata")
+    got = {r.test.name: r.violations
+           for r in run_tests({"stg_green_tripdata": stg_green_tripdata(pair)}, tests)}
+    assert (got["accepted_values__stg_green_tripdata__payment_type"]
+            + got["relationships__stg_green_tripdata__pickup_locationid"]) == 1
+    assert got["unique__stg_green_tripdata__tripid"] == 0
+
+
+def test_dq_error_severity_raises(taxi, caplog):
+    """``raise_on_error``: the DQError names exactly the failing
+    error-severity tests; failing warn tests only log."""
+    import logging
+    import re
+
+    from taxi_rides_ny_duckdb_spark.plans.dq import DQError
+
+    runner = taxi["runner"]
+    with caplog.at_level(logging.WARNING, logger="taxi_rides_ny_duckdb_spark.plans.dq"):
+        with pytest.raises(DQError) as err:
+            runner.test(_reference_tests(runner), raise_on_error=True)
+    assert re.findall(r"dq test (\S+) on", str(err.value)) == [
+        "relationships__stg_green_tripdata__dropoff_locationid"
+    ]
+    logged = {m.split()[2] for m in caplog.messages}
+    assert logged == {
+        "accepted_values__stg_green_tripdata__payment_type",
+        "relationships__stg_green_tripdata__pickup_locationid",
+        "accepted_values__stg_yellow_tripdata__payment_type",
+        "relationships__stg_yellow_tripdata__pickup_locationid",
+        "relationships__stg_yellow_tripdata__dropoff_locationid",
+    }
+
+
+def test_dq_scans_each_staging_source_once_per_model(taxi):
+    """The reference suite is one action that reads each raw trip file
+    once, for its staging model: a model's five tests share one
+    evaluation. The physical plan comes from the SQL status store; its
+    formatted description lists the final plan's tree first, then the
+    initial plan, then one details block per node (with the scanned
+    location)."""
+    import re
+
+    runner = taxi["runner"]
+    store = runner.spark._jsparkSession.sharedState().statusStore()
+
+    def recent():  # the store keeps a bounded window of executions
+        n = int(store.executionsCount())
+        it = store.executionsList(max(0, n - 20), 20).iterator()
+        out = []
+        while it.hasNext():
+            e = it.next()
+            out.append((int(e.executionId()), e.physicalPlanDescription()))
+        return out
+
+    seen = max((i for i, _ in recent()), default=-1)
+    runner.test(_reference_tests(runner), raise_on_error=False)
+    descs = [d for i, d in recent() if i > seen]
+    assert len(descs) == 1
+    tree = descs[0].partition("== Initial Plan ==")[0]
+    location = dict(re.findall(
+        r"^\((\d+)\) Scan parquet\s*\n(?:.*\n)*?Location: \S+ \[([^\]]+)\]", descs[0], re.M))
+    scanned = [location[i] for i in re.findall(r"Scan parquet\s+\((\d+)\)", tree)]
+    for raw in ("green_tripdata.parquet", "yellow_tripdata.parquet"):
+        assert sum(path.endswith(raw) for path in scanned) == 1, (raw, scanned)
 
 
 def test_month_partitioned_fact_prunes(spark, tmp_path_factory):

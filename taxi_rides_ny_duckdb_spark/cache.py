@@ -1,4 +1,6 @@
-"""Session-scoped cache registry (r10, VERDICT r9 task 4).
+"""Scoped cache registry (r10, VERDICT r9 task 4): frees persisted
+frames after one unit of work. State kept for a whole session (plans,
+scans, indexes) lives in the session-state store, ``session.memo``.
 
 Operators persist intermediates for intra-query reuse (the
 multi-branch lineage rule: a frame feeding N plan branches re-executes

@@ -29,7 +29,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .session import session_key
+from .session import memo
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -40,15 +40,14 @@ ORACLES: dict[str, str] = {}
 # initial and final plans, breaking operator-count assertions).
 BUILDERS: dict[str, QueryFn] = {}
 
-# Built logical plans, keyed by (query, session_key, sf_dir). DataFrames are
-# immutable and lazy, so handing the same object back is semantically a
-# re-run — this is exactly dbt's view materialization (the compiled
-# plan persists; every query re-executes it). It matters for timing
-# honesty too: expression-heavy plans (e.g. IVF centroid rankings)
-# cost ~1 s of py4j round trips to BUILD, which would otherwise be
-# billed to every execution, while the DuckDB baseline re-parses a SQL
-# string in microseconds.
-_PLANS: dict[tuple, DataFrame] = {}
+# Built logical plans are memoized per (session, query, sf_dir) in the
+# session-state store. DataFrames are immutable and lazy, so handing the
+# same object back is semantically a re-run — exactly dbt's view
+# materialization (the compiled plan persists; every query re-executes
+# it). It matters for timing honesty too: expression-heavy plans (e.g.
+# IVF centroid rankings) cost ~1 s of py4j round trips to BUILD, which
+# would otherwise be billed to every execution, while the DuckDB
+# baseline re-parses a SQL string in microseconds.
 
 
 def query(
@@ -67,10 +66,7 @@ def query(
         if memoize:
 
             def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-                key = (name, *session_key(spark), sf_dir)
-                if key not in _PLANS:
-                    _PLANS[key] = fn(spark, sf_dir)
-                return _PLANS[key]
+                return memo(spark, ("plan", name, sf_dir), lambda: fn(spark, sf_dir))
 
             cached.__name__ = fn.__name__
             cached.__doc__ = fn.__doc__

@@ -16,12 +16,12 @@ engine's pinned cross-engine normalizations (SURVEY §1.4/§5).
 
 from __future__ import annotations
 
+from . import fixtures
 from .contract import query
-from .fixtures import DEFAULT_FIXTURE_DIR, ensure_taxi_fixtures
 from .functions.parity import present_doubles
-from .session import session_key
+from .session import memo, scratch_dir
 
-_PATHS = ensure_taxi_fixtures()
+_PATHS = fixtures.ensure_taxi_fixtures()
 
 _G = _PATHS["green_tripdata"]
 _Y = _PATHS["yellow_tripdata"]
@@ -148,31 +148,21 @@ fact_trips AS (
 """
 
 
-# Session id → built model DataFrames. dbt materializes the core models
-# as TABLES (dbt_project.yml:40-41): downstream reads hit stored rows,
-# not a re-run of staging. The Spark analog is a write-through parquet
-# materialization — the fact is WRITTEN once per session and every
-# downstream consumer (revenue mart, metrics) scans the stored table.
-# At 100 TB this is the only correct shape: a .cache() pins the fact in
-# executor memory/disk and evaporates with the session, while the
-# parquet table survives, feeds other jobs, and gives downstream scans
-# column pruning + filter pushdown into the store. Plan construction
-# (CSV seed read + wide cast/md5 projections) is likewise paid once.
-_MODELS: dict[tuple, tuple] = {}
-
-
 def _spark_models(spark):
-    """Build (and memoize per session) the Spark-side models from the
-    shared fixtures."""
-    # Key the memo by session_key, and write the fact table under a
-    # per-application directory: two concurrent processes (pytest +
-    # bench) or two sessions in one process must not mode('overwrite')
-    # a shared path out from under each other's memoized DataFrames
-    # (FileNotFound / torn reads otherwise).
-    sc = spark.sparkContext
-    key = session_key(spark)
-    if key in _MODELS:
-        return _MODELS[key]
+    """The Spark-side models, built once per session from the shared
+    fixtures (session-state store). dbt materializes the core models as
+    TABLES (dbt_project.yml:40-41): downstream reads hit stored rows,
+    not a re-run of staging. The Spark analog is a write-through parquet
+    materialization — the fact is WRITTEN once per session and every
+    downstream consumer (revenue mart, metrics) scans the stored table.
+    At 100 TB this is the only correct shape: a .cache() pins the fact
+    in executor memory/disk and evaporates with the session, while the
+    parquet table survives, feeds other jobs, and gives downstream scans
+    column pruning + filter pushdown into the store."""
+    return memo(spark, ("taxi_models",), lambda: _build_models(spark))
+
+
+def _build_models(spark):
     import os
 
     from .plans.core import dim_zones, dm_monthly_zone_revenue, fact_trips
@@ -182,33 +172,15 @@ def _spark_models(spark):
     green = stg_green_tripdata(spark.read.parquet(_G))
     yellow = stg_yellow_tripdata(spark.read.parquet(_Y))
     zones = dim_zones(load_seed_csv(spark, _Z, TAXI_ZONE_LOOKUP_SCHEMA))
-    warehouse = os.path.join(DEFAULT_FIXTURE_DIR, "warehouse")
-    fact_path = os.path.join(warehouse, f"fact_trips-{sc.applicationId}")
-    # The per-application path prevents concurrent sessions clobbering
-    # each other, but every session leaves a copy behind (ADVICE r4:
-    # unbounded disk growth across rounds). Clean up: our own copy goes
-    # at interpreter exit; stale siblings from dead sessions go now,
-    # age-gated at 2h so a genuinely concurrent session (minutes old)
-    # is never touched.
-    import atexit
-    import shutil
-    import time
-
-    atexit.register(shutil.rmtree, fact_path, ignore_errors=True)
-    if os.path.isdir(warehouse):
-        cutoff = time.time() - 2 * 3600
-        for d in os.listdir(warehouse):
-            p = os.path.join(warehouse, d)
-            if (
-                d.startswith("fact_trips-")
-                and d != f"fact_trips-{sc.applicationId}"
-                and os.path.getmtime(p) < cutoff
-            ):
-                shutil.rmtree(p, ignore_errors=True)
+    # A directory per session: two processes (pytest + bench) or two
+    # sessions must not overwrite a shared path out from under each
+    # other's memoized frames. The store removes it with the session.
+    fact_path = scratch_dir(
+        spark, "fact_trips-", os.path.join(fixtures.DEFAULT_FIXTURE_DIR, "warehouse")
+    )
     fact_trips(green, yellow, zones).write.mode("overwrite").parquet(fact_path)
     fact = spark.read.parquet(fact_path)
-    _MODELS[key] = (green, yellow, zones, fact, dm_monthly_zone_revenue(fact))
-    return _MODELS[key]
+    return green, yellow, zones, fact, dm_monthly_zone_revenue(fact)
 
 
 @query(

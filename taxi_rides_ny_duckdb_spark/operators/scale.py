@@ -93,9 +93,9 @@ def sink_scratch_dir(sf_dir: str, name: str) -> str:
     by the dataset directory basename so sf0.01 driver runs and sf0.1
     bench runs never collide, AND by pid so two concurrent sessions on
     the same SF (e.g. bench and the correctness driver) never race on
-    DROP TABLE + rmtree vs read (ADVICE r6). Growth is bounded — each
-    scratch holds a small-SF projection, and reruns of the same
-    process rmtree before rewriting."""
+    DROP TABLE + rmtree vs read (ADVICE r6). Nothing removes the
+    per-process root: reruns in one process rmtree before rewriting,
+    but every process leaves its ``_pid`` directory behind."""
     import os
 
     base = os.path.basename(sf_dir.rstrip("/")) or "default"

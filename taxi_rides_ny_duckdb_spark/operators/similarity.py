@@ -457,7 +457,7 @@ def brute_force_topk_int64(
     """Exact top-k under the SCALED-INT64 cosine metric — the
     blocked-numpy Arrow twin of ``brute_force_topk`` for ground-truth
     production (VERDICT r10 task 2: the interpreted zip_with/aggregate
-    fold was ~the whole cost of every ``_GT_INDEX`` build and the
+    fold was ~the whole cost of every ground-truth index build and the
     ranking-quality certification; the ``kmeans_assign_arrow``
     precedent measured this exact switch at 4.7×).
 

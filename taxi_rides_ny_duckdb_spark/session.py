@@ -12,11 +12,20 @@ scale:
 - Arrow enabled — vectorized Python interop for Pandas UDFs.
 - Shuffle partitions sized to the local core count; at cluster scale
   this is overridden per-job (AQE coalesces the rest).
+
+The session-state store (``memo``, ``scratch_dir``) keeps what dbt's
+view and table materializations keep (reference
+``dbt_project.yml:40-41``) for the life of a Spark session: built plans
+and scans, the written ``fact_trips``, streaming drops and indexes.
+``cache.cache_scope`` instead frees frames after one unit of work.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -63,13 +72,60 @@ def get_spark(
 
 
 def session_key(spark: SparkSession) -> tuple:
-    """Stable per-session key for every process-level memo (contract
-    plans, source scans and views, index frames, taxi models):
-    (applicationId, startTime). ``id(spark)`` can be GC-recycled, so a
-    NEW session could alias a stopped one's key and hand out frames
-    bound to a dead context (ADVICE r10)."""
+    """The store's key for a session: (applicationId, startTime).
+    ``id(spark)`` can be GC-recycled, so a NEW session could alias a
+    stopped one's key and hand out frames bound to a dead context
+    (ADVICE r10)."""
     sc = spark.sparkContext
     return (sc.applicationId, sc.startTime)
+
+
+# session_key → (SparkContext, {memo key: value}, [owned directories]).
+_STORE: dict[tuple, tuple] = {}
+
+
+def _session_state(spark: SparkSession) -> tuple:
+    key = session_key(spark)
+    state = _STORE.get(key)
+    if state is None:
+        # Only a NEW session retires stopped ones (their frames are bound
+        # to a dead context), so a lookup hit never sweeps.
+        for old in [k for k, (sc, _, _) in _STORE.items() if sc._jsc is None]:
+            _remove_dirs(_STORE.pop(old)[2])
+        state = _STORE[key] = (spark.sparkContext, {}, [])
+    return state
+
+
+@atexit.register
+def _remove_live_dirs() -> None:
+    for _, _, dirs in _STORE.values():
+        _remove_dirs(dirs)
+
+
+def _remove_dirs(dirs: list[str]) -> None:
+    for d in dirs:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def memo(spark: SparkSession, key: tuple, build):
+    """The value stored under ``key`` for this session, calling
+    ``build()`` on the first lookup only. Keys are tuples whose first
+    element names the kind of state (``("plan", name, sf_dir)``)."""
+    values = _session_state(spark)[1]
+    if key not in values:
+        values[key] = build()
+    return values[key]
+
+
+def scratch_dir(spark: SparkSession, prefix: str, parent: str | None = None) -> str:
+    """A new empty directory owned by this session, removed with the
+    session's entries or at interpreter exit. ``parent`` defaults to
+    ``tempfile``'s directory, read at call time."""
+    if parent is not None:
+        os.makedirs(parent, exist_ok=True)
+    path = tempfile.mkdtemp(prefix=prefix, dir=parent)
+    _session_state(spark)[2].append(path)
+    return path
 
 
 def ensure_min_partitions(

@@ -21,7 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import session_key
+from ..session import memo
 
 # Driver-generated tables (TESTDATA.md): TPC-H-ish star schema + events
 # stream + LLM-pipeline extension tables.
@@ -43,12 +43,12 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# (session_key, path) → scan DataFrame. A DataFrame is an immutable
-# logical plan, safe to reuse across queries; building one costs a
-# parquet-footer read + schema inference (~50-100 ms of py4j + IO) that
-# a session running dozens of contract queries should pay once per
-# table, not once per query.
-_SCANS: dict[tuple, DataFrame] = {}
+# Scans are memoized per (SparkSession, path) in the session-state
+# store: building one costs a parquet-footer read + schema inference
+# (~50-100 ms of py4j + IO) that a session should pay once per table,
+# not once per query. Keyed by the SparkSession, not just its context,
+# because a temp view registered from a frame lands in the catalog of
+# the session that read it (``newSession()`` shares only the context).
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -67,15 +67,18 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown source table {name!r}; known: {TESTDATA_TABLES}")
-    key = (*session_key(spark), table_path(sf_dir, name))
-    if key in _SCANS:
-        return _SCANS[key]
+    path = table_path(sf_dir, name)
+    key = ("scan", spark._jsparkSession.sessionUUID(), path)
+    return memo(spark, key, lambda: _scan(spark, path, name))
+
+
+def _scan(spark: SparkSession, path: str, name: str) -> DataFrame:
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType, TimestampNTZType
 
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = spark.read.parquet(path)
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -83,10 +86,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # Normalize NTZ → session-tz timestamp so window/streaming
             # operators see one type regardless of data generation.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    else:
-        df = spark.read.parquet(table_path(sf_dir, name))
-    _SCANS[key] = df
-    return df
+        return df
+    return spark.read.parquet(path)
 
 
 def read_source(
@@ -117,24 +118,20 @@ def read_source(
     return reader.load(path)
 
 
-# (session_key, view name) → registered path. Registering a view costs a
-# parquet-footer read + py4j round trips (~0.1 s/table); a session that
-# runs many SQL queries over the same sf_dir should pay it once.
-_REGISTERED: dict[tuple, str] = {}
-
-
 def register_all(
     spark: SparkSession, sf_dir: str, tables: tuple[str, ...] | None = None
 ) -> None:
     """Register tables as temp views for the SQL API. Pass ``tables``
-    to register a subset — each registration reads a parquet footer, so
-    a query touching 3 tables shouldn't pay for 10. Idempotent per
-    (session, sf_dir): re-registers only when sf_dir changes."""
-    sid = session_key(spark)
+    to register a subset — each registration reads a parquet footer
+    (~0.1 s/table), so a query touching 3 tables shouldn't pay for 10.
+    Idempotent per (SparkSession, sf_dir): the store records each view's
+    registered path, and a view is re-registered only when its path
+    changes."""
+    views = memo(spark, ("views", spark._jsparkSession.sessionUUID()), dict)
     for name in tables or TESTDATA_TABLES:
         path = table_path(sf_dir, name)
-        if _REGISTERED.get((*sid, name)) == path:
+        if views.get(name) == path:
             continue
         if os.path.exists(path):
             load(spark, sf_dir, name).createOrReplaceTempView(name)
-            _REGISTERED[(*sid, name)] = path
+            views[name] = path

@@ -1,10 +1,13 @@
-"""Session-scoped cache registry (taxi_rides_ny_duckdb_spark/cache.py,
-r10): operators register intra-query persists into the innermost open
-scope; pipeline drivers (bench.py per query, plans/runner.py per node)
-close the scope and exactly those frames unpersist — retiring the old
-"callers clearCache between queries" convention."""
+"""Scoped cache registry (taxi_rides_ny_duckdb_spark/cache.py, r10):
+operators register intra-query persists into the innermost open scope;
+pipeline drivers (bench.py per query, plans/runner.py per node) close
+the scope and exactly those frames unpersist — retiring the old
+"callers clearCache between queries" convention. Also the session-state
+store (session.memo / scratch_dir): what lives for a whole session."""
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import functions as F
 
@@ -101,22 +104,134 @@ def test_two_operator_pipeline_leaves_no_orphan_cache_entries(spark):
 
 
 def test_session_memos_ignore_recycled_id_keys(spark, sf_dir, monkeypatch):
-    """The process-level plan and scan memos key on ``session_key``
-    (applicationId, startTime), never on the GC-recyclable
-    ``id(spark)``: a sentinel planted under the old id-based key — what
-    a stopped session whose id the live one inherited would leave
-    behind — must never be handed out."""
-    from taxi_rides_ny_duckdb_spark import contract
+    """The session-state store keys sessions on (applicationId,
+    startTime), never on the GC-recyclable ``id(spark)``: sentinels
+    planted under an id-keyed session entry — what a stopped session
+    whose id the live one inherited would leave behind — must never be
+    handed out as a scan or a plan."""
+    from taxi_rides_ny_duckdb_spark import contract, session
     from taxi_rides_ny_duckdb_spark.sources import registry
-
-    sentinel = spark.range(1)
-    path = registry.table_path(sf_dir, "region")
-    monkeypatch.setitem(registry._SCANS, (id(spark), path), sentinel)
-    scan = registry.load(spark, sf_dir, "region")
-    assert scan is not sentinel and "r_regionkey" in scan.columns
 
     contract.load_all()
     name = next(n for n in contract.QUERIES
                 if contract.QUERIES[n] is not contract.BUILDERS[n])
-    monkeypatch.setitem(contract._PLANS, (name, id(spark), sf_dir), sentinel)
+    sentinel = spark.range(1)
+    path = registry.table_path(sf_dir, "region")
+    planted = {("scan", spark._jsparkSession.sessionUUID(), path): sentinel,
+               ("plan", name, sf_dir): sentinel}
+    monkeypatch.setitem(session._STORE, (id(spark),),
+                        (spark.sparkContext, planted, []))
+    scan = registry.load(spark, sf_dir, "region")
+    assert scan is not sentinel and "r_regionkey" in scan.columns
     assert contract.QUERIES[name](spark, sf_dir) is not sentinel
+
+
+def test_store_sweeps_only_when_a_new_session_appears(spark, tmp_path, monkeypatch):
+    """A lookup hit, a miss and a scratch dir in a known session never
+    run the eviction sweep; the first lookup from a NEW session drops
+    every stopped session's entries and removes its directories, and
+    leaves live sessions alone."""
+    from types import SimpleNamespace
+
+    from taxi_rides_ny_duckdb_spark import session
+
+    monkeypatch.setattr(session, "_STORE", {})
+    builds = []
+    assert session.memo(spark, ("probe",), lambda: builds.append(1) or "v") == "v"
+    dead_dir = tmp_path / "dead"
+    dead_dir.mkdir()
+    dead = (SimpleNamespace(_jsc=None), {("probe",): "stale"}, [str(dead_dir)])
+    session._STORE[("dead-app", 0)] = dead
+
+    assert session.memo(spark, ("probe",), lambda: builds.append(1) or "w") == "v"
+    assert session.memo(spark, ("other",), lambda: "x") == "x"
+    live_dir = session.scratch_dir(spark, "live_", str(tmp_path))
+    assert builds == [1]
+    assert session._STORE[("dead-app", 0)] is dead and dead_dir.is_dir()
+
+    new_sc = SimpleNamespace(applicationId="new-app", startTime=1, _jsc=object())
+    new = SimpleNamespace(sparkContext=new_sc)
+    assert session.memo(new, ("probe",), lambda: "n") == "n"
+    assert [sc for sc, _, _ in session._STORE.values()] == [spark.sparkContext, new_sc]
+    assert not dead_dir.exists() and os.path.isdir(live_dir)
+
+
+_RESTART_SCRIPT = r"""
+import json, os, sys
+sys.path.insert(0, sys.argv[1])
+from taxi_rides_ny_duckdb_spark import contract, session
+from taxi_rides_ny_duckdb_spark.contract_extensions import _events_stream_dir
+
+sf = sys.argv[2]
+contract.load_all()
+
+def run():
+    spark = session.get_spark(app_name="restart", master="local[2]",
+                              shuffle_partitions=2)
+    df = contract.QUERIES["a1_pricing_summary"](spark, sf)
+    assert df.count() > 0
+    return spark, df, _events_stream_dir(spark, sf)
+
+a, df_a, dir_a = run()
+a.stop()
+b, df_b, dir_b = run()
+out = {
+    "frame_is_new": df_b is not df_a,
+    "frame_on_b": df_b.sparkSession is b and b.sparkContext._jsc is not None,
+    "a_dir_gone": not os.path.exists(dir_a),
+    "b_dir_live": os.path.isdir(dir_b),
+    "keys_only_b": [sc for sc, _, _ in session._STORE.values()] == [b.sparkContext],
+    "dirs": [dir_a, dir_b],
+}
+b.stop()
+print("RESULT " + json.dumps(out))
+"""
+
+
+def test_store_survives_session_stop_and_restart(tmp_path):
+    """A real stop + restart in one process: the second session gets
+    fresh frames bound to itself, the stopped session's stream drop is
+    removed the moment the new session first touches the store, only
+    the new session's key remains, and the atexit hook removes the live
+    session's directory when the interpreter exits."""
+    import json
+    import subprocess
+    import sys
+
+    from conftest import REPO_DIR, SF_SMOKE
+
+    env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_DRIVER_MEMORY="1g")
+    r = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT, REPO_DIR, SF_SMOKE],
+        capture_output=True, text=True, timeout=180, env=env,
+    )
+    line = next((ln for ln in r.stdout.splitlines() if ln.startswith("RESULT ")), None)
+    assert line is not None, r.stderr[-3000:]
+    out = json.loads(line[len("RESULT "):])
+    dirs = out.pop("dirs")
+    assert out == dict.fromkeys(out, True), out
+    assert all(os.path.dirname(d) == str(tmp_path) for d in dirs)
+    assert not any(os.path.exists(d) for d in dirs)
+
+
+def test_register_all_per_spark_session_and_path(spark, sf_dir):
+    """Temp views belong to a SparkSession, not to its context: a
+    ``newSession()`` on the same context gets its own registration.
+    Switching sf_dir A → B → A re-registers the view each time."""
+    from urllib.parse import urlparse
+
+    from conftest import SF_SMOKE
+
+    from taxi_rides_ny_duckdb_spark.sources.registry import register_all, table_path
+
+    def registered(s):
+        return [urlparse(f).path for f in s.table("nation").inputFiles()]
+
+    register_all(spark, sf_dir, ("nation",))
+    s2 = spark.newSession()
+    register_all(s2, sf_dir, ("nation",))
+    assert s2.sql("select count(*) from nation").first()[0] == 25
+
+    for d in (SF_SMOKE, sf_dir):
+        register_all(spark, d, ("nation",))
+        assert registered(spark) == [table_path(d, "nation")]

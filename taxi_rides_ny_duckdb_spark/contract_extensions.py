@@ -21,7 +21,7 @@ from pyspark.sql.window import Window
 
 from .cache import scoped_persist
 from .contract import query
-from .functions.parity import dsum
+from .functions.parity import PARITY_DP, dsum
 from .functions.text import (
     bpe_ish_token_count,
     fingerprint,
@@ -266,7 +266,7 @@ def ext_dedup_ngram_jaccard(spark, sf_dir):
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
     return ngram_jaccard_pairs(
         d, "text", "doc_id", threshold=0.2, block_cols=("lang",),
-        shingle_n=3, round_dp=9,
+        shingle_n=3,
     )
 
 
@@ -435,7 +435,10 @@ def ext_similarity_topk_bruteforce(spark, sf_dir):
     )
     out = brute_force_topk(emb, queries, k=5)
     return out.select(
-        "query_id", "rank", "vec_id", F.round("cosine_sim", 9).alias("cosine_sim_r")
+        "query_id",
+        "rank",
+        "vec_id",
+        F.round("cosine_sim", PARITY_DP).alias("cosine_sim_r"),
     )
 
 
@@ -540,7 +543,7 @@ def ext_similarity_lsh_topk(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = lsh_topk(emb, queries, k=5, dim=64, bits=6, score_round_dp=9)
+    out = lsh_topk(emb, queries, k=5, dim=64, bits=6)
     return out.select(
         "query_id", "rank", "vec_id", F.col("cosine_sim").alias("cosine_sim_r")
     )
@@ -626,8 +629,6 @@ def ext_similarity_ivf_topk(spark, sf_dir):
         nlist=8,
         nprobe=2,
         centroids=IVF_CENTROIDS,
-        round_dp=9,
-        score_round_dp=9,
     )
     return out.select(
         "query_id", "rank", "vec_id", F.col("cosine_sim").alias("cosine_sim_r")
@@ -671,7 +672,7 @@ def ext_ann_recall_eval(spark, sf_dir):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     exact = _cosine_ground_truth_topk(spark, sf_dir, k=5)
-    ann = lsh_topk(emb, queries, k=5, dim=64, bits=6, score_round_dp=9)
+    ann = lsh_topk(emb, queries, k=5, dim=64, bits=6)
     return _count_pin(ann_recall_at_k(ann, exact, k=5), "n_hit", "recall_at_k")
 
 
@@ -715,7 +716,7 @@ def ext_embedding_near_dup_exact(spark, sf_dir):
     b = v.select(F.col("vec_id").alias("id_b"), F.col("ev").alias("bv"), F.col("nrm").alias("nb"))
     pairs = a.join(b, F.col("id_a") < F.col("id_b"))
     sim = F.round(
-        cosine_given_norms(F.col("av"), F.col("bv"), F.col("na"), F.col("nb")), 9
+        cosine_given_norms(F.col("av"), F.col("bv"), F.col("na"), F.col("nb")), PARITY_DP
     ).alias("cosine_sim_r")
     return pairs.select("id_a", "id_b", sim).filter(F.col("cosine_sim_r") >= 0.3)
 
@@ -831,7 +832,7 @@ def ext_dedup_cluster_keep_best(spark, sf_dir):
         .select("vec_id", F.col("embedding").cast("array<double>").alias("ev"))
         .withColumn("nrm", l2_norm(F.col("ev")))
     )
-    scored = v.select("vec_id", F.round(F.col("nrm"), 9).alias("score"))
+    scored = v.select("vec_id", F.round(F.col("nrm"), PARITY_DP).alias("score"))
     return cluster_representatives(
         scored, pairs, "vec_id", "score", components=comp
     )
@@ -880,7 +881,7 @@ def ext_embedding_centroid_assign(spark, sf_dir):
         .collect()
     ]
     return assign_nearest_centroid(
-        emb.select("vec_id", "embedding"), cents, round_dp=9
+        emb.select("vec_id", "embedding"), cents
     ).select("vec_id", "centroid_id")
 
 
@@ -927,7 +928,6 @@ def ext_embedding_near_dup(spark, sf_dir):
         threshold=0.3,
         dim=64,
         bits=6,
-        score_round_dp=9,
     )
     return out.select(
         "id_a", "id_b", F.col("cosine_sim").alias("cosine_sim_r")
@@ -2217,10 +2217,10 @@ def ext_embedding_group_medoid(spark, sf_dir):
     from .operators.similarity import group_medoid
 
     e = load(spark, sf_dir, "embeddings")
-    out = group_medoid(e, "label", "embedding", "vec_id", round_dp=9)
+    out = group_medoid(e, "label", "embedding", "vec_id")
     return out.select(
         "label", "medoid_id", "group_size",
-        F.round("mean_dist", 9).alias("mean_dist_r"),
+        F.round("mean_dist", PARITY_DP).alias("mean_dist_r"),
     )
 
 
@@ -2507,7 +2507,7 @@ def ext_text_repetition_ratio(spark, sf_dir):
         F.size("__sh") > 0,
         1.0 - F.size(F.array_distinct(F.col("__sh"))).cast("double") / F.size("__sh"),
     ).otherwise(F.lit(0.0))
-    return sh.select("doc_id", F.round(ratio, 9).alias("rep_ratio_r"))
+    return sh.select("doc_id", F.round(ratio, PARITY_DP).alias("rep_ratio_r"))
 
 
 # ---------------------------------------------------------------------------
@@ -3293,7 +3293,6 @@ def ext_hard_negative_topk_ann(spark, sf_dir):
     return hard_negative_mine_fused(
         v, pair_threshold=0.3, k=5,
         centroids=IVF_CENTROIDS, nprobe=2,
-        round_dp=9, score_round_dp=9,
     )
 
 
@@ -3907,7 +3906,7 @@ def ext_similarity_ivf_sq8_topk(spark, sf_dir):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     return ivf_quantized_topk(
-        emb, queries, k=5, centroids=IVF_CENTROIDS, nprobe=2, round_dp=9
+        emb, queries, k=5, centroids=IVF_CENTROIDS, nprobe=2
     )
 
 
@@ -3954,7 +3953,7 @@ def ext_weighted_sample(spark, sf_dir):
             hash_fraction(F.col("doc_id"), "wsample"),
             F.lit(1.0) / F.col("n_chars"),
         ),
-        9,
+        PARITY_DP,
     )
     return out.select(
         "doc_id", "lang", F.col("n_chars").cast("long").alias("n_chars"),
@@ -5355,8 +5354,8 @@ def ext_events_funnel_latency(spark, sf_dir):
     ).filter(F.col("lag_us").isNotNull())
     return lags.groupBy("transition").agg(
         F.count(F.lit(1)).alias("n_converted"),
-        F.round(F.percentile("lag_us", F.lit(0.5)), 9).alias("p50_us_r"),
-        F.round(F.percentile("lag_us", F.lit(0.9)), 9).alias("p90_us_r"),
+        F.round(F.percentile("lag_us", F.lit(0.5)), PARITY_DP).alias("p50_us_r"),
+        F.round(F.percentile("lag_us", F.lit(0.9)), PARITY_DP).alias("p90_us_r"),
         (
             F.sum(F.col("lag_us").cast("decimal(38,0)")).cast("double")
             / F.count(F.lit(1)).cast("double")
@@ -6433,7 +6432,7 @@ def _embedding_near_dup_inputs(spark, sf_dir):
             "id_b",
             F.round(
                 cosine_given_norms(F.col("av"), F.col("bv"), F.col("na"), F.col("nb")),
-                9,
+                PARITY_DP,
             ).alias("sim"),
         )
         .filter(F.col("sim") >= 0.3)
@@ -6897,15 +6896,16 @@ def ext_lr_train(spark, sf_dir):
     doc-partitioned cache per iteration above it; the oracle replays
     the whole descent as unrolled CTEs. memoize=False: the trainer
     collects eagerly. Output: 32 weights + bias (idx −1), 9dp."""
-    from .operators.classify import _round9_half_up, lr_train_surrogate
+    from .functions.parity import round_half_up
+    from .operators.classify import lr_train_surrogate
 
     d = load(spark, sf_dir, "documents")
     train = d.filter(F.col("doc_id") % 5 != 0).withColumn(
         "y", (F.col("lang") == "en").cast("int")
     )
     w, b = lr_train_surrogate(train, "text", "doc_id", "y", dim=32, iters=3, lr=0.5)
-    rows = [(i, _round9_half_up(v)) for i, v in enumerate(w)]
-    rows.append((-1, _round9_half_up(b)))
+    rows = [(i, round_half_up(v, PARITY_DP)) for i, v in enumerate(w)]
+    rows.append((-1, round_half_up(b, PARITY_DP)))
     return spark.createDataFrame(rows, "idx bigint, weight_r double")
 
 
@@ -7918,7 +7918,7 @@ def ext_token_budget_select(spark, sf_dir):
     toks = d.select("doc_id", "text", tokenize(F.col("text")).alias("__toks"))
     scored = toks.select(
         "doc_id",
-        F.round(quality_score(F.col("text"), tokens=F.col("__toks")), 9).alias(
+        F.round(quality_score(F.col("text"), tokens=F.col("__toks")), PARITY_DP).alias(
             "score_r"
         ),
         F.size("__toks").cast("bigint").alias("n_tokens"),
@@ -8720,7 +8720,6 @@ def ext_retrieval_ranking_quality(spark, sf_dir):
     )
     ann = ivf_topk(
         emb, queries, k=5, nlist=8, nprobe=2, centroids=IVF_CENTROIDS,
-        round_dp=9, score_round_dp=9,
     )
     exact = _cosine_ground_truth_topk(spark, sf_dir, k=5)
     return _count_pin(
@@ -8855,7 +8854,7 @@ def ext_binary_hamming_rerank(spark, sf_dir):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     out = hamming_rerank_topk(
-        emb, queries, dim=64, k=5, n_candidates=25, score_round_dp=9
+        emb, queries, dim=64, k=5, n_candidates=25
     )
     return _count_pin(
         out.withColumnRenamed("cosine_sim", "cosine_sim_r"), "hamming_d"
@@ -8894,7 +8893,7 @@ def ext_binary_hamming_recall(spark, sf_dir):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     ann = hamming_rerank_topk(
-        emb, queries, dim=64, k=5, n_candidates=25, score_round_dp=9
+        emb, queries, dim=64, k=5, n_candidates=25
     )
     exact = _cosine_ground_truth_topk(spark, sf_dir, k=5)
     return _count_pin(ann_recall_at_k(ann, exact, k=5), "n_hit", "recall_at_k")
@@ -8927,7 +8926,7 @@ def _nb_margin_probabilities(spark, sf_dir):
         labeled = m.select(
             "doc_id",
             "margin_r",
-            _surrogate_p(F.col("margin_r"), 9).alias("p_r"),
+            _surrogate_p(F.col("margin_r")).alias("p_r"),
         ).join(
             heldout.select(
                 "doc_id", (F.col("lang") == "en").alias("is_positive")
@@ -9181,7 +9180,7 @@ def ext_mmr_diverse_topk(spark, sf_dir):
         .select(
             "query_id",
             "vec_id",
-            F.round(cosine(F.col("__qv"), F.col("__cv")), 9).alias("rel_r"),
+            F.round(cosine(F.col("__qv"), F.col("__cv")), PARITY_DP).alias("rel_r"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(

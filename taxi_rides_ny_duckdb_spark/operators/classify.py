@@ -35,15 +35,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.parity import PARITY_DP, round_half_up_np
 from ..functions.text import tokenize
 
 from ..cache import scoped_persist
 
-# Per-addend log-prob rounding (12dp) and final score rounding (9dp):
-# the round-before-sum / round-before-rank parity discipline used by
+# Per-addend log-prob rounding (12dp; scores round at PARITY_DP): the
+# round-before-sum / round-before-rank parity discipline used by
 # bm25_topk and ngram_lm_score.
 _LOGP_DP = 12
-_SCORE_DP = 9
 
 
 def _doc_token_counts(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -223,7 +223,7 @@ def nb_score(
             F.round(
                 F.col("log_prior_r")
                 + F.coalesce(F.col("loglik").cast("double"), F.lit(0.0)),
-                _SCORE_DP,
+                PARITY_DP,
             ).alias("score_r"),
         )
     )
@@ -250,7 +250,7 @@ def nb_margin(scores: DataFrame, id_col: str, positive_label: str) -> DataFrame:
         F.round(
             F.max(F.when(F.col("label") == pos, F.col("score_r")))
             - F.max(F.when(F.col("label") != pos, F.col("score_r"))),
-            _SCORE_DP,
+            PARITY_DP,
         ).alias("margin_r")
     )
 
@@ -313,80 +313,9 @@ def auc_exact(
                 - F.col("np").cast("double") * (F.col("np").cast("double") + F.lit(1.0)) / F.lit(2.0)
             )
             / (F.col("np").cast("double") * F.col("nn").cast("double")),
-            _SCORE_DP,
+            PARITY_DP,
         ).alias("auc_r"),
     )
-
-
-def _round9_half_up(x: float) -> float:
-    """SQL ROUND semantics at 9dp, matching BOTH engines exactly —
-    Python's built-in round() is banker's and would diverge.
-
-    ``Decimal(repr(x))``, NOT ``Decimal(x)`` (r13): at fractional
-    scales both engines round the SHORTEST decimal representation of
-    the double, not its exact binary expansion — Spark's Round is
-    ``BigDecimal.valueOf(x)`` (= ``Double.toString``, shortest
-    round-trip repr), and DuckDB measurably agrees (probed on
-    half-boundary witnesses). Witness: x = 0.1234567895 has exact
-    binary 0.12345678949999…, so exact-binary HALF_UP gives
-    0.123456789 where BOTH engines give 0.123456790; Python ``repr``
-    produces the same shortest round-trip digits as Java, so
-    ``Decimal(repr(x))`` reproduces them bit-for-bit. (The scale-0
-    integer kernels — round(t²·10¹²) etc. — are immune: k + 0.5 is
-    exactly representable below 2⁵², so the binary and shortest-repr
-    half-lines coincide there.) The exact-binary form survived 12
-    rounds of driver gates only because witnesses are ~10⁻⁴-rare; the
-    r13 one-pass grouped trainer surfaced one at sf0.1
-    (ext_semdedup_hier, cent_sim_r 0.448349374 vs …375)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(
-        Decimal(repr(x)).quantize(Decimal("1e-9"), rounding=ROUND_HALF_UP)
-    )
-
-
-def _round12_half_up(x: float) -> float:
-    """SQL ROUND semantics at 12dp — the addend-scale (``_LOGP_DP``)
-    sibling of ``_round9_half_up``; see that docstring for why the
-    SHORTEST repr, not the exact binary expansion, is the
-    engine-faithful half-line."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(
-        Decimal(repr(x)).quantize(Decimal("1e-12"), rounding=ROUND_HALF_UP)
-    )
-
-
-def _round12_half_up_np(v):
-    """Vectorized twin of ``_round12_half_up`` (the fused LR descent's
-    hot rounding: every per-row product, σ̃ value and gradient addend)
-    — same construction as ``similarity._round9_half_up_np``: the fast
-    path scales by 10¹² and splits on the fractional part; values
-    whose fraction lands inside an ambiguity band around 0.5 fall back
-    to the exact scalar form. Band soundness: the trainer's rounded
-    values are all |v| ≤ 1-ish by construction (x ∈ [0,1], σ̃ ∈ [0,1],
-    |err·x| ≤ 1), and anything |v| ≥ 2 routes slow, so both the ×10¹²
-    scaling error (≤ 2·10¹²·2⁻⁵² ≈ 4.4·10⁻⁴) and the repr-vs-binary
-    gap (≤ 10¹²·ulp(2)/2 ≈ 2.2·10⁻⁴) sit well inside the 10⁻³ band —
-    outside it the floor/half decisions are stable. Exactness is
-    grid-tested against the scalar form and Spark ``F.round``
-    (test_round12_vectorized_matches_scalar)."""
-    import numpy as np
-
-    a = np.abs(v)
-    scaled = a * 1e12
-    f = np.floor(scaled)
-    frac = scaled - f
-    ambiguous = np.abs(frac - 0.5) < 1e-3
-    ambiguous |= ~np.isfinite(scaled) | (a >= 2.0)
-    k = f + (frac >= 0.5)
-    out = np.copysign(k / 1e12, v)
-    if ambiguous.any():
-        idx = np.nonzero(ambiguous)[0]
-        vals = np.asarray(v, dtype=np.float64)
-        for i in idx:
-            out[i] = _round12_half_up(float(vals[i]))
-    return out
 
 
 # Below this many cached feature rows every GD iteration runs inside ONE
@@ -410,7 +339,7 @@ def _lr_grad_np(idx, x, y, codes, w: list[float]) -> list:
     the oracle's SQL iteration:
 
     - per-row product ``round(x·w[idx], 12)`` via the repr-HALF_UP
-      twin ``_round12_half_up_np`` of ``F.round``;
+      twin ``round_half_up_np`` of ``F.round``;
     - per-doc z = the DECIMAL(38,12)-sum twin: addends recovered as
       exact scaled int64 (k = rint(v·10¹²) — |v| < 2 keeps the
       scaling error < 0.5, so recovery is exact), summed in int64,
@@ -425,12 +354,12 @@ def _lr_grad_np(idx, x, y, codes, w: list[float]) -> list:
     import numpy as np
 
     warr = np.asarray(w, dtype=np.float64)
-    prod = _round12_half_up_np(x * warr[idx])
+    prod = round_half_up_np(x * warr[idx], _LOGP_DP)
     zk = np.zeros(len(codes), dtype=np.int64)
     np.add.at(zk, codes, np.rint(prod * 1e12).astype(np.int64))
     z = zk[codes] / 1e12
-    p = _round12_half_up_np(0.5 + (0.5 * z) / (1.0 + np.abs(z)))
-    gi = np.rint(_round12_half_up_np((p - y) * x) * 1e12).astype(np.int64)
+    p = round_half_up_np(0.5 + (0.5 * z) / (1.0 + np.abs(z)), _LOGP_DP)
+    gi = np.rint(round_half_up_np((p - y) * x, _LOGP_DP) * 1e12).astype(np.int64)
     out = []
     for s in range(0, len(gi), _FUSED_LR_MAX_ROWS):
         e = s + _FUSED_LR_MAX_ROWS
@@ -571,7 +500,7 @@ def lr_hashed_features(
     )
 
 
-def _surrogate_p(z: Column, dp: int) -> Column:
+def _surrogate_p(z: Column) -> Column:
     """The engine-exact surrogate sigmoid σ̃(z) = 0.5 + 0.5·z/(1+|z|)
     ("fast sigmoid"): same shape, range and monotonicity as the
     logistic, but PURE rational arithmetic — no exp(), whose last-ulp
@@ -579,7 +508,7 @@ def _surrogate_p(z: Column, dp: int) -> Column:
     cascade through gradient iterations. The determinism-first choice
     for a cross-engine-verified trainer."""
     return F.round(
-        F.lit(0.5) + (F.lit(0.5) * z) / (F.lit(1.0) + F.abs(z)), dp
+        F.lit(0.5) + (F.lit(0.5) * z) / (F.lit(1.0) + F.abs(z)), PARITY_DP
     )
 
 
@@ -713,7 +642,7 @@ def lr_score_surrogate(
     )
     return z.select(
         F.col(id_col),
-        _surrogate_p(F.col("z"), _SCORE_DP).alias("score_r"),
+        _surrogate_p(F.col("z")).alias("score_r"),
         *[F.col(c) for c in carry_cols],
     )
 
@@ -723,7 +652,6 @@ def calibration_bins(
     score_col: str,
     label_col: str,
     n_bins: int = 10,
-    round_dp: int = _SCORE_DP,
 ) -> DataFrame:
     """Reliability-diagram bins + Expected Calibration Error — the
     calibration sibling of ``auc_exact`` (AUC certifies RANKING; ECE
@@ -765,9 +693,9 @@ def calibration_bins(
         "bin_id",
         "n",
         "n_pos",
-        F.round(mean_raw, round_dp).alias("mean_score_r"),
-        F.round(frac_raw, round_dp).alias("frac_pos_r"),
-        F.round(F.abs(mean_raw - frac_raw), round_dp).alias("gap_r"),
+        F.round(mean_raw, PARITY_DP).alias("mean_score_r"),
+        F.round(frac_raw, PARITY_DP).alias("frac_pos_r"),
+        F.round(F.abs(mean_raw - frac_raw), PARITY_DP).alias("gap_r"),
     )
     w = Window.partitionBy()
     term = F.round(
@@ -780,7 +708,7 @@ def calibration_bins(
         "mean_score_r",
         "frac_pos_r",
         "gap_r",
-        F.round(F.sum(term).over(w).cast("double"), round_dp).alias("ece_r"),
+        F.round(F.sum(term).over(w).cast("double"), PARITY_DP).alias("ece_r"),
     )
 
 
@@ -789,7 +717,6 @@ def brier_decomposition(
     score_col: str,
     label_col: str,
     n_bins: int = 10,
-    round_dp: int = _SCORE_DP,
 ) -> DataFrame:
     """Brier score + Murphy (1973) decomposition — the proper-scoring
     completion of the calibration ladder (`auc_exact` ranks,
@@ -801,7 +728,7 @@ def brier_decomposition(
     independently (no reliance on the binned identity) with the house
     exact-aggregation discipline: per-row/per-bin addends 12dp-rounded
     into DECIMAL(38,12) (order-free sums), final divisions in double,
-    presented at ``round_dp``.
+    presented at ``PARITY_DP``.
 
     Scale shape: ONE pass — a B-ary groupBy with map-side combine
     (the per-bin moments) plus a global 1-row aggregate for BS; the
@@ -841,14 +768,14 @@ def brier_decomposition(
         F.sum(rel_term).alias("__rel"), F.sum(res_term).alias("__res")
     ).select(
         F.col("__N").cast("bigint").alias("n"),
-        F.round(F.col("__sqt").cast("double") / F.col("__N"), round_dp).alias(
+        F.round(F.col("__sqt").cast("double") / F.col("__N"), PARITY_DP).alias(
             "brier_r"
         ),
-        F.round(F.col("__rel").cast("double"), round_dp).alias("reliability_r"),
-        F.round(F.col("__res").cast("double"), round_dp).alias("resolution_r"),
+        F.round(F.col("__rel").cast("double"), PARITY_DP).alias("reliability_r"),
+        F.round(F.col("__res").cast("double"), PARITY_DP).alias("resolution_r"),
         F.round(
             (F.col("__NP").cast("double") / F.col("__N"))
             * (F.lit(1.0) - F.col("__NP").cast("double") / F.col("__N")),
-            round_dp,
+            PARITY_DP,
         ).alias("uncertainty_r"),
     )

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.parity import PARITY_DP
 from ..functions.text import tokenize
 
 from ..cache import scoped_persist
@@ -159,7 +160,7 @@ def tfidf_topk_terms(
     scored = with_df.crossJoin(F.broadcast(n)).select(
         F.col(id_col),
         "term",
-        F.round(F.col("tf").cast("double") * idf, 9).alias("tfidf_r"),
+        F.round(F.col("tf").cast("double") * idf, PARITY_DP).alias("tfidf_r"),
     )
     w = Window.partitionBy(id_col).orderBy(
         F.desc("tfidf_r"), F.asc("term")
@@ -205,7 +206,7 @@ def robust_normalize(
         (F.col(value_col) - F.col("__med")) / F.col("__iqr"),
     ).otherwise(F.lit(0.0))
     return joined.select(
-        *df.columns, F.round(z, 9).alias(out_col)
+        *df.columns, F.round(z, PARITY_DP).alias(out_col)
     )
 
 
@@ -361,15 +362,15 @@ def gopher_quality(
         "__toks", F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
     )
     mean_wl = F.round(
-        F.when(n_words > 0, char_sum.cast("double") / n_words.cast("double")), 9
+        F.when(n_words > 0, char_sum.cast("double") / n_words.cast("double")), PARITY_DP
     )
     n_alpha = F.size(F.filter("__toks", lambda w: w.rlike("[a-z]"))).cast("long")
     alpha_ratio = F.round(
-        F.when(n_words > 0, n_alpha.cast("double") / n_words.cast("double")), 9
+        F.when(n_words > 0, n_alpha.cast("double") / n_words.cast("double")), PARITY_DP
     )
     n_sym = F.regexp_count(F.col(text_col), F.lit(r"#|\.\.\.")).cast("long")
     symbol_ratio = F.round(
-        F.when(n_words > 0, n_sym.cast("double") / n_words.cast("double")), 9
+        F.when(n_words > 0, n_sym.cast("double") / n_words.cast("double")), PARITY_DP
     )
     from ..functions.text import stopword_hits
 
@@ -514,7 +515,7 @@ def pmi_collocations(
             "c_ab",
             "c_a",
             "c_b",
-            F.round(pmi, 9).alias("pmi_r"),
+            F.round(pmi, PARITY_DP).alias("pmi_r"),
         )
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
@@ -656,7 +657,7 @@ def ngram_lm_score(
             F.count(F.lit(1)).alias("n_ngrams"),
             F.round(
                 F.sum("__lp").cast("double") / F.count(F.lit(1)).cast("double"),
-                9,
+                PARITY_DP,
             ).alias("lm_score_r"),
         )
     )
@@ -707,7 +708,7 @@ def novelty_scores(
         F.round(
             F.sum((F.col("__df") == 1).cast("long")).cast("double")
             / F.count(F.lit(1)).cast("double"),
-            9,
+            PARITY_DP,
         ).alias("novelty_r"),
     )
 
@@ -779,7 +780,7 @@ def group_quality_gate(
     from ..functions.parity import davg
 
     stats = df.groupBy(group_col).agg(
-        F.round(davg(F.col(score_col), 18, 9), 9).alias(out_col)
+        F.round(davg(F.col(score_col), 18, 9), PARITY_DP).alias(out_col)
     )
     keep = stats.filter(F.col(out_col) >= min_mean)
     return df.join(F.broadcast(keep), group_col)
@@ -817,7 +818,6 @@ def source_ngram_overlap(
     text_col: str,
     group_col: str,
     n: int = 3,
-    round_dp: int = 9,
 ) -> DataFrame:
     """Pairwise n-gram overlap between corpus slices (sources, splits,
     snapshots): for every unordered pair of ``group_col`` values,
@@ -837,7 +837,7 @@ def source_ngram_overlap(
     G-row aggregate, broadcast into the final G²-row result; zero-
     overlap pairs are emitted (n_common = 0) so the matrix is total.
 
-    Ratios are ``round_dp``-rounded doubles over exact BIGINT counts
+    Ratios are ``PARITY_DP``-rounded doubles over exact BIGINT counts
     (round-before-compare; the counts themselves are order-exact).
     Output: (group_a, group_b, n_a, n_b, n_common, jaccard_r,
     containment_r) for every pair with group_a < group_b.
@@ -899,10 +899,10 @@ def source_ngram_overlap(
         "n_common",
         F.round(
             F.when(denom_j > 0, F.col("n_common") / denom_j).otherwise(0.0),
-            round_dp,
+            PARITY_DP,
         ).alias("jaccard_r"),
         F.round(
             F.when(denom_c > 0, F.col("n_common") / denom_c).otherwise(0.0),
-            round_dp,
+            PARITY_DP,
         ).alias("containment_r"),
     )

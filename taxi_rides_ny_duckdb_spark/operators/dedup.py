@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.parity import PARITY_DP
 from ..functions.text import jaccard, tokenize, word_shingles
 from ..session import barrier_filter, ensure_min_partitions
 
@@ -347,7 +348,6 @@ def ngram_jaccard_pairs(
     threshold: float,
     block_cols: tuple[str, ...] = (),
     shingle_n: int = 3,
-    round_dp: int | None = None,
 ) -> DataFrame:
     """Exact pairwise n-gram Jaccard ≥ threshold via an INVERTED-INDEX
     self-join (AllPairs/PPJoin family), optionally blocked on equality
@@ -372,8 +372,8 @@ def ngram_jaccard_pairs(
     MinHash-LSH path exists to avoid. Brute force remains only for
     ``threshold <= 0`` (every pair qualifies, index buys nothing).
 
-    ``round_dp`` applies round-before-threshold (same 9dp trick as the
-    ANN rank paths): the similarity is rounded BEFORE the ≥ filter so
+    The similarity is rounded at ``PARITY_DP`` BEFORE the ≥ filter
+    (round-before-threshold, the ANN rank paths' trick) so
     a pair sitting exactly on the threshold boundary cannot flip
     in/out of the result on a 1-ulp cross-engine difference. Jaccard
     here is a single int/int IEEE division so both engines agree
@@ -406,9 +406,7 @@ def ngram_jaccard_pairs(
         cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
         for c in block_cols:
             cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-        sim = jaccard(F.col("a.shingles"), F.col("b.shingles"))
-        if round_dp is not None:
-            sim = F.round(sim, round_dp)
+        sim = F.round(jaccard(F.col("a.shingles"), F.col("b.shingles")), PARITY_DP)
         return (
             a.join(b, cond)
             .withColumn("jaccard_sim", sim)
@@ -434,7 +432,7 @@ def ngram_jaccard_pairs(
     cond = (
         (F.col("a.__s") == F.col("b.__s"))
         & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        # lossless size-ratio prune (slack covers round_dp uplift)
+        # lossless size-ratio prune (slack covers the rounding uplift)
         & (F.col("a.__n") >= F.lit(threshold - 1e-9) * F.col("b.__n"))
         & (F.col("b.__n") >= F.lit(threshold - 1e-9) * F.col("a.__n"))
     )
@@ -450,9 +448,10 @@ def ngram_jaccard_pairs(
         )
         .agg(F.count(F.lit(1)).alias("__inter"))
     )
-    sim = F.col("__inter") / (F.col("__na") + F.col("__nb") - F.col("__inter"))
-    if round_dp is not None:
-        sim = F.round(sim, round_dp)
+    sim = F.round(
+        F.col("__inter") / (F.col("__na") + F.col("__nb") - F.col("__inter")),
+        PARITY_DP,
+    )
     return (
         inter.withColumn("jaccard_sim", sim)
         .filter(F.col("jaccard_sim") >= threshold)

@@ -34,6 +34,7 @@ from typing import Iterator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.parity import PARITY_DP
 from ..session import ensure_min_partitions
 
 
@@ -107,11 +108,11 @@ def train_pca(
 
 
 def _project_one(
-    vec: Column, mean: list[float], comp: list[float], scale: float,
-    round_dp: int | None,
+    vec: Column, mean: list[float], comp: list[float], scale: float
 ) -> Column:
-    """round(Σᵢ (x[i] − mean[i])·w[i] / scale, dp) as ONE sequential
-    fold — identical arithmetic to the oracle's list_sum replay."""
+    """round(Σᵢ (x[i] − mean[i])·w[i] / scale, PARITY_DP) as ONE
+    sequential fold — identical arithmetic to the oracle's list_sum
+    replay."""
     centered_dot = F.aggregate(
         F.zip_with(
             F.zip_with(vec, F.lit([float(m) for m in mean]), lambda x, m: x - m),
@@ -122,7 +123,7 @@ def _project_one(
         lambda acc, x: acc + x,
     )
     out = centered_dot / F.lit(float(scale)) if scale > 0 else F.lit(0.0)
-    return F.round(out, round_dp) if round_dp is not None else out
+    return F.round(out, PARITY_DP)
 
 
 def pca_whiten_project(
@@ -132,7 +133,6 @@ def pca_whiten_project(
     scales: list[float],
     vec_col: str = "embedding",
     out_prefix: str = "pc",
-    round_dp: int | None = 9,
     whiten: bool = True,
 ) -> DataFrame:
     """Project (and optionally whiten) every vector onto the frozen
@@ -154,7 +154,7 @@ def pca_whiten_project(
             outs.append(F.lit(0.0).alias(f"{out_prefix}{j}"))
         else:
             outs.append(
-                _project_one(vec, mean, comp, scale, round_dp).alias(
+                _project_one(vec, mean, comp, scale).alias(
                     f"{out_prefix}{j}"
                 )
             )

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.parity import PARITY_DP
 from ..functions.text import tokenize
 from ..session import ensure_min_partitions
 
@@ -255,7 +256,7 @@ def _pivot_scores(
         .select(
             F.col("__p.query_id").alias("query_id"),
             F.col(id_col),
-            F.round(F.col("__p.__s").cast("double"), 9).alias("score_r"),
+            F.round(F.col("__p.__s").cast("double"), PARITY_DP).alias("score_r"),
         )
     )
 
@@ -303,7 +304,7 @@ def _explode_scores(
     return (
         with_df.join(F.broadcast(qt), "term")
         .groupBy("query_id", id_col)
-        .agg(F.round(F.sum(addend).cast("double"), 9).alias("score_r"))
+        .agg(F.round(F.sum(addend).cast("double"), PARITY_DP).alias("score_r"))
     )
 
 
@@ -347,7 +348,7 @@ def rrf_fuse(
         F.round(
             F.coalesce(F.lit(1.0) / (F.lit(c) + F.col("__ra")), F.lit(0.0))
             + F.coalesce(F.lit(1.0) / (F.lit(c) + F.col("__rb")), F.lit(0.0)),
-            9,
+            PARITY_DP,
         ).alias("rrf_r"),
     )
     w = Window.partitionBy(query_col).orderBy(F.desc("rrf_r"), F.asc(id_col))

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..cache import scoped_persist
+from ..functions.parity import PARITY_DP, round_half_up
 
 # First 8 hex chars of md5 → 32-bit integer → uniform fraction. 2^32
 # buckets is plenty: split boundaries are exact to ~2.3e-10.
@@ -390,7 +391,7 @@ def weighted_sample_per_group(
     # negate so "largest draw wins" becomes the shared engine's
     # "smallest key wins"; round BEFORE the sign so the oracle's
     # round(-pow(...)) matches bit-for-bit (round is odd: r(-x)=-r(x))
-    key = -F.round(F.pow(u, F.lit(1.0) / F.col(weight_col)), 9)
+    key = -F.round(F.pow(u, F.lit(1.0) / F.col(weight_col)), PARITY_DP)
     eligible = df.filter(F.col(weight_col) > 0)
     return _keyed_top_per_group(eligible, key, id_col, group_col, n, two_level)
 
@@ -592,7 +593,7 @@ def dsir_scores(
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.sum("__lr").cast("double"), 9).alias("dsir_score_r"),
+            F.round(F.sum("__lr").cast("double"), PARITY_DP).alias("dsir_score_r"),
         )
     )
 
@@ -864,7 +865,7 @@ def temperature_mixture(
     one aggregation-bounded counts pass + the usual scan-CASE-filter
     projection — two scans, no data-sized shuffle."""
     import math
-    from decimal import ROUND_HALF_UP, Decimal
+    from decimal import Decimal
 
     if alpha < 0:
         raise ValueError(f"alpha must be >= 0, got {alpha}")
@@ -880,25 +881,18 @@ def temperature_mixture(
     if not counts:
         raise ValueError("no strata found")
 
-    def _round9(x: float) -> float:
-        # SQL ROUND, engine-faithful: both engines round the SHORTEST
-        # repr of the double, not its exact binary expansion — see
-        # classify._round9_half_up (r13) for the witness
-        return float(
-            Decimal(repr(x)).quantize(Decimal("1e-9"), rounding=ROUND_HALF_UP)
-        )
-
     pw = (
         (lambda n: math.sqrt(n))
         if alpha == 0.5
         else (lambda n: math.pow(n, alpha))
     )
-    weights = {s: _round9(pw(n)) for s, n in counts.items()}
+    weights = {s: round_half_up(pw(n), PARITY_DP) for s, n in counts.items()}
     total = float(sum(Decimal(repr(w)) for w in weights.values()))  # exact sum
     shares = {s: w / total for s, w in weights.items()}
     n_out = min(counts[s] / share for s, share in shares.items())
     fractions = {
-        s: min(1.0, _round9(shares[s] * n_out / counts[s])) for s in shares
+        s: min(1.0, round_half_up(shares[s] * n_out / counts[s], PARITY_DP))
+        for s in shares
     }
     return stratified_hash_sample(
         df, id_col, stratum_col, fractions, default_fraction=0.0, salt=salt

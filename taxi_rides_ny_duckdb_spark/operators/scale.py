@@ -93,15 +93,16 @@ def sink_scratch_dir(sf_dir: str, name: str) -> str:
     by the dataset directory basename so sf0.01 driver runs and sf0.1
     bench runs never collide, AND by pid so two concurrent sessions on
     the same SF (e.g. bench and the correctness driver) never race on
-    DROP TABLE + rmtree vs read (ADVICE r6). Nothing removes the
-    per-process root: reruns in one process rmtree before rewriting,
-    but every process leaves its ``_pid`` directory behind."""
+    DROP TABLE + rmtree vs read (ADVICE r6). Reruns in one process
+    rmtree before rewriting; the per-process root is removed when the
+    interpreter exits (``session.remove_at_exit``)."""
     import os
 
+    from ..session import remove_at_exit
+
     base = os.path.basename(sf_dir.rstrip("/")) or "default"
-    return os.path.join(
-        "/tmp", "spark_graft_sinks", f"{base}_pid{os.getpid()}", name
-    )
+    root = os.path.join("/tmp", "spark_graft_sinks", f"{base}_pid{os.getpid()}")
+    return os.path.join(remove_at_exit(root), name)
 
 
 def source_fingerprint(sf_dir: str, table: str) -> str:

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.parity import PARITY_DP, round_half_up_np
 from ..session import ensure_min_partitions
 
 from ..cache import scoped_persist
@@ -122,30 +123,17 @@ def _malformed_vector_error(
     return None
 
 
-def _round_half_away_nonneg_np(v):
-    """Exact half-away rounding of a NONNEGATIVE float64 ndarray — the
-    numpy twin of SQL ``round()`` (DuckDB ``std::round``; Spark
-    ``F.round`` = BigDecimal HALF_UP), both of which round the EXACT
-    binary value. The naive ``floor(v + 0.5)`` computes ``v + 0.5`` in
-    float FIRST and double-rounds on fractions just below one half
+def _round_half_away_nonneg_i64(v):
+    """Exact half-away rounding of a NONNEGATIVE float64 ndarray,
+    returned int64 — the numpy twin of SQL ``round()`` (DuckDB
+    ``std::round``; Spark ``F.round`` = BigDecimal HALF_UP), both of
+    which round the EXACT binary value at scale 0. The naive
+    ``floor(v + 0.5)`` computes ``v + 0.5`` in float FIRST and
+    double-rounds on fractions just below one half
     (v = 0.49999999999999994, the largest double < 0.5: +0.5 lands
     exactly on 1.0 under ties-to-even, so floor yields 1 where both
-    engines yield 0 — ADVICE r11). Here the fraction is recovered
-    exactly: with f = floor(v), either f = 0 (v − f = v, exact) or
-    f ≤ v < f + 1 ≤ 2f, so v − f is Sterbenz-exact, and the ≥ 0.5
-    comparison decides on the TRUE fraction. For v ≥ 2⁵³ (no fraction)
-    f == v and the result is v unchanged."""
-    import numpy as np
-
-    f = np.floor(v)
-    return f + (v - f >= 0.5)
-
-
-def _round_half_away_nonneg_i64(v):
-    """Exact half-away of a NONNEGATIVE float64 ndarray, returned
-    int64 — the E-step hot-loop form of ``_round_half_away_nonneg_np``
-    (same values, fewer passes). round(v) = floor(2v) − floor(v) for
-    v ≥ 0: 2v is EXACT (exponent bump, no mantissa rounding), and
+    engines yield 0 — ADVICE r11). Here round(v) = floor(2v) − floor(v)
+    for v ≥ 0: 2v is EXACT (exponent bump, no mantissa rounding), and
     frac(v) ≥ 0.5 ⇔ floor(2v) = 2·floor(v) + 1; the int64 cast IS
     floor for nonnegative doubles (C truncation toward zero), so two
     casts + one in-place subtract replace floor/subtract/compare/add.
@@ -163,9 +151,12 @@ def _round_half_away_nonneg_i64(v):
 
 def _round_half_away_signed_np(v):
     """Signed exact half-away twin of SQL ``round()`` — see
-    ``_round_half_away_nonneg_np`` for why ``copysign(floor(|v|+0.5),
+    ``_round_half_away_nonneg_i64`` for why ``copysign(floor(|v|+0.5),
     v)`` is NOT it (the +0.5 float add double-rounds at the
-    0.5−2⁻⁵⁴-class boundary)."""
+    0.5−2⁻⁵⁴-class boundary). The fraction is recovered exactly: with
+    f = floor(|v|), either f = 0 or f ≤ |v| < f + 1 ≤ 2f, so |v| − f
+    is Sterbenz-exact and the ≥ 0.5 comparison decides on the TRUE
+    fraction."""
     import numpy as np
 
     a = np.abs(v)
@@ -175,67 +166,9 @@ def _round_half_away_signed_np(v):
 
 def _round_half_away_int(v: float) -> int:
     """Driver-side scalar exact half-away of a nonnegative float —
-    same contract as ``_round_half_away_nonneg_np``."""
+    same contract as ``_round_half_away_nonneg_i64``."""
     f = math.floor(v)
     return f + (1 if v - f >= 0.5 else 0)
-
-
-def _round9_half_up_np(v):
-    """Vectorized twin of ``classify._round9_half_up`` (engine ROUND
-    at 9dp = HALF_UP on the SHORTEST repr of the double): the fast
-    path scales by 10⁹ and splits on the fractional part; values whose
-    fraction lands inside an ambiguity band around 0.5 (wider than the
-    worst float error of the ×10⁹ scaling, |frac−0.5| < 10⁻³) fall
-    back to the exact scalar Decimal(repr(x)) form — ~0.1% of uniform
-    inputs, so the Decimal cost disappears from the hot loop (the
-    grouped trainer's means are |leaf|·dim·iters values — 12.8M at
-    sf10). Sign is handled by symmetry (both engines round half AWAY
-    from zero; repr is sign-symmetric). Exactness is property-tested
-    against the scalar form and both engines
-    (test_round9_vectorized_matches_scalar)."""
-    import numpy as np
-
-    from .classify import _round9_half_up
-
-    a = np.abs(v)
-    scaled = a * 1e9
-    f = np.floor(scaled)
-    frac = scaled - f
-    ambiguous = np.abs(frac - 0.5) < 1e-3
-    # values too large for a meaningful 9dp fraction (≥ 2⁵³/1e9) are
-    # returned unchanged by the scalar form too — route them slow
-    ambiguous |= ~np.isfinite(scaled) | (a >= 2**53 / 1e9)
-    k = f + (frac >= 0.5)
-    out = np.copysign(k / 1e9, v)
-    if ambiguous.any():
-        idx = np.nonzero(ambiguous)[0]
-        vals = np.asarray(v, dtype=np.float64)
-        for i in idx:
-            out[i] = _round9_half_up(float(vals[i]))
-    return out
-
-
-def _round_dp_np(vals, dp: int):
-    """The ``F.round(·, dp)`` twin on a float64 array of any shape:
-    ``_round9_half_up_np`` at dp=9, else HALF_UP on the scalar
-    ``Decimal(repr(x))`` per value (both engines round the shortest
-    repr at fractional scales). Property-tested against ``F.round`` at
-    dp 3, 6 and 9 (test_round9_vectorized_matches_scalar)."""
-    import numpy as np
-
-    v = np.asarray(vals, dtype=np.float64)
-    if dp == 9:
-        return _round9_half_up_np(v.ravel()).reshape(v.shape)
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q = Decimal(1).scaleb(-dp)
-    return np.array(
-        [
-            float(Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP))
-            for x in v.ravel()
-        ],
-        dtype=np.float64,
-    ).reshape(v.shape)
 
 
 # ── the one scaled-int64 Lloyd kernel ──
@@ -341,7 +274,9 @@ def _lloyd_means_np(S, counts):
     import numpy as np
 
     v = np.asarray(S, dtype=np.float64) / 1e12
-    return _round_dp_np(v / np.asarray(counts, dtype=np.float64)[:, None], 9)
+    return round_half_up_np(
+        v / np.asarray(counts, dtype=np.float64)[:, None], PARITY_DP
+    )
 
 
 def _lloyd_rounds_np(X, C0, iters: int):
@@ -610,7 +545,6 @@ def lsh_topk(
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "query_vec",
-    score_round_dp: int | None = None,
 ) -> DataFrame:
     """ANN top-k: bucket corpus and queries by random-hyperplane
     signature, score only within the shared bucket. ~2^bits× less work
@@ -618,7 +552,7 @@ def lsh_topk(
     a different bucket than their neighbors — use fewer bits or
     multi-probe for higher recall).
 
-    ``score_round_dp`` rounds the cosine BEFORE the rank window
+    The cosine is rounded at ``PARITY_DP`` BEFORE the rank window
     (round-before-rank): near-tie ranks then survive any future
     reassociation of the dot fold on either engine."""
     c = ensure_min_partitions(corpus).withColumn(
@@ -631,9 +565,9 @@ def lsh_topk(
             rh_signature(F.col(query_vec), dim, bits).alias("__sig"),
         )
     )
-    score = cosine(F.col("__qv"), _as_double_array(F.col(corpus_vec)))
-    if score_round_dp is not None:
-        score = F.round(score, score_round_dp)
+    score = F.round(
+        cosine(F.col("__qv"), _as_double_array(F.col(corpus_vec))), PARITY_DP
+    )
     scored = (
         c.join(q, "__sig")
         .select(
@@ -674,17 +608,15 @@ def train_ivf_centroids(
     return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
-def _centroid_ranking(
-    vec: Column, centroids: list[list[float]], round_dp: int | None = None
-) -> Column:
+def _centroid_ranking(vec: Column, centroids: list[list[float]]) -> Column:
     """array<struct<d,i>> of (squared L2 distance, centroid id), sorted
     ascending — [0].i is the nearest list, slice(..., nprobe) the probe
     set. Pure codegen expression: nlist × dim multiply-adds per row,
     no UDF, no shuffle.
 
-    ``round_dp`` rounds each distance before the sort — same
+    Each distance is rounded at ``PARITY_DP`` before the sort — same
     engine-stability trick as assign_nearest_centroid: a SQL oracle
-    ranking round(d2, dp) then reproduces the probe-list choice even if
+    ranking round(d2, 9) then reproduces the probe-list choice even if
     the last ulp of the fold ever differed."""
     def d2(c: list[float]) -> Column:
         d = F.aggregate(
@@ -693,7 +625,7 @@ def _centroid_ranking(
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
-        return F.round(d, round_dp) if round_dp is not None else d
+        return F.round(d, PARITY_DP)
 
     dists = F.array(*[d2(c).alias("d") for c in centroids])
     ids = F.sequence(F.lit(0), F.lit(len(centroids) - 1))
@@ -705,7 +637,6 @@ def assign_nearest_centroid(
     centroids: list[list[float]],
     vec_col: str = "embedding",
     out_col: str = "centroid_id",
-    round_dp: int | None = None,
 ) -> DataFrame:
     """K-means assignment step as a pure projection: nearest centroid
     by squared L2, ties to the lower centroid id. The scan-scale half
@@ -713,10 +644,10 @@ def assign_nearest_centroid(
     shuffle, no UDF), so at 100 TB this is a single map over the
     corpus at whatever parallelism the scan has.
 
-    ``round_dp`` rounds each distance before the argmin — pass it when
-    an external engine must reproduce the assignment exactly (float
-    sums can differ in the last ulp; rounding makes the comparison,
-    and hence the argmin, engine-stable)."""
+    Each distance is rounded at ``PARITY_DP`` before the argmin, so an
+    external engine reproduces the assignment exactly (float sums can
+    differ in the last ulp; rounding makes the comparison, and hence
+    the argmin, engine-stable)."""
     vec = _as_double_array(F.col(vec_col))
     structs = []
     for i, c in enumerate(centroids):
@@ -727,13 +658,16 @@ def assign_nearest_centroid(
         # regresses 4× (r8 measurement: semdedup 4.6 → 17.3 s). The
         # corpus-scale iterative trainer (kmeans_lloyd) runs the numpy
         # Lloyd kernel (_lloyd_assign_np) in Arrow batches instead.
-        d = F.aggregate(
-            F.zip_with(vec, F.lit([float(x) for x in c]), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+        d = F.round(
+            F.aggregate(
+                F.zip_with(
+                    vec, F.lit([float(x) for x in c]), lambda a, b: (a - b) * (a - b)
+                ),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ),
+            PARITY_DP,
         )
-        if round_dp is not None:
-            d = F.round(d, round_dp)
         structs.append(F.struct(d.alias("d"), F.lit(i).alias("i")))
     return df.withColumn(out_col, F.array_min(F.array(*structs))["i"])
 
@@ -749,8 +683,6 @@ def ivf_topk(
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "query_vec",
-    round_dp: int | None = None,
-    score_round_dp: int | None = None,
 ) -> DataFrame:
     """IVF ANN top-k (the FAISS IndexIVFFlat scheme, Spark-native):
     k-means coarse quantizer partitions the corpus into ``nlist``
@@ -764,9 +696,9 @@ def ivf_topk(
     windows on query_id. Pre-assigning + partitioning the corpus by
     ``__list`` turns repeated query batches into partition-pruned scans.
 
-    ``round_dp`` stabilizes both halves of the quantizer (corpus
-    assignment + query probe ranking) against last-ulp fold drift;
-    ``score_round_dp`` rounds the cosine BEFORE the rank window, so
+    Rounding at ``PARITY_DP`` stabilizes both halves of the quantizer
+    (corpus assignment + query probe ranking) against last-ulp fold
+    drift, and the cosine is rounded BEFORE the rank window, so
     near-tie ranks are engine-reproducible too (the round-before-rank
     convention of the oracled ANN queries).
 
@@ -778,7 +710,7 @@ def ivf_topk(
         _as_double_array(F.col(corpus_vec)).alias("__cv"),
     )
     c = c.withColumn(
-        "__list", _centroid_ranking(F.col("__cv"), centroids, round_dp)[0]["i"]
+        "__list", _centroid_ranking(F.col("__cv"), centroids)[0]["i"]
     ).withColumn("__n", l2_norm(F.col("__cv")))
     q = F.broadcast(
         queries.select(
@@ -787,7 +719,7 @@ def ivf_topk(
             F.explode(
                 F.slice(
                     _centroid_ranking(
-                        _as_double_array(F.col(query_vec)), centroids, round_dp
+                        _as_double_array(F.col(query_vec)), centroids
                     ),
                     1,
                     nprobe,
@@ -799,11 +731,10 @@ def ivf_topk(
     # loop then runs ONE interpreted fold per pair instead of three —
     # bit-identical values (r11; the ext_embedding_near_dup_exact
     # precedent, measured ~2.6x there).
-    score = cosine_given_norms(
-        F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__n")
+    score = F.round(
+        cosine_given_norms(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__n")),
+        PARITY_DP,
     )
-    if score_round_dp is not None:
-        score = F.round(score, score_round_dp)
     scored = c.join(q, "__list").select(
         F.col(query_id),
         F.col(corpus_id),
@@ -826,13 +757,12 @@ def embedding_near_dup_pairs(
     bits: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    score_round_dp: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup: bucket by RH signature, pair within
     buckets (a < b), keep cosine ≥ threshold. The embedding analog of
     MinHash-LSH dedup.
 
-    ``score_round_dp`` rounds the cosine BEFORE the threshold
+    The cosine is rounded at ``PARITY_DP`` BEFORE the threshold
     comparison, so threshold-boundary pairs are engine-reproducible
     (round-before-threshold, same rationale as lsh_topk).
 
@@ -859,7 +789,6 @@ def embedding_near_dup_pairs(
         rh_signature(F.col(vec_col), dim, bits).alias("__sig"),
     )
     thr = float(threshold)
-    dp = None if score_round_dp is None else int(score_round_dp)
     idt = dict(df.dtypes)[id_col]
     schema = f"id_a {idt}, id_b {idt}, cosine_sim double"
 
@@ -903,9 +832,7 @@ def embedding_near_dup_pairs(
                     0.0,
                 )
                 ii, jj = np.nonzero(iu[:, None] < ju[None, :])
-                s = sim[ii, jj]
-                if dp is not None:
-                    s = _round_dp_np(s, dp)
+                s = round_half_up_np(sim[ii, jj], PARITY_DP)
                 keep = s >= thr
                 out_a.extend(ids[iu[ii[keep]]])
                 out_b.extend(ids[ju[jj[keep]]])
@@ -928,7 +855,6 @@ def group_medoid(
     group_col: str,
     vec_col: str,
     id_col: str,
-    round_dp: int | None = None,
     max_group: int | None = None,
 ) -> DataFrame:
     """Per-group medoid: the member minimizing total cosine distance to
@@ -993,13 +919,12 @@ def group_medoid(
         # entirely (VERDICT r6 #8 asked for a guard; the linear form
         # makes one unnecessary — guard kept only as a cheap sanity
         # bound below). Self-sim contributes a constant 1.
-        totals = unit @ unit.sum(axis=0)
-        if round_dp is not None:
-            # Engine-stable argmax (same trick as assign_nearest_centroid):
-            # float sums agree across engines to ~1e-13; rounding makes
-            # the winner — and first-occurrence (= lowest id) tie-breaks —
-            # reproducible by a SQL oracle ranking round(total, dp) DESC.
-            totals = np.round(totals, round_dp)
+        # Engine-stable argmax (same trick as assign_nearest_centroid):
+        # float sums agree across engines to ~1e-13; rounding HALF_UP
+        # like F.round makes the winner — and first-occurrence (= lowest
+        # id) tie-breaks — reproducible by a SQL oracle ranking
+        # round(total, 9) DESC.
+        totals = round_half_up_np(unit @ unit.sum(axis=0), PARITY_DP)
         best = int(np.argmax(totals))  # max total sim == min total dist
         n = len(pdf)
         # n - totals[best] is 0 up to float epsilon for singletons and
@@ -1049,7 +974,7 @@ def ann_recall_at_k(ann: DataFrame, exact: DataFrame, k: int) -> DataFrame:
             "n_true",
             F.coalesce("n_hit", F.lit(0)).cast("bigint").alias("n_hit"),
             F.round(
-                F.coalesce("n_hit", F.lit(0)) / F.col("n_true"), 9
+                F.coalesce("n_hit", F.lit(0)) / F.col("n_true"), PARITY_DP
             ).alias("recall_at_k"),
         )
     )
@@ -1138,7 +1063,7 @@ def hard_negative_topk(
         .select(
             F.col(query_id),
             F.col(corpus_id),
-            F.round(cosine(F.col("__qv"), F.col("__cv")), 9).alias(
+            F.round(cosine(F.col("__qv"), F.col("__cv")), PARITY_DP).alias(
                 "cosine_sim_r"
             ),
         )
@@ -1164,8 +1089,6 @@ def hard_negative_topk_ann(
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "query_vec",
-    round_dp: int | None = None,
-    score_round_dp: int = 9,
     min_partitions: int | None = None,
 ) -> DataFrame:
     """ANN-backed hard-negative mining — the SCALE path (VERDICT r6
@@ -1192,8 +1115,8 @@ def hard_negative_topk_ann(
     false negative sneaks in via a neighboring list — the guarantee is
     identical to the exact path's, only coverage is approximate.
 
-    ``round_dp`` / ``score_round_dp``: the same engine-stability
-    rounding as ``ivf_topk`` (round-before-argmin on the quantizer,
+    Rounding: the same ``PARITY_DP`` engine-stability rounding as
+    ``ivf_topk`` (round-before-argmin on the quantizer,
     round-before-rank on the score). ``components`` may be a full
     frame or an ``emit="mapping"`` edge-touched mapping — absent ids
     are singletons via left join + coalesce, as in
@@ -1214,9 +1137,7 @@ def hard_negative_topk_ann(
             "left",
         )
         .withColumn("__cc", F.coalesce(F.col("__cc"), F.col(corpus_id)))
-        .withColumn(
-            "__list", _centroid_ranking(F.col("__cv"), centroids, round_dp)[0]["i"]
-        )
+        .withColumn("__list", _centroid_ranking(F.col("__cv"), centroids)[0]["i"])
     )
     comp_q = F.broadcast(
         components.select(
@@ -1230,7 +1151,7 @@ def hard_negative_topk_ann(
             F.explode(
                 F.slice(
                     _centroid_ranking(
-                        _as_double_array(F.col(query_vec)), centroids, round_dp
+                        _as_double_array(F.col(query_vec)), centroids
                     ),
                     1,
                     nprobe,
@@ -1246,7 +1167,7 @@ def hard_negative_topk_ann(
         .select(
             F.col(query_id),
             F.col(corpus_id),
-            F.round(cosine(F.col("__qv"), F.col("__cv")), score_round_dp).alias(
+            F.round(cosine(F.col("__qv"), F.col("__cv")), PARITY_DP).alias(
                 "cosine_sim_r"
             ),
         )
@@ -1275,9 +1196,6 @@ def hard_negative_mine_fused(
     id_col: str = "vec_id",
     vec_col: str = "ev",
     is_query_col: str = "is_query",
-    round_dp: int = 9,
-    pair_round_dp: int = 9,
-    score_round_dp: int = 9,
 ) -> DataFrame:
     """The WHOLE hard-negative mining pipeline — near-dup pair graph,
     transitive closure, (optional IVF) candidate generation, exact
@@ -1296,9 +1214,8 @@ def hard_negative_mine_fused(
     Above the gate it runs that composition: the rounded-cosine pair
     self-join → ``connected_components`` (mapping) →
     ``hard_negative_topk``, or ``hard_negative_topk_ann`` when
-    ``centroids`` is given. Without centroids the score is rounded at
-    9 dp (``hard_negative_topk``'s contract), so ``score_round_dp``
-    must be 9 there.
+    ``centroids`` is given. Every pair cosine, centroid distance and
+    score rounds at ``PARITY_DP``.
 
     ``df`` holds the corpus with a boolean ``is_query_col`` marking the
     query subset (queries ⊆ corpus). Returns (query_id, rank, vec_id,
@@ -1309,32 +1226,24 @@ def hard_negative_mine_fused(
     - pair graph: ``_collapse_cluster_np`` over the id-sorted corpus —
       dim-sequential blocked dot (== the engine fold), in-task norms
       (== ``l2_norm``'s fold + sqrt), margin prefilter + exact
-      ``F.round`` twin at ``pair_round_dp``, min-member-id union-find
+      ``F.round`` twin, min-member-id union-find
       (== ``connected_components``); every id gets a component, absent
       edges leave it a self-singleton (== left join + coalesce);
-    - IVF candidates (``centroids`` given): ``_nearest_centroid_np`` at
-      ``round_dp`` gives the corpus list (== the ``array_sort``/struct
+    - IVF candidates (``centroids`` given): ``_nearest_centroid_np``
+      gives the corpus list (== the ``array_sort``/struct
       ties-to-lower-cid) and the distance rows; the query probe set is
       the first ``nprobe`` of the (d, i)-lexicographic ranking (==
       sliced ``_centroid_ranking``); a corpus row is a candidate iff
       its own list is in the query's probe set (== the ``__list``
       equi-join);
     - score: sequential-fold dot / (norm·norm), zero-norm → 0.0
-      (== ``cosine()``), rounded through the twin at
-      ``score_round_dp``; rank = first k under (score desc, id asc)
-      via stable lexsort (== ``row_number``), query's own component
+      (== ``cosine()``), rounded through the twin; rank = first k
+      under (score desc, id asc) via stable lexsort (== ``row_number``), query's own component
       (hence itself) excluded exactly as the distributed filter."""
     import numpy as np
     import pandas as pd
 
     thr = float(pair_threshold)
-    pdp = int(pair_round_dp)
-    sdp = int(score_round_dp)
-    if centroids is None and sdp != 9:
-        raise ValueError(
-            "hard_negative_mine_fused: without centroids the score is "
-            f"rounded at 9 dp (hard_negative_topk), got score_round_dp={sdp}"
-        )
     n = df.count()
     if n > _FUSED_LLOYD_MAX_ROWS or n * n > _FUSED_LLOYD_MAX_CELLS:
         from .dedup import connected_components
@@ -1353,7 +1262,7 @@ def hard_negative_mine_fused(
         )
         pairs = (
             a.join(b, F.col("id_a") < F.col("id_b"))
-            .filter(F.round(sim, pdp) >= thr)
+            .filter(F.round(sim, PARITY_DP) >= thr)
             .select("id_a", "id_b")
         )
         comp = connected_components(pairs, "id_a", "id_b", emit="mapping")
@@ -1367,7 +1276,7 @@ def hard_negative_mine_fused(
             )
         return hard_negative_topk_ann(
             corpus, queries, comp, k, centroids, nprobe, corpus_id=id_col,
-            corpus_vec="__v", round_dp=round_dp, score_round_dp=sdp,
+            corpus_vec="__v",
         )
 
     C = (
@@ -1375,7 +1284,6 @@ def hard_negative_mine_fused(
         if centroids is not None
         else None
     )
-    quant_dp = int(round_dp) if round_dp is not None else None
 
     dtypes = dict(df.dtypes)
     idt = dtypes[id_col]
@@ -1396,10 +1304,10 @@ def hard_negative_mine_fused(
         for d in range(dim):  # sequential over dims == fold order
             nv += X[:, d] * X[:, d]
         nv = np.sqrt(nv)
-        root, _keep = _collapse_cluster_np(ids, X, nv, nv, thr, pdp)
+        root, _keep = _collapse_cluster_np(ids, X, nv, nv, thr)
         comp = ids[root]
         if C is not None:
-            clist, D = _nearest_centroid_np(X, C, quant_dp)
+            clist, D = _nearest_centroid_np(X, C)
         out_q, out_r, out_i, out_s = [], [], [], []
         for qi in np.nonzero(isq)[0]:
             if C is not None:
@@ -1420,7 +1328,7 @@ def hard_negative_mine_fused(
             for d in range(dim):
                 dot += X[qi, d] * B[:, d]
             ok = (nv[qi] > 0) & (nv[cand] > 0)
-            sc = _round_dp_np(
+            sc = round_half_up_np(
                 np.where(
                     ok,
                     np.divide(
@@ -1431,7 +1339,7 @@ def hard_negative_mine_fused(
                     ),
                     0.0,
                 ),
-                sdp,
+                PARITY_DP,
             )
             order = np.lexsort((ids[cand], -sc))[: int(k)]
             out_q.extend([ids[qi]] * len(order))
@@ -1495,7 +1403,6 @@ def quantized_topk(
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "query_vec",
-    round_dp: int = 9,
 ) -> DataFrame:
     """Brute-force top-k over int8-QUANTIZED vectors: the
     storage-efficient exact-scan baseline (SQ8 in FAISS terms). Same
@@ -1504,8 +1411,8 @@ def quantized_topk(
     small exact integers (|q_i| ≤ 127, dims ≤ thousands), so the dot
     products and norms are EXACT in double arithmetic and the ranking
     is bit-reproducible across engines by construction, no rounding
-    epsilon needed (``round_dp`` guards only the final similarity
-    VALUE's division). Quantization error vs the float path is bounded
+    epsilon needed (``PARITY_DP`` rounding guards only the final
+    similarity VALUE's division). Quantization error vs the float path is bounded
     per component by scale/2; certify recall on real data with
     ``ann_recall_at_k`` against ``brute_force_topk``.
 
@@ -1523,7 +1430,7 @@ def quantized_topk(
         .withColumn("__cq", _as_double_array(quantize_int8(F.col("__v"), cscale)))
         .select(corpus_id, "__cq")
     )
-    sim = F.round(cosine(F.col("__qq"), F.col("__cq")), round_dp)
+    sim = F.round(cosine(F.col("__qq"), F.col("__cq")), PARITY_DP)
     scored = c.crossJoin(q).select(
         F.col(query_id), F.col(corpus_id), sim.alias("qcos_r")
     )
@@ -1548,8 +1455,6 @@ def ivf_quantized_topk(
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "query_vec",
-    round_dp: int | None = None,
-    score_round_dp: int = 9,
 ) -> DataFrame:
     """IVF-SQ8 ANN top-k (the FAISS IndexIVFScalarQuantizer scheme,
     Spark-native): the coarse quantizer assigns lists on the
@@ -1574,9 +1479,7 @@ def ivf_quantized_topk(
         .select(F.col(corpus_id), _as_double_array(F.col(corpus_vec)).alias("__cv"))
         .select(
             F.col(corpus_id),
-            _centroid_ranking(F.col("__cv"), centroids, round_dp)[0]["i"].alias(
-                "__list"
-            ),
+            _centroid_ranking(F.col("__cv"), centroids)[0]["i"].alias("__list"),
             _as_double_array(quantize_int8(F.col("__cv"), cscale)).alias("__cq"),
         )
     )
@@ -1591,12 +1494,12 @@ def ivf_quantized_topk(
             _as_double_array(quantize_int8(F.col("__qv"), qscale)).alias("__qq"),
             F.explode(
                 F.slice(
-                    _centroid_ranking(F.col("__qv"), centroids, round_dp), 1, nprobe
+                    _centroid_ranking(F.col("__qv"), centroids), 1, nprobe
                 )["i"]
             ).alias("__list"),
         )
     )
-    sim = F.round(cosine(F.col("__qq"), F.col("__cq")), score_round_dp)
+    sim = F.round(cosine(F.col("__qq"), F.col("__cq")), PARITY_DP)
     scored = c.join(q, "__list").select(
         F.col(query_id), F.col(corpus_id), sim.alias("qcos_r")
     )
@@ -1616,7 +1519,6 @@ def semdedup(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_dp: int = 9,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup via embedding
     clusters — assign every vector to its nearest centroid, pair ONLY
@@ -1646,15 +1548,14 @@ def semdedup(
     import numpy as np
 
     C = np.asarray([[float(x) for x in c] for c in centroids], dtype=np.float64)
-    dp = int(round_dp)
     n = df.count()
     if n <= _FUSED_LLOYD_MAX_ROWS and n * len(centroids) <= _FUSED_LLOYD_MAX_CELLS:
-        return _semdedup_frozen_fused(df, C, threshold, id_col, vec_col, dp)
+        return _semdedup_frozen_fused(df, C, threshold, id_col, vec_col)
     idt = dict(df.dtypes)[id_col]
 
     def assign(batches):
         for pdf in batches:
-            a, _D = _nearest_centroid_np(_vec_matrix(pdf["__v"], C.shape[1]), C, dp)
+            a, _D = _nearest_centroid_np(_vec_matrix(pdf["__v"], C.shape[1]), C)
             yield pdf.assign(centroid_id=a.astype(np.int32))
 
     members = (
@@ -1663,18 +1564,17 @@ def semdedup(
         .mapInPandas(assign, f"{id_col} {idt}, __v array<double>, centroid_id int")
     )
     return _semdedup_collapse(
-        members, _centroid_frame(df.sparkSession, centroids), threshold,
-        id_col, round_dp,
+        members, _centroid_frame(df.sparkSession, centroids), threshold, id_col
     )
 
 
-def _nearest_centroid_np(X, C, dp: int | None):
+def _nearest_centroid_np(X, C):
     """Frozen-centroid assignment in numpy: returns ``(a, D)`` — D the
     (n, k) squared-L2 matrix, each entry accumulated dim-SEQUENTIALLY
     (``D[:, i] += (x_d − c_d)²`` for d ascending, the identical IEEE
     order as ``assign_nearest_centroid``'s ``aggregate(zip_with(...))``
-    left fold) and rounded through ``_round_dp_np`` at ``dp`` (None:
-    unrounded); a the argmin with NaN ranked greatest (``array_min``'s
+    left fold) and rounded through ``round_half_up_np`` at
+    ``PARITY_DP``; a the argmin with NaN ranked greatest (``array_min``'s
     double ordering, via +inf) and the first minimum on ties (the
     struct ordering's ties-to-lower-cid)."""
     import numpy as np
@@ -1683,13 +1583,12 @@ def _nearest_centroid_np(X, C, dp: int | None):
     for d in range(C.shape[1]):  # sequential over dims == fold order
         t = X[:, d : d + 1] - C[:, d][None, :]
         D += t * t
-    if dp is not None:
-        D = _round_dp_np(D, dp)
+    D = round_half_up_np(D, PARITY_DP)
     return np.where(np.isnan(D), np.inf, D).argmin(axis=1), D
 
 
 def _semdedup_frozen_fused(
-    df: DataFrame, C, threshold: float, id_col: str, vec_col: str, dp: int
+    df: DataFrame, C, threshold: float, id_col: str, vec_col: str
 ) -> DataFrame:
     """``semdedup`` against FROZEN centroids as ONE task below the
     ``_FUSED_LLOYD_*`` gate: ``_nearest_centroid_np`` then
@@ -1711,8 +1610,8 @@ def _semdedup_frozen_fused(
         pdf = pdf.sort_values(id_col)
         ids = pdf[id_col].to_numpy()
         X = _vec_matrix(pdf["__v"], C.shape[1])
-        a, _D = _nearest_centroid_np(X, C, dp)
-        component, sims, keep = _semdedup_tail_np(ids, X, a, C, threshold, dp)
+        a, _D = _nearest_centroid_np(X, C)
+        component, sims, keep = _semdedup_tail_np(ids, X, a, C, threshold)
         return pd.DataFrame(
             {
                 id_col: ids,
@@ -1731,7 +1630,7 @@ def _semdedup_frozen_fused(
     return v0.groupBy("__g").applyInPandas(fn, schema)
 
 
-def _collapse_cluster_np(ids, X, nrm, sims, thr: float, dp: int):
+def _collapse_cluster_np(ids, X, nrm, sims, thr: float):
     """One cluster's pairing + transitive closure + keep rule, the
     per-cluster loop of ``_semdedup_tail_np`` (and the pair graph of
     ``hard_negative_mine_fused``). ``ids`` MUST be sorted ascending
@@ -1755,7 +1654,8 @@ def _collapse_cluster_np(ids, X, nrm, sims, thr: float, dp: int):
         return r
 
     if n >= 2:
-        margin = thr - 10.0 ** (-dp)  # sound prefilter: rounding moves < 10^-dp
+        # sound prefilter: rounding moves a value < 10^-PARITY_DP
+        margin = thr - 10.0 ** (-PARITY_DP)
         dim = X.shape[1]
         chunk = 512
         for i0 in range(0, n, chunk):
@@ -1780,7 +1680,7 @@ def _collapse_cluster_np(ids, X, nrm, sims, thr: float, dp: int):
                 ii, jj = np.nonzero(mask)
                 if not len(ii):
                     continue
-                hit = _round_dp_np(sim[ii, jj], dp) >= thr
+                hit = round_half_up_np(sim[ii, jj], PARITY_DP) >= thr
                 for a, b in zip(iu[ii[hit]], ju[jj[hit]]):
                     ra, rb = find(int(a)), find(int(b))
                     if ra == rb:
@@ -1801,7 +1701,7 @@ def _collapse_cluster_np(ids, X, nrm, sims, thr: float, dp: int):
     return root, keep
 
 
-def _semdedup_tail_np(ids, X, centroid_id, C, threshold: float, round_dp: int):
+def _semdedup_tail_np(ids, X, centroid_id, C, threshold: float):
     """The SemDeDup tail every path ends in: own-centroid keep score,
     then pairing + transitive closure + keep rule per cluster. ``ids``
     sorted ascending, ``X`` the (n, dim) float64 vectors,
@@ -1821,14 +1721,15 @@ def _semdedup_tail_np(ids, X, centroid_id, C, threshold: float, round_dp: int):
       operation order as the engine's left-to-right ``aggregate`` fold
       and the oracle's ``list_sum(list_transform)``; sqrt after;
     - cent_sim_r = dot / (‖x‖·‖c‖), zero-norm → 0.0 (the ``cosine()``
-      convention), rounded through ``_round_dp_np`` (the ``F.round``
-      twin);
+      convention), rounded through ``round_half_up_np`` (the
+      ``F.round`` twin);
     - pair candidates: the same sequential-fold dot over vectorized
       pair blocks within a cluster, index order == id order (``ids``
       sorted) so the upper-triangle mask is ``id_a < id_b``; the
-      margin prefilter at ``threshold − 10^−round_dp`` is a sound
-      superset (dp-rounding moves a value < 10^−dp) and the EXACT
-      filter ``round(cos, dp) ≥ threshold`` applies the same twin;
+      margin prefilter at ``threshold − 10^−PARITY_DP`` is a sound
+      superset (rounding moves a value < 10^−PARITY_DP) and the EXACT
+      filter ``round(cos, PARITY_DP) ≥ threshold`` applies the same
+      twin;
     - components: union-find attaching the larger root under the
       smaller, so the representative is the min member id —
       ``connected_components``' contract; pair-free rows stay their
@@ -1853,18 +1754,16 @@ def _semdedup_tail_np(ids, X, centroid_id, C, threshold: float, round_dp: int):
         cn += C[:, d] * C[:, d]
     nv, cna = np.sqrt(nv), np.sqrt(cn)[centroid_id]
     ok = (nv > 0) & (cna > 0)
-    sims = _round_dp_np(
+    sims = round_half_up_np(
         np.where(ok, np.divide(dot_vc, nv * cna, out=np.zeros(n), where=ok), 0.0),
-        round_dp,
+        PARITY_DP,
     )
     thr = float(threshold)
     component = np.empty(n, dtype=ids.dtype)
     keep = np.zeros(n, dtype=bool)
     for ci in np.unique(centroid_id):
         idx = np.nonzero(centroid_id == ci)[0]  # id-ascending within cluster
-        root, kp = _collapse_cluster_np(
-            ids[idx], X[idx], nv[idx], sims[idx], thr, round_dp
-        )
+        root, kp = _collapse_cluster_np(ids[idx], X[idx], nv[idx], sims[idx], thr)
         component[idx] = ids[idx][root]
         keep[idx] = kp
     return component, sims, keep
@@ -1884,7 +1783,6 @@ def _semdedup_collapse(
     cents: DataFrame,
     threshold: float,
     id_col: str,
-    round_dp: int,
 ) -> DataFrame:
     """The above-gate SemDeDup tail: ``_semdedup_tail_np`` once per
     cluster. ``members`` carries (id_col, centroid_id, __v); ``cents``
@@ -1911,7 +1809,7 @@ def _semdedup_collapse(
         C = np.asarray(list(cent["cv"]), dtype=np.float64)
         X = _vec_matrix(mem["__v"], C.shape[1])
         component, sims, keep = _semdedup_tail_np(
-            ids, X, np.zeros(n, dtype=np.int64), C, threshold, round_dp
+            ids, X, np.zeros(n, dtype=np.int64), C, threshold
         )
         return pd.DataFrame(
             {
@@ -1943,7 +1841,6 @@ def semdedup_auto(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     iters: int = 2,
-    round_dp: int = 9,
     max_flat_nlist: int = 64,
     max_branch: int = 64,
     levels: int | None = None,
@@ -1963,7 +1860,7 @@ def semdedup_auto(
     Assignment here is one more ``_lloyd_assign_np`` with the final
     centroids — the kernel training runs on both sides of the
     ``_FUSED_LLOYD_*`` gate, so both share one oracle. The keep-rule
-    score (own-centroid cosine, ``round_dp``-rounded) and the
+    score (own-centroid cosine, ``PARITY_DP``-rounded) and the
     per-cluster pairing + closure + keep-the-most-atypical run in
     ``_semdedup_tail_np``, shared with
     ``semdedup``; above the gate the k-row centroid frame travels to
@@ -2026,7 +1923,7 @@ def semdedup_auto(
             raise ValueError(f"levels must be >= 2, got {levels}")
         return _semdedup_multilevel(
             df, n, target_cluster_size, nlist, threshold, id_col, vec_col,
-            iters, round_dp, levels,
+            iters, levels,
         )
     if n <= _FUSED_LLOYD_MAX_ROWS and n * nlist <= _FUSED_LLOYD_MAX_CELLS:
         # fused flat path (r13 optimization round, guide §2.4/§1.2):
@@ -2037,8 +1934,7 @@ def semdedup_auto(
         # (_semdedup_tower_fused with levels=1). Gate constants
         # documented at their definition.
         return _semdedup_tower_fused(
-            df, int(target_cluster_size), 1, threshold,
-            id_col, vec_col, iters, round_dp,
+            df, int(target_cluster_size), 1, threshold, id_col, vec_col, iters
         )
     # above the gate: the count above already failed it, so train with
     # the distributed loop directly (no second count job); init = the
@@ -2058,8 +1954,7 @@ def semdedup_auto(
         v, cents, id_col, vec_col="__v", carry_vec=True
     ).withColumnRenamed("cid", "centroid_id")
     return _semdedup_collapse(
-        members, _centroid_frame(df.sparkSession, cents), threshold,
-        id_col, round_dp,
+        members, _centroid_frame(df.sparkSession, cents), threshold, id_col
     )
 
 
@@ -2085,7 +1980,6 @@ def _semdedup_tower_fused(
     id_col: str,
     vec_col: str,
     iters: int,
-    round_dp: int,
 ) -> DataFrame:
     """The ENTIRE scale-adaptive SemDeDup — coarse training, every
     split level, densification, own-centroid scoring AND the
@@ -2163,8 +2057,7 @@ def _semdedup_tower_fused(
                 )
                 leaf_cv = [cents[p] for p in sorted(node_list)]
         component, sims, keep = _semdedup_tail_np(
-            ids, X, leaf, np.asarray(leaf_cv, dtype=np.float64),
-            threshold, int(round_dp),
+            ids, X, leaf, np.asarray(leaf_cv, dtype=np.float64), threshold
         )
         return pd.DataFrame(
             {
@@ -2197,7 +2090,6 @@ def _semdedup_multilevel(
     id_col: str,
     vec_col: str,
     iters: int,
-    round_dp: int,
     levels: int = 2,
 ) -> DataFrame:
     """Hierarchical SemDeDup body (see ``semdedup_auto``), L levels
@@ -2249,7 +2141,7 @@ def _semdedup_multilevel(
         # at their definition; above them the distributed per-level
         # loop below keeps the win (sf10 towers).
         return _semdedup_tower_fused(
-            df, t, levels, threshold, id_col, vec_col, iters, round_dp
+            df, t, levels, threshold, id_col, vec_col, iters
         )
     else:
         # coarse pass above the gate (already counted and failed it):
@@ -2317,8 +2209,7 @@ def _semdedup_multilevel(
         cents_idx.select("bid", "scid", "centroid_id"), ["bid", "scid"]
     ).select(id_col, "centroid_id", "__v")
     return _semdedup_collapse(
-        members, cents_idx.select("centroid_id", "cv"), threshold, id_col,
-        round_dp,
+        members, cents_idx.select("centroid_id", "cv"), threshold, id_col
     )
 
 
@@ -2330,7 +2221,6 @@ def semantic_decontaminate(
     vec_col: str = "embedding",
     eval_id_col: str = "eval_id",
     eval_vec_col: str = "eval_vec",
-    round_dp: int = 9,
 ) -> DataFrame:
     """Embedding-space decontamination: flag corpus items whose cosine
     to ANY benchmark/eval item is ≥ threshold — the semantic twin of
@@ -2357,7 +2247,7 @@ def semantic_decontaminate(
     ).withColumn("__n", l2_norm(F.col("__v")))
     sim = F.round(
         cosine_given_norms(F.col("__v"), F.col("__ev"), F.col("__n"), F.col("__en")),
-        round_dp,
+        PARITY_DP,
     )
     scored = c.crossJoin(F.broadcast(ev)).select(
         F.col(id_col), F.col("__eid"), sim.alias("__s")
@@ -3194,7 +3084,6 @@ def ivfpq_encode(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_dp: int | None = 9,
 ) -> tuple[DataFrame, DataFrame]:
     """Build an IVF-PQ index (the FAISS IndexIVFPQ scheme — Jégou et
     al. 2011 §IV): assign every vector to its nearest coarse centroid
@@ -3207,7 +3096,7 @@ def ivfpq_encode(
     Composition of existing certified pieces, end-to-end
     oracle-replayable:
     - list assignment: ``assign_nearest_centroid`` with the house
-      ``round_dp`` float-fold convention (the frozen-IVF oracle
+      ``PARITY_DP`` float-fold convention (the frozen-IVF oracle
       class);
     - residual: one broadcast join against the nlist-row centroid
       frame + ``zip_with`` subtraction (IEEE doubles — exact and
@@ -3230,9 +3119,7 @@ def ivfpq_encode(
         F.col(id_col).cast("long").alias(id_col),
         _as_double_array(F.col(vec_col)).alias("__v"),
     )
-    asg = assign_nearest_centroid(
-        v, centroids, vec_col="__v", out_col="list_id", round_dp=round_dp
-    )
+    asg = assign_nearest_centroid(v, centroids, vec_col="__v", out_col="list_id")
     cents_df = spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "list_id int, cv array<double>",
@@ -3360,7 +3247,6 @@ def ranking_quality(
     ranked: DataFrame,
     truth: DataFrame,
     k: int,
-    round_dp: int = 9,
 ) -> DataFrame:
     """Graded ranking-quality metrics — the NDCG/MRR sibling of
     ``ann_recall_at_k`` (recall says WHETHER the true neighbors were
@@ -3386,7 +3272,7 @@ def ranking_quality(
     ulp; sharing the literal removes the hazard by construction. DCG
     terms are 12dp-rounded into DECIMAL(38,12) before the sum
     (order-free exact addition, the house float-agg discipline), then
-    presented as double and rounded ``round_dp``.
+    presented as double and rounded at ``PARITY_DP``.
 
     Scale: both inputs are top-k derivatives — every join/groupBy is
     query-keyed over ≤k-row groups; cost lives in producing the
@@ -3426,16 +3312,16 @@ def ranking_quality(
             "n_true",
             F.coalesce("__n_hit", F.lit(0)).cast("bigint").alias("n_hit"),
             F.round(
-                F.coalesce("__n_hit", F.lit(0)) / F.lit(float(k)), round_dp
+                F.coalesce("__n_hit", F.lit(0)) / F.lit(float(k)), PARITY_DP
             ).alias("precision_at_k"),
             F.round(
                 F.coalesce(F.lit(1.0) / F.col("__first"), F.lit(0.0)),
-                round_dp,
+                PARITY_DP,
             ).alias("mrr_at_k"),
             F.round(
                 F.coalesce(F.col("__dcg_dec").cast("double"), F.lit(0.0))
                 / F.get(F.lit(idcg), F.col("n_true") - 1),
-                round_dp,
+                PARITY_DP,
             ).alias("ndcg_at_k"),
         )
     )
@@ -3712,7 +3598,6 @@ def hamming_rerank_topk(
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "query_vec",
-    score_round_dp: int | None = None,
 ) -> DataFrame:
     """Two-stage cascade ANN: (1) Hamming top-``n_candidates`` over the
     packed 1-bit codes — the corpus-sized pass touches ceil(dim/32)
@@ -3720,7 +3605,8 @@ def hamming_rerank_topk(
     of ONLY the |Q|·n_candidates winners (the candidate frame is
     broadcast into the join, so the float embeddings are read through
     a broadcast hash semi-join — never shuffled), final top-k by
-    (cosine desc, id). This is the production shape for binary-code
+    (cosine desc, id), the cosine rounded at ``PARITY_DP`` first. This
+    is the production shape for binary-code
     retrievers: floats touched ∝ candidates, not corpus.
 
     Output: (query_id, rank, vec_id, hamming_d, cosine_sim)."""
@@ -3746,12 +3632,8 @@ def hamming_rerank_topk(
         F.col(query_id),
         F.col(corpus_id),
         F.col("hamming_d"),
-        cosine(F.col("__qv"), F.col("__cv")).alias("cosine_sim"),
+        F.round(cosine(F.col("__qv"), F.col("__cv")), PARITY_DP).alias("cosine_sim"),
     )
-    if score_round_dp is not None:
-        scored = scored.withColumn(
-            "cosine_sim", F.round("cosine_sim", score_round_dp)
-        )
     w = Window.partitionBy(query_id).orderBy(
         F.col("cosine_sim").desc(), F.col(corpus_id).asc()
     )
@@ -3767,7 +3649,6 @@ def embedding_pool(
     group_col: str,
     dim: int,
     vec_col: str = "embedding",
-    round_dp: int = 9,
 ) -> DataFrame:
     """Pool chunk embeddings into one vector per group — the
     chunk→document aggregation every long-document embedding pipeline
@@ -3854,9 +3735,9 @@ def embedding_pool(
         "n_chunks",
         F.round(
             F.col("__z.s").cast("double") / F.lit(1e12) / F.col("n_chunks"),
-            round_dp,
+            PARITY_DP,
         ).alias("mean_r"),
-        F.round(F.col("__z.m"), round_dp).alias("max_r"),
+        F.round(F.col("__z.m"), PARITY_DP).alias("max_r"),
     )
 
 
@@ -3869,7 +3750,6 @@ def mmr_topk(
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     rel_col: str = "rel_r",
-    round_dp: int = 9,
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
     1998): greedily select k of the C candidates per query maximizing
@@ -3880,30 +3760,28 @@ def mmr_topk(
     collapse).
 
     Greedy selection is inherently sequential, but it is sequential
-    PER QUERY over C-bounded state — so at the proven 9dp rounding all
-    k rounds run inside ONE cogroup task per query (r13 optimization
-    round: candidates cogrouped with the C²-bounded pairwise cosine
-    frame; scores via the exact repr-HALF_UP numpy twin of F.round,
-    max-sim over the engine-computed __sim doubles, argmax ties to the
-    lower id — bit-identical winners, one Arrow pass instead of k
-    eager checkpointed rounds). For any other ``round_dp`` the k
-    rounds UNROLL into one declarative plan (the BPE/GD-trainer
-    unrolling precedent applied to selection): round 1 takes argmax
-    relevance; each later round joins the remaining candidates to the
-    selected set through the pair frame, takes max-sim per candidate,
-    scores, and picks the per-query argmax. Either way the corpus-
-    sized cost lives entirely in the candidate producer, and the
-    corpus is touched only by a broadcast semi-join to fetch the C
-    candidate vectors. Scores are rounded ``round_dp`` BEFORE each
-    argmax so both engines pick identical winners.
+    PER QUERY over C-bounded state — so all k rounds run inside ONE
+    cogroup task per query (r13 optimization round: candidates
+    cogrouped with the C²-bounded pairwise cosine frame; scores via
+    the exact repr-HALF_UP numpy twin of F.round, max-sim over the
+    engine-computed __sim doubles, argmax ties to the lower id —
+    bit-identical winners, one Arrow pass instead of k eager
+    checkpointed rounds). The corpus-sized cost lives entirely in the
+    candidate producer, and the corpus is touched only by a broadcast
+    semi-join to fetch the C candidate vectors. Scores are rounded at
+    ``PARITY_DP`` BEFORE each argmax so both engines pick identical
+    winners.
 
     Output: (query_id, sel_rank, vec_id, score_r) — score_r is the
     relevance for sel_rank 1 and the MMR objective thereafter."""
-    # cand feeds every greedy round plus both sides of the pair frame —
-    # persist (|Q|·C rows), or the candidate PRODUCER (the corpus-sized
-    # stage) re-executes once per lineage branch: measured 18.2 s → 1.3 s
-    # at sf0.1 for the contract query. vecs and pairs are likewise
-    # multi-branch and C/C²-bounded.
+    import numpy as np
+    import pandas as pd
+
+    # cand feeds both the greedy cogroup and both sides of the pair
+    # frame — persist (|Q|·C rows), or the candidate PRODUCER (the
+    # corpus-sized stage) re-executes once per lineage branch: measured
+    # 18.2 s → 1.3 s at sf0.1 for the contract query. vecs (read by
+    # both pair sides) and pairs are C- and C²-bounded.
     cand = scoped_persist(candidates.select(query_id, corpus_id, rel_col))
     vecs = scoped_persist(
         corpus.select(
@@ -3927,157 +3805,70 @@ def mmr_topk(
             F.col(query_id).alias("__pq"),
             "__a",
             "__b",
-            F.round(cosine(F.col("__av"), F.col("__bv")), round_dp).alias(
+            F.round(cosine(F.col("__av"), F.col("__bv")), PARITY_DP).alias(
                 "__sim"
             ),
         )
     )
-    if round_dp == 9:
-        # Fused greedy (r13 optimization round, guide §1.2/§4.2 — the
-        # grouped-Lloyd fusion pattern applied to selection): the
-        # greedy loop is PER QUERY over C-bounded candidates and the
-        # C²-bounded pair frame, so one cogroup task holds everything
-        # a query's k rounds need. The k eager localCheckpoint picks,
-        # the per-round anti-join/union lineage and k rounds of
-        # Catalyst re-optimization collapse into ONE Arrow pass.
-        # Bit-exactness, term by term: round-1 score = F.round(rel,9)
-        # == _round9_half_up_np (the proven repr-HALF_UP twin); later
-        # scores = round9(lam·rel − (1−lam)·ms) where the inner
-        # expression is the same two IEEE double ops the engine's
-        # literals produce (incl. 1.0−0.7 = 0.30000000000000004) and
-        # ms = max over selected of the SAME __sim doubles the pair
-        # frame carries; argmax ties to the lower id, all comparisons
-        # exact double compares. Only available at 9dp — the dp the
-        # exact vectorized kernel covers (and the only dp any caller
-        # uses); other dp values keep the unrolled plan below.
-        import numpy as np
-        import pandas as pd
-
-        lam_f, kk = float(lam), int(k)
-        out_schema = (
-            f"{query_id} long, sel_rank int, {corpus_id} long, "
-            f"score_r double"
-        )
-        empty = {
-            query_id: pd.Series([], dtype="int64"),
-            "sel_rank": pd.Series([], dtype="int32"),
-            corpus_id: pd.Series([], dtype="int64"),
-            "score_r": pd.Series([], dtype="float64"),
-        }
-
-        def fn(key, cpdf, ppdf):
-            n = len(cpdf)
-            if n == 0:
-                return pd.DataFrame(empty)
-            qid = int(key[0])
-            ids = cpdf[corpus_id].to_numpy(dtype=np.int64)
-            rel = cpdf[rel_col].to_numpy(dtype=np.float64)
-            pos = {int(v): i for i, v in enumerate(ids)}
-            S = np.zeros((n, n), dtype=np.float64)
-            if len(ppdf):
-                ai = np.fromiter(
-                    (pos[int(v)] for v in ppdf["__a"]), dtype=np.int64
-                )
-                bi = np.fromiter(
-                    (pos[int(v)] for v in ppdf["__b"]), dtype=np.int64
-                )
-                S[ai, bi] = ppdf["__sim"].to_numpy(dtype=np.float64)
-            remaining = np.ones(n, dtype=bool)
-            ms = np.zeros(n, dtype=np.float64)
-            ranks, sids, scores = [], [], []
-            for t in range(1, kk + 1):
-                if not remaining.any():
-                    break
-                if t == 1:
-                    sc = _round9_half_up_np(rel)
-                else:
-                    sc = _round9_half_up_np(
-                        lam_f * rel - (1.0 - lam_f) * ms
-                    )
-                sc_m = np.where(remaining, sc, -np.inf)
-                top = np.nonzero(remaining & (sc_m == sc_m.max()))[0]
-                wsel = top[np.argmin(ids[top])]
-                ranks.append(t)
-                sids.append(int(ids[wsel]))
-                scores.append(float(sc[wsel]))
-                remaining[wsel] = False
-                # ms_i = max over selected b of sim(i as __a, b as __b)
-                ms = np.maximum(ms, S[:, wsel]) if t > 1 else S[:, wsel].copy()
-            return pd.DataFrame(
-                {query_id: np.full(len(ranks), qid, dtype=np.int64),
-                 "sel_rank": np.asarray(ranks, dtype=np.int32),
-                 corpus_id: np.asarray(sids, dtype=np.int64),
-                 "score_r": np.asarray(scores, dtype=np.float64)}
-            )
-
-        return (
-            cand.groupBy(query_id)
-            .cogroup(
-                pairs.withColumnRenamed("__pq", query_id).groupBy(query_id)
-            )
-            .applyInPandas(fn, schema=out_schema)
-        )
-
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("__score").desc(), F.col(corpus_id).asc()
+    # Bit-exactness, term by term: round-1 score = F.round(rel, 9) ==
+    # round_half_up_np (the proven repr-HALF_UP twin); later scores =
+    # round9(lam·rel − (1−lam)·ms) where the inner expression is the
+    # same two IEEE double ops the engine's literals produce (incl.
+    # 1.0−0.7 = 0.30000000000000004) and ms = max over selected of the
+    # SAME __sim doubles the pair frame carries; argmax ties to the
+    # lower id, all comparisons exact double compares.
+    lam_f, kk = float(lam), int(k)
+    out_schema = (
+        f"{query_id} long, sel_rank int, {corpus_id} long, score_r double"
     )
-    sel = (
-        cand.withColumn("__score", F.round(F.col(rel_col), round_dp))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(query_id, corpus_id, "__score", F.lit(1).alias("sel_rank"))
-        .localCheckpoint(eager=True)
-    )
-    selected = sel
-    remaining = cand.join(
-        sel.select(query_id, corpus_id), [query_id, corpus_id], "left_anti"
-    )
-    for t in range(2, k + 1):
-        sel_ids = selected.select(
-            F.col(query_id).alias("__sq"), F.col(corpus_id).alias("__sb")
+    empty = {
+        query_id: pd.Series([], dtype="int64"),
+        "sel_rank": pd.Series([], dtype="int32"),
+        corpus_id: pd.Series([], dtype="int64"),
+        "score_r": pd.Series([], dtype="float64"),
+    }
+
+    def fn(key, cpdf, ppdf):
+        n = len(cpdf)
+        if n == 0:
+            return pd.DataFrame(empty)
+        qid = int(key[0])
+        ids = cpdf[corpus_id].to_numpy(dtype=np.int64)
+        rel = cpdf[rel_col].to_numpy(dtype=np.float64)
+        pos = {int(v): i for i, v in enumerate(ids)}
+        S = np.zeros((n, n), dtype=np.float64)
+        if len(ppdf):
+            ai = np.fromiter((pos[int(v)] for v in ppdf["__a"]), dtype=np.int64)
+            bi = np.fromiter((pos[int(v)] for v in ppdf["__b"]), dtype=np.int64)
+            S[ai, bi] = ppdf["__sim"].to_numpy(dtype=np.float64)
+        remaining = np.ones(n, dtype=bool)
+        ms = np.zeros(n, dtype=np.float64)
+        ranks, sids, scores = [], [], []
+        for t in range(1, kk + 1):
+            if not remaining.any():
+                break
+            if t == 1:
+                sc = round_half_up_np(rel, PARITY_DP)
+            else:
+                sc = round_half_up_np(lam_f * rel - (1.0 - lam_f) * ms, PARITY_DP)
+            sc_m = np.where(remaining, sc, -np.inf)
+            top = np.nonzero(remaining & (sc_m == sc_m.max()))[0]
+            wsel = top[np.argmin(ids[top])]
+            ranks.append(t)
+            sids.append(int(ids[wsel]))
+            scores.append(float(sc[wsel]))
+            remaining[wsel] = False
+            # ms_i = max over selected b of sim(i as __a, b as __b)
+            ms = np.maximum(ms, S[:, wsel]) if t > 1 else S[:, wsel].copy()
+        return pd.DataFrame(
+            {query_id: np.full(len(ranks), qid, dtype=np.int64),
+             "sel_rank": np.asarray(ranks, dtype=np.int32),
+             corpus_id: np.asarray(sids, dtype=np.int64),
+             "score_r": np.asarray(scores, dtype=np.float64)}
         )
-        ms = (
-            remaining.join(
-                pairs,
-                (F.col(query_id) == F.col("__pq"))
-                & (F.col(corpus_id) == F.col("__a")),
-            )
-            .join(
-                sel_ids,
-                (F.col("__pq") == F.col("__sq"))
-                & (F.col("__b") == F.col("__sb")),
-            )
-            .groupBy(query_id, corpus_id, rel_col)
-            .agg(F.max("__sim").alias("__ms"))
-            .select(
-                query_id,
-                corpus_id,
-                F.round(
-                    F.lit(lam) * F.col(rel_col)
-                    - F.lit(1.0 - lam) * F.col("__ms"),
-                    round_dp,
-                ).alias("__score"),
-            )
-        )
-        # Each round references the previous round's remaining AND
-        # selected subtrees — left as lineage the logical plan doubles
-        # per round and Catalyst re-optimization dominates wall time
-        # (measured 12 s at sf0.1 for k=5). localCheckpoint the ≤|Q|-row
-        # pick to truncate it: k bounded driver actions per query, the
-        # BPE/GD one-action-per-round convention.
-        pick = (
-            ms.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(query_id, corpus_id, "__score", F.lit(t).alias("sel_rank"))
-            .localCheckpoint(eager=True)
-        )
-        selected = selected.unionByName(pick)
-        remaining = remaining.join(
-            pick.select(query_id, corpus_id), [query_id, corpus_id], "left_anti"
-        )
-    return selected.select(
-        query_id,
-        "sel_rank",
-        corpus_id,
-        F.col("__score").alias("score_r"),
+
+    return (
+        cand.groupBy(query_id)
+        .cogroup(pairs.withColumnRenamed("__pq", query_id).groupBy(query_id))
+        .applyInPandas(fn, schema=out_schema)
     )

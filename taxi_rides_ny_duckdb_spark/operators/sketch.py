@@ -47,6 +47,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.parity import PARITY_DP
+
 DEFAULT_LGK = 12
 
 
@@ -204,7 +206,6 @@ def histogram_quantile_rollup(
     lo: float,
     hi: float,
     n_bins: int = 32,
-    round_dp: int = 9,
 ) -> DataFrame:
     """Merge shard histograms per rollup key and estimate quantiles.
 
@@ -212,7 +213,7 @@ def histogram_quantile_rollup(
     = running-total + linear interpolation inside the target bin
     (``lo_edge + (target − cum_below)/bin_n · w``, target = q·n with
     the n-th-smallest convention ``ceil(q·n)``). Every step is integer
-    counts + one double expression, rounded to ``round_dp`` — exactly
+    counts + one double expression, rounded at ``PARITY_DP`` — exactly
     replayable as ANSI SQL, which is what makes this rollup fully
     value-oracled. Output: one row per rollup key with ``n_values``
     and one ``p{q}_r`` column per quantile. Cost is |keys·bins| rows —
@@ -245,7 +246,7 @@ def histogram_quantile_rollup(
         )
         name = f"p{int(round(q * 100)):02d}_r"
         aggs.append(
-            F.round(F.max(F.when(hit, est)), round_dp).alias(name)
+            F.round(F.max(F.when(hit, est)), PARITY_DP).alias(name)
         )
     return cum.groupBy("rollup_key").agg(*aggs)
 
@@ -485,7 +486,6 @@ def histogram_quantile_sql(
     lo: float,
     hi: float,
     n_bins: int = 32,
-    round_dp: int = 9,
 ) -> str:
     """The identical merge + interpolation as ANSI SQL (DuckDB-runnable)
     — the oracle twin of ``shard_histograms`` → ``histogram_quantile_rollup``.
@@ -498,7 +498,7 @@ def histogram_quantile_sql(
         f"AND CAST(ceil({q} * n_values) AS DOUBLE) <= cum_below + bin_n "
         f"THEN {lo} + CAST(bin AS DOUBLE) * {w} "
         f"+ ((CAST(ceil({q} * n_values) AS DOUBLE) - cum_below) / bin_n) * {w} "
-        f"END), {round_dp}) AS p{int(round(q * 100)):02d}_r"
+        f"END), {PARITY_DP}) AS p{int(round(q * 100)):02d}_r"
         for q in quantiles
     )
     return f"""

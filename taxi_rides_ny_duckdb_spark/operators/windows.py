@@ -1,12 +1,14 @@
 """Window/time operators (EXTENSION beyond the reference's single
 row_number dedup — SURVEY §2.4): top-k per group, sessionization,
-batch tumbling/sliding windows. All pure DataFrame plans."""
+batch sliding windows. All pure DataFrame plans."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..functions.parity import PARITY_DP
 
 
 def top_k_per_group(
@@ -47,21 +49,6 @@ def sessionize(
     return df.withColumn("session_seq", F.sum(is_new).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ))
-
-
-def tumbling_window_agg(
-    df: DataFrame, ts_col: str, width: str, agg_exprs: list[Column], extra_keys: list[str] = (),
-) -> DataFrame:
-    """Batch tumbling-window aggregation via F.window. Emits
-    window_start/window_end as timestamps (DuckDB oracle:
-    ``time_bucket(INTERVAL width, ts)`` equals window_start)."""
-    win = F.window(F.col(ts_col), width)
-    out = df.groupBy(win.alias("w"), *[F.col(c) for c in extra_keys]).agg(*agg_exprs)
-    return out.select(
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        *[F.col(c) for c in out.columns if c != "w"],
-    )
 
 
 def sliding_window_agg(
@@ -235,7 +222,7 @@ def event_transition_matrix(
         "prev_type",
         "next_type",
         "n",
-        F.round(F.col("n").cast("double") / F.col("__tot").cast("double"), 9).alias(
-            "p_r"
-        ),
+        F.round(
+            F.col("n").cast("double") / F.col("__tot").cast("double"), PARITY_DP
+        ).alias("p_r"),
     )

@@ -19,13 +19,18 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.parity import davg
+from ..functions.parity import PARITY_DP, davg
+
+# Money-scale presentation: value and mean are 1e7-magnitude doubles,
+# too wide for PARITY_DP (see metric_anomaly).
+_MONEY_DP = 2
 
 _METHODS = {
     "count": lambda c: F.count(c),
     "count_distinct": lambda c: F.count_distinct(c),
     "sum": lambda c: F.sum(c),
-    "average": lambda c: F.avg(c),
+    # exact decimal sum / count: order-independent (functions/parity.py)
+    "average": lambda c: davg(c, 18, 6),
     "min": lambda c: F.min(c),
     "max": lambda c: F.max(c),
 }
@@ -64,7 +69,6 @@ class Metric:
     time_grains: tuple[str, ...] = ("month",)
     dimensions: tuple[str, ...] = ()
     filters: tuple[MetricFilter, ...] = ()
-    deterministic_avg: bool = True  # route average via exact decimal sum (parity.py)
 
 
 def compile_metric(model: DataFrame, metric: Metric, grain: str) -> DataFrame:
@@ -81,11 +85,9 @@ def compile_metric(model: DataFrame, metric: Metric, grain: str) -> DataFrame:
     for f_ in metric.filters:
         df = df.filter(f_.to_column())
 
-    expr = F.expr(metric.expression)
-    if metric.calculation_method == "average" and metric.deterministic_avg:
-        agg = davg(expr, 18, 6).alias(metric.name)
-    else:
-        agg = _METHODS[metric.calculation_method](expr).alias(metric.name)
+    agg = _METHODS[metric.calculation_method](F.expr(metric.expression)).alias(
+        metric.name
+    )
 
     period = (
         F.date_trunc(grain, F.col(metric.timestamp)).alias(f"period_{grain}")
@@ -220,8 +222,6 @@ def metric_anomaly(
     value_col: str,
     trailing_n: int = 6,
     z_thresh: float = 2.0,
-    round_dp: int = 9,
-    money_dp: int = 2,
 ) -> DataFrame:
     """Metric anomaly panel — trailing z-score of a metric series
     against its own recent history: the third leg of the observability
@@ -265,13 +265,13 @@ def metric_anomaly(
     # Rounding scale is magnitude-aware: value/mean are money-scale
     # (rounding a 1e7-magnitude double at 9 dp needs 17 significant
     # digits — beyond double, so the two engines would disagree in the
-    # last ulp of the "rounded" result); z is O(1) and takes round_dp.
+    # last ulp of the "rounded" result); z is O(1) and takes PARITY_DP.
     scored = staged.select(
         period_col,
-        F.round(F.col("__x").cast("double"), money_dp).alias("value_r"),
+        F.round(F.col("__x").cast("double"), _MONEY_DP).alias("value_r"),
         n.alias("n_history"),
-        F.round(mean, money_dp).alias("mean_r"),
-        F.when((n >= 2) & (var > 0), F.round(z, round_dp)).alias("z_r"),
+        F.round(mean, _MONEY_DP).alias("mean_r"),
+        F.when((n >= 2) & (var > 0), F.round(z, PARITY_DP)).alias("z_r"),
     )
     # String verdict, not a nullable boolean: 'no_score' (short
     # history / zero variance) is a first-class outcome, and NULL

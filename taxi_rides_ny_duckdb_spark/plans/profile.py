@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.parity import PARITY_DP
+
 
 def profile_numeric(df: DataFrame, cols: list[str]) -> DataFrame:
     """Exact stats per numeric column: n, n_null, n_distinct, min, max,
@@ -474,7 +476,6 @@ def profile_drift_psi(
     hi: float,
     n_bins: int = 10,
     smoothing: float = 0.5,
-    round_dp: int = 9,
 ) -> DataFrame:
     """Population Stability Index between two snapshots of a numeric
     column — the distributional-drift member of the compare family:
@@ -494,7 +495,7 @@ def profile_drift_psi(
     drift detection exists to catch). psi_contrib =
     (p_other − p_base)·ln(p_other / p_base); psi_total repeats the
     bin-sum on every row. All arithmetic is counts + one double
-    expression per bin, rounded at ``round_dp`` — fully
+    expression per bin, rounded at ``PARITY_DP`` — fully
     oracle-replayable, same class as the histogram quantile rollup.
 
     Scale shape: ONE groupBy(bin) aggregate per side (map-side
@@ -549,10 +550,10 @@ def profile_drift_psi(
         "bin",
         "n_base",
         "n_other",
-        F.round(p_base, round_dp).alias("p_base_r"),
-        F.round(p_other, round_dp).alias("p_other_r"),
-        F.round(contrib, round_dp).alias("psi_contrib_r"),
-        F.round(F.sum(contrib).over(tot), round_dp).alias("psi_total_r"),
+        F.round(p_base, PARITY_DP).alias("p_base_r"),
+        F.round(p_other, PARITY_DP).alias("p_other_r"),
+        F.round(contrib, PARITY_DP).alias("psi_contrib_r"),
+        F.round(F.sum(contrib).over(tot), PARITY_DP).alias("psi_total_r"),
     )
 
 
@@ -562,7 +563,6 @@ def drift_psi_grouped(
     n_bins: int,
     group_col: str = "window_start",
     smoothing: float = 0.5,
-    round_dp: int = 9,
 ) -> DataFrame:
     """Score MANY pre-binned histograms against one reference — the
     monitoring loop of ``profile_drift_psi``: ``counts`` is long-form
@@ -611,10 +611,10 @@ def drift_psi_grouped(
         "bin",
         "n_ref",
         "n",
-        F.round(p_ref, round_dp).alias("p_ref_r"),
-        F.round(p_g, round_dp).alias("p_r"),
-        F.round(contrib, round_dp).alias("psi_contrib_r"),
-        F.round(F.sum(contrib).over(wg), round_dp).alias("psi_total_r"),
+        F.round(p_ref, PARITY_DP).alias("p_ref_r"),
+        F.round(p_g, PARITY_DP).alias("p_r"),
+        F.round(contrib, PARITY_DP).alias("psi_contrib_r"),
+        F.round(F.sum(contrib).over(wg), PARITY_DP).alias("psi_total_r"),
     )
 
 
@@ -626,7 +626,6 @@ def drift_psi_sql(
     hi: float,
     n_bins: int = 10,
     smoothing: float = 0.5,
-    round_dp: int = 9,
 ) -> str:
     """The identical spine/bin/smooth/contribute arithmetic as ANSI SQL
     (DuckDB-runnable) — the oracle twin of ``profile_drift_psi``.
@@ -659,10 +658,10 @@ def drift_psi_sql(
       FROM j
     )
     SELECT bin, n_base, n_other,
-           round(pb, {round_dp}) AS p_base_r,
-           round(po, {round_dp}) AS p_other_r,
-           round((po - pb) * ln(po / pb), {round_dp}) AS psi_contrib_r,
-           round(SUM((po - pb) * ln(po / pb)) OVER (), {round_dp}) AS psi_total_r
+           round(pb, {PARITY_DP}) AS p_base_r,
+           round(po, {PARITY_DP}) AS p_other_r,
+           round((po - pb) * ln(po / pb), {PARITY_DP}) AS psi_contrib_r,
+           round(SUM((po - pb) * ln(po / pb)) OVER (), {PARITY_DP}) AS psi_total_r
     FROM p
     """
 
@@ -672,7 +671,6 @@ def profile_drift_psi_categorical(
     other: DataFrame,
     col: str,
     smoothing: float = 0.5,
-    round_dp: int = 9,
 ) -> DataFrame:
     """Categorical twin of ``profile_drift_psi``: the bin spine is the
     union of categories OBSERVED on either side (data-defined k, the
@@ -711,10 +709,10 @@ def profile_drift_psi_categorical(
         "category",
         "n_base",
         "n_other",
-        F.round(p_base, round_dp).alias("p_base_r"),
-        F.round(p_other, round_dp).alias("p_other_r"),
-        F.round(contrib, round_dp).alias("psi_contrib_r"),
-        F.round(F.sum(contrib).over(tot), round_dp).alias("psi_total_r"),
+        F.round(p_base, PARITY_DP).alias("p_base_r"),
+        F.round(p_other, PARITY_DP).alias("p_other_r"),
+        F.round(contrib, PARITY_DP).alias("psi_contrib_r"),
+        F.round(F.sum(contrib).over(tot), PARITY_DP).alias("psi_total_r"),
     )
 
 
@@ -782,7 +780,7 @@ def profile_correlation(
             cov = F.covar_pop(xv, yv)
             sx, sy = F.stddev_pop(xv), F.stddev_pop(yv)
             return F.round(
-                F.when((sx > 0) & (sy > 0), cov / (sx * sy)), 9
+                F.when((sx > 0) & (sy > 0), cov / (sx * sy)), PARITY_DP
             ).alias(f"{x}__{y}")
 
         aggs = [one_pair(x, y) for x, y in pairs]
@@ -853,7 +851,7 @@ def profile_correlation(
             F.struct(
                 F.lit(x).alias("col_x"),
                 F.lit(y).alias("col_y"),
-                F.round(r, 9).alias("corr_r"),
+                F.round(r, PARITY_DP).alias("corr_r"),
             )
         )
     return one.select(
@@ -907,7 +905,7 @@ def profile_key_skew(
                 "key_value",
                 "n",
                 F.col("__nd").cast("long").alias("n_distinct"),
-                F.round(F.col("n") / F.col("__tot"), 9).alias("share_r"),
+                F.round(F.col("n") / F.col("__tot"), PARITY_DP).alias("share_r"),
             )
         )
     return reduce(lambda a, b: a.unionByName(b), outs)
@@ -964,7 +962,7 @@ def corpus_datacard(
     core = base.groupBy(source_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("__t").cast("long").alias("total_tokens"),
-        F.round(davg(F.col("__q"), 18, 9), 9).alias("avg_quality_r"),
+        F.round(davg(F.col("__q"), 18, 9), PARITY_DP).alias("avg_quality_r"),
         F.count_distinct(F.col(lang_col)).cast("long").alias("n_langs"),
     )
     lc = base.groupBy(source_col, lang_col).agg(F.count(F.lit(1)).alias("__c"))
@@ -997,7 +995,7 @@ def corpus_datacard(
             "avg_quality_r",
             "n_langs",
             "top_lang",
-            F.round(F.col("__top_c") / F.col("n_docs"), 9).alias(
+            F.round(F.col("__top_c") / F.col("n_docs"), PARITY_DP).alias(
                 "top_lang_share_r"
             ),
             F.coalesce(F.col("exact_dup_docs"), F.lit(0).cast("long")).alias(
@@ -1060,8 +1058,8 @@ def chi_square_independence(
         "a",
         "b",
         "observed",
-        F.round(expected, 9).alias("expected_r"),
-        F.round(contrib, 9).alias("contrib_r"),
+        F.round(expected, PARITY_DP).alias("expected_r"),
+        F.round(contrib, PARITY_DP).alias("contrib_r"),
         F.round(contrib, 12).cast("decimal(38,12)").alias("__c12"),
         "__n",
     )
@@ -1085,9 +1083,9 @@ def chi_square_independence(
         "observed",
         "expected_r",
         "contrib_r",
-        F.when(dof > 0, F.round(F.col("__chi2"), 9)).alias("chi2_r"),
+        F.when(dof > 0, F.round(F.col("__chi2"), PARITY_DP)).alias("chi2_r"),
         F.when(dof > 0, dof).cast("long").alias("dof"),
-        F.when(dof > 0, F.round(v, 9)).alias("cramers_v_r"),
+        F.when(dof > 0, F.round(v, PARITY_DP)).alias("cramers_v_r"),
     )
 
 
@@ -1170,7 +1168,7 @@ def ks_two_sample(
     return d.select(
         F.coalesce(F.col("n_a"), F.lit(0)).cast("long").alias("n_a"),
         F.coalesce(F.col("n_b"), F.lit(0)).cast("long").alias("n_b"),
-        F.when(ok, F.round(F.col("__d"), 9)).alias("d_stat_r"),
-        F.when(ok, F.round(crit, 9)).alias("d_crit_r"),
+        F.when(ok, F.round(F.col("__d"), PARITY_DP)).alias("d_stat_r"),
+        F.when(ok, F.round(crit, PARITY_DP)).alias("d_crit_r"),
         F.when(ok, F.col("__d") > crit).alias("reject"),
     )

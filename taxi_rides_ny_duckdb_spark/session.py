@@ -71,17 +71,21 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def session_key(spark: SparkSession) -> tuple:
-    """The store's key for a session: (applicationId, startTime).
-    ``id(spark)`` can be GC-recycled, so a NEW session could alias a
-    stopped one's key and hand out frames bound to a dead context
-    (ADVICE r10)."""
-    sc = spark.sparkContext
-    return (sc.applicationId, sc.startTime)
+def session_key(spark: SparkSession) -> str:
+    """The store's key for a session: its ``sessionUUID``. Per
+    SparkSession, not per context: a frame and a temp view belong to
+    the session that built them, so ``spark.newSession()`` gets its own
+    entries. ``id(spark)`` can be GC-recycled, so a NEW session could
+    alias a stopped one's key and hand out frames bound to a dead
+    context (ADVICE r10)."""
+    return spark._jsparkSession.sessionUUID()
 
 
 # session_key → (SparkContext, {memo key: value}, [owned directories]).
-_STORE: dict[tuple, tuple] = {}
+_STORE: dict[str, tuple] = {}
+# Directories this process owns whatever its sessions (the sink roots of
+# ``operators/scale.sink_scratch_dir``), removed at interpreter exit.
+_PROCESS_DIRS: set[str] = set()
 
 
 def _session_state(spark: SparkSession) -> tuple:
@@ -100,6 +104,7 @@ def _session_state(spark: SparkSession) -> tuple:
 def _remove_live_dirs() -> None:
     for _, _, dirs in _STORE.values():
         _remove_dirs(dirs)
+    _remove_dirs(sorted(_PROCESS_DIRS))
 
 
 def _remove_dirs(dirs: list[str]) -> None:
@@ -125,6 +130,13 @@ def scratch_dir(spark: SparkSession, prefix: str, parent: str | None = None) -> 
         os.makedirs(parent, exist_ok=True)
     path = tempfile.mkdtemp(prefix=prefix, dir=parent)
     _session_state(spark)[2].append(path)
+    return path
+
+
+def remove_at_exit(path: str) -> str:
+    """Register ``path`` for removal when the interpreter exits, for a
+    directory the process owns rather than one session; returns it."""
+    _PROCESS_DIRS.add(path)
     return path
 
 

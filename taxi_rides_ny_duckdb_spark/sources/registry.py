@@ -46,9 +46,7 @@ def table_path(sf_dir: str, name: str) -> str:
 # Scans are memoized per (SparkSession, path) in the session-state
 # store: building one costs a parquet-footer read + schema inference
 # (~50-100 ms of py4j + IO) that a session should pay once per table,
-# not once per query. Keyed by the SparkSession, not just its context,
-# because a temp view registered from a frame lands in the catalog of
-# the session that read it (``newSession()`` shares only the context).
+# not once per query.
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -68,8 +66,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown source table {name!r}; known: {TESTDATA_TABLES}")
     path = table_path(sf_dir, name)
-    key = ("scan", spark._jsparkSession.sessionUUID(), path)
-    return memo(spark, key, lambda: _scan(spark, path, name))
+    return memo(spark, ("scan", path), lambda: _scan(spark, path, name))
 
 
 def _scan(spark: SparkSession, path: str, name: str) -> DataFrame:
@@ -127,7 +124,7 @@ def register_all(
     Idempotent per (SparkSession, sf_dir): the store records each view's
     registered path, and a view is re-registered only when its path
     changes."""
-    views = memo(spark, ("views", spark._jsparkSession.sessionUUID()), dict)
+    views = memo(spark, ("views",), dict)
     for name in tables or TESTDATA_TABLES:
         path = table_path(sf_dir, name)
         if views.get(name) == path:

@@ -104,8 +104,8 @@ def test_two_operator_pipeline_leaves_no_orphan_cache_entries(spark):
 
 
 def test_session_memos_ignore_recycled_id_keys(spark, sf_dir, monkeypatch):
-    """The session-state store keys sessions on (applicationId,
-    startTime), never on the GC-recyclable ``id(spark)``: sentinels
+    """The session-state store keys sessions on their ``sessionUUID``,
+    never on the GC-recyclable ``id(spark)``: sentinels
     planted under an id-keyed session entry — what a stopped session
     whose id the live one inherited would leave behind — must never be
     handed out as a scan or a plan."""
@@ -117,8 +117,7 @@ def test_session_memos_ignore_recycled_id_keys(spark, sf_dir, monkeypatch):
                 if contract.QUERIES[n] is not contract.BUILDERS[n])
     sentinel = spark.range(1)
     path = registry.table_path(sf_dir, "region")
-    planted = {("scan", spark._jsparkSession.sessionUUID(), path): sentinel,
-               ("plan", name, sf_dir): sentinel}
+    planted = {("scan", path): sentinel, ("plan", name, sf_dir): sentinel}
     monkeypatch.setitem(session._STORE, (id(spark),),
                         (spark.sparkContext, planted, []))
     scan = registry.load(spark, sf_dir, "region")
@@ -141,16 +140,19 @@ def test_store_sweeps_only_when_a_new_session_appears(spark, tmp_path, monkeypat
     dead_dir = tmp_path / "dead"
     dead_dir.mkdir()
     dead = (SimpleNamespace(_jsc=None), {("probe",): "stale"}, [str(dead_dir)])
-    session._STORE[("dead-app", 0)] = dead
+    session._STORE["dead-session"] = dead
 
     assert session.memo(spark, ("probe",), lambda: builds.append(1) or "w") == "v"
     assert session.memo(spark, ("other",), lambda: "x") == "x"
     live_dir = session.scratch_dir(spark, "live_", str(tmp_path))
     assert builds == [1]
-    assert session._STORE[("dead-app", 0)] is dead and dead_dir.is_dir()
+    assert session._STORE["dead-session"] is dead and dead_dir.is_dir()
 
-    new_sc = SimpleNamespace(applicationId="new-app", startTime=1, _jsc=object())
-    new = SimpleNamespace(sparkContext=new_sc)
+    new_sc = SimpleNamespace(_jsc=object())
+    new = SimpleNamespace(
+        sparkContext=new_sc,
+        _jsparkSession=SimpleNamespace(sessionUUID=lambda: "new-session"),
+    )
     assert session.memo(new, ("probe",), lambda: "n") == "n"
     assert [sc for sc, _, _ in session._STORE.values()] == [spark.sparkContext, new_sc]
     assert not dead_dir.exists() and os.path.isdir(live_dir)
@@ -161,6 +163,7 @@ import json, os, sys
 sys.path.insert(0, sys.argv[1])
 from taxi_rides_ny_duckdb_spark import contract, session
 from taxi_rides_ny_duckdb_spark.contract_extensions import _events_stream_dir
+from taxi_rides_ny_duckdb_spark.operators.scale import sink_scratch_dir
 
 sf = sys.argv[2]
 contract.load_all()
@@ -175,13 +178,17 @@ def run():
 a, df_a, dir_a = run()
 a.stop()
 b, df_b, dir_b = run()
+assert contract.QUERIES["ext_partitioned_sink_prune"](b, sf).count() > 0
+sink_root = os.path.dirname(sink_scratch_dir(sf, "orders_by_year"))
 out = {
     "frame_is_new": df_b is not df_a,
     "frame_on_b": df_b.sparkSession is b and b.sparkContext._jsc is not None,
     "a_dir_gone": not os.path.exists(dir_a),
     "b_dir_live": os.path.isdir(dir_b),
     "keys_only_b": [sc for sc, _, _ in session._STORE.values()] == [b.sparkContext],
+    "sink_live": os.path.isdir(sink_root),
     "dirs": [dir_a, dir_b],
+    "sink_root": sink_root,
 }
 b.stop()
 print("RESULT " + json.dumps(out))
@@ -193,7 +200,8 @@ def test_store_survives_session_stop_and_restart(tmp_path):
     fresh frames bound to itself, the stopped session's stream drop is
     removed the moment the new session first touches the store, only
     the new session's key remains, and the atexit hook removes the live
-    session's directory when the interpreter exits."""
+    session's directory and the process's sink root when the
+    interpreter exits."""
     import json
     import subprocess
     import sys
@@ -209,19 +217,22 @@ def test_store_survives_session_stop_and_restart(tmp_path):
     assert line is not None, r.stderr[-3000:]
     out = json.loads(line[len("RESULT "):])
     dirs = out.pop("dirs")
+    sink_root = out.pop("sink_root")
     assert out == dict.fromkeys(out, True), out
     assert all(os.path.dirname(d) == str(tmp_path) for d in dirs)
-    assert not any(os.path.exists(d) for d in dirs)
+    assert not any(os.path.exists(d) for d in [*dirs, sink_root])
 
 
 def test_register_all_per_spark_session_and_path(spark, sf_dir):
-    """Temp views belong to a SparkSession, not to its context: a
-    ``newSession()`` on the same context gets its own registration.
-    Switching sf_dir A → B → A re-registers the view each time."""
+    """Temp views and memoized frames belong to a SparkSession, not to
+    its context: a ``newSession()`` on the same context gets its own
+    registration and its own contract frames. Switching sf_dir
+    A → B → A re-registers the view each time."""
     from urllib.parse import urlparse
 
     from conftest import SF_SMOKE
 
+    from taxi_rides_ny_duckdb_spark import contract
     from taxi_rides_ny_duckdb_spark.sources.registry import register_all, table_path
 
     def registered(s):
@@ -231,6 +242,8 @@ def test_register_all_per_spark_session_and_path(spark, sf_dir):
     s2 = spark.newSession()
     register_all(s2, sf_dir, ("nation",))
     assert s2.sql("select count(*) from nation").first()[0] == 25
+    contract.load_all()
+    assert contract.QUERIES["a1_pricing_summary"](s2, sf_dir).sparkSession is s2
 
     for d in (SF_SMOKE, sf_dir):
         register_all(spark, d, ("nation",))

@@ -128,13 +128,14 @@ def test_lsh_topk_subset_of_bruteforce(spark, sf_dir):
     for r in ann.filter("rank = 1").collect():
         assert r["vec_id"] == r["query_id"]  # self always shares its own bucket
     # ANN scores are genuine cosines: each (query, vec) pair in ANN must
-    # appear in brute force's full ranking with the same score
+    # appear in brute force's full ranking with the same score, up to
+    # the 9-dp parity rounding
     bf_all = brute_force_topk(emb, queries, k=10**6)
     bf_scores = {
         (r["query_id"], r["vec_id"]): r["cosine_sim"] for r in bf_all.collect()
     }
     for r in ann.collect():
-        assert abs(bf_scores[(r["query_id"], r["vec_id"])] - r["cosine_sim"]) < 1e-12
+        assert abs(bf_scores[(r["query_id"], r["vec_id"])] - r["cosine_sim"]) < 1e-9
 
 
 def test_sessionize_gap_boundaries(spark):
@@ -194,13 +195,14 @@ def test_ivf_topk_recall_vs_bruteforce(spark, sf_dir):
     for r in ann.filter("rank = 1").collect():
         assert r["vec_id"] == r["query_id"]
 
-    # IVF scores are genuine cosines (subset of the exact full ranking)
+    # IVF scores are genuine cosines (subset of the exact full ranking),
+    # up to the 9-dp parity rounding
     bf_all = brute_force_topk(emb, queries, k=10**6)
     bf_scores = {
         (r["query_id"], r["vec_id"]): r["cosine_sim"] for r in bf_all.collect()
     }
     for r in ann.collect():
-        assert abs(bf_scores[(r["query_id"], r["vec_id"])] - r["cosine_sim"]) < 1e-12
+        assert abs(bf_scores[(r["query_id"], r["vec_id"])] - r["cosine_sim"]) < 1e-9
 
     # recall@5 with 2/8 lists probed: data-adaptive partitions should
     # recover well over half the true neighbors on clustered embeddings
@@ -634,7 +636,13 @@ def test_group_medoid_picks_central_member(spark):
     """group_medoid: duplicated direction wins (it is closest to the
     group overall), exact ties break to the lowest id (deterministic
     sorted-order reduction), singleton groups are their own medoid
-    with zero mean distance."""
+    with zero mean distance. Totals round HALF_UP at 9 dp like F.round
+    and the oracle's ``round(total, 9) DESC``: in group "c" ids 1 and 2
+    total 2.0000000005 and 2.0000000009, both 2.000000001 HALF_UP (a
+    tie, so the lower id wins), while half-even ``np.round`` gives 2.0
+    for id 1 and the unrounded argmax picks id 2."""
+    import duckdb
+
     from taxi_rides_ny_duckdb_spark.operators.similarity import group_medoid
 
     rows = [
@@ -642,6 +650,10 @@ def test_group_medoid_picks_central_member(spark):
         ("a", 2, [1.0, 0.0]),   # same direction as id 1 → tie, min id wins
         ("a", 3, [0.0, 1.0]),   # orthogonal outlier
         ("b", 7, [0.5, 0.5]),   # singleton
+        # unit norms exactly 1.0; totals 2 + 5e-10, 2 + 9e-10, 1 + 1.4e-9
+        ("c", 1, [5e-10, 1.0, 0.0]),
+        ("c", 2, [9e-10, 1.0, 0.0]),
+        ("c", 3, [1.0, 0.0, 0.0]),
     ]
     df = spark.createDataFrame(
         rows, schema="label string, vec_id long, embedding array<double>"
@@ -652,6 +664,10 @@ def test_group_medoid_picks_central_member(spark):
     }
     assert got["a"][0] == 1 and got["a"][1] == 3
     assert got["b"] == (7, 1, 0.0)
+    assert duckdb.sql(
+        "SELECT round(2.0000000005::DOUBLE, 9)"
+    ).fetchone()[0] == 2.000000001
+    assert got["c"] == (1, 3, (3 - 2.000000001) / 2)
 
 
 def test_group_medoid_linear_form_and_max_group_guard(spark):
@@ -663,6 +679,10 @@ def test_group_medoid_linear_form_and_max_group_guard(spark):
     import numpy as np
     import pytest
 
+    from taxi_rides_ny_duckdb_spark.functions.parity import (
+        PARITY_DP,
+        round_half_up_np,
+    )
     from taxi_rides_ny_duckdb_spark.operators.similarity import group_medoid
 
     rng = np.random.default_rng(7)
@@ -671,10 +691,10 @@ def test_group_medoid_linear_form_and_max_group_guard(spark):
     df = spark.createDataFrame(
         rows, schema="label string, vec_id long, embedding array<double>"
     )
-    got = group_medoid(df, "label", "embedding", "vec_id", round_dp=9).collect()[0]
+    got = group_medoid(df, "label", "embedding", "vec_id").collect()[0]
 
     unit = vecs / np.linalg.norm(vecs, axis=1)[:, None]
-    want = int(np.argmax(np.round((unit @ unit.T).sum(axis=1), 9)))
+    want = int(np.argmax(round_half_up_np((unit @ unit.T).sum(axis=1), PARITY_DP)))
     assert got["medoid_id"] == want and got["group_size"] == 500
 
     with pytest.raises(Exception, match="max_group"):
@@ -1783,13 +1803,8 @@ def test_ivf_sq8_quantization_costs_no_recall(spark, sf_dir):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     exact = brute_force_topk(emb, queries, k=5)
-    flt = ivf_topk(
-        emb, queries, k=5, centroids=IVF_CENTROIDS, nprobe=2,
-        round_dp=9, score_round_dp=9,
-    )
-    sq8 = ivf_quantized_topk(
-        emb, queries, k=5, centroids=IVF_CENTROIDS, nprobe=2, round_dp=9
-    )
+    flt = ivf_topk(emb, queries, k=5, centroids=IVF_CENTROIDS, nprobe=2)
+    sq8 = ivf_quantized_topk(emb, queries, k=5, centroids=IVF_CENTROIDS, nprobe=2)
     r_flt = ann_recall_at_k(flt, exact, k=5).agg(F.avg("recall_at_k")).first()[0]
     r_sq8 = ann_recall_at_k(sq8, exact, k=5).agg(F.avg("recall_at_k")).first()[0]
     assert r_sq8 >= r_flt - 0.05  # quantization adds ~nothing on top of probing
@@ -1906,7 +1921,7 @@ def test_sketch_rollup_guarded_green(sharded_values):
     assert by_key[1]["n_shards"] == 6 and by_key[0]["n_shards"] == 6
 
 
-def test_sketch_rollup_estimate_plan_never_rescans(spark, sharded_values):
+def test_sketch_rollup_estimate_plan_never_rescans(spark, sharded_values, tmp_path):
     """The 100 TB claim in plan form: given a MATERIALIZED sketch
     frame, the rollup's physical plan contains no join and exactly
     one aggregate pair over sketch rows — the fact table does not
@@ -1915,13 +1930,11 @@ def test_sketch_rollup_estimate_plan_never_rescans(spark, sharded_values):
         shard_distinct_sketches,
         sketch_rollup_estimate,
     )
-    import os
-    import tempfile
 
     sk = shard_distinct_sketches(
         sharded_values, F.date_trunc("month", F.col("shard_ts")), "value"
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="sketch_tbl"), "sk")
+    path = str(tmp_path / "sk")
     sk.write.mode("overwrite").parquet(path)
     rolled = sketch_rollup_estimate(
         spark.read.parquet(path), lambda c: F.year(c)
@@ -2147,16 +2160,13 @@ def test_topk_rollup_sandwich_and_ties(hh_frame):
         assert r["est_lo"] <= r["exact_n"] <= r["est_hi"]
 
 
-def test_topk_rollup_plan_never_rescans(spark, hh_frame):
+def test_topk_rollup_plan_never_rescans(spark, hh_frame, tmp_path):
     """The 100 TB claim in plan form: given a MATERIALIZED summary
     table, the merged top-N plan reads ONLY the summary parquet —
     every scan in the plan is of the summary, the fact table never
     appears. (Unlike the HLL estimate the merge does join — per-key
     sums against per-rollup residual totals — but both sides are
     summary-row-sized.)"""
-    import os
-    import tempfile
-
     from taxi_rides_ny_duckdb_spark.operators.sketch import (
         shard_topk_summaries,
         topk_rollup,
@@ -2165,7 +2175,7 @@ def test_topk_rollup_plan_never_rescans(spark, hh_frame):
     sk = shard_topk_summaries(
         hh_frame, F.date_trunc("day", F.col("ts")), "key", k=2
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="hh_tbl"), "sk")
+    path = str(tmp_path / "hh_tbl")
     sk.write.mode("overwrite").parquet(path)
     rolled = topk_rollup(spark.read.parquet(path), lambda c: F.lit(1), 3)
     plan = rolled._jdf.queryExecution().executedPlan().toString()
@@ -3076,8 +3086,7 @@ def test_pca_whiten_project_decorrelates_training_data(spark):
         "id long, embedding array<double>",
     )
     mean, comps, scales = train_pca(df, "embedding", k=4, dim=4)
-    out = pca_whiten_project(df, mean, comps, scales, vec_col="embedding",
-                             round_dp=None)
+    out = pca_whiten_project(df, mean, comps, scales, vec_col="embedding")
     m = np.array([[r[f"pc{j}"] for j in range(1, 5)] for r in out.collect()])
     # zero-mean, identity covariance on the training distribution
     assert np.allclose(m.mean(axis=0), 0.0, atol=1e-9)
@@ -3598,11 +3607,11 @@ def _ref_lloyd(vecs, init, iters):
     """Pure-Python Lloyd replay of the oracle arithmetic: the
     ``_ref_argmin`` E-step, M-step sums of round(x·10¹²) (Decimal
     half-away) as Python ints, means through the scalar
-    ``classify._round9_half_up`` of float(s)/1e12/n, empty clusters
+    ``parity.round_half_up`` of float(s)/1e12/n, empty clusters
     keeping their previous centroid. Returns the trained centroids."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    from taxi_rides_ny_duckdb_spark.operators.classify import _round9_half_up
+    from taxi_rides_ny_duckdb_spark.functions.parity import PARITY_DP, round_half_up
 
     cents = [list(c) for c in init]
     for _ in range(iters):
@@ -3618,7 +3627,7 @@ def _ref_lloyd(vecs, init, iters):
                 )
         for c, cnt in counts.items():
             cents[c] = [
-                _round9_half_up(float(t) / 1e12 / cnt) for t in sums[c]
+                round_half_up(float(t) / 1e12 / cnt, PARITY_DP) for t in sums[c]
             ]
     return cents
 
@@ -4023,7 +4032,7 @@ def test_embedding_near_dup_pairs_matches_join_form(spark):
     """The r13 per-bucket Arrow pairing must reproduce the
     signature-keyed self-join + cosine_given_norms form row-for-row —
     bucket membership, rounded scores, the threshold boundary and
-    zero-norm rows included — at dp=9, a non-9 dp, and dp=None."""
+    zero-norm rows included — at three thresholds."""
     from pyspark.sql import functions as F
 
     from taxi_rides_ny_duckdb_spark.operators.similarity import (
@@ -4044,18 +4053,19 @@ def test_embedding_near_dup_pairs_matches_join_form(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    def join_form(threshold, dp):
+    def join_form(threshold):
         sig = df.select(
             "vec_id",
             _as_double_array(F.col("embedding")).alias("__v"),
             rh_signature(F.col("embedding"), 4, 3).alias("__sig"),
         ).withColumn("__n", l2_norm(F.col("__v")))
         a, b = sig.alias("a").hint("merge"), sig.alias("b")
-        score = cosine_given_norms(
-            F.col("a.__v"), F.col("b.__v"), F.col("a.__n"), F.col("b.__n")
+        score = F.round(
+            cosine_given_norms(
+                F.col("a.__v"), F.col("b.__v"), F.col("a.__n"), F.col("b.__n")
+            ),
+            9,
         )
-        if dp is not None:
-            score = F.round(score, dp)
         return (
             a.join(
                 b,
@@ -4073,12 +4083,12 @@ def test_embedding_near_dup_pairs_matches_join_form(spark):
     def rowset(frame):
         return sorted(tuple(r) for r in frame.collect())
 
-    for threshold, dp in ((0.3, 9), (0.9, 3), (0.5, None)):
+    for threshold in (0.3, 0.9, 0.5):
         fused = rowset(embedding_near_dup_pairs(
-            df, threshold=threshold, dim=4, bits=3, score_round_dp=dp))
-        joined = rowset(join_form(threshold, dp))
-        assert fused == joined, (threshold, dp)
-        assert len(fused) > 0, (threshold, dp)
+            df, threshold=threshold, dim=4, bits=3))
+        joined = rowset(join_form(threshold))
+        assert fused == joined, threshold
+        assert len(fused) > 0, threshold
 
 
 def test_hard_negative_mine_fused_matches_unfused(spark, monkeypatch):
@@ -4088,8 +4098,6 @@ def test_hard_negative_mine_fused_matches_unfused(spark, monkeypatch):
     composition — components (incl. transitive chains and
     self-singletons), candidate sets, rounded scores, rank ties to the
     lower id — for the exact AND the IVF-probed variant."""
-    import pytest as _pytest
-
     from pyspark.sql import functions as F
 
     from taxi_rides_ny_duckdb_spark.operators import similarity as S
@@ -4112,7 +4120,7 @@ def test_hard_negative_mine_fused_matches_unfused(spark, monkeypatch):
 
     for kwargs in (
         dict(),
-        dict(centroids=cents, nprobe=2, round_dp=9, score_round_dp=9),
+        dict(centroids=cents, nprobe=2),
     ):
         fused = rowset(S.hard_negative_mine_fused(
             vq, pair_threshold=0.9, k=3, **kwargs))
@@ -4122,8 +4130,6 @@ def test_hard_negative_mine_fused_matches_unfused(spark, monkeypatch):
         monkeypatch.undo()
         assert fused == unfused, kwargs
         assert len(fused) > 0, kwargs
-    with _pytest.raises(ValueError, match="score_round_dp"):
-        S.hard_negative_mine_fused(vq, 0.9, 3, score_round_dp=6)
 
 
 def test_semdedup_frozen_fused_matches_unfused(spark, monkeypatch):
@@ -4131,8 +4137,8 @@ def test_semdedup_frozen_fused_matches_unfused(spark, monkeypatch):
     _FUSED_LLOYD_MAX_ROWS/_CELLS) must reproduce the distributed
     per-partition assignment + per-cluster-collapse pipeline
     row-for-row — assignment (incl. rounded-distance ties to the lower
-    cid), components, cent_sim_r and keep flags — at dp=9 AND at a dp
-    that exercises the scalar Decimal rounding fallback. Both sides
+    cid), components, cent_sim_r and keep flags — at two thresholds.
+    Both sides
     share one numpy assignment kernel, so centroid_id is also checked
     against the Spark-expression assign_nearest_centroid."""
     from taxi_rides_ny_duckdb_spark.operators import similarity as S
@@ -4154,19 +4160,16 @@ def test_semdedup_frozen_fused_matches_unfused(spark, monkeypatch):
     def rowset(frame):
         return sorted(tuple(r) for r in frame.collect())
 
-    for kwargs in (
-        dict(threshold=0.999),            # dp=9 vectorized rounding twin
-        dict(threshold=0.9, round_dp=3),  # scalar Decimal fallback path
-    ):
-        fused = rowset(S.semdedup(df, cents, **kwargs))
+    for threshold in (0.999, 0.9):
+        fused = rowset(S.semdedup(df, cents, threshold=threshold))
         monkeypatch.setattr(S, "_FUSED_LLOYD_MAX_ROWS", 0)
-        unfused = rowset(S.semdedup(df, cents, **kwargs))
+        unfused = rowset(S.semdedup(df, cents, threshold=threshold))
         monkeypatch.undo()
-        assert fused == unfused, kwargs
-        expr = rowset(S.assign_nearest_centroid(
-            df, cents, round_dp=kwargs.get("round_dp", 9)
-        ).select("vec_id", "centroid_id"))
-        assert [(r[0], r[1]) for r in fused] == expr, kwargs
+        assert fused == unfused, threshold
+        expr = rowset(
+            S.assign_nearest_centroid(df, cents).select("vec_id", "centroid_id")
+        )
+        assert [(r[0], r[1]) for r in fused] == expr, threshold
 
 
 def test_semdedup_auto_validates(spark):
@@ -4699,21 +4702,20 @@ def test_binary_sign_words_packs_expected(spark):
 
 
 def test_round9_vectorized_matches_scalar(spark):
-    """The vectorized round9 twin (_round9_half_up_np) equals the
-    scalar Decimal(repr(x)) form — which is the engine-faithful one
-    (both engines round the SHORTEST repr at fractional scales, r13)
-    — on half-boundary witnesses, the ambiguity band, signs, and a
-    random grid; plus a Spark F.round spot-check on the witnesses.
-    The hoisted any-dp twin (_round_dp_np) is spot-checked the same
-    way at dp 3 and 6 (its scalar branch) and at dp 9."""
+    """The vectorized twin ``round_half_up_np`` at ``PARITY_DP`` equals
+    the scalar Decimal(repr(x)) form ``round_half_up`` — the
+    engine-faithful one for |v| < 1e4 (both engines round the SHORTEST
+    repr at fractional scales, r13) — on half-boundary witnesses, the
+    ambiguity band, signs, a random grid over (-1e4, 1e4) and n-D
+    input; plus a Spark F.round spot-check on the witnesses."""
     import numpy as np
 
     from pyspark.sql import functions as F
 
-    from taxi_rides_ny_duckdb_spark.operators.classify import _round9_half_up
-    from taxi_rides_ny_duckdb_spark.operators.similarity import (
-        _round9_half_up_np,
-        _round_dp_np,
+    from taxi_rides_ny_duckdb_spark.functions.parity import (
+        PARITY_DP,
+        round_half_up,
+        round_half_up_np,
     )
 
     witnesses = [
@@ -4731,36 +4733,23 @@ def test_round9_vectorized_matches_scalar(spark):
     grid = np.concatenate([
         np.asarray(witnesses, dtype=np.float64),
         rng.uniform(-2.0, 2.0, 4000),
+        rng.uniform(-1e4, 1e4, 4000),
         rng.uniform(-1e-8, 1e-8, 1000),
         # dense sampling right at the half-boundary lattice
         (np.arange(-500, 500) + 0.5) / 1e9,
     ])
-    got = _round9_half_up_np(grid)
-    want = np.asarray([_round9_half_up(float(x)) for x in grid])
+    got = round_half_up_np(grid, PARITY_DP)
+    want = np.asarray([round_half_up(float(x), PARITY_DP) for x in grid])
     mism = np.nonzero(got != want)[0]
     assert len(mism) == 0, [(float(grid[i]), float(got[i]), float(want[i])) for i in mism[:5]]
+    # n-D input rounds elementwise (the distance-matrix caller)
+    mat = grid[:6000].reshape(100, 60)
+    assert (round_half_up_np(mat, PARITY_DP) == got[:6000].reshape(100, 60)).all()
     # engine spot-check on the witnesses (F.round is the house target)
     df = spark.createDataFrame([(float(w),) for w in witnesses], "v double")
     eng = [r["r"] for r in df.select(F.round(F.col("v"), 9).alias("r")).collect()]
-    vec = _round9_half_up_np(np.asarray(witnesses, dtype=np.float64))
+    vec = round_half_up_np(np.asarray(witnesses, dtype=np.float64), PARITY_DP)
     assert [float(x) for x in vec] == eng
-    assert (_round_dp_np(grid, 9) == got).all()
-    # half-boundary witnesses at 3 and 6 dp for the scalar branch
-    dp_witnesses = witnesses + [
-        0.0005, -0.0005, 1.0005, 0.1235, 2.675, 0.0000005, 0.1234565,
-        0.00025, 1.0000005, -2.5e-4, 123.4565, 0.4999995,
-    ]
-    dp_df = spark.createDataFrame([(float(w),) for w in dp_witnesses], "v double")
-    for dp in (3, 6):
-        eng = [
-            r["r"]
-            for r in dp_df.select(F.round(F.col("v"), dp).alias("r")).collect()
-        ]
-        vec = _round_dp_np(np.asarray(dp_witnesses, dtype=np.float64), dp)
-        assert [float(x) for x in vec] == eng, dp
-        # n-D input rounds elementwise (the distance-matrix caller)
-        mat = np.asarray(dp_witnesses[:24], dtype=np.float64).reshape(4, 6)
-        assert (_round_dp_np(mat, dp) == np.asarray(eng[:24]).reshape(4, 6)).all()
 
 
 def test_round_half_away_kernels_match_both_engines(spark):
@@ -4775,7 +4764,7 @@ def test_round_half_away_kernels_match_both_engines(spark):
 
     from taxi_rides_ny_duckdb_spark.operators.similarity import (
         _round_half_away_int,
-        _round_half_away_nonneg_np,
+        _round_half_away_nonneg_i64,
         _round_half_away_signed_np,
     )
 
@@ -4783,7 +4772,7 @@ def test_round_half_away_kernels_match_both_engines(spark):
     # the old form really is wrong here (regression witness)...
     assert np.floor(np.float64(b) + 0.5) == 1.0
     # ...and the kernels are right:
-    assert _round_half_away_nonneg_np(np.asarray([b]))[0] == 0.0
+    assert _round_half_away_nonneg_i64(np.asarray([b]))[0] == 0
     assert _round_half_away_int(b) == 0
     assert list(_round_half_away_signed_np(np.asarray([b, -b, 0.5, -0.5]))) == [
         0.0,
@@ -4804,17 +4793,8 @@ def test_round_half_away_kernels_match_both_engines(spark):
         "SELECT CAST(round(x) AS BIGINT) FROM (SELECT unnest(?::DOUBLE[]) AS x)",
         params=[list(map(float, vals))],
     ).fetchall()
-    got = _round_half_away_nonneg_np(vals).astype(np.int64)
+    got = _round_half_away_nonneg_i64(vals)
     assert [int(g) for g in got] == [r[0] for r in duck]
-    # the hot-loop i64 form (floor(2v) − floor(v) via trunc-cast)
-    # produces the SAME values on the whole grid
-    from taxi_rides_ny_duckdb_spark.operators.similarity import (
-        _round_half_away_nonneg_i64,
-    )
-
-    got64 = _round_half_away_nonneg_i64(vals)
-    assert [int(g) for g in got64] == [r[0] for r in duck]
-    assert _round_half_away_nonneg_i64(np.asarray([b]))[0] == 0
     # Spark F.round agrees on the canonical witness (positive + signed)
     row = spark.sql(
         f"SELECT CAST(round({b!r} * 1.0) AS BIGINT) AS p, "
@@ -5039,9 +5019,7 @@ def test_hamming_rerank_recall_dominates_raw_hamming(spark, sf_dir):
         ).selectExpr("vec_id AS query_id", "bits"),
         k=5,
     )
-    cascade = hamming_rerank_topk(
-        emb, queries, dim=64, k=5, n_candidates=25, score_round_dp=9
-    )
+    cascade = hamming_rerank_topk(emb, queries, dim=64, k=5, n_candidates=25)
     r_raw = {
         r["query_id"]: r["recall_at_k"]
         for r in ann_recall_at_k(raw, exact, k=5).collect()
@@ -5142,46 +5120,78 @@ def test_embedding_pool_fails_fast_on_malformed_vectors(spark):
         embedding_pool(withnull, "g", dim=3).collect()
 
 
-def test_mmr_fused_greedy_matches_unrolled_plan(spark):
-    """The r13 fused per-query greedy (one cogroup pass at 9dp) must
-    select the same (rank, id, score) rows as the unrolled declarative
-    plan — exercised via a NON-9 round_dp, which still takes the
-    unrolled path — on a case with a score tie (ties to the lower id)
-    and more rounds than candidates (k > C stops early)."""
-    from pyspark.sql import functions as F
+def _ref_mmr(cand, vecs, k, lam):
+    """Pure-Python MMR greedy over ``cand`` = {query: [(id, rel)]} and
+    ``vecs`` = {id: vector}: sequential-fold cosines (0.0 on a zero
+    norm) and scores rounded through the scalar ``round_half_up`` at
+    ``PARITY_DP``, argmax ties to the lower id, at most k rounds.
+    Returns sorted (query, rank, id, score) rows."""
+    import math
 
+    from taxi_rides_ny_duckdb_spark.functions.parity import PARITY_DP, round_half_up
+
+    def cos(a, b):
+        dot = na = nb = 0.0
+        for x, y in zip(a, b):
+            dot, na, nb = dot + x * y, na + x * x, nb + y * y
+        na, nb = math.sqrt(na), math.sqrt(nb)
+        return dot / (na * nb) if na > 0 and nb > 0 else 0.0
+
+    out = []
+    for q, rows in cand.items():
+        rel = dict(rows)
+        selected: list = []
+        for rank in range(1, min(k, len(rel)) + 1):
+            best = None
+            for i in sorted(rel):
+                if i in selected:
+                    continue
+                if rank == 1:
+                    sc = round_half_up(rel[i], PARITY_DP)
+                else:
+                    ms = max(
+                        round_half_up(cos(vecs[i], vecs[j]), PARITY_DP)
+                        for j in selected
+                    )
+                    sc = round_half_up(lam * rel[i] - (1.0 - lam) * ms, PARITY_DP)
+                if best is None or sc > best[1]:
+                    best = (i, sc)
+            selected.append(best[0])
+            out.append((q, rank, best[0], best[1]))
+    return sorted(out)
+
+
+def test_mmr_topk_matches_python_greedy(spark):
+    """mmr_topk (one fused greedy per query) selects the same
+    (rank, id, score) rows as ``_ref_mmr`` — on a case with a score tie
+    (ties to the lower id), near-tie MMR scores, and more rounds than
+    candidates (k > C stops early)."""
     from taxi_rides_ny_duckdb_spark.operators.similarity import mmr_topk
 
-    # two queries; query 200 has ONE candidate (k > C early stop);
-    # query 100 has a rank-1 relevance tie between ids 1 and 2.
+    # query 200 has ONE candidate (k > C early stop); query 100 has a
+    # rank-1 relevance tie between ids 1 and 2.
+    vecs = {1: [1.0, 0.0], 2: [0.0, 1.0], 3: [0.6, 0.8], 4: [0.5, 0.5],
+            5: [0.8, 0.6], 6: [0.3, 0.7]}
+    cand = {100: [(1, 0.75), (2, 0.75), (3, 0.5), (5, 0.5), (6, 0.4)],
+            200: [(4, 0.9)]}
     corpus = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.6, 0.8]),
-         (4, [0.5, 0.5])],
-        "vec_id long, embedding array<double>",
+        list(vecs.items()), "vec_id long, embedding array<double>"
     )
-    cand = spark.createDataFrame(
-        [(100, 1, 0.75), (100, 2, 0.75), (100, 3, 0.5),
-         (200, 4, 0.9)],
+    cand_df = spark.createDataFrame(
+        [(q, i, r) for q, rows in cand.items() for i, r in rows],
         "query_id long, vec_id long, rel_r double",
     )
-    # round_dp=9 → fused; round_dp=8 → unrolled. These candidates'
-    # scores are exactly representable at both precisions, so the two
-    # paths MUST pick identical rows with identical scores.
-    fused = sorted(
+    got = sorted(
         (r["query_id"], r["sel_rank"], r["vec_id"], r["score_r"])
-        for r in mmr_topk(cand, corpus, k=3, lam=0.7).collect()
+        for r in mmr_topk(cand_df, corpus, k=4, lam=0.7).collect()
     )
-    unrolled = sorted(
-        (r["query_id"], r["sel_rank"], r["vec_id"], r["score_r"])
-        for r in mmr_topk(cand, corpus, k=3, lam=0.7, round_dp=8).collect()
-    )
-    assert fused == unrolled
+    assert got == _ref_mmr(cand, vecs, k=4, lam=0.7)
     by_q = {}
-    for q, rk, vid, _s in fused:
+    for q, rk, vid, _s in got:
         by_q.setdefault(q, []).append((rk, vid))
     assert by_q[200] == [(1, 4)], "k > C must stop after the only candidate"
     assert by_q[100][0] == (1, 1), "rank-1 tie must break to the lower id"
-    assert len(by_q[100]) == 3
+    assert len(by_q[100]) == 4
 
 
 def test_mmr_diversity_vs_pure_relevance(spark):
@@ -5332,8 +5342,7 @@ def test_semdedup_collapse_matches_scalar_replica(spark):
     keep = first row under (cent_sim_r asc, id asc). Fixture: a
     transitive chain (a~b, b~c, a!~c) with a cent_sim_r TIE, a
     zero-norm vector, singletons, a centroid with no members, plus a
-    seeded random cluster; run at dp=9 (the vectorized twin) AND dp=3
-    (the scalar Decimal fallback)."""
+    seeded random cluster; run at two thresholds."""
     import math
     import random
     from decimal import ROUND_HALF_UP, Decimal
@@ -5342,10 +5351,8 @@ def test_semdedup_collapse_matches_scalar_replica(spark):
         _semdedup_collapse,
     )
 
-    def rnd(x, dp):
-        return float(
-            Decimal(repr(x)).quantize(Decimal(1).scaleb(-dp), ROUND_HALF_UP)
-        )
+    def rnd(x):
+        return float(Decimal(repr(x)).quantize(Decimal("1e-9"), ROUND_HALF_UP))
 
     def fold(a, b):
         acc = 0.0
@@ -5357,7 +5364,7 @@ def test_semdedup_collapse_matches_scalar_replica(spark):
         na, nb = math.sqrt(fold(a, a)), math.sqrt(fold(b, b))
         return fold(a, b) / (na * nb) if na > 0 and nb > 0 else 0.0
 
-    def replica(rows, cents, threshold, dp):
+    def replica(rows, cents, threshold):
         by_c = {}
         for r in rows:
             by_c.setdefault(r[1], []).append(r)
@@ -5365,7 +5372,7 @@ def test_semdedup_collapse_matches_scalar_replica(spark):
         for cid, mem in by_c.items():
             mem = sorted(mem, key=lambda r: r[0])
             parent = {r[0]: r[0] for r in mem}
-            cs = {r[0]: rnd(cos(r[2], cents[cid]), dp) for r in mem}
+            cs = {r[0]: rnd(cos(r[2], cents[cid])) for r in mem}
 
             def find(x):
                 while parent[x] != x:
@@ -5376,7 +5383,7 @@ def test_semdedup_collapse_matches_scalar_replica(spark):
                 for j in range(i + 1, len(mem)):
                     ida, _, va = mem[i]
                     idb, _, vb = mem[j]
-                    if rnd(cos(va, vb), dp) >= threshold:
+                    if rnd(cos(va, vb)) >= threshold:
                         ra, rb = find(ida), find(idb)
                         if ra != rb:
                             parent[max(ra, rb)] = min(ra, rb)
@@ -5417,24 +5424,20 @@ def test_semdedup_collapse_matches_scalar_replica(spark):
     cents_df = spark.createDataFrame(
         sorted(cents.items()), "centroid_id int, cv array<double>"
     )
-    for threshold, dp in ((0.9, 9), (0.9, 3), (0.35, 9)):
+    for threshold in (0.9, 0.35):
         got = {
             r["vec_id"]: (
                 r["centroid_id"], r["component"], r["cent_sim_r"], r["keep"]
             )
-            for r in _semdedup_collapse(
-                members, cents_df, threshold, "vec_id", dp
-            ).collect()
+            for r in _semdedup_collapse(members, cents_df, threshold, "vec_id").collect()
         }
-        assert got == replica(rows, cents, threshold, dp), (threshold, dp)
-    # pin the fixture's named behaviors at (0.9, 9): the chain closes
+        assert got == replica(rows, cents, threshold), threshold
+    # pin the fixture's named behaviors at 0.9: the chain closes
     # 1-2-3 into one min-id component, the tie keeps the lower id,
     # zero-norm 4 is a singleton
     got = {
         r["vec_id"]: r
-        for r in _semdedup_collapse(
-            members, cents_df, 0.9, "vec_id", 9
-        ).collect()
+        for r in _semdedup_collapse(members, cents_df, 0.9, "vec_id").collect()
     }
     assert got[1]["cent_sim_r"] == got[2]["cent_sim_r"] < got[3]["cent_sim_r"]
     assert got[1]["component"] == got[2]["component"] == got[3]["component"] == 1
@@ -5448,7 +5451,7 @@ def test_semdedup_collapse_matches_scalar_replica(spark):
 
 
 def test_round12_vectorized_matches_scalar(spark):
-    """The vectorized round12 twin (_round12_half_up_np) equals the
+    """The vectorized twin ``round_half_up_np`` at 12 dp equals the
     scalar Decimal(repr(x)) form on half-boundary witnesses, the
     ambiguity band, signs, the >= 2 slow route and a random grid;
     plus a Spark F.round spot-check (the engine target of the fused
@@ -5456,9 +5459,9 @@ def test_round12_vectorized_matches_scalar(spark):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from taxi_rides_ny_duckdb_spark.operators.classify import (
-        _round12_half_up,
-        _round12_half_up_np,
+    from taxi_rides_ny_duckdb_spark.functions.parity import (
+        round_half_up,
+        round_half_up_np,
     )
 
     witnesses = [
@@ -5479,15 +5482,15 @@ def test_round12_vectorized_matches_scalar(spark):
         rng.uniform(-1e-11, 1e-11, 1000),
         (np.arange(-500, 500) + 0.5) / 1e12,
     ])
-    got = _round12_half_up_np(grid)
-    want = np.asarray([_round12_half_up(float(x)) for x in grid])
+    got = round_half_up_np(grid, 12)
+    want = np.asarray([round_half_up(float(x), 12) for x in grid])
     mism = np.nonzero(got != want)[0]
     assert len(mism) == 0, [
         (float(grid[i]), float(got[i]), float(want[i])) for i in mism[:5]
     ]
     df = spark.createDataFrame([(float(w),) for w in witnesses], "v double")
     eng = [r["r"] for r in df.select(F.round(F.col("v"), 12).alias("r")).collect()]
-    vec = _round12_half_up_np(np.asarray(witnesses, dtype=np.float64))
+    vec = round_half_up_np(np.asarray(witnesses, dtype=np.float64), 12)
     assert [float(x) for x in vec] == eng
 
 
@@ -5497,11 +5500,12 @@ def _ref_lr(rows, dim, iters, lr):
     included: per-doc z and per-idx gradients are Python-int sums of
     12dp-rounded addends at scale 10^12 (the exact DECIMAL(38,12)
     sums), σ̃(z) = 0.5 + 0.5·z/(1+|z|), then w - lr·(g/n) with n the
-    doc count. Shares only the scalar ``_round12_half_up`` with the
+    doc count. Shares only the scalar ``round_half_up`` with the
     package."""
-    from taxi_rides_ny_duckdb_spark.operators.classify import (
-        _round12_half_up as r12,
-    )
+    from taxi_rides_ny_duckdb_spark.functions.parity import round_half_up
+
+    def r12(x):
+        return round_half_up(x, 12)
 
     scale = 10**12
     n = sum(1 for _, idx, _, _ in rows if idx == dim)

@@ -363,7 +363,7 @@ def test_tfidf_matches_python_reference(spark, docs):
     import math
     from collections import Counter
 
-    from taxi_rides_ny_duckdb_spark.operators.classify import _round9_half_up
+    from taxi_rides_ny_duckdb_spark.functions.parity import PARITY_DP, round_half_up
     from taxi_rides_ny_duckdb_spark.operators.cleaning import tfidf_topk_terms
 
     df = spark.createDataFrame(
@@ -379,8 +379,9 @@ def test_tfidf_matches_python_reference(spark, docs):
     want = set()
     for i, c in enumerate(tfs):
         scored = sorted(
-            (-_round9_half_up(
-                n * (math.log((len(docs) + 1.0) / (dfreq[t] + 1.0)) + 1.0)
+            (-round_half_up(
+                n * (math.log((len(docs) + 1.0) / (dfreq[t] + 1.0)) + 1.0),
+                PARITY_DP,
             ), t)
             for t, n in c.items()
         )
@@ -780,7 +781,7 @@ def test_bpe_learn_and_segment_match_reference(spark, docs, n_merges):
     )
 )
 def test_round_half_away_kernels_match_exact_rational(vals):
-    """All three nonneg half-away kernels (r12) equal the EXACT
+    """Both nonneg half-away kernels (r12) equal the EXACT
     rational half-away of the double's true binary value — checked
     against fractions.Fraction, which is engine-free and exact. This
     is the property the floor(v+0.5) form violated (it rounds the
@@ -793,7 +794,6 @@ def test_round_half_away_kernels_match_exact_rational(vals):
     from taxi_rides_ny_duckdb_spark.operators.similarity import (
         _round_half_away_int,
         _round_half_away_nonneg_i64,
-        _round_half_away_nonneg_np,
     )
 
     def exact(v: float) -> int:
@@ -803,7 +803,6 @@ def test_round_half_away_kernels_match_exact_rational(vals):
 
     want = [exact(v) for v in vals]
     a = np.asarray(vals, dtype=np.float64)
-    assert [int(x) for x in _round_half_away_nonneg_np(a)] == want
     assert [int(x) for x in _round_half_away_nonneg_i64(a)] == want
     assert [_round_half_away_int(v) for v in vals] == want
 

@@ -97,18 +97,21 @@ def query(
 #    rows stale; set computed by tools/changed_queries.py — the r12
 #    ad-hoc AST call-closure, promoted to a tracked tool — seeded
 #    with the edited functions kmeans_lloyd, kmeans_lloyd_grouped,
-#    the E-step selector, _round9_half_up, connected_components,
+#    the E-step selector, the scalar 9-dp round (now
+#    functions.parity.round_half_up), connected_components,
 #    _semdedup_collapse, _semdedup_multilevel, semdedup_auto,
 #    temperature_mixture, lr_train_surrogate):
 #    - the ONE-PASS grouped Lloyd trainer (all iterations inside one
 #      cogroup; means by the Python repr-based round9 twin) + the
-#      arrow-always E-step strategy + the repr-based _round9_half_up
-#      fix (both engines round the SHORTEST repr, not the exact
-#      binary value): every trained-quantizer query — ext_kmeans_train,
+#      arrow-always E-step strategy + the repr-based scalar round
+#      fix, now functions.parity.round_half_up (both engines round
+#      the SHORTEST repr, not the exact binary value): every
+#      trained-quantizer query — ext_kmeans_train,
 #      ext_semdedup{,_auto,_hier,_hier3}, ext_pq_topk, ext_pq_recall,
 #      ext_ivfpq_topk, ext_ivfpq_recall — plus the lr surrogate pair
 #      (ext_lr_train, ext_lr_score) whose weights round through the
-#      same twin, and ext_temperature_mixture (its _round9 twin);
+#      same twin, and ext_temperature_mixture (its inline round,
+#      now also functions.parity.round_half_up);
 #    - connected_components (limit-probe gate, edge-touched-only
 #      union-find, emit="mapping"): every CC consumer —
 #      ext_contrastive_pairs, ext_dedup_cluster_components,

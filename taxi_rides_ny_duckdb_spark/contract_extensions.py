@@ -750,9 +750,10 @@ SELECT id AS vec_id, min(r) AS component FROM reach GROUP BY id
 @query("ext_dedup_cluster_components", oracle=_CLUSTER_COMPONENTS_ORACLE, memoize=False)
 def ext_dedup_cluster_components(spark, sf_dir):
     """Transitive closure of the exact near-dup pair list (a≈b, b≈c ⇒
-    one cluster): distributed min-label propagation vs the oracle's
-    recursive CTE. Completes the dedup ladder — pair-finders emit
-    edges, corpus collapse needs clusters (operators/dedup.py). Reads
+    one cluster): size-gated union-find / large-star-small-star
+    ``connected_components`` vs the oracle's recursive CTE. Completes
+    the dedup ladder — pair-finders emit edges, corpus collapse needs
+    clusters (operators/dedup.py). Reads
     the shared once-per-(session, dataset) cluster index
     (``_embedding_near_dup_index`` — r10): as the alphabetically-
     second consumer its bench row reads the checkpointed index;
@@ -2902,14 +2903,11 @@ def ext_profile_correlation(spark, sf_dir):
     """Pairwise Pearson correlation panel (plans/profile.
     profile_correlation) over lineitem's numeric measures — the
     column-dependency view a profiler adds on top of per-column stats.
-    This is the ``exact_decimal=True`` path — all five moments per
-    pair are exact decimal sums (order-independent at any parallelism
-    — built-in corr() drifts in the last ulp with partition order),
-    the textbook formula then runs the identical IEEE double ops in
-    both engines, 9dp-rounded; that bit-stability is what makes it the
-    oracled path. The operator's DEFAULT is the ~13× cheaper built-in
-    co-moment ``corr()`` (r7 — property-tested to agree within 1e-9;
-    sf1 row in BASELINE.md). One aggregate row total, map-side
+    All five moments per pair are exact decimal sums (order-independent
+    at any parallelism — built-in corr() drifts in the last ulp with
+    partition order), and the textbook formula then runs the identical
+    IEEE double ops in both engines, 9dp-rounded; that bit-stability is
+    what makes it oracle-matchable. One aggregate row total, map-side
     partials, no unpivot."""
     from .plans.profile import profile_correlation
 
@@ -2921,7 +2919,6 @@ def ext_profile_correlation(spark, sf_dir):
             ("l_quantity", "l_discount"),
             ("l_extendedprice", "l_discount"),
         ],
-        exact_decimal=True,
     )
 
 
@@ -8734,10 +8731,10 @@ def ext_retrieval_ranking_quality(spark, sf_dir):
 
 
 def _bits_words_sql(dim: int, vec: str = "ev", bits_per_word: int = 32) -> str:
-    """DuckDB expression replaying operators/similarity.binary_sign_words
-    bit-for-bit: per word, 32 CASE-per-bit terms folded by + (the same
-    shape the Spark plan compiles), packed little-endian, values < 2³²
-    so BIGINT xor/bit_count is sign-free by construction."""
+    """DuckDB expression replaying operators/similarity._pack_sign_bits_np
+    bit-for-bit: per word, 32 CASE-per-bit terms folded by +, packed
+    little-endian (bit j set ⇔ coordinate > 0, NaN included), values
+    < 2³² so BIGINT xor/bit_count is sign-free by construction."""
     words = []
     for w0 in range(0, dim, bits_per_word):
         terms = [
@@ -8777,15 +8774,12 @@ SELECT query_id, rank, vec_id, hamming_d FROM (
 @query("ext_binary_hamming_topk", oracle=_BINARY_HAMMING_TOPK_ORACLE)
 def ext_binary_hamming_topk(spark, sf_dir):
     """Top-5 per query by Hamming distance over packed 1-bit sign codes
-    (operators/similarity.binary_quantize + hamming_topk) — the
-    cheapest rung of the quantization ladder (float32 → SQ8 → PQ →
-    1-bit). r11: the query path is the FUSED pack+scan
-    (hamming_topk_fused — numpy sign-pack + xor/popcount + local top-k
-    in ONE Arrow pass over the floats; bit-identical to the
-    binary_quantize → hamming_topk two-pass, which remains the
-    materialized-codes production path). Sign convention (coord > 0)
-    and little-endian 32-bit packing are replayed exactly by the
-    oracle; ties break on vec_id so ranks are engine-identical."""
+    (operators/similarity.hamming_topk_fused) — the cheapest rung of
+    the quantization ladder (float32 → SQ8 → PQ → 1-bit). One Arrow
+    pass over the floats: numpy sign-pack + xor/popcount + local top-k
+    per batch, then one window over the survivors. Sign convention
+    (coord > 0) and little-endian 32-bit packing are replayed exactly
+    by the oracle; ties break on vec_id so ranks are engine-identical."""
     from .operators.similarity import hamming_topk_fused
 
     emb = load(spark, sf_dir, "embeddings")

@@ -216,7 +216,6 @@ def remove_duplicated_spans(
     id_col: str,
     span_tokens: int = 16,
     min_dup_docs: int = 2,
-    broadcast_blacklist: bool = True,
 ) -> DataFrame:
     """Corpus-level duplicated-span removal (the Gopher/FineWeb
     "remove repeated boilerplate" pass): cut every document into
@@ -243,9 +242,7 @@ def remove_duplicated_spans(
     corpus is never shuffled for it; the rebuild is the second
     corpus-sized shuffle (groupBy doc). Spans are materialized by a
     narrow ``posexplode`` over a pure array-slice expression — no UDF
-    anywhere. Set ``broadcast_blacklist=False`` when a low threshold
-    on a huge corpus makes the blacklist executor-memory-sized; the
-    join degrades to a shuffle join, same semantics.
+    anywhere.
 
     Oracle (DuckDB): same tokenize/slice/array_to_string spans,
     ``HAVING COUNT(DISTINCT doc_id) >= D`` blacklist, LEFT-JOIN
@@ -287,10 +284,7 @@ def remove_duplicated_spans(
         .filter(F.col("__dup_docs") >= min_dup_docs)
         .select(F.col("__span").alias("__bl_span"))
     )
-    # False = the caller KNOWS the blacklist outgrew executor memory:
-    # merge-pin it (a bare unpinned frame would still auto-broadcast
-    # whenever size estimates allow, defeating the escape hatch)
-    bl = F.broadcast(blacklist) if broadcast_blacklist else blacklist.hint("merge")
+    bl = F.broadcast(blacklist)
     marked = chunks.join(
         bl, chunks["__span"] == bl["__bl_span"], "left"
     ).withColumn("__dup", F.col("__bl_span").isNotNull())

@@ -579,6 +579,14 @@ def simhash_candidate_pairs(
     )
 
 
+# Size gate of ``connected_components``: an edge list up to this many
+# rows is collected and closed by driver union-find; above it the
+# distributed large-star/small-star rounds run, at most
+# ``_CC_MAX_ROUNDS`` of them.
+_CC_DRIVER_MAX_EDGES = 1_000_000
+_CC_MAX_ROUNDS = 50
+
+
 def _union_find(edge_list, node_ids):
     """Driver-side union-find with path compression; returns
     {id: min id of its component}."""
@@ -601,10 +609,10 @@ def _union_find(edge_list, node_ids):
     return {n: find(n) for n in node_ids}
 
 
-def _star_components(sym: DataFrame, ids: DataFrame, max_iter: int) -> DataFrame:
+def _star_components(sym: DataFrame, ids: DataFrame) -> DataFrame:
     """Distributed CC via alternating large-star/small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the skew-robust alternative to min-label propagation:
+    SoCC'14) — skew-robust where min-label propagation is not:
     each round REWRITES the edge set toward a star rooted at the
     component minimum, so a high-degree hub's neighborhood collapses
     in O(1) rounds instead of fanning its label through every
@@ -644,7 +652,7 @@ def _star_components(sym: DataFrame, ids: DataFrame, max_iter: int) -> DataFrame
         return (r["n"], r["h"])
 
     sig = _sig(e)
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ROUNDS):
         # large-star: neighbors strictly above u link to u's minimum.
         s = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         mins = (
@@ -679,7 +687,7 @@ def _star_components(sym: DataFrame, ids: DataFrame, max_iter: int) -> DataFrame
         if new_sig == sig:
             break
         sig = new_sig
-    # Final per-id canonicalization (ADVICE r6): if max_iter exhausts
+    # Final per-id canonicalization (ADVICE r6): if _CC_MAX_ROUNDS exhausts
     # before the edge multiset stabilizes (or a 2^-64 signature
     # collision masks a change), a node can still hold edges to two
     # targets; without this groupBy that would emit duplicate
@@ -701,9 +709,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     nodes: DataFrame | None = None,
-    max_iter: int = 50,
-    driver_threshold_edges: int = 1_000_000,
-    algorithm: str = "auto",
     emit: str = "full",
 ) -> DataFrame:
     """Transitive closure over a near-dup pair list: (id, component)
@@ -715,28 +720,16 @@ def connected_components(
     Size-gated physical strategy, the same economics as Catalyst's
     broadcast-vs-sort-merge choice: the edge list is a tiny derivative
     of the corpus (near-dup pairs, not documents), so when it fits the
-    driver comfortably (≤ ``driver_threshold_edges``), collect it and
+    driver comfortably (≤ ``_CC_DRIVER_MAX_EDGES``), collect it and
     run union-find with path compression — O(E α(E)), 4 small jobs
-    total. Above the threshold, ``algorithm`` picks the distributed
-    strategy:
-
-    - ``"star"`` (and the ``"auto"`` default above the gate):
-      alternating large-star/small-star (Kiveris et al., "Connected
-      Components in MapReduce and Beyond") — O(log n) rounds
-      regardless of graph diameter or degree skew, because each round
-      REWRITES edges toward the component-minimum star instead of
-      re-flooding a hub's full neighbor list. The web-scale choice.
-    - ``"label"``: min-label propagation with a pointer-jump shortcut
-      (Shiloach-Vishkin): each round every node's label becomes
-      min(label, neighbors' labels, label-of-label). Kept as the
-      independent second implementation the property tests compare
-      against (three-way: union-find ≡ label ≡ star on random graphs
-      plus hub/chain fixtures).
-    - ``"driver"``: force the union-find path regardless of size.
-
-    Both distributed paths ``localCheckpoint`` per round (an iterative
-    plan otherwise grows a join per round until analysis dominates)
-    and shuffle only (id, id)-sized pairs — never document payloads.
+    total. Above the gate, alternating large-star/small-star
+    (Kiveris et al., "Connected Components in MapReduce and Beyond")
+    runs distributed — O(log n) rounds regardless of graph diameter or
+    degree skew, because each round REWRITES edges toward the
+    component-minimum star instead of re-flooding a hub's full
+    neighbor list. Each round ``localCheckpoint``s (an iterative plan
+    otherwise grows a join per round until analysis dominates) and
+    shuffles only (id, id)-sized pairs — never document payloads.
 
     ``nodes``: optional single-column DataFrame of ALL ids; members
     absent from ``edges`` come back as singleton components (a corpus
@@ -754,11 +747,6 @@ def connected_components(
     semdedup collapse tail runs on this. ``nodes`` is ignored under
     ``emit="mapping"``.
     """
-    if algorithm not in ("auto", "star", "label", "driver"):
-        raise ValueError(
-            f"algorithm must be one of 'auto', 'star', 'label', 'driver'; "
-            f"got {algorithm!r}"
-        )
     if emit not in ("full", "mapping"):
         raise ValueError(f"emit must be 'full' or 'mapping', got {emit!r}")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -777,9 +765,7 @@ def connected_components(
     # measured ~5-10 s of pure py4j deserialization on the 2.4M-edge
     # sf10 semdedup graph, against ~0.2 s saved at the correctness SF.)
     out_type = dict(ids.dtypes)["id"]
-    if algorithm == "driver" or (
-        algorithm == "auto" and e.count() <= driver_threshold_edges
-    ):
+    if e.count() <= _CC_DRIVER_MAX_EDGES:
         edge_list = [(r["src"], r["dst"]) for r in e.collect()]
         e.unpersist()
         # Union-find over EDGE-TOUCHED ids only (r13): the old path
@@ -809,8 +795,8 @@ def connected_components(
         return mapping.union(singles)
     # Distributed path: checkpoint sym AND ids off the still-cached
     # edge frame BEFORE dropping it. The previous order (unpersist,
-    # then let the star/label path checkpoint sym and read ids from
-    # raw lineage) re-evaluated the caller's pair-finder 2-3× — for
+    # then let the star path checkpoint sym and read ids from raw
+    # lineage) re-evaluated the caller's pair-finder 2-3× — for
     # semdedup_auto at sf10 that was a 25M-candidate cosine join run
     # three times: 119.5 s collapse vs 41 s with the cache held
     # (profiled r9). Edges are (id, id)-sized; the checkpoints are
@@ -818,46 +804,7 @@ def connected_components(
     sym = sym.localCheckpoint(eager=True)
     ids = ids.localCheckpoint(eager=True)
     e.unpersist()
-
-    if algorithm in ("star", "auto"):
-        return _star_components(sym, ids, max_iter)
-
-    labels = ids.withColumn("component", F.col("id")).localCheckpoint(eager=True)
-    sym = sym.localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        cand = sym.join(
-            labels.withColumnRenamed("id", "src"), "src"
-        ).select(F.col("dst").alias("id"), "component")
-        stepped = (
-            labels.select("id", "component")
-            .union(cand)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-        )
-        # Pointer-jump shortcut (Shiloach-Vishkin): follow the label one
-        # more step — id's label becomes min(label, label-of-label).
-        # Labels are node ids and `stepped` covers every node, so the
-        # self-join always hits. Propagation distance doubles per round:
-        # a diameter-d chain converges in O(log d) rounds instead of d
-        # (measured 8 → 4 rounds on the sf0.1 near-dup graph, and each
-        # round is fixed-cost-dominated at any data size).
-        jump = stepped.select(
-            F.col("id").alias("component"), F.col("component").alias("__jump")
-        )
-        new = (
-            stepped.join(jump, "component")
-            .select("id", F.least("component", "__jump").alias("component"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new.join(labels.withColumnRenamed("component", "old"), "id")
-            .filter(F.col("component") != F.col("old"))
-            .count()
-        )
-        labels = new
-        if changed == 0:
-            break
-    return labels
+    return _star_components(sym, ids)
 
 
 def cluster_dedup(

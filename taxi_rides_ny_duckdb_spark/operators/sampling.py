@@ -262,7 +262,6 @@ def cap_per_group(
     group_col: str,
     cap: int,
     salt: str = "cap",
-    two_level: bool = True,
 ) -> DataFrame:
     """Frequency cap: keep at most ``cap`` rows per group — the
     anti-dominance curation rule ("no single domain/source contributes
@@ -275,7 +274,7 @@ def cap_per_group(
     runs/engines, and stable under appends up to hash displacement
     (a new doc can displace at most one old survivor).
 
-    Two-level top-K (the default, VERDICT r6 #2): a per-PARTITION
+    Two-level top-K (VERDICT r6 #2): a per-PARTITION
     partial top-cap runs BEFORE the exchange — an Arrow ``mapInPandas``
     pass that keeps only each group's ``cap`` lowest-hash rows seen in
     that partition (state bounded by groups-per-partition × cap, folded
@@ -286,13 +285,11 @@ def cap_per_group(
     carries cap-bounded survivors instead of the full corpus, and a
     group holding 50 % of all rows arrives at its one window task
     already pruned to cap × P rows instead of serializing the corpus
-    half through one reducer. ``two_level=False`` keeps the plain
-    single-window plan (fine when groups are known-bounded and the
-    Arrow pass isn't worth it)."""
+    half through one reducer."""
     if cap < 1:
         raise ValueError(f"cap must be >= 1, got {cap}")
     return _keyed_top_per_group(
-        df, hash_fraction(F.col(id_col), salt), id_col, group_col, cap, two_level
+        df, hash_fraction(F.col(id_col), salt), id_col, group_col, cap
     )
 
 
@@ -302,55 +299,46 @@ def _keyed_top_per_group(
     id_col: str,
     group_col: str,
     cap: int,
-    two_level: bool,
 ) -> DataFrame:
     """Keep the ``cap`` rows with the SMALLEST ``(key, id)`` per group —
     the shared engine behind ``cap_per_group`` (key = content hash) and
     ``weighted_sample_per_group`` (key = negated Efraimidis–Spirakis
-    draw). ``two_level=True`` runs the Arrow per-partition partial
-    top-cap BEFORE the exchange (identical output — every global winner
-    is inside its partition's top-cap — with cap-bounded shuffle and no
+    draw). An Arrow per-partition partial top-cap runs BEFORE the
+    exchange (identical output — every global winner is inside its
+    partition's top-cap — with cap-bounded shuffle and no
     single-reducer skew; see cap_per_group docstring for the full
-    rationale)."""
+    rationale), then the exact window."""
+    import pandas as pd
     from pyspark.sql.window import Window
 
-    src = df
-    if two_level:
-        import pandas as pd
+    with_u = df.withColumn("__u", key)
 
-        with_u = df.withColumn("__u", key)
-        n_keep = cap
+    def prune(batches):
+        state: pd.DataFrame | None = None
+        for pdf in batches:
+            both = (
+                pdf
+                if state is None
+                else pd.concat([state, pdf], ignore_index=True)
+            )
+            # sort by the window's exact order, then first `cap` per
+            # group (dropna=False: null groups are groups to the
+            # window too)
+            state = (
+                both.sort_values(["__u", id_col], kind="mergesort")
+                .groupby(group_col, dropna=False, sort=False)
+                .head(cap)
+            )
+        if state is not None and len(state):
+            yield state
 
-        def prune(batches):
-            state: pd.DataFrame | None = None
-            for pdf in batches:
-                both = (
-                    pdf
-                    if state is None
-                    else pd.concat([state, pdf], ignore_index=True)
-                )
-                # sort by the window's exact order, then first `cap`
-                # per group (dropna=False: null groups are groups to
-                # the window too)
-                state = (
-                    both.sort_values(["__u", id_col], kind="mergesort")
-                    .groupby(group_col, dropna=False, sort=False)
-                    .head(n_keep)
-                )
-            if state is not None and len(state):
-                yield state
-
-        src = with_u.mapInPandas(prune, schema=with_u.schema)
-        order_u = F.col("__u")
-    else:
-        order_u = key
-    w = Window.partitionBy(group_col).orderBy(order_u.asc(), F.col(id_col).asc())
-    out = (
+    src = with_u.mapInPandas(prune, schema=with_u.schema)
+    w = Window.partitionBy(group_col).orderBy(F.col("__u").asc(), F.col(id_col).asc())
+    return (
         src.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= cap)
-        .drop("__rn")
+        .drop("__rn", "__u")
     )
-    return out.drop("__u") if two_level else out
 
 
 def weighted_sample_per_group(
@@ -360,7 +348,6 @@ def weighted_sample_per_group(
     n: int,
     weight_col: str,
     salt: str = "wsample",
-    two_level: bool = True,
 ) -> DataFrame:
     """Deterministic WEIGHTED sampling without replacement, ``n`` per
     group (Efraimidis–Spirakis A-ES): each row draws ``u^(1/w)`` with
@@ -393,7 +380,7 @@ def weighted_sample_per_group(
     # round(-pow(...)) matches bit-for-bit (round is odd: r(-x)=-r(x))
     key = -F.round(F.pow(u, F.lit(1.0) / F.col(weight_col)), PARITY_DP)
     eligible = df.filter(F.col(weight_col) > 0)
-    return _keyed_top_per_group(eligible, key, id_col, group_col, n, two_level)
+    return _keyed_top_per_group(eligible, key, id_col, group_col, n)
 
 
 def corpus_shuffle(

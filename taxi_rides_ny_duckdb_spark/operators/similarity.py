@@ -3335,48 +3335,6 @@ def ranking_quality(
 # ---------------------------------------------------------------------------
 
 
-def binary_sign_words(vec: Column, dim: int, bits_per_word: int = 32) -> Column:
-    """Pack the sign bits of a ``dim``-length vector into
-    ``ceil(dim/bits_per_word)`` little-endian words (array<bigint>):
-    word w carries bit j ⇔ vec[w·bpw + j] > 0 (strictly positive — an
-    exact 0.0 coordinate packs as 0, same convention both engines).
-
-    bits_per_word defaults to 32 so every word value stays < 2³² —
-    non-negative in BIGINT on both engines, which keeps xor/bit_count
-    trivially sign-free in the SQL replay. Pure CASE-per-bit integer
-    expressions folded by +: whole-stage codegen, no HOFs, no UDF.
-    At dim=64 the corpus-sized scan payload is 2 BIGINTs per row — a
-    32× read-amplification win over the float32 embedding at 100 TB."""
-    words = []
-    for w0 in range(0, dim, bits_per_word):
-        acc = F.lit(0).cast("long")
-        for j in range(min(bits_per_word, dim - w0)):
-            acc = acc + F.when(
-                F.get(vec, w0 + j) > 0, F.lit(1 << j).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        words.append(acc)
-    return F.array(*words)
-
-
-def binary_quantize(
-    vecs: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits_per_word: int = 32,
-) -> DataFrame:
-    """(id, bits array<bigint>) — the packed 1-bit corpus. One
-    projection, no shuffle; the codes column is what a production
-    pipeline would materialize next to (or instead of) the float
-    embeddings for the coarse-scan stage."""
-    return vecs.select(
-        F.col(id_col),
-        binary_sign_words(
-            _as_double_array(F.col(vec_col)), dim, bits_per_word
-        ).alias("bits"),
-    )
-
-
 def _popcount64(x):
     """Vectorized popcount of a non-negative int64 numpy array:
     np.bitwise_count where available (numpy ≥ 2), else a byte-table
@@ -3396,93 +3354,16 @@ def _popcount64(x):
     return table[b].reshape(*x.shape, 8).sum(axis=-1)
 
 
-def _hamming_batch_topk(W, ids, qids, Qw, k: int):
-    """One Arrow batch's half of the two-phase Hamming top-k, shared by
-    ``hamming_topk`` and ``hamming_topk_fused``: all |Q| distance
-    vectors of the batch's packed words ``W`` in numpy (xor + popcount
-    are SIMD over the batch), then each query's LOCAL top-k by
-    (distance, id) via lexsort — the per-batch top-k provably contains
-    every global top-k row the final window keeps. Returns the
-    survivors as (query ids, batch row positions, distances)."""
-    import numpy as np
-
-    out_q, pos, out_d = [], [], []
-    for qi, qid in enumerate(qids):
-        d = _popcount64(W ^ Qw[qi][None, :]).sum(axis=1)
-        top = np.lexsort((ids, d))[:k]
-        out_q.extend([qid] * len(top))
-        pos.extend(top)
-        out_d.extend(d[top])
-    return out_q, np.asarray(pos, dtype=np.int64), out_d
-
-
-def hamming_topk(
-    corpus_bits: DataFrame,
-    query_bits: DataFrame,
-    k: int,
-    n_words: int = 2,
-    corpus_id: str = "vec_id",
-    query_id: str = "query_id",
-) -> DataFrame:
-    """Top-k per query by Hamming distance over packed sign-bit codes,
-    (distance, id) tie-break — deterministic, oracle-matchable. The
-    corpus never shuffles; the scan reads only the packed words.
-
-    One mapInPandas scan: each Arrow batch emits only its local top-k
-    per query (``_hamming_batch_topk``), and a final window ranks the
-    ≤partitions·|Q|·k survivors — the |Q|·n distance rows never
-    materialize (a broadcast cross join did: 5.2 s vs 0.8 s for this
-    scan at sf10x, 16M rows).
-
-    Output: (query_id, rank, vec_id, hamming_d)."""
-    import numpy as np
-    import pandas as pd
-
-    qrows = query_bits.select(query_id, "bits").collect()  # |Q|-bounded
-    qids = [r[query_id] for r in qrows]
-    Qw = np.asarray([list(r["bits"]) for r in qrows], dtype=np.int64)
-
-    def fn(batches):
-        for pdf in batches:
-            ids = pdf[corpus_id].to_numpy()
-            # words arrive as n_words SCALAR int64 columns — numpy
-            # views straight off Arrow, no per-row list conversion
-            # (the list(pdf["bits"]) form cost ~2× the whole scan)
-            W = np.stack(
-                [pdf[f"__w{i}"].to_numpy() for i in range(n_words)], axis=1
-            )
-            out_q, pos, out_d = _hamming_batch_topk(W, ids, qids, Qw, k)
-            yield pd.DataFrame(
-                {query_id: out_q, corpus_id: ids[pos], "hamming_d": out_d}
-            )
-
-    src = ensure_min_partitions(corpus_bits).select(
-        F.col(corpus_id),
-        *[F.get(F.col("bits"), i).alias(f"__w{i}") for i in range(n_words)],
-    )
-    scored = src.mapInPandas(
-        fn, schema=f"{query_id} long, {corpus_id} long, hamming_d long"
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("hamming_d").asc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, "rank", corpus_id, "hamming_d")
-    )
-
-
 def _pack_sign_bits_np(X, dim: int, bits_per_word: int = 32):
-    """numpy twin of ``binary_sign_words``: rows of X (n×dim float64)
-    → n×n_words int64 little-endian sign-bit words, bit j of word w set
-    ⇔ X[:, w·bpw+j] > 0 (strictly positive — exact-0.0 packs as 0,
-    same convention as the SQL expression). NaN coordinates set the
-    bit: Spark's total ordering ranks NaN above every numeric, so the
-    expression twin's ``> 0`` is TRUE on NaN while numpy's is False —
-    the explicit ``| isnan`` mask keeps the two paths bit-identical on
-    every input, not just NaN-free ones (ADVICE r11). Pure comparisons
-    + integer matmul otherwise."""
+    """Rows of X (n×dim float64) → n×n_words int64 little-endian
+    sign-bit words, bit j of word w set ⇔ X[:, w·bpw+j] > 0 (strictly
+    positive — an exact 0.0 packs as 0). NaN coordinates set the bit,
+    as Spark's total ordering ranks NaN above every numeric (``> 0`` is
+    TRUE on NaN in Spark SQL and in the DuckDB replay, False in numpy
+    without the explicit ``| isnan`` mask — ADVICE r11).
+    ``bits_per_word`` 32 keeps every word < 2³², non-negative in BIGINT
+    on both engines, so the SQL replay's xor/bit_count stays sign-free.
+    Pure comparisons + integer matmul."""
     import numpy as np
 
     n = X.shape[0]
@@ -3511,35 +3392,29 @@ def hamming_topk_fused(
     bits_per_word: int = 32,
     carry_vec: bool = False,
 ) -> DataFrame:
-    """``binary_quantize`` + ``hamming_topk`` fused
-    into ONE mapInPandas scan over the float embeddings (VERDICT r10
-    task 5): each Arrow batch packs sign bits in numpy (comparison +
-    integer matmul — bit-identical to the 64-CASE expression form,
-    property-tested) and immediately xors/popcounts against the
-    |Q| packed query codes, emitting only its local top-k per query.
-    The packing EXPRESSION scan — 2·dim CASE branches per row through
-    codegen, plus a second pass re-reading the packed words — was the
-    itemized floor of the topk/rerank rows (4.3×/6.8× on ≤1.2 s
-    absolutes); fusing removes both.
+    """Top-k per query by Hamming distance over 1-bit sign codes,
+    (distance, id) tie-break — deterministic, oracle-matchable — in ONE
+    mapInPandas scan over the float embeddings (VERDICT r10 task 5).
+    Each Arrow batch packs its sign bits in numpy
+    (``_pack_sign_bits_np``), computes all |Q| distance vectors against
+    the packed query codes (xor + popcount, SIMD over the batch), and
+    emits only each query's LOCAL top-k by (distance, id) — that
+    per-batch top-k provably contains every global top-k row, so a
+    final window ranks only ≤partitions·|Q|·k survivors and the |Q|·n
+    distance rows never materialize. The corpus never shuffles and no
+    packed-codes intermediate is written: a CASE-per-bit packing
+    expression plus a second scan over its words was the itemized floor
+    of the topk/rerank rows (4.3×/6.8× on ≤1.2 s absolutes).
 
-    Production split: when the packed codes table is MATERIALIZED
-    (ingest pays the packing once), use ``binary_quantize`` to write
-    it and ``hamming_topk`` to scan it — the corpus-sized read is then
-    2 BIGINTs/row. This fused form is the query-time path when codes
-    are NOT materialized: one read of the floats, no intermediate.
-
-    Output: (query_id, rank, vec_id, hamming_d) — identical to
-    ``hamming_topk`` on the same inputs. ``carry_vec=True``
+    Output: (query_id, rank, vec_id, hamming_d). ``carry_vec=True``
     additionally passes each winner's float64 vector through
     (bit-preserved via Arrow, the kmeans carry_vec precedent) as
     ``__cv`` — ``hamming_rerank_topk`` rescopes the cascade to ONE
-    corpus read with it: the survivors (≤partitions·|Q|·k rows) carry
-    their own vectors, so the exact-cosine stage never touches the
-    corpus again."""
+    corpus read with it: the survivors carry their own vectors, so the
+    exact-cosine stage never touches the corpus again."""
     import numpy as np
     import pandas as pd
 
-    n_words = -(-dim // bits_per_word)
     qrows = queries.select(
         F.col(query_id), _as_double_array(F.col(query_vec)).alias("__qv")
     ).collect()  # |Q|-bounded
@@ -3562,7 +3437,14 @@ def hamming_topk_fused(
             ids = pdf[corpus_id].to_numpy()
             X = _vec_matrix(pdf["__v"], dim)
             W = _pack_sign_bits_np(X, dim, bits_per_word)
-            out_q, pos, out_d = _hamming_batch_topk(W, ids, qids, Qw, k)
+            out_q, pos, out_d = [], [], []
+            for qi, qid in enumerate(qids):
+                d = _popcount64(W ^ Qw[qi][None, :]).sum(axis=1)
+                top = np.lexsort((ids, d))[:k]
+                out_q.extend([qid] * len(top))
+                pos.extend(top)
+                out_d.extend(d[top])
+            pos = np.asarray(pos, dtype=np.int64)
             out = {query_id: out_q, corpus_id: ids[pos], "hamming_d": out_d}
             if carry_vec:
                 out["__cv"] = list(X[pos])
@@ -3610,14 +3492,12 @@ def hamming_rerank_topk(
     retrievers: floats touched ∝ candidates, not corpus.
 
     Output: (query_id, rank, vec_id, hamming_d, cosine_sim)."""
-    # Stage 1 is the FUSED pack+scan (r11): packing + distances in one
-    # Arrow pass over the floats — bit-identical candidates to the
-    # binary_quantize → hamming_topk two-pass on the same inputs —
-    # and the winners CARRY their float vectors out (bit-preserved
-    # through Arrow), so stage 2's exact re-score never reads the
-    # corpus again: the whole cascade is ONE corpus pass, and the
-    # floats the cosine fold sees are the same doubles the original
-    # column holds (same oracle).
+    # Stage 1 is the fused pack+scan (r11): packing + distances in one
+    # Arrow pass over the floats, and the winners CARRY their float
+    # vectors out (bit-preserved through Arrow), so stage 2's exact
+    # re-score never reads the corpus again: the whole cascade is ONE
+    # corpus pass, and the floats the cosine fold sees are the same
+    # doubles the original column holds (same oracle).
     cand = hamming_topk_fused(
         corpus, queries, dim, n_candidates,
         corpus_id=corpus_id, corpus_vec=corpus_vec,

@@ -305,7 +305,9 @@ def shard_topk_summaries(
     task already cut to (K+1)·P rows instead of serializing its whole
     key space through one reducer — identical output by the
     partition-winner containment argument, property-tested equal to
-    the single-window form."""
+    the single-window form. ``two_level=False`` skips that pre-cut, so
+    the (n DESC, key ASC) window below makes the one K+1 cut (the
+    streaming job's micro-batches are already ingest-sized)."""
     from .sampling import _keyed_top_per_group
 
     counts = (
@@ -313,8 +315,10 @@ def shard_topk_summaries(
         .groupBy(shard.alias("shard"), F.col(key_col).alias("key"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    top = _keyed_top_per_group(
-        counts, (-F.col("n")).cast("long"), "key", "shard", k + 1, two_level
+    top = (
+        _keyed_top_per_group(counts, (-F.col("n")).cast("long"), "key", "shard", k + 1)
+        if two_level
+        else counts
     )
     from pyspark.sql.window import Window
 

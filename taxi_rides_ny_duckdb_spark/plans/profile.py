@@ -165,37 +165,6 @@ def profile_approx_guarded(
     return agg.select(F.explode(F.array(*rows)).alias("r")).select("r.*")
 
 
-def profile_percentiles(
-    df: DataFrame, cols: list[str], probs: tuple[float, ...] = (0.05, 0.25, 0.5, 0.75, 0.95)
-) -> DataFrame:
-    """Exact per-column percentiles (PipeRider's p5/p25/p50/p75/p95
-    row), one row per column. Single aggregate over the raw table —
-    ``percentile(col, array(...))`` computes the whole probe list from
-    one sort buffer per column, so C columns × P probes is still ONE
-    pass and one reduce, not C·P scans. Linear interpolation matches
-    DuckDB's ``quantile_cont`` bit-for-bit on doubles (verified in the
-    contract oracle). For tables where an exact per-partition sort
-    buffer is too big, use ``profile_approx`` (KLL sketches) instead."""
-    parr = F.array(*[F.lit(float(p)) for p in probs])
-    agg = df.agg(
-        *[F.percentile(F.col(c).cast("double"), parr).alias(c) for c in cols]
-    )
-    stacked = agg.select(
-        F.expr(
-            "stack({}, {}) as (column_name, pcts)".format(
-                len(cols), ", ".join(f"'{c}', `{c}`" for c in cols)
-            )
-        )
-    )
-    return stacked.select(
-        "column_name",
-        *[
-            F.col("pcts")[i].alias(f"p{int(round(p * 100)):02d}")
-            for i, p in enumerate(probs)
-        ],
-    )
-
-
 def profile_percentiles_selection(
     df: DataFrame,
     cols: list[str],
@@ -204,14 +173,15 @@ def profile_percentiles_selection(
     max_bucket_rows: int = 1_000_000,
     _max_levels: int = 64,
 ) -> DataFrame:
-    """Exact percentiles via distributed selection — the scale path.
+    """Exact per-column percentiles (PipeRider's p5/p25/p50/p75/p95
+    row), one row per column, via distributed selection.
 
-    ``profile_percentiles`` (Spark's exact ``percentile``) buffers a
-    value→count map per column and sorts it at one reducer: fine for
-    low-cardinality columns, quadratic pain for a near-unique measure
-    (583k distinct values ⇒ ~2 s at sf0.1, unrunnable at 100 TB where
-    the map would hold billions of entries). Selection instead runs
-    fully-parallel scans with O(buckets) driver state:
+    Spark's exact ``percentile`` aggregate buffers a value→count map
+    per column and sorts it at one reducer: fine for low-cardinality
+    columns, quadratic pain for a near-unique measure (583k distinct
+    values ⇒ ~2 s at sf0.1, unrunnable at 100 TB where the map would
+    hold billions of entries). Selection instead runs fully-parallel
+    scans with O(buckets) driver state:
 
       1. one agg: non-null count + min/max per column;
       2. bucket-histogram: unpivot to (column, value), then per
@@ -717,35 +687,24 @@ def profile_drift_psi_categorical(
 
 
 def profile_correlation(
-    df: DataFrame, pairs: list[tuple[str, str]], exact_decimal: bool = False
+    df: DataFrame, pairs: list[tuple[str, str]]
 ) -> DataFrame:
     """Pairwise Pearson correlation between numeric columns — the
     multi-column dependency panel of a data profiler (is discount
     coupled to quantity? is a metric redundant with another?).
 
-    Two paths (VERDICT r6 #4):
-
-    - **default (fast)**: built-in ``corr()`` — the JVM co-moment
-      aggregate (numerically stable pairwise-update merge, doubles,
-      whole-stage codegen). Run-to-run it can drift in the last ulp
-      with partition order, which 9dp rounding absorbs in practice;
-      it is the right default for a profile panel users run over whole
-      tables. Measured ~13× cheaper than the decimal path at sf1.
-    - **``exact_decimal=True``**: every moment (Σx, Σy, Σxy, Σx², Σy²)
-      is an exact DECIMAL sum and the textbook formula
-      r = (nΣxy − ΣxΣy) / √((nΣx² − (Σx)²)(nΣy² − (Σy)²)) is evaluated
-      once on those exact sums — identical IEEE ops on both engines,
-      so the result is BIT-reproducible at any parallelism (the same
-      property functions/parity.py gives money sums); this is the
-      oracled contract path. decimal(38,8) holds Σ(x·y) for
-      price-scale columns well past 10⁹ rows.
-
-    Both are one aggregate-row pass with map-side partials; NULL
-    handling matches ``corr()`` in both (a pair contributes only when
-    both sides are non-null — enforced in the decimal path by nulling
-    each operand when its partner is null). The two paths agree within
-    1e-9 on well-conditioned data (property-tested); prefer exact only
-    when a downstream diff requires bit-stability.
+    Every moment (Σx, Σy, Σxy, Σx², Σy²) is an exact DECIMAL sum and
+    the textbook formula
+    r = (nΣxy − ΣxΣy) / √((nΣx² − (Σx)²)(nΣy² − (Σy)²)) is evaluated
+    once on those exact sums — identical IEEE ops on both engines, so
+    the result is BIT-reproducible at any parallelism (the same
+    property functions/parity.py gives money sums; built-in ``corr()``
+    drifts in the last ulp with partition order). Inputs are quantized
+    at 8dp, so decimal(38,8) holds Σ(x·y) for price-scale columns well
+    past 10⁹ rows. One aggregate-row pass with map-side partials.
+    NULL handling matches ``corr()``: a pair contributes only when both
+    sides are non-null (each operand is nulled when its partner is
+    null). A zero-variance side gives NULL.
 
     Output grain: one row per pair (col_x, col_y, corr_r rounded 9dp).
     """
@@ -758,44 +717,9 @@ def profile_correlation(
     # exactness tax MUST run wide (strict: parquet byte-range splits
     # can report width the row groups don't deliver, and this stage is
     # compute-bound enough that any deficit is worth the shuffle).
-    # The fast path is NOT compute-bound — default guard only.
     # Project to the needed columns first so the staging shuffle is
     # narrow. No-op at real scale.
-    df = ensure_min_partitions(df.select(*needed), strict=exact_decimal)
-    if not exact_decimal:
-        def one_pair(x: str, y: str):
-            # corr() recomposed from its own co-moment aggregates
-            # (covar_pop + pairwise stddev_pop) so the final division
-            # is OURS and guardable: the built-in corr's internal
-            # ck/√(xMk·yMk) divide RAISES under spark.sql.ansi.enabled
-            # on a zero-variance column, and returns NaN otherwise —
-            # this form returns NULL in both modes, matching the exact
-            # path (property-tested on degenerate frames). Identical
-            # numerics: same stable pairwise-update moments, one extra
-            # multiply. Operands are nulled when their partner is null
-            # so the stddevs see the same pairwise row set corr() uses.
-            both = F.col(x).isNotNull() & F.col(y).isNotNull()
-            xv = F.when(both, F.col(x).cast("double"))
-            yv = F.when(both, F.col(y).cast("double"))
-            cov = F.covar_pop(xv, yv)
-            sx, sy = F.stddev_pop(xv), F.stddev_pop(yv)
-            return F.round(
-                F.when((sx > 0) & (sy > 0), cov / (sx * sy)), PARITY_DP
-            ).alias(f"{x}__{y}")
-
-        aggs = [one_pair(x, y) for x, y in pairs]
-        one = df.agg(*aggs)
-        rows = [
-            F.struct(
-                F.lit(x).alias("col_x"),
-                F.lit(y).alias("col_y"),
-                F.col(f"{x}__{y}").alias("corr_r"),
-            )
-            for x, y in pairs
-        ]
-        return one.select(F.explode(F.array(*rows)).alias("p")).select(
-            "p.col_x", "p.col_y", "p.corr_r"
-        )
+    df = ensure_min_partitions(df.select(*needed), strict=True)
     aggs = []
     for x, y in pairs:
         both = F.col(x).isNotNull() & F.col(y).isNotNull()
@@ -834,7 +758,7 @@ def profile_correlation(
         sxx = F.col(f"{tag}__sxx").cast("double")
         syy = F.col(f"{tag}__syy").cast("double")
         # Guarded division: zero variance (constant column) → NULL,
-        # matching the fast path's normalized corr() — and ANSI-safe
+        # ANSI-safe
         # (under spark.sql.ansi.enabled a bare x/0 raises instead of
         # returning NULL; property-tested on degenerate frames).
         # Per-factor positivity, not product positivity: the decimal

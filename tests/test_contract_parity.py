@@ -54,6 +54,8 @@ def test_pandas_hash_parity(name, spark, sf_dir, con):
         "ext_lr_train",
         "ext_lr_score",
         "ext_bpe_learn_merges",
+        "ext_dedup_cluster_components",
+        "ext_passage_clusters",
     ],
 )
 def test_oracle_parity_above_fused_gate(name, spark, sf_dir, con, monkeypatch):
@@ -62,17 +64,27 @@ def test_oracle_parity_above_fused_gate(name, spark, sf_dir, con, monkeypatch):
     every trainer in these queries takes the Arrow Lloyd loop (flat,
     first_k init, and the multilevel coarse pass), SemDeDup collapses
     per cluster, hard-negative mining runs its pair self-join +
-    connected_components fallback, the LR descent runs one
-    mapInPandas pass per iteration and BPE one pass per round. Built
-    through ``BUILDERS`` so no memoized below-gate plan can answer
-    instead."""
+    connected_components fallback, connected_components runs
+    large-star/small-star (full emit with ``nodes`` and
+    ``emit="mapping"``), the LR descent runs one mapInPandas pass per
+    iteration and BPE one pass per round. Built through ``BUILDERS``,
+    with the session's near-dup cluster index dropped for the test, so
+    no memoized below-gate plan or index can answer instead."""
+    from taxi_rides_ny_duckdb_spark import session
     from taxi_rides_ny_duckdb_spark.operators import classify as C
+    from taxi_rides_ny_duckdb_spark.operators import dedup as D
     from taxi_rides_ny_duckdb_spark.operators import similarity as S
     from taxi_rides_ny_duckdb_spark.operators import tokenizer as T
 
     monkeypatch.setattr(S, "_FUSED_LLOYD_MAX_ROWS", 0)
     monkeypatch.setattr(C, "_FUSED_LR_MAX_ROWS", 0)
     monkeypatch.setattr(T, "_FUSED_BPE_MAX_VOCAB", 0)
+    monkeypatch.setattr(D, "_CC_DRIVER_MAX_EDGES", 0)
+    # setitem records the memoized index (or its absence) so teardown
+    # restores it; the del makes the builders rebuild it above the gate
+    memos, key = session._session_state(spark)[1], ("near_dup_index", sf_dir)
+    monkeypatch.setitem(memos, key, None)
+    del memos[key]
     compare(contract.BUILDERS[name](spark, sf_dir), con, contract.ORACLES[name])
 
 

@@ -523,14 +523,16 @@ def test_assign_nearest_centroid_ties_to_lower_id(spark):
     assert got[1] == 2
 
 
-def test_connected_components_and_cluster_dedup(spark):
-    """Min-label propagation (operators/dedup.connected_components):
-    chain a-b-c collapses transitively even though a,c never pair;
-    triangle+tail is one component; isolated nodes are singletons;
-    cluster_dedup keeps exactly one (min-id) survivor per component."""
+def test_connected_components_and_cluster_dedup(spark, monkeypatch):
+    """operators/dedup.connected_components: chain a-b-c collapses
+    transitively even though a,c never pair; triangle+tail is one
+    component; isolated nodes are singletons; cluster_dedup keeps
+    exactly one (min-id) survivor per component."""
     from pyspark.sql import Row
 
+    from taxi_rides_ny_duckdb_spark.operators import dedup
     from taxi_rides_ny_duckdb_spark.operators.dedup import (
+        _union_find,
         cluster_dedup,
         connected_components,
     )
@@ -546,36 +548,38 @@ def test_connected_components_and_cluster_dedup(spark):
         [Row(doc_id=i) for i in (1, 2, 3, 10, 11, 12, 13, 20)],
         schema="doc_id bigint",
     )
-    # all three physical strategies must agree: driver union-find
-    # (default for tiny edge lists), distributed min-label propagation,
-    # and distributed large-star/small-star
-    for kw in (
-        {"driver_threshold_edges": 1_000_000},
-        {"driver_threshold_edges": 0, "algorithm": "label"},
-        {"driver_threshold_edges": 0, "algorithm": "star"},
-    ):
+    expected = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10, 20: 20}
+    assert _union_find(
+        [(r["id_a"], r["id_b"]) for r in edges.collect()], list(expected)
+    ) == expected
+    # both sides of the size gate must agree: driver union-find (tiny
+    # edge lists) and distributed large-star/small-star (gate at 0)
+    for gate in (dedup._CC_DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", gate)
         comp = {r["id"]: r["component"]
-                for r in connected_components(edges, nodes=docs, **kw).collect()}
-        assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10, 20: 20}, kw
+                for r in connected_components(edges, nodes=docs).collect()}
+        assert comp == expected, gate
 
     survivors = sorted(r["doc_id"] for r in cluster_dedup(docs, edges, "doc_id").collect())
     assert survivors == [1, 10, 20]  # one min-id survivor per component
 
 
-def test_connected_components_strategies_agree_on_hard_graphs(spark):
-    """Property check (VERDICT r5 #8): union-find, min-label
-    propagation, and large-star/small-star produce identical
-    (id → min-of-component) maps on (a) fixed-seed random graphs,
-    (b) a high-degree hub (the skew case star exists for), and (c) a
-    long chain (the diameter case pointer-jumping exists for)."""
+def test_connected_components_strategies_agree_on_hard_graphs(spark, monkeypatch):
+    """Property check (VERDICT r5 #8): distributed large-star/small-star
+    produces the (id → min-of-component) map of driver union-find on
+    (a) fixed-seed random graphs, (b) a high-degree hub (the skew case
+    star exists for), and (c) a long chain (the diameter case)."""
     import random
 
     from pyspark.sql import Row
 
+    from taxi_rides_ny_duckdb_spark.operators import dedup
     from taxi_rides_ny_duckdb_spark.operators.dedup import (
         _union_find,
         connected_components,
     )
+
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
 
     cases = []
     for seed in (7, 42):
@@ -601,14 +605,11 @@ def test_connected_components_strategies_agree_on_hard_graphs(spark):
         n_df = spark.createDataFrame(
             [Row(id=i) for i in node_ids], schema="id bigint"
         )
-        for algo in ("label", "star"):
-            got = {
-                r["id"]: r["component"]
-                for r in connected_components(
-                    e_df, nodes=n_df, driver_threshold_edges=0, algorithm=algo
-                ).collect()
-            }
-            assert got == expected, (name, algo)
+        got = {
+            r["id"]: r["component"]
+            for r in connected_components(e_df, nodes=n_df).collect()
+        }
+        assert got == expected, name
 
 
 def test_edit_distance_pairs_blocking_and_threshold(spark):
@@ -1051,42 +1052,31 @@ def test_cluster_representatives_ambiguous_id_col(spark):
     assert got == {(1, 2, 0.9), (3, 3, 0.1)}
 
 
-def test_connected_components_rejects_unknown_algorithm(spark):
-    """ADVICE r6: a typo'd algorithm ('stars') must raise, not silently
-    fall through to label propagation."""
-    import pytest
-
-    from taxi_rides_ny_duckdb_spark.operators.dedup import connected_components
-
-    edges = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
-    with pytest.raises(ValueError, match="algorithm"):
-        connected_components(edges, algorithm="stars")
-
-
-def test_star_components_truncated_iteration_unique_per_id(spark):
-    """ADVICE r6: with max_iter too small for convergence, the final
+def test_star_components_truncated_iteration_unique_per_id(spark, monkeypatch):
+    """ADVICE r6: with too few rounds for convergence, the final
     per-id canonicalization must still emit exactly ONE (id, component)
     row per id (previously duplicate rows could leak out silently)."""
     from pyspark.sql import Row
 
+    from taxi_rides_ny_duckdb_spark.operators import dedup
     from taxi_rides_ny_duckdb_spark.operators.dedup import connected_components
 
-    # long chain: needs several star rounds; max_iter=1 truncates.
+    # long chain: needs several star rounds; one round truncates.
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(dedup, "_CC_MAX_ROUNDS", 1)
     edges = spark.createDataFrame(
         [Row(id_a=i, id_b=i + 1) for i in range(20)],
         schema="id_a bigint, id_b bigint",
     )
-    out = connected_components(
-        edges, driver_threshold_edges=0, algorithm="star", max_iter=1
-    ).collect()
+    out = connected_components(edges).collect()
     ids = [r["id"] for r in out]
     assert len(ids) == len(set(ids)) == 21
 
 
 def test_profile_correlation_exact_and_null_pairwise(spark):
-    """corr=±1 on perfectly linear columns; matches numpy corrcoef on
-    noisy data to 1e-9; a pair contributes only rows where BOTH sides
-    are non-null (corr() semantics)."""
+    """corr=±1 on perfectly linear columns; the exact-decimal moments
+    match numpy corrcoef on noisy data to 1e-9; a pair contributes only
+    rows where BOTH sides are non-null (corr() semantics)."""
     import numpy as np
 
     from taxi_rides_ny_duckdb_spark.plans.profile import profile_correlation
@@ -1114,23 +1104,6 @@ def test_profile_correlation_exact_and_null_pairwise(spark):
     kept = [(a, b) for a, b in rows2 if b is not None]
     want2 = float(np.corrcoef([a for a, _ in kept], [b for _, b in kept])[0, 1])
     assert abs(got2 - want2) < 1e-9
-
-    # VERDICT r6 #4: the fast (default, built-in co-moment corr) and
-    # exact-decimal paths agree within 1e-9 on every fixture above —
-    # including the null-pairwise one.
-    for frame, prs in ((df, [("x", "y2"), ("x", "yneg"), ("x", "ynoise")]),
-                       (df2, [("a", "b")])):
-        fast = {
-            (r["col_x"], r["col_y"]): r["corr_r"]
-            for r in profile_correlation(frame, prs).collect()
-        }
-        exact = {
-            (r["col_x"], r["col_y"]): r["corr_r"]
-            for r in profile_correlation(frame, prs, exact_decimal=True).collect()
-        }
-        assert fast.keys() == exact.keys()
-        for key in fast:
-            assert abs(fast[key] - exact[key]) < 1e-9, key
 
 
 def test_mixture_sample_token_weighted_budget(spark):
@@ -1216,6 +1189,29 @@ def test_leakage_safe_split_group_integrity(spark):
     assert all(again[i] == by_id[i][1] for i in by_id)
 
 
+def _ref_hash_fraction(id_, salt):
+    """``sampling.hash_fraction`` replayed as ``hash_fraction_sql``
+    spells it: the first 32 bits of md5(salt || ':' || id) over 2³²."""
+    import hashlib
+
+    h = hashlib.md5(f"{salt}:{id_}".encode()).hexdigest()
+    return int(h[:8], 16) / 4294967296.0
+
+
+def _ref_top_per_group(rows, cap, key):
+    """{(id, group)} of the ``cap`` rows with the smallest
+    ``(key(row), id)`` per group (NULL is a group) — the window order of
+    ``sampling._keyed_top_per_group``; rows are (id, group, ...)."""
+    groups = {}
+    for r in rows:
+        groups.setdefault(r[1], []).append(r)
+    return {
+        (r[0], g)
+        for g, rs in groups.items()
+        for r in sorted(rs, key=lambda r: (key(r), r[0]))[:cap]
+    }
+
+
 def test_cap_per_group_limits_and_stability(spark):
     """Groups above the cap shrink to exactly cap rows; below-cap
     groups pass through whole; survivors are deterministic and stable
@@ -1243,11 +1239,11 @@ def test_cap_per_group_limits_and_stability(spark):
 def test_cap_per_group_two_level_equivalence_and_skew(spark):
     """VERDICT r6 #2: the two-level form (per-partition Arrow pre-prune
     before the exchange, then the exact global window) must return the
-    IDENTICAL row set as the single-window form — including on a skew
-    fixture where one group holds 50 % of all rows spread over many
-    partitions (the case that serializes the single-window plan), on
-    null group keys, and on below-cap groups. The pre-prune must also
-    actually bound what the exchange carries."""
+    IDENTICAL row set as a pure-Python replay of the (hash, id) order —
+    including on a skew fixture where one group holds 50 % of all rows
+    spread over many partitions (the case that serializes a
+    single-window plan), on null group keys, and on below-cap groups.
+    The pre-prune must also actually bound what the exchange carries."""
     from taxi_rides_ny_duckdb_spark.operators.sampling import cap_per_group
 
     # skewed: 'hot' = 50% of rows, spread across 16 partitions; plus a
@@ -1259,11 +1255,11 @@ def test_cap_per_group_two_level_equivalence_and_skew(spark):
     )
     df = spark.createDataFrame(rows, "doc_id bigint, lang string").repartition(16)
     cap = 25
-    two = cap_per_group(df, "doc_id", "lang", cap)  # default two-level
-    one = cap_per_group(df, "doc_id", "lang", cap, two_level=False)
+    two = cap_per_group(df, "doc_id", "lang", cap)
     got_two = {(r["doc_id"], r["lang"]) for r in two.collect()}
-    got_one = {(r["doc_id"], r["lang"]) for r in one.collect()}
-    assert got_two == got_one
+    assert got_two == _ref_top_per_group(
+        rows, cap, lambda r: _ref_hash_fraction(r[0], "cap")
+    )
     assert sum(1 for _, g in got_two if g == "hot") == cap
     assert sum(1 for _, g in got_two if g is None) == 10  # below-cap null group intact
 
@@ -1817,10 +1813,14 @@ def test_ivf_sq8_quantization_costs_no_recall(spark, sf_dir):
 
 
 def test_weighted_sample_semantics_and_two_level_equivalence(spark):
-    """ES weighted sampling: two-level output equals the single-window
-    form exactly; zero/negative/null weights are excluded; heavier
-    rows win systematically over light ones at equal hash position;
-    deterministic across calls (r7)."""
+    """ES weighted sampling: two-level output equals a pure-Python
+    replay of the rounded draw order exactly; zero/negative/null
+    weights are excluded; heavier rows win systematically over light
+    ones at equal hash position; deterministic across calls (r7)."""
+    from taxi_rides_ny_duckdb_spark.functions.parity import (
+        PARITY_DP,
+        round_half_up,
+    )
     from taxi_rides_ny_duckdb_spark.operators.sampling import (
         weighted_sample_per_group,
     )
@@ -1829,10 +1829,15 @@ def test_weighted_sample_semantics_and_two_level_equivalence(spark):
     rows += [(900, "g", 0.0), (901, "g", -3.0), (902, "g", None)]
     df = spark.createDataFrame(rows, "id bigint, grp string, w double")
     two = weighted_sample_per_group(df, "id", "grp", 20, "w")
-    one = weighted_sample_per_group(df, "id", "grp", 20, "w", two_level=False)
     got2 = sorted(r["id"] for r in two.collect())
-    got1 = sorted(r["id"] for r in one.collect())
-    assert got2 == got1 and len(got2) == 20
+    want = _ref_top_per_group(
+        [r for r in rows if r[2] is not None and r[2] > 0],
+        20,
+        lambda r: -round_half_up(
+            _ref_hash_fraction(r[0], "wsample") ** (1.0 / r[2]), PARITY_DP
+        ),
+    )
+    assert got2 == sorted(i for i, _ in want) and len(got2) == 20
     # ineligible weights never appear
     assert not {900, 901, 902} & set(got2)
     # heavy rows (w=1000, odd ids) dominate: u^(1/1000) ≈ 1 beats
@@ -4678,12 +4683,14 @@ def test_brute_force_topk_int64_matches_metric_and_guards(spark, sf_dir):
         brute_force_topk_int64(huge, hq, k=1).collect()
 
 
-def test_binary_sign_words_packs_expected(spark):
-    """binary_sign_words packs coord>0 sign bits little-endian, 32 per
+def test_binary_sign_words_packs_expected():
+    """_pack_sign_bits_np packs coord>0 sign bits little-endian, 32 per
     word: hand-built vectors with known sign patterns must produce the
     exact word values (incl. the strictly-positive convention: an
     exact 0.0 packs as 0)."""
-    from taxi_rides_ny_duckdb_spark.operators.similarity import binary_quantize
+    import numpy as np
+
+    from taxi_rides_ny_duckdb_spark.operators.similarity import _pack_sign_bits_np
 
     # vec A: dims 0 and 33 positive -> words [1, 2]; vec B: all
     # non-positive (incl. 0.0) -> [0, 0]; vec C: dims 31 and 63 -> sign
@@ -4692,13 +4699,8 @@ def test_binary_sign_words_packs_expected(spark):
     a = [1.0 if i in (0, 33) else -1.0 for i in range(dim)]
     b = [0.0] * 32 + [-2.5] * 32
     c = [1.0 if i in (31, 63) else -0.1 for i in range(dim)]
-    df = spark.createDataFrame(
-        [(0, a), (1, b), (2, c)], "vec_id long, embedding array<double>"
-    )
-    rows = {r["vec_id"]: list(r["bits"]) for r in binary_quantize(df, dim).collect()}
-    assert rows[0] == [1, 2]
-    assert rows[1] == [0, 0]
-    assert rows[2] == [2**31, 2**31]
+    words = _pack_sign_bits_np(np.asarray([a, b, c], dtype=np.float64), dim)
+    assert words.tolist() == [[1, 2], [0, 0], [2**31, 2**31]]
 
 
 def test_round9_vectorized_matches_scalar(spark):
@@ -4906,70 +4908,71 @@ def test_make_scale_data_argv_guards():
     assert "key spaces" in (r.stderr + r.stdout)
 
 
-def test_pack_sign_bits_nan_parity_with_expression(spark):
-    """NaN coordinates pack identically in both forms (ADVICE r11):
-    Spark's total ordering ranks NaN above every numeric, so the
-    expression's ``> 0`` sets the bit on NaN; the numpy twin masks
-    ``| isnan`` to match. A vector mixing NaN / 0.0 / ±x must produce
-    the same words from binary_quantize and _pack_sign_bits_np."""
+def test_pack_sign_bits_nan_parity_with_expression():
+    """NaN coordinates pack identically in the numpy packer and the
+    DuckDB CASE-per-bit expression the oracles replay it with
+    (``_bits_words_sql``, ADVICE r11): both engines rank NaN above every
+    numeric, so ``> 0`` sets the bit on NaN; ``_pack_sign_bits_np``
+    masks ``| isnan`` to match. A vector mixing NaN / 0.0 / ±x must
+    produce the same words from both."""
     import math
 
+    import duckdb
     import numpy as np
 
-    from taxi_rides_ny_duckdb_spark.operators.similarity import (
-        _pack_sign_bits_np,
-        binary_quantize,
-    )
+    from taxi_rides_ny_duckdb_spark.contract_extensions import _bits_words_sql
+    from taxi_rides_ny_duckdb_spark.operators.similarity import _pack_sign_bits_np
 
     dim = 64
     nan = float("nan")
     v = [-1.0] * dim
     for i, x in [(0, nan), (3, 0.0), (7, 2.5), (31, nan), (40, nan), (63, 1.0)]:
         v[i] = x
-    df = spark.createDataFrame([(0, v)], "vec_id long, embedding array<double>")
-    expr_words = list(binary_quantize(df, dim).collect()[0]["bits"])
     np_words = _pack_sign_bits_np(np.asarray([v], dtype=np.float64), dim)[
         0
     ].tolist()
-    assert expr_words == np_words
+    lit = "[" + ", ".join(f"'{x!r}'::DOUBLE" for x in v) + "]"
+    sql_words = duckdb.sql(
+        f"SELECT {_bits_words_sql(dim)} FROM (SELECT {lit} AS ev)"
+    ).fetchone()[0]
+    assert sql_words == np_words
     # and the bit pattern is the expected one: set ⇔ NaN or > 0
     expect = [0, 0]
     for i, x in enumerate(v):
         if math.isnan(x) or x > 0:
             expect[i // 32] |= 1 << (i % 32)
-    assert expr_words == expect
+    assert np_words == expect
 
 
 def test_hamming_topk_self_rank1_and_tie_break(spark):
     """A query drawn from the corpus ranks itself first at distance 0;
     equal-distance candidates break ties on vec_id ascending."""
-    from taxi_rides_ny_duckdb_spark.operators.similarity import (
-        binary_quantize,
-        hamming_topk,
-    )
+    from taxi_rides_ny_duckdb_spark.operators.similarity import hamming_topk_fused
 
     dim = 64
     base = [1.0] * dim
     flip1 = [1.0] * 10 + [-1.0] + [1.0] * (dim - 11)
     rows = [(0, base), (5, flip1), (9, flip1)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cb = binary_quantize(df, dim)
-    qb = cb.filter("vec_id = 0").selectExpr("vec_id AS query_id", "bits")
-    got = hamming_topk(cb, qb, k=3).collect()
+    q = df.filter("vec_id = 0").selectExpr(
+        "vec_id AS query_id", "embedding AS query_vec"
+    )
+    got = hamming_topk_fused(df, q, dim, k=3).collect()
     got = sorted(got, key=lambda r: r["rank"])
     assert [(r["vec_id"], r["hamming_d"]) for r in got] == [(0, 0), (5, 1), (9, 1)]
 
 
 def test_hamming_topk_fused_bit_equals_two_pass(spark, sf_dir):
     """The fused pack+scan (one Arrow pass over the floats) returns
-    EXACTLY the two-pass binary_quantize → hamming_topk result — same
-    ids, ranks, and distances (the packing comparison and xor/popcount
-    are exact integer math in both forms)."""
-    from taxi_rides_ny_duckdb_spark.operators.similarity import (
-        binary_quantize,
-        hamming_topk,
-        hamming_topk_fused,
-    )
+    EXACTLY a two-pass Spark replay — pass 1 packs the sign bits with
+    CASE-per-bit integer expressions, pass 2 cross-joins the codes and
+    ranks by sum(bit_count(xor)) with a (distance, id) row_number —
+    same ids, ranks, and distances (packing and xor/popcount are exact
+    integer math in both forms)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from taxi_rides_ny_duckdb_spark.operators.similarity import hamming_topk_fused
     from taxi_rides_ny_duckdb_spark.sources.registry import load
 
     emb = load(spark, sf_dir, "embeddings")
@@ -4980,16 +4983,38 @@ def test_hamming_topk_fused_bit_equals_two_pass(spark, sf_dir):
         hamming_topk_fused(emb, queries, dim=64, k=5).collect(),
         key=lambda r: (r["query_id"], r["rank"]),
     )
+
+    def sign_words(vec):
+        words = []
+        for w0 in (0, 32):
+            acc = F.lit(0).cast("long")
+            for j in range(32):
+                acc = acc + F.when(
+                    F.get(vec, w0 + j) > 0, F.lit(1 << j).cast("long")
+                ).otherwise(F.lit(0).cast("long"))
+            words.append(acc)
+        return words
+
+    cw = sign_words(F.col("embedding").cast("array<double>"))
+    codes = emb.select("vec_id", cw[0].alias("c0"), cw[1].alias("c1"))
+    qcodes = codes.filter("vec_id < 4").selectExpr(
+        "vec_id AS query_id", "c0 AS q0", "c1 AS q1"
+    )
+    w = Window.partitionBy("query_id").orderBy("hamming_d", "vec_id")
     two_pass = sorted(
-        hamming_topk(
-            binary_quantize(emb, 64),
-            binary_quantize(emb.filter("vec_id < 4"), 64).selectExpr(
-                "vec_id AS query_id", "bits"
-            ),
-            k=5,
-        ).collect(),
+        qcodes.crossJoin(codes)
+        .withColumn(
+            "hamming_d",
+            F.bit_count(F.col("c0").bitwiseXOR(F.col("q0")))
+            + F.bit_count(F.col("c1").bitwiseXOR(F.col("q1"))),
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .filter("rank <= 5")
+        .select("query_id", "rank", "vec_id", F.col("hamming_d").cast("long"))
+        .collect(),
         key=lambda r: (r["query_id"], r["rank"]),
     )
+    assert len(fused) == 20
     assert [tuple(r) for r in fused] == [tuple(r) for r in two_pass]
 
 
@@ -5000,10 +5025,9 @@ def test_hamming_rerank_recall_dominates_raw_hamming(spark, sf_dir):
     set ranks above all non-members under the exact re-score)."""
     from taxi_rides_ny_duckdb_spark.operators.similarity import (
         ann_recall_at_k,
-        binary_quantize,
         brute_force_topk,
         hamming_rerank_topk,
-        hamming_topk,
+        hamming_topk_fused,
     )
     from taxi_rides_ny_duckdb_spark.sources.registry import load
 
@@ -5012,13 +5036,7 @@ def test_hamming_rerank_recall_dominates_raw_hamming(spark, sf_dir):
         "vec_id AS query_id", "embedding AS query_vec"
     )
     exact = brute_force_topk(emb, queries, k=5)
-    raw = hamming_topk(
-        binary_quantize(emb, 64),
-        binary_quantize(
-            emb.filter("vec_id < 8"), 64
-        ).selectExpr("vec_id AS query_id", "bits"),
-        k=5,
-    )
+    raw = hamming_topk_fused(emb, queries, dim=64, k=5)
     cascade = hamming_rerank_topk(emb, queries, dim=64, k=5, n_candidates=25)
     r_raw = {
         r["query_id"]: r["recall_at_k"]
@@ -5279,33 +5297,39 @@ def test_cms_build_weighted_matches_per_occurrence(spark):
 
 
 def test_hamming_topk_matches_python_reference(spark, sf_dir):
-    """The Arrow two-phase top-k (per-batch local top-k, then a
-    window) must equal a brute-force pure-Python replay — xor +
-    popcount over every (query, vector) pair, (distance, id) order —
-    on real fixture codes, in ranks AND distances."""
+    """The fused pack+scan (per-batch local top-k, then a window) must
+    equal a brute-force pure-Python replay — sign words from
+    ``_pack_sign_bits_np``, then xor + popcount over every (query,
+    vector) pair in (distance, id) order — on the real fixture
+    embeddings, in ranks AND distances; with ``carry_vec`` each
+    winner also carries its own float vector bit-for-bit."""
+    import numpy as np
+
     from taxi_rides_ny_duckdb_spark.operators.similarity import (
-        binary_quantize,
-        hamming_topk,
+        _pack_sign_bits_np,
+        hamming_topk_fused,
     )
     from taxi_rides_ny_duckdb_spark.sources.registry import load
 
     emb = load(spark, sf_dir, "embeddings")
-    cb = binary_quantize(emb, 64)
-    qb = binary_quantize(emb.filter("vec_id < 8"), 64).selectExpr(
-        "vec_id AS query_id", "bits"
+    queries = emb.filter("vec_id < 8").selectExpr(
+        "vec_id AS query_id", "embedding AS query_vec"
     )
-    codes = {r["vec_id"]: list(r["bits"]) for r in cb.collect()}
+    vecs = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
+    ids = sorted(vecs)
+    W = _pack_sign_bits_np(np.asarray([vecs[i] for i in ids], dtype=np.float64), 64)
+    codes = dict(zip(ids, W.tolist()))
     want = []
-    for r in qb.collect():
+    for qid in range(8):
         d = sorted(
-            (sum(bin(a ^ b).count("1") for a, b in zip(r["bits"], w)), vid)
+            (sum(bin(a ^ b).count("1") for a, b in zip(codes[qid], w)), vid)
             for vid, w in codes.items()
         )
-        want += [(r["query_id"], i + 1, vid, dist)
-                 for i, (dist, vid) in enumerate(d[:5])]
+        want += [(qid, i + 1, vid, dist) for i, (dist, vid) in enumerate(d[:5])]
+    out = hamming_topk_fused(emb, queries, dim=64, k=5, carry_vec=True).collect()
     key = lambda r: (r["query_id"], r["rank"], r["vec_id"], r["hamming_d"])
-    got = sorted(map(key, hamming_topk(cb, qb, k=5).collect()))
-    assert got == sorted(want) and len(got) == 40
+    assert sorted(map(key, out)) == sorted(want) and len(out) == 40
+    assert all(list(r["__cv"]) == vecs[r["vec_id"]] for r in out)
 
 
 def test_brier_decomposition_hand_computed(spark):

@@ -312,11 +312,13 @@ def test_epoch_upsample_multiset_invariants(spark, n, epochs_x10):
     cap=st.integers(min_value=1, max_value=4),
 )
 def test_cap_per_group_two_level_equals_single_window(spark, rows, cap):
-    """r7 two-level frequency cap ≡ the single-window form on arbitrary
-    (id, group) sets — including empty input, all-one-group, and
-    below-cap groups; the Arrow pre-prune must never change WHICH rows
-    survive, only where they are pruned."""
+    """r7 two-level frequency cap ≡ the single-window (hash, id) order,
+    replayed in pure Python, on arbitrary (id, group) sets — including
+    empty input, all-one-group, and below-cap groups; the Arrow
+    pre-prune must never change WHICH rows survive, only where they are
+    pruned."""
     from taxi_rides_ny_duckdb_spark.operators.sampling import cap_per_group
+    from tests.test_operators import _ref_hash_fraction, _ref_top_per_group
 
     df = spark.createDataFrame(rows or [(99, 0)], "doc_id bigint, g int")
     if not rows:
@@ -324,9 +326,9 @@ def test_cap_per_group_two_level_equals_single_window(spark, rows, cap):
     df = df.repartition(3)
     two = {(r["doc_id"], r["g"])
            for r in cap_per_group(df, "doc_id", "g", cap).collect()}
-    one = {(r["doc_id"], r["g"])
-           for r in cap_per_group(df, "doc_id", "g", cap, two_level=False).collect()}
-    assert two == one
+    assert two == _ref_top_per_group(
+        rows, cap, lambda r: _ref_hash_fraction(r[0], "cap")
+    )
 
 
 @settings(**_SETTINGS)
@@ -390,17 +392,13 @@ def test_tfidf_matches_python_reference(spark, docs):
     assert got == want
 
 
-# The exact path's documented domain is decimal-valued (price-scale)
-# data: inputs are quantized once at 8dp, so the two paths see the
-# SAME points only when values are exactly representable there.
-# Quarter-steps are binary-exact 2dp decimals — lossless under the
-# 8dp quantization, and lossless as doubles — so any residual
-# disagreement is genuinely the two aggregation algorithms, not input
-# representation. (Arbitrary floats — e.g. −92.775390625, 9dp — are
-# perturbed by quantization; on near-degenerate frames that legally
-# moves the correlation, which is out of scope for this agreement
-# property. The exact path's |r| ≤ 1 invariant is asserted below on
-# every draw regardless.)
+# profile_correlation's documented domain is decimal-valued
+# (price-scale) data: inputs are quantized once at 8dp. Quarter-steps
+# are binary-exact 2dp decimals — lossless under the 8dp quantization
+# and as doubles — so the exact rational reference below sees the SAME
+# points. (Arbitrary floats — e.g. −92.775390625, 9dp — are perturbed
+# by quantization; on near-degenerate frames that legally moves the
+# correlation, which is out of scope here.)
 _CORR_VALS = st.integers(min_value=-400, max_value=400).map(lambda i: i / 4.0)
 
 
@@ -411,25 +409,30 @@ _CORR_VALS = st.integers(min_value=-400, max_value=400).map(lambda i: i / 4.0)
         min_size=3, max_size=20,
     )
 )
-def test_profile_correlation_fast_agrees_with_exact(spark, rows):
-    """The default (built-in co-moment) and exact-decimal correlation
-    paths agree within 1e-6 on arbitrary small frames with pairwise
-    nulls — or both return NULL (degenerate variance, including the
-    ANSI-mode divide-by-zero guard)."""
+def test_profile_correlation_matches_exact_rational(spark, rows):
+    """The decimal-moment correlation equals an exact
+    ``fractions.Fraction`` Pearson reference within 1e-9 on arbitrary
+    small frames with pairwise nulls, is NULL exactly when a side has
+    zero variance (the ANSI-mode divide-by-zero guard), and |r| ≤ 1."""
+    import math
+    from fractions import Fraction
+
     from taxi_rides_ny_duckdb_spark.plans.profile import profile_correlation
 
     df = spark.createDataFrame(rows, "x double, y double")
-    fast = profile_correlation(df, [("x", "y")]).collect()[0]["corr_r"]
-    exact = profile_correlation(
-        df, [("x", "y")], exact_decimal=True
-    ).collect()[0]["corr_r"]
-    if exact is not None:
-        # consistent quantized moments ⇒ a true correlation ⇒ in range
-        assert abs(exact) <= 1.0, exact
-    if fast is None or exact is None:
-        assert fast is None and exact is None
-    else:
-        assert abs(fast - exact) < 1e-6, (fast, exact)
+    got = profile_correlation(df, [("x", "y")]).collect()[0]["corr_r"]
+    pts = [(Fraction(x), Fraction(y)) for x, y in rows if y is not None]
+    n = len(pts)
+    sx, sy = sum(x for x, _ in pts), sum(y for _, y in pts)
+    vx = n * sum(x * x for x, _ in pts) - sx * sx
+    vy = n * sum(y * y for _, y in pts) - sy * sy
+    if vx <= 0 or vy <= 0:
+        assert got is None
+        return
+    cov = n * sum(x * y for x, y in pts) - sx * sy
+    want = math.copysign(math.sqrt(cov * cov / (vx * vy)), cov)
+    assert got is not None and abs(got) <= 1.0, got
+    assert abs(got - want) < 1e-9, (got, want)
 
 
 _WORDS = st.sampled_from(["aa", "bb", "cc", "dd"])  # tiny vocab → span collisions

@@ -17,7 +17,8 @@ propagation entirely — the operator modules name their Arrow-batch
 closures ``fn``, and contract.py's registrar wraps every builder
 through ``fn``/``cached``, so one stale closure would otherwise mark
 all 226 queries stale through a pure name collision (measured: seeding
-_round9_half_up alone flagged 226 queries via
+the scalar 9-dp round, now ``functions.parity.round_half_up``, alone
+flagged 226 queries via
 a1_pricing_summary → query → fn). Edits inside those closures are
 covered by seeding their ENCLOSING operator function instead, which is
 how the edited-function seed list is drawn up anyway.

@@ -57,7 +57,9 @@ def query(
     (non-SQL-expressible op). ``memoize=False`` opts out of plan reuse —
     required for queries that do eager work inside the builder (e.g.
     driving a streaming job to a sink), where handing back the old
-    result table would skip the work a re-run is supposed to measure."""
+    result table would skip the work a re-run is supposed to measure.
+    A count that only picks the plan (a ``_FUSED_*`` gate) is not such
+    work: the memoized plan re-executes in full on every action."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:

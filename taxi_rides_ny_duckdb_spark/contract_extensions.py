@@ -759,9 +759,9 @@ def ext_dedup_cluster_components(spark, sf_dir):
     second consumer its bench row reads the checkpointed index;
     whichever consumer runs first builds it on its run 1 (best-of-2
     then reports the amortized path — the layout precedent).
-    memoize=False: the
-    index build iterates eagerly (localCheckpoint per round), so a
-    memoized re-run would skip the work being timed."""
+    memoize=False, though a warm build runs no eager action: the
+    index (localCheckpoint per CC round) is memoized per (session,
+    dataset), so only the first build of the five consumers pays it."""
     _pairs, _nodes, comp = _embedding_near_dup_index(spark, sf_dir)
     return comp.select(F.col("id").alias("vec_id"), "component")
 
@@ -807,7 +807,7 @@ SELECT component, vec_id, score FROM (
 @query(
     "ext_dedup_cluster_keep_best",
     oracle=_CLUSTER_KEEP_BEST_ORACLE,
-    memoize=False,  # CC iterates eagerly
+    memoize=False,  # no eager action once the shared index is built
 )
 def ext_dedup_cluster_keep_best(spark, sf_dir):
     """Quality-aware cluster collapse (operators/dedup.
@@ -1353,7 +1353,17 @@ def ext_streaming_dedup(spark, sf_dir):
     drop's full event-time span, so nothing is evicted and the result
     is the exact key-distinct — what DuckDB computes. Production sizes
     the horizon to the real dup window (state ∝ keys per horizon);
-    eviction behavior is unit-tested in tests/test_streaming.py."""
+    eviction behavior is unit-tested in tests/test_streaming.py.
+
+    One micro-batch on one state store: the events drop is one
+    coalesced file, so availableNow reads it in ONE data batch, and the
+    trailing watermark-only batch is skipped (``no_data_batch=False``)
+    — in append mode ``dropDuplicatesWithinWatermark`` emits a key's
+    first row on arrival, so that batch could only evict state (none,
+    under the 365-day horizon); the rows are pinned equal with and
+    without it in tests/test_streaming.py. The state is sized from the
+    ~2 MB drop alone, so one store (per-store commit cost measured in
+    ``sized_state_partitions``)."""
     from .streaming import jobs
 
     tmp = _events_stream_dir(spark, sf_dir)
@@ -1366,7 +1376,8 @@ def ext_streaming_dedup(spark, sf_dir):
         stream.select("user_id", "event_type"),
         "contract_stream_dedup",
         output_mode="append",
-        state_partitions=jobs.sized_state_partitions(tmp, floor=4),
+        state_partitions=jobs.sized_state_partitions(tmp),
+        no_data_batch=False,  # append dedup emits on arrival, not on watermark
     )
     return spark.table("contract_stream_dedup")
 
@@ -3044,7 +3055,7 @@ FROM comp
 @query(
     "ext_leakage_safe_split",
     oracle=_LEAK_SPLIT_ORACLE,
-    memoize=False,  # CC iterates eagerly
+    memoize=False,  # no eager action once the shared index is built
 )
 def ext_leakage_safe_split(spark, sf_dir):
     """Leakage-safe train/val split (operators/sampling.
@@ -3140,7 +3151,7 @@ SELECT query_id, rank, vec_id, cosine_sim_r FROM (
 @query(
     "ext_hard_negative_topk",
     oracle=_HARD_NEG_ORACLE,
-    memoize=False,  # CC iterates eagerly
+    memoize=False,  # eager gate count; below the gate CC runs in-task
 )
 def ext_hard_negative_topk(spark, sf_dir):
     """Hard-negative mining (operators/similarity.hard_negative_topk):
@@ -3255,7 +3266,7 @@ SELECT query_id, rank, vec_id, cosine_sim_r FROM (
 @query(
     "ext_hard_negative_topk_ann",
     oracle=_hard_neg_ann_oracle(),
-    memoize=False,  # CC iterates eagerly
+    memoize=False,  # eager gate count; below the gate CC runs in-task
 )
 def ext_hard_negative_topk_ann(spark, sf_dir):
     """ANN-backed hard-negative mining (operators/similarity.
@@ -3314,9 +3325,11 @@ def ext_corpus_shuffle(spark, sf_dir):
     re-planning, and engines (rand()-based shuffles are none of
     those). Exact global rank WITHOUT a global sort or single-reducer
     window: range-bucket on the hash fraction, an aggregation-bounded
-    counts pass prefix-summed driver-side, then one per-bucket rank
-    window — B-way parallel at any scale. memoize=False: the counts
-    pass is eager."""
+    counts pass prefix-summed by a window over its B rows, then one
+    per-bucket rank window — B-way parallel at any scale.
+    memoize=False, though the builder runs no eager action: the
+    prefix sums reach the rank window through a broadcast join inside
+    the action."""
     from .operators.sampling import corpus_shuffle
 
     d = load(spark, sf_dir, "documents").select("doc_id", "lang")
@@ -3535,7 +3548,9 @@ def ext_sorted_run_export(spark, sf_dir):
     query returns per-run stats from the READ-BACK files while the
     oracle recomputes them from the raw table — matching hashes prove
     the export round-trips losslessly and the runs tile the position
-    space exactly. Per-file monotonicity is pinned in unit tests."""
+    space exactly. Per-file monotonicity is pinned in unit tests.
+    memoize=False: the row count and the run export write eagerly in
+    the builder."""
     from .operators.sampling import corpus_shuffle
     from .operators.scale import sink_scratch_dir, write_sorted_runs
 
@@ -4358,7 +4373,7 @@ def ext_compact_small_files(spark, sf_dir):
     WHERE n_chars BETWEEN 100 AND 160
     GROUP BY lang
     """,
-    memoize=False,
+    memoize=False,  # eager layout write + file-manifest collect
 )
 def ext_file_stats_skipping(spark, sf_dir):
     """File-stats data-skipping index (operators/scale.
@@ -4495,7 +4510,11 @@ FROM p
 """
 
 
-@query("ext_streaming_drift_psi", oracle=_STREAM_DRIFT_ORACLE, memoize=False)
+@query(
+    "ext_streaming_drift_psi",
+    oracle=_STREAM_DRIFT_ORACLE,
+    memoize=False,  # eager stream run
+)
 def ext_streaming_drift_psi(spark, sf_dir):
     """Streaming drift monitor (streaming/jobs.windowed_value_histogram
     → plans/profile.drift_psi_grouped): the deployment shape of the
@@ -6121,7 +6140,7 @@ FROM withsim w JOIN comp c ON c.id = w.vec_id
 """
 
 
-@query("ext_semdedup", oracle=_semdedup_oracle(0.3), memoize=False)
+@query("ext_semdedup", oracle=_semdedup_oracle(0.3))
 def ext_semdedup(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023) against the frozen IVF quantizer
     (operators/similarity.semdedup): cluster-scoped near-dup pairing
@@ -6137,7 +6156,11 @@ def ext_semdedup(spark, sf_dir):
     table and pairing re-quadratizes (measured: 4.6 s at sf0.1 →
     329 s at sf1 unbounded). Production use re-trains/sizes the
     quantizer per corpus (tools_freeze_ivf.py); the operator docstring
-    carries the sizing rule. memoize=False: CC iterates eagerly."""
+    carries the sizing rule. Memoized: the builder's only eager action
+    is ``semdedup``'s ``_FUSED_LLOYD_*`` gate count, and nothing in the
+    plan is localCheckpointed or scoped_persisted; the assignment and
+    the CC collapse (``_semdedup_tail_np``) run inside the action on
+    every call."""
     from .contract_ivf_centroids import IVF_CENTROIDS
     from .operators.similarity import semdedup
 
@@ -6482,8 +6505,9 @@ def ext_purged_kfold(spark, sf_dir):
     hash draw per component; members inherit it. Reads the shared
     cluster index (``_embedding_near_dup_index``, r10 — the floor
     shave: the per-query pair-finder + CC re-run was the fixed cost
-    that kept this at 3.5× DuckDB's fixed work). memoize=False: the
-    index build iterates eagerly."""
+    that kept this at 3.5× DuckDB's fixed work). memoize=False, though
+    a warm build runs no eager action: the index is memoized per
+    (session, dataset)."""
     from .operators.sampling import purged_kfold
 
     pairs, nodes, comp = _embedding_near_dup_index(spark, sf_dir)
@@ -6543,7 +6567,8 @@ def ext_contrastive_pairs(spark, sf_dir):
     the five cluster-downstream consumers — its run 1 pays the
     one-time index build, so under best-of-2 every row (this one
     included) reports the amortized read path, the documented layout
-    precedent. memoize=False: the index build iterates eagerly."""
+    precedent. memoize=False, though a warm build runs no eager
+    action: the index is memoized per (session, dataset)."""
     from .operators.sampling import contrastive_pairs
 
     pairs, nodes, comp = _embedding_near_dup_index(spark, sf_dir)
@@ -7315,8 +7340,10 @@ def ext_semdedup_auto(spark, sf_dir):
     target=250 every oracled SF stays flat (sf0.01 nlist=2, sf0.1
     nlist=8 — this oracle replays those exactly), while the sf1/sf10
     scaling rows run the hierarchical path, whose own full oracle is
-    ``ext_semdedup_hier``. memoize=False: training collects per
-    iteration."""
+    ``ext_semdedup_hier``. memoize=False: the builder runs the
+    ``_FUSED_LLOYD_*`` gate count, and above the gate the Lloyd loop
+    collects per iteration (below it training runs in the action's
+    fused task)."""
     from .operators.similarity import semdedup_auto
 
     emb = load(spark, sf_dir, "embeddings")
@@ -7477,8 +7504,10 @@ def ext_semdedup_hier(spark, sf_dir):
     oracle replays EVERYTHING: both scalar-subquery sizes, the coarse
     Lloyd chain, branch assignment, integer-arithmetic per-branch
     sizing, the grouped Lloyd chain, leaf densification, and the
-    CC/keep collapse. memoize=False: training collects per
-    iteration.
+    CC/keep collapse. memoize=False: the builder runs the
+    ``_FUSED_LLOYD_*`` gate count, and above the gate the coarse Lloyd
+    loop collects per iteration (below it training runs in the
+    action's fused task).
 
     ``levels=2`` is part of this query's DEFINITION (r13 — VERDICT
     r12 task 4 decided): this is the fixed-TWO-LEVEL quantizer row,
@@ -7727,7 +7756,9 @@ def ext_semdedup_hier3(spark, sf_dir):
     two-down/two-up CASE-corrected square root); the oracle replays
     both grouped Lloyd chains via the name-parametrized CTE
     generator, plus densification, assignment, and the CC/keep
-    collapse. memoize=False: training collects per iteration."""
+    collapse. memoize=False: the builder runs the ``_FUSED_LLOYD_*``
+    gate count, and above the gate the coarse Lloyd loop collects per
+    iteration (below it training runs in the action's fused task)."""
     from .operators.similarity import semdedup_auto
 
     emb = load(spark, sf_dir, "embeddings")
@@ -7780,7 +7811,8 @@ def ext_passage_clusters(spark, sf_dir):
     CC-consumer convention: the closure comes back only for
     edge-touched ids as a broadcast-sized frame, and the
     nodes-distinct + anti-join + union singleton build is gone).
-    memoize=False: CC iterates eagerly."""
+    memoize=False: connected_components counts and collects the edge
+    list in the builder (localCheckpoints per round above its gate)."""
     from .operators.dedup import connected_components, winnow_passage_matches
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
@@ -8044,8 +8076,9 @@ def j7_bucketed_layout(spark, sf_dir):
     two dataset dirs sharing a basename rebuild instead of silently
     reusing a stale layout (ADVICE r9). No count-pin needed: the
     filter CONSUMES both window outputs, so no consumer can eliminate
-    the Window stage. memoize=False: the layout write is eager work
-    in the builder."""
+    the Window stage. memoize=False, though only the first build per
+    (dataset, process) writes the layout; later builds run no eager
+    action."""
     from pyspark.sql.window import Window as _W
 
     from .operators.scale import sink_scratch_dir, source_fingerprint, write_bucketed
@@ -8339,7 +8372,8 @@ def ext_pq_topk(spark, sf_dir):
     no shuffle in the query path. Codebooks + codes come from the
     process-memoized per-(session, dataset) index (``_pq_chain`` —
     train once, encode once, serve every query batch). memoize=False:
-    the index build localCheckpoints eagerly."""
+    the builder collects the query vector (``_pq_query_vec``); the
+    localCheckpointed index is built once per (session, dataset)."""
     from .operators.similarity import pq_adc_topk
 
     _, cb, codes = _pq_chain(spark, sf_dir)
@@ -8361,7 +8395,8 @@ def ext_pq_recall(spark, sf_dir):
     arithmetic. Reads the shared scaled-L2 ground-truth index
     (_scaled_l2_ground_truth_topk, r10 wave 3) — ext_ivfpq_recall
     certifies against the SAME metric and query, so the exact scan is
-    built once per corpus snapshot."""
+    built once per corpus snapshot. memoize=False: the builder collects
+    the query vector (``_pq_query_vec``)."""
     from .operators.similarity import ann_recall_at_k, pq_adc_topk
 
     _, cb, codes = _pq_chain(spark, sf_dir)
@@ -8598,8 +8633,9 @@ def ext_ivfpq_topk(spark, sf_dir):
     The oracle replays list assignment (9dp float-fold, the frozen-IVF
     convention), residuals, the grouped Lloyd chain, probe choice, the
     residual LUTs, and the probed ADC — every decision point
-    engine-stable. memoize=False: the index build localCheckpoints
-    eagerly."""
+    engine-stable. memoize=False: the builder collects the query
+    vector (``_pq_query_vec``); the localCheckpointed index is built
+    once per (session, dataset)."""
     from .operators.similarity import ivfpq_adc_topk
     from .contract_ivf_centroids import IVF_CENTROIDS
 
@@ -8627,7 +8663,9 @@ def ext_ivfpq_recall(spark, sf_dir):
     sources — PQ quantization AND probe misses (vectors whose list
     wasn't probed are never scored) — the honest accounting FAISS's
     own benchmarks use for IVF indexes. Reads the shared scaled-L2
-    ground-truth index (_scaled_l2_ground_truth_topk, r10 wave 3)."""
+    ground-truth index (_scaled_l2_ground_truth_topk, r10 wave 3).
+    memoize=False: the builder collects the query vector
+    (``_pq_query_vec``)."""
     from .contract_ivf_centroids import IVF_CENTROIDS
     from .operators.similarity import ann_recall_at_k, ivfpq_adc_topk
 
@@ -9151,7 +9189,9 @@ def ext_mmr_diverse_topk(spark, sf_dir):
     candidate generation is query-keyed over ≤C²-row groups, so the
     corpus-sized cost lives entirely in the candidate producer.
     round-before-argmax at 9dp with lower-id ties makes each round's
-    winner engine-identical."""
+    winner engine-identical. memoize=False, though the builder runs no
+    eager action: mmr_topk scoped_persists its candidate, vector and
+    pair frames into the caller's open cache_scope on every call."""
     from pyspark.sql.window import Window
 
     from .operators.similarity import _as_double_array, cosine, mmr_topk

@@ -219,7 +219,10 @@ def sized_state_partitions(path: str, target_bytes: int = 16 << 20,
     running a small backfill with a big-cluster partition count spends
     more time on empty state stores than on rows. The count is baked
     into the checkpoint at first start; a production job sizes this to
-    the live key space / cluster, a backfill to its input.
+    the live key space / cluster, a backfill to its input. Measured on
+    the ~2 MB, 100 k-row sf0.1 events drop (4 vCPUs, two traced runs):
+    one ``dropDuplicatesWithinWatermark`` batch spends 0.88–0.93 s of
+    summed state-commit task time on 4 stores and 0.03–0.04 s on 1.
 
     ``floor`` sets the minimum parallelism: JVM stateful operators
     (window aggs, stream-stream joins) are fine near 1 on small drops,
@@ -252,8 +255,10 @@ def run_to_memory_sink(stream_df: DataFrame, query_name: str,
     skips the trailing empty micro-batch that only advances the
     watermark — sound ONLY when the output doesn't wait on watermark
     finalization (stream-stream inner joins emit on match; complete /
-    update-mode aggs emit every batch). Jobs that emit on event-time
-    timeout or append-mode windows (``inactivity_sessions``,
+    update-mode aggs emit every batch; append-mode
+    ``dropDuplicatesWithinWatermark`` emits a key's first row on
+    arrival, so its trailing batch only evicts state). Jobs that emit
+    on event-time timeout or append-mode windows (``inactivity_sessions``,
     ``tumbling_counts`` in append) MUST keep it on or their final rows
     never flush."""
     spark = stream_df.sparkSession

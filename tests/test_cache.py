@@ -248,3 +248,24 @@ def test_register_all_per_spark_session_and_path(spark, sf_dir):
     for d in (SF_SMOKE, sf_dir):
         register_all(spark, d, ("nation",))
         assert registered(spark) == [table_path(d, "nation")]
+
+
+def test_semdedup_rebuild_launches_no_job(spark, sf_dir):
+    """``ext_semdedup`` is memoized: its builder's one eager action, the
+    ``_FUSED_LLOYD_*`` gate count, runs on the first build only, so a
+    second build hands back the same frame and schedules no job (value
+    parity stays in test_contract_parity)."""
+    from taxi_rides_ny_duckdb_spark import contract
+
+    contract.load_all()
+    build = contract.QUERIES["ext_semdedup"]
+    first = build(spark, sf_dir)
+    tracker = spark.sparkContext.statusTracker()
+    # the status store is fed asynchronously: drain the listener bus so
+    # the first build's jobs are recorded before each read
+    drain = spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty
+    drain()
+    before = tracker.getJobIdsForGroup()
+    assert build(spark, sf_dir) is first
+    drain()
+    assert tracker.getJobIdsForGroup() == before

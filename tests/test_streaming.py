@@ -341,6 +341,36 @@ def test_dedup_watermark_eviction_multibatch(spark, late_events_dir):
     assert progress[-1]["numRowsTotal"] == 1, progress[-1]
 
 
+def test_dedup_skipping_no_data_batch_keeps_rows(spark, sf_dir, chunked_events_dir):
+    """Append-mode dropDuplicatesWithinWatermark emits a key's first row
+    on arrival, so skipping the trailing watermark-only batch
+    (``no_data_batch=False``, as ext_streaming_dedup runs) loses no
+    row: over 4 in-order data batches and a horizon that covers the
+    drop, the key-projected sink equals the default run's (and the
+    batch key-distinct), and the skipping run has no 0-input batch."""
+
+    def run(name, no_data_batch):
+        stream = jobs.dedup_within_watermark(
+            _read_chunked(spark, chunked_events_dir),
+            keys=["user_id", "event_type"],
+            watermark="365 days",
+        )
+        q = jobs.run_to_memory_sink(
+            stream.select("user_id", "event_type"), name,
+            output_mode="append", no_data_batch=no_data_batch,
+        )
+        rows = sorted(tuple(r) for r in spark.table(name).collect())
+        return rows, [p["numInputRows"] for p in q.recentProgress]
+
+    with_batch, inputs_on = run("t_dedup_nodata_on", True)
+    without, inputs_off = run("t_dedup_nodata_off", False)
+    keys = load(spark, sf_dir, "events").select("user_id", "event_type").distinct()
+    assert without == with_batch == sorted(tuple(r) for r in keys.collect())
+    assert len(inputs_off) == 4 and all(n > 0 for n in inputs_off), inputs_off
+    # the default run does schedule the trailing batch the skip removes
+    assert inputs_on == [*inputs_off, 0], inputs_on
+
+
 def test_inactivity_sessions_late_rows_multibatch(spark, late_events_dir):
     """inactivity_sessions across 4 micro-batches: (a) event-time
     timeouts close sessions once the (one-batch-lagged) watermark

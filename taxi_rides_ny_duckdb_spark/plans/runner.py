@@ -81,6 +81,15 @@ class PipelineRunner:
             visit(name)
         return order
 
+    def _read_back(self, model: Model, df: DataFrame, path: str) -> DataFrame:
+        """Register the table just written at ``path``, read with the
+        written frame's schema. Spark moves partition columns last and
+        makes every field nullable, which gives the schema parquet
+        inference finds at ``path`` without its job."""
+        out = self.spark.read.schema(df.schema).parquet(path)
+        out.createOrReplaceTempView(model.name)
+        return out
+
     def _materialize(self, model: Model, df: DataFrame) -> DataFrame:
         if model.materialization == "view":
             df.createOrReplaceTempView(model.name)
@@ -93,9 +102,7 @@ class PipelineRunner:
             if model.partition_by:
                 writer = writer.partitionBy(*model.partition_by)
             writer.save(path)
-            out = self.spark.read.parquet(path)
-            out.createOrReplaceTempView(model.name)
-            return out
+            return self._read_back(model, df, path)
         if model.materialization == "incremental":
             # dbt's insert_overwrite incremental strategy: the build fn
             # returns only the NEW slice; dynamic partition overwrite
@@ -115,9 +122,7 @@ class PipelineRunner:
                 .partitionBy(*model.partition_by)
                 .save(path)
             )
-            out = self.spark.read.parquet(path)
-            out.createOrReplaceTempView(model.name)
-            return out
+            return self._read_back(model, df, path)
         if model.materialization == "incremental_merge":
             # dbt's merge incremental strategy: the build fn returns the
             # new/changed slice; rows whose unique_key matches are
@@ -145,9 +150,7 @@ class PipelineRunner:
                 os.rename(tmp, path)
             else:
                 df.write.mode("overwrite").format("parquet").save(path)
-            out = self.spark.read.parquet(path)
-            out.createOrReplaceTempView(model.name)
-            return out
+            return self._read_back(model, df, path)
         raise ValueError(f"unknown materialization {model.materialization!r}")
 
     def _select(self, selectors: Sequence[str]) -> set[str]:

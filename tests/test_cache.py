@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -250,15 +251,29 @@ def test_register_all_per_spark_session_and_path(spark, sf_dir):
         assert registered(spark) == [table_path(d, "nation")]
 
 
-def test_semdedup_rebuild_launches_no_job(spark, sf_dir):
-    """``ext_semdedup`` is memoized: its builder's one eager action, the
-    ``_FUSED_LLOYD_*`` gate count, runs on the first build only, so a
-    second build hands back the same frame and schedules no job (value
-    parity stays in test_contract_parity)."""
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ext_semdedup",
+        "ext_contrastive_pairs",
+        "ext_dedup_cluster_components",
+        "ext_dedup_cluster_keep_best",
+        "ext_leakage_safe_split",
+        "ext_purged_kfold",
+        "ext_corpus_shuffle",
+        "j7_bucketed_layout",
+    ],
+)
+def test_memoized_builder_rebuild_launches_no_job(spark, sf_dir, name):
+    """These builders are memoized: each runs its eager work once per
+    session or process (``ext_semdedup``'s ``_FUSED_LLOYD_*`` gate
+    count, the shared near-dup index, the bucketed layout) or none at
+    all, so a second build hands back the same frame and schedules no
+    job (value parity stays in test_contract_parity)."""
     from taxi_rides_ny_duckdb_spark import contract
 
     contract.load_all()
-    build = contract.QUERIES["ext_semdedup"]
+    build = contract.QUERIES[name]
     first = build(spark, sf_dir)
     tracker = spark.sparkContext.statusTracker()
     # the status store is fed asynchronously: drain the listener bus so

@@ -251,6 +251,59 @@ def test_incremental_merge_upserts_by_key(spark, tmp_path):
     assert got == {1: ("a", 1), 2: ("b2", 2), 3: ("c", 1), 4: ("d", 2)}
 
 
+@pytest.mark.parametrize(
+    "materialization,partition_by",
+    [
+        ("table", ()),
+        ("table", ("month",)),
+        ("incremental", ("month",)),
+        ("incremental_merge", ()),
+    ],
+)
+def test_materialized_read_back_schema_is_the_inferred_one(
+    spark, tmp_path, materialization, partition_by
+):
+    """A written model is read back with the schema of the frame that
+    was written, and that schema equals what parquet inference finds at
+    the path: partition columns last, every field nullable, a date
+    partition value typed as a date. The merge runs twice so its second
+    read follows the anti-join rewrite."""
+    from taxi_rides_ny_duckdb_spark.plans.runner import Model, PipelineRunner
+
+    src = spark.range(6).select(
+        "id",  # non-nullable in the frame, nullable once written
+        F.expr("date_add(date'2024-01-01', cast(id % 2 AS INT) * 31)").alias("month"),
+        (F.col("id") * 1.5).alias("amount"),
+    )
+    runner = PipelineRunner(spark, str(tmp_path / "wh"))
+    runner.add_model(Model(
+        "m", (), lambda: src, materialization=materialization,
+        partition_by=partition_by, unique_key=("id",),
+    ))
+    for _ in range(2 if materialization == "incremental_merge" else 1):
+        runner.built.clear()
+        out = runner.run()["m"]
+    assert out.schema == spark.read.parquet(str(tmp_path / "wh" / "m")).schema
+    assert out.count() == 6
+
+
+def test_table_run_launches_only_its_write_job(spark, tmp_path):
+    """Reading a written table back runs no schema-inference job: a
+    ``table`` model over an exchange-free frame schedules exactly one
+    job, the write."""
+    from taxi_rides_ny_duckdb_spark.plans.runner import Model, PipelineRunner
+
+    runner = PipelineRunner(spark, str(tmp_path / "wh"))
+    runner.add_model(Model("t", (), lambda: spark.range(10), materialization="table"))
+    tracker = spark.sparkContext.statusTracker()
+    drain = spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty
+    drain()
+    before = set(tracker.getJobIdsForGroup())
+    runner.run()
+    drain()
+    assert len(set(tracker.getJobIdsForGroup()) - before) == 1
+
+
 def test_topn_profile_avoids_global_sort(spark, sf_dir):
     """profile_topk must plan TakeOrderedAndProject over the count
     aggregate, not a rangepartitioning sort."""

@@ -493,3 +493,40 @@ def test_graph_selection(spark, tmp_path):
     r3 = fresh()
     with pytest.raises(KeyError):
         r3.run(select="dm_monthly_zone_revenue")
+
+
+def test_second_build_compiles_no_class(spark, tmp_path):
+    """The session compiles each distinct generated class once. The
+    reference build (models, dq tests, the average_distance metric at
+    three grains, the fact_trips profile) compiles over 100 distinct
+    classes, past Spark's default 100-entry codegen cache, so with the
+    defaults a second build in the session recompiled ~50 of them. With
+    the cache sized in session.py, a second build into a fresh
+    warehouse finds every class cached."""
+    from taxi_rides_ny_duckdb_spark.plans.metrics import Metric, compile_all_grains
+    from taxi_rides_ny_duckdb_spark.plans.profile import profile_numeric
+
+    paths = write_taxi_fixtures(str(tmp_path / "raw"))
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    metric = Metric(name="average_distance", calculation_method="average",
+                    expression="trip_distance", timestamp="pickup_datetime",
+                    time_grains=["month", "quarter", "year"])
+
+    def build(wh: str) -> None:
+        runner = build_taxi_pipeline(
+            spark,
+            green_path=paths["green_tripdata"],
+            yellow_path=paths["yellow_tripdata"],
+            zone_csv_path=paths["taxi_zone_lookup"],
+            warehouse_dir=str(tmp_path / wh),
+        )
+        built, _ = run_taxi_pipeline(runner)
+        fact = built["fact_trips"]
+        for df in compile_all_grains(fact, metric).values():
+            df.collect()
+        profile_numeric(fact, ["trip_distance", "fare_amount"]).collect()
+
+    build("wh1")
+    before = compiles().getCount()
+    build("wh2")
+    assert compiles().getCount() - before == 0
